@@ -15,9 +15,13 @@ library entry point with the same zones and semantics:
    metrics JSON (K5, replaces SNS publish with a returned/logged dict).
 4. archive the input under a lineage name (K6).
 
-Scale notes: the only driver round-trips are the O(1) head sample; all row
-work is one cached Spark plan; class counts are single-pass aggregations
-(the reference recomputed the full lineage 5×, SURVEY.md §4).
+Scale notes: the only driver round-trips are the O(1) head sample and the
+reader's ≤20-line dialect sniff. All row work of a file is one labeled
+lineage (read → ``raw_row`` fan-out shuffle → timestamp cascade → dedup
+window → cleaning), persisted once: the silver write fills the cache and
+fires the single class-count Observation, and the JSON and CSV reject
+sinks read the cache (the reference recomputed the full lineage 5×,
+SURVEY.md §4).
 """
 
 from __future__ import annotations
@@ -101,15 +105,14 @@ def purge_run_from_silver(spark: SparkSession, lake: LakeLayout, run_id: str) ->
     # dynamic overwrite only rewrites partitions PRESENT in the new data —
     # dates whose every row came from the failed run must be deleted by path
     keep_dates = {r["date"] for r in keep.select("date").distinct().collect()}
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        if keep_dates:
-            keep.repartition(
-                spark.sparkContext.defaultParallelism, "date"
-            ).write.mode("overwrite").partitionBy("date").parquet(lake.processed)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    if keep_dates:
+        (
+            keep.repartition(spark.sparkContext.defaultParallelism, "date")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("date")
+            .parquet(lake.processed)
+        )
     for d in set(dates) - keep_dates:
         shutil.rmtree(os.path.join(lake.processed, f"date={d}"), ignore_errors=True)
     log.warning("purged %d partial rows of failed run %s from silver", n_debris, run_id)
@@ -185,9 +188,10 @@ def ingest_file(
         # (~16 ms each — measured 9 s for 550 dates); pinning N keeps the
         # directory/file creation spread across the cluster.
         #
-        # The silver write goes FIRST: it is the action that populates both
-        # caches and fires the embedded count Observations, so the class
-        # counts (and the reject-write decision below) cost zero extra jobs.
+        # The silver write goes FIRST: it is the action that fills the
+        # labeled frame's cache and fires its count Observation, so the
+        # class counts (and the reject-write decision below) cost zero extra
+        # jobs and both reject sinks read the cache.
         good_out = split.good.repartition(spark.sparkContext.defaultParallelism, "date")
         if commit_protocol == "manifest":
             from retail_aws_etl_pipeline_spark.lake_manifest import ManifestedTable
@@ -261,7 +265,7 @@ def ingest_batch(
     """Batched ingest: N raw files as ONE unioned plan and one silver write.
 
     Per-file semantics are preserved — each file keeps its own sniffed
-    projection, run id, within-file ``dropDuplicates``, and per-file class
+    projection, run id, within-file exact-line dedup, and per-file class
     counts (namespaced Observations) — but the cluster executes a single
     write job over the union, so many small files no longer serialize into
     per-file job barriers (the reference's one-Glue-run-per-file shape).

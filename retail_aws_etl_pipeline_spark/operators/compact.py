@@ -133,10 +133,6 @@ def compact_pending(
     each chunk adds ~2-3 s of fixed plan/job overhead — chunking is a
     recovery-granularity knob, not a throughput one.
     """
-    # Runtime-settable; (re)apply in case the session was built elsewhere —
-    # without it, overwrite would drop ALL existing gold partitions.
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
     manifest_table = None
     if commit_protocol == "manifest":
         from retail_aws_etl_pipeline_spark.lake_manifest import ManifestedTable
@@ -292,7 +288,14 @@ def _compact_dates(
     if manifest_table is not None:
         manifest_table.overwrite_partitions(out)
     else:
-        out.write.mode("overwrite").partitionBy("date").parquet(lake.gold)
+        # dynamic per write, not via the session conf: a static overwrite
+        # would drop every gold partition outside ``work``
+        (
+            out.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("date")
+            .parquet(lake.gold)
+        )
     windowed.unpersist()
 
     results = []
@@ -378,8 +381,6 @@ def upsert_gold(spark: SparkSession, lake: LakeLayout, batch_df: DataFrame) -> N
     dynamically overwrite just those partitions. Re-delivered batches are
     absorbed by the dedup — the sink is idempotent.
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
     prepared = (
         batch_df.withColumn("quantity", clean_quantity("quantity", "long"))
         .withColumn("unit_price", clean_currency("unit_price"))
@@ -416,6 +417,7 @@ def upsert_gold(spark: SparkSession, lake: LakeLayout, batch_df: DataFrame) -> N
         deduped.repartition(spark.sparkContext.defaultParallelism, F.col("date"))
         .sortWithinPartitions("date", "transaction_id")
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("date")
         .parquet(lake.gold)
     )

@@ -1,18 +1,32 @@
 """Row-level data-quality routing: structural → timestamp → business splits.
 
 Re-expresses the reference's three-way split
-(glue_job_raw_to_processed.py:223-351) as one labeled lineage: a single
-cached DataFrame carries a ``reject_reason`` column (NULL = good), so all
-class counts come from ONE aggregation pass instead of the reference's five
-separate ``count()`` recomputations of the full parse lineage (SURVEY.md §4
-flags that as its main perf hazard).
+(glue_job_raw_to_processed.py:223-351) as ONE labeled row lineage per file:
+every kept row carries a ``reject_reason`` (NULL = good), the frame is
+persisted once, and ``good`` and ``rejects`` are two projections of it. The
+first action (the caller's silver write) fills the cache and fires the one
+``Observation`` that carries every class count; the JSON and CSV reject
+sinks then read the cache. The reference recomputed the full parse lineage
+five times (SURVEY.md §4); here the read, the fan-out shuffle, the
+timestamp cascade and the dedup run once per file.
 
-Split semantics kept identical to the reference:
-1. structural: any required column NULL after positional projection
+The lineage, in order:
+
+1. ``repartition(defaultParallelism, "raw_row")`` — the fan-out of a
+   single-split raw file across the cores. The count is explicit so AQE
+   cannot coalesce the small shuffle to one task, and the hash key is the
+   dedup window's clustering, so the window needs no second exchange.
+2. structural: any required column NULL after positional projection
    (token shortfall or header-missing column) → MISSING_REQUIRED_COLUMN;
-2. timestamp: regex-gated cascade yields NULL → INVALID_TIMESTAMP_FORMAT;
-3. numeric cleaning (currency/quantity), metadata, exact-duplicate drop;
-4. business: |revenue − quantity×unit_price| > 0.01 → BUSINESS_LOGIC_FAIL.
+   timestamp: regex-gated cascade yields NULL → INVALID_TIMESTAMP_FORMAT.
+3. exact-duplicate drop among the survivors of 2: ``row_number() over
+   (partition by raw_row)`` keeps one row per raw line. This is the
+   reference's full-row ``dropDuplicates`` exactly: every other column is a
+   deterministic function of ``raw_row`` plus per-file constants (run id,
+   source file, one ``ingest_ts``). Early rejects are all kept, duplicates
+   included.
+4. numeric cleaning (currency/quantity), metadata; business:
+   |revenue − quantity×unit_price| > 0.01 → BUSINESS_LOGIC_FAIL.
 
 One DOCUMENTED DEVIATION (SURVEY.md §7.4.3): in the reference, a row whose
 required numeric cleans to NULL (``N/A``, empty string) makes the DQ
@@ -31,7 +45,9 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, Observation
+from py4j.protocol import Py4JJavaError
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from retail_aws_etl_pipeline_spark.functions.numeric import clean_currency, clean_quantity
@@ -43,18 +59,26 @@ from retail_aws_etl_pipeline_spark.schema import (
     REJECT_REASON_TIMESTAMP,
     REQUIRED_COLUMNS,
     REVENUE_TOLERANCE,
+    SILVER_SCHEMA,
 )
+
+#: Columns cleaned for the good/business path; early rejects keep the raw
+#: strings, so the labeled frame carries both (the cleaned value under
+#: ``_clean_<name>``).
+_NUMERIC = {"quantity": clean_quantity, "unit_price": clean_currency, "revenue": clean_currency}
 
 
 @dataclass
 class QualitySplit:
     """Outcome of the quality routing over one extracted frame.
 
-    ``counts`` starts empty: the class counts ride piggyback on the first
-    action over ``good``/``rejects`` via ``Observation`` nodes embedded in
-    the plan (zero extra jobs — the reference recomputed the lineage 5×).
-    Call :meth:`resolve_counts` AFTER that first action to materialize the
-    dict; calling it before any action blocks until one completes.
+    ``good`` and ``rejects`` are projections of one persisted labeled frame
+    (``cached``; the caller unpersists it after its last sink). ``counts``
+    starts empty: the class counts ride the first action over either
+    projection via an ``Observation`` inside the cached plan (zero extra
+    jobs). Call :meth:`resolve_counts` AFTER that first action to
+    materialize the dict; calling it before any action blocks until one
+    completes.
     """
 
     good: DataFrame  # silver-shaped rows (pre-write)
@@ -77,16 +101,13 @@ def _required_null_cond():
     return cond
 
 
-def align_reject_schema(df: DataFrame) -> DataFrame:
-    """Pad any missing reject column with NULL and fix the column order
-    (glue_job_raw_to_processed.py:316-337) — prevents the reference's
-    NUM_COLUMNS_MISMATCH union failure (docs/troubleshooting.md:6)."""
-    out = df
-    for col_name in REJECT_COLUMNS:
-        if col_name not in df.columns:
-            out = out.withColumn(col_name, F.lit(None).cast("string"))
-    return out.select(
-        *[F.col(c).cast("string").alias(c) if c != "timestamp_parsed" else F.col(c) for c in REJECT_COLUMNS]
+def _is_pruned_observation(exc: Exception) -> bool:
+    """The signature of an Observation that AQE pruned under an empty
+    relation: ``PythonSQLUtils.toPyRow`` asserting on a schemaless row."""
+    return (
+        isinstance(exc, Py4JJavaError)
+        and exc.java_exception.getClass().getName() == "java.lang.AssertionError"
+        and "toPyRow" in str(exc)
     )
 
 
@@ -102,60 +123,49 @@ def split_quality(
 
     ``ingest_ts`` is an injectable Column (default ``current_timestamp()``)
     so tests and oracle comparisons can pin a deterministic clock
-    (SURVEY.md §7.4.4). ``obs_prefix`` namespaces the Observation nodes —
+    (SURVEY.md §7.4.4). ``obs_prefix`` namespaces the Observation node —
     required when several splits union into one plan (batched ingest):
     observation names must be unique within a query execution.
     """
     patterns = timestamp_patterns if timestamp_patterns is not None else REFERENCE_PATTERNS
     ingest_ts_col = ingest_ts if ingest_ts is not None else F.current_timestamp()
+    n_parts = extracted.sparkSession.sparkContext.defaultParallelism
 
-    # -- structural ---------------------------------------------------------
     struct_cond = _required_null_cond()
-    parsed = extracted.withColumn(
-        "timestamp_parsed",
-        F.when(~struct_cond, parse_timestamp("timestamp_raw", patterns)),
-    )
+    reason = F.col("reject_reason")
+    early = reason.isin(REJECT_REASON_STRUCTURAL, REJECT_REASON_TIMESTAMP)
 
-    # Total/structural/timestamp class counts ride the first action as an
-    # Observation (inside the cached plan, so they are computed exactly once
-    # — at cache population) instead of a dedicated aggregation job.
-    obs_parse = Observation(f"{obs_prefix}parse_counts")
-    parsed = parsed.observe(
-        obs_parse,
-        F.count(F.lit(1)).alias("total"),
-        F.sum(F.when(struct_cond, 1).otherwise(0)).alias("structural"),
-        F.sum(
-            F.when(~struct_cond & F.col("timestamp_parsed").isNull(), 1).otherwise(0)
-        ).alias("invalid_timestamp"),
+    # -- fan-out, structural + timestamp reason, survivor dedup -------------
+    # row_number needs an order; the rows of one raw_row partition are
+    # identical, so any of them may be the one kept.
+    by_line = Window.partitionBy("raw_row").orderBy("raw_row")
+    labeled = (
+        extracted.repartition(n_parts, "raw_row")
+        .withColumn(
+            "timestamp_parsed",
+            F.when(~struct_cond, parse_timestamp("timestamp_raw", patterns)),
+        )
+        .withColumn(
+            "reject_reason",
+            F.when(struct_cond, F.lit(REJECT_REASON_STRUCTURAL)).when(
+                F.col("timestamp_parsed").isNull(), F.lit(REJECT_REASON_TIMESTAMP)
+            ),
+        )
+        .withColumn("_rn", F.row_number().over(by_line))
+        .withColumn(
+            "_copies",
+            F.count(F.lit(1)).over(
+                by_line.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+            ),
+        )
+        .filter(reason.isNotNull() | (F.col("_rn") == 1))
     )
-
-    # The parse lineage is deliberately NOT cached: its only consumers
-    # besides the good path are the early-reject branches and the count
-    # fallback, and the common case (a clean production file) never
-    # executes either — caching the widest frame in the pipeline (every
-    # raw column + raw_row + timestamp_parsed) cost a full serialization
-    # pass on every ingest to serve branches that usually read nothing
-    # (measured ~10% of bench ingest wall). A dirty file re-parses ONCE
-    # at reject-write time: the structural and timestamp branches are
-    # fused into a single filter pass below, so the reject union is one
-    # scan, not two.
-    early_rejects = parsed.filter(
-        struct_cond | F.col("timestamp_parsed").isNull()
-    ).withColumn(
-        "reject_reason",
-        F.when(struct_cond, F.lit(REJECT_REASON_STRUCTURAL)).otherwise(
-            F.lit(REJECT_REASON_TIMESTAMP)
-        ),
-    )
-
-    survivors = parsed.filter(~struct_cond & F.col("timestamp_parsed").isNotNull())
 
     # -- numeric cleaning + metadata (glue_job_raw_to_processed.py:279-298) --
-    cleaned = (
-        survivors.withColumn("unit_price", clean_currency("unit_price"))
-        .withColumn("revenue", clean_currency("revenue"))
-        .withColumn("quantity", clean_quantity("quantity"))
-        .withColumn("timestamp", F.col("timestamp_parsed"))
+    for name, clean in _NUMERIC.items():
+        labeled = labeled.withColumn(f"_clean_{name}", clean(name))
+    labeled = (
+        labeled.withColumn("timestamp", F.col("timestamp_parsed"))
         .withColumn("ingest_run_id", F.lit(ingest_run_id))
         .withColumn("source_file", F.lit(source_file))
         .withColumn("ingest_ts", ingest_ts_col)
@@ -164,102 +174,71 @@ def split_quality(
 
     # -- business DQ (glue_job_raw_to_processed.py:304-310 + null-numeric
     # deviation documented above) -------------------------------------------
+    q, up, rev = (F.col(f"_clean_{n}") for n in ("quantity", "unit_price", "revenue"))
     dq_cond = (
-        F.col("timestamp").isNull()
-        | F.col("quantity").isNull()
-        | F.col("unit_price").isNull()
-        | F.col("revenue").isNull()
-        | (
-            F.abs(F.col("revenue") - (F.col("quantity") * F.col("unit_price")))
-            > REVENUE_TOLERANCE
-        )
+        q.isNull() | up.isNull() | rev.isNull() | (F.abs(rev - q * up) > REVENUE_TOLERANCE)
+    )
+    labeled = labeled.withColumn(
+        "reject_reason",
+        F.when(early, reason).when(dq_cond, F.lit(REJECT_REASON_BUSINESS)),
     )
 
-    # Uncached for the same reason as the parse lineage: the only consumer
-    # beyond the caller's silver write is the business-reject branch,
-    # which a clean file never executes. A dirty file re-runs the
-    # dropDuplicates shuffle once at reject-write time; the clean-path
-    # saving (no serialization pass over the full deduped frame on every
-    # ingest) wins on the common case. Identical rows make the re-run
-    # deterministic — any kept duplicate is byte-equal.
-    obs_dedup = Observation(f"{obs_prefix}dedup_counts")
-    deduped = cleaned.dropDuplicates().observe(
-        obs_dedup,
-        F.count(F.lit(1)).alias("after_dedup"),
-        F.sum(F.when(dq_cond, 1).otherwise(0)).alias("business"),
+    # Every class count in one Observation on the persisted frame: it fires
+    # once, while the first action fills the cache. A kept survivor stands
+    # for its ``_copies`` identical input lines; an early reject for itself.
+    count_exprs = [
+        F.sum(F.when(early, 1).otherwise(F.col("_copies"))).alias("total"),
+        F.count(F.lit(1)).alias("kept"),
+        *[
+            F.sum(F.when(reason == F.lit(r), 1).otherwise(0)).alias(alias)
+            for alias, r in (
+                ("structural", REJECT_REASON_STRUCTURAL),
+                ("invalid_timestamp", REJECT_REASON_TIMESTAMP),
+                ("business", REJECT_REASON_BUSINESS),
+            )
+        ],
+    ]
+    obs = Observation(f"{obs_prefix}quality_counts")
+    labeled = labeled.observe(obs, *count_exprs).persist(StorageLevel.MEMORY_AND_DISK)
+
+    good = labeled.filter(reason.isNull()).select(
+        *[
+            F.col(f"_clean_{f.name}").alias(f.name) if f.name in _NUMERIC else F.col(f.name)
+            for f in SILVER_SCHEMA.fields
+        ]
     )
-
-    dq_rejects = (
-        deduped.filter(dq_cond)
-        .withColumn("raw_row", F.lit(None).cast("string"))
-        .withColumn("reject_reason", F.lit(REJECT_REASON_BUSINESS))
+    business = reason == F.lit(REJECT_REASON_BUSINESS)
+    reject_cols = {
+        c: F.when(business, F.col(f"_clean_{c}").cast("string")).otherwise(F.col(c))
+        for c in _NUMERIC
+    }
+    reject_cols["raw_row"] = F.when(~business, F.col("raw_row"))
+    rejects = labeled.filter(reason.isNotNull()).select(
+        *[reject_cols.get(c, F.col(c)).alias(c) for c in REJECT_COLUMNS]
     )
-    good = deduped.filter(~dq_cond)
-
-    rejects = align_reject_schema(early_rejects).unionByName(
-        align_reject_schema(dq_rejects)
-    )
-
-    # -- zero-extra-pass class counts --------------------------------------
-    # The Observation nodes above record all class totals during the first
-    # action (normally the caller's silver write). ``resolve_counts`` just
-    # reads them back and derives the report dict.
-    def _obs_or_agg(obs, frame, exprs) -> dict:
-        """Observation metrics, or an explicit aggregation fallback.
-
-        When a frame is empty AT RUNTIME (e.g. every row rejected), AQE's
-        empty-relation propagation can prune the Observation node below
-        the empty shuffle — ``obs.get`` then surfaces a schemaless row
-        (``toPyRow`` assertion). The explicit fallback aggregation yields
-        the identical dict by re-running the (empty-input) lineage — the
-        degenerate all-reject case only, where the file is one cheap
-        extra scan.
-        """
-        try:
-            return obs.get
-        except Exception:
-            return frame.agg(*exprs).first().asDict()
 
     def _resolve() -> dict:
-        base = _obs_or_agg(
-            obs_parse,
-            parsed,
-            [
-                F.count(F.lit(1)).alias("total"),
-                F.sum(F.when(struct_cond, 1).otherwise(0)).alias("structural"),
-                F.sum(
-                    F.when(~struct_cond & F.col("timestamp_parsed").isNull(), 1).otherwise(0)
-                ).alias("invalid_timestamp"),
-            ],
-        )
-        after = _obs_or_agg(
-            obs_dedup,
-            deduped,
-            [
-                F.count(F.lit(1)).alias("after_dedup"),
-                F.sum(F.when(dq_cond, 1).otherwise(0)).alias("business"),
-            ],
-        )
-        # SUM over an empty frame aggregates to NULL (a header-only file
-        # passes the head gate but parses to zero data rows) — treat as 0.
-        structural = base["structural"] or 0
-        invalid_ts = base["invalid_timestamp"] or 0
-        survivors_n = base["total"] - structural - invalid_ts
-        counts = {
-            "data_rows": base["total"],
-            "structural_rejects": structural,
-            "timestamp_rejects": invalid_ts,
-            "duplicates_removed": survivors_n - after["after_dedup"],
-            "business_rejects": after["business"] or 0,
-            "good_rows": after["after_dedup"] - (after["business"] or 0),
+        try:
+            got = obs.get
+        except Py4JJavaError as exc:
+            # When the silver write's input is empty AT RUNTIME (e.g. every
+            # row a structural reject), AQE's empty-relation propagation
+            # can prune the plan that holds the Observation; the same
+            # counts then come from one aggregation over the cached frame.
+            if not _is_pruned_observation(exc):
+                raise
+            got = labeled.agg(*count_exprs).first().asDict()
+        # SUM over an empty frame aggregates to NULL — treat as 0.
+        c = {k: v or 0 for k, v in got.items()}
+        rejects_n = c["structural"] + c["invalid_timestamp"] + c["business"]
+        return {
+            "data_rows": c["total"],
+            "structural_rejects": c["structural"],
+            "timestamp_rejects": c["invalid_timestamp"],
+            "duplicates_removed": c["total"] - c["kept"],
+            "business_rejects": c["business"],
+            "good_rows": c["kept"] - rejects_n,
+            "reject_rows": rejects_n,
         }
-        counts["reject_rows"] = (
-            counts["structural_rejects"]
-            + counts["timestamp_rejects"]
-            + counts["business_rejects"]
-        )
-        return counts
 
-    return QualitySplit(
-        good=good, rejects=rejects, cached=[], _resolve=_resolve
-    )
+    return QualitySplit(good=good, rejects=rejects, cached=[labeled], _resolve=_resolve)

@@ -301,12 +301,15 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["events"])
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     wf = w.rowsBetween(W.unboundedPreceding, W.currentRow)
-    gap = F.col("ts").cast("long") - F.lag(F.col("ts")).over(w).cast("long")
+    # microseconds, not whole seconds: a 1800.5 s gap opens a session, as
+    # the oracle's ``> INTERVAL 30 MINUTE`` does
+    ts_us = F.unix_micros(F.col("ts"))
+    gap = ts_us - F.lag(ts_us).over(w)
     marked = t["events"].select(
         "user_id",
         "ts",
         "event_id",
-        F.when(gap.isNull() | (gap > 30 * 60), 1).otherwise(0).alias("new_session"),
+        F.when(gap.isNull() | (gap > 30 * 60 * 1_000_000), 1).otherwise(0).alias("new_session"),
     )
     sessions = marked.withColumn("session_idx", F.sum("new_session").over(wf))
     return (

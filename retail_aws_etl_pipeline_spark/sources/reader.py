@@ -75,16 +75,14 @@ def read_flexible_csv(
     )
 
     # A single raw file arrives as ONE input split (well under
-    # files.maxPartitionBytes), so everything row-wise would run on one
-    # core. Fan the RAW lines out FIRST — a few MB of shuffle buys
-    # parallel processing — and only then scrub/filter/parse, so the
-    # regex scrub and blank/header filters run on every core instead of
-    # serially before the exchange (measured ~0.25 s single-core on the
-    # 200k-row bench file). Row order is immaterial downstream (full-row
-    # dedup and quality routing are order-independent).
+    # files.maxPartitionBytes), so the scrub, the blank/header filters and
+    # the positional split below run in one task. The fan-out across cores
+    # is the quality router's ``raw_row`` exchange
+    # (operators.validate.split_quality), which the heavy row work — the
+    # timestamp cascade and currency cleaning — runs after; a round-robin
+    # exchange here would be a second shuffle of every line.
     data = (
-        raw.repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("value", scrub)
+        raw.withColumn("value", scrub)
         .filter(F.trim(F.col("value")) != "")
         .filter(F.col("value") != F.lit(header_line))
     )

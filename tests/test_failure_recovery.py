@@ -946,3 +946,42 @@ def test_gold_upsert_stream_killed_midbatch_recovers(spark, tmp_path):
     got_keys = {tuple(str(r[c]) for c in key_cols) for r in gold.select(*key_cols).collect()}
     want_keys = {tuple(str(r[c]) for c in key_cols) for r in want.select(*key_cols).collect()}
     assert got_keys == want_keys and got_keys
+
+
+def test_compact_pending_on_static_session_rewrites_only_work_dates(spark, tmp_path):
+    """compact_pending overwrites gold dynamically per write, never through
+    the session conf: on a session left at ``static`` the conf is unchanged
+    afterwards and only the recompacted date's files are rewritten."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    lake = LakeLayout(str(tmp_path / "lake"))
+    src = tmp_path / "in.csv"
+    _write_csv(src, range(12))  # 3 dates
+    ingest_file(spark, str(src), lake, archive=False, write_reject_csv=False)
+    compact_pending(spark, lake, max_partitions=10)
+
+    def gold_files() -> dict[str, set[str]]:
+        return {
+            d: set(os.listdir(os.path.join(lake.gold, d)))
+            for d in os.listdir(lake.gold)
+            if d.startswith("date=")
+        }
+
+    before = gold_files()
+    assert len(before) == 3
+    forced = "2025-07-11"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        summary = compact_pending(spark, lake, force_dates=[forced])
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, prev)
+    assert [r["target_date"] for r in summary["results"]] == [forced]
+    after = gold_files()
+    assert set(after) == set(before)
+    for d, files in after.items():
+        if d == f"date={forced}":
+            assert files.isdisjoint(before[d]), (d, files, before[d])
+        else:
+            assert files == before[d], d
+    assert spark.read.parquet(lake.gold).count() == 12

@@ -713,3 +713,49 @@ def test_jsonl_corpus_stats_single_scan(spark):
     assert plan.count("FileScan") == 1, f"expected 1 scan:\n{plan[:3000]}"
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "from_json" in plan
+
+
+def _physical_node_names(df) -> list[str]:
+    """Operator names of the executed plan's own tree: AQE wrappers are
+    unwrapped, and a cache scan's stored plan (an inner child, not a
+    child) is not descended into."""
+    names, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName().startswith("AdaptiveSparkPlan"):
+            stack.append(node.executedPlan())
+            continue
+        names.append(node.nodeName())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return names
+
+
+def test_quality_split_reads_one_persisted_lineage(spark, tmp_path):
+    """split_quality's good and rejects outputs are projections of ONE
+    persisted labeled frame: each optimized plan reads exactly one
+    InMemoryRelation, so the silver write fills the cache and the reject
+    sinks re-read it; the rejects projection adds no shuffle of its own."""
+    from retail_aws_etl_pipeline_spark.operators.validate import split_quality
+    from retail_aws_etl_pipeline_spark.sources.reader import read_flexible_csv
+
+    path = tmp_path / "sales.csv"
+    path.write_text(
+        "transaction_id,store_id,timestamp,item_id,quantity,unit_price,revenue\n"
+        "T1,S1,2024-10-16 14:30:25,I1,2,1.00,2.00\n"
+        "T1,S1,2024-10-16 14:30:25,I1,2,1.00,2.00\n"
+        "T2,S1,bad,I2,1,1.00,1.00\n"
+    )
+    extracted, _ = read_flexible_csv(spark, str(path))
+    split = split_quality(extracted, ingest_run_id="plan", source_file="sales.csv")
+    try:
+        assert len(split.cached) == 1
+        for df in (split.good, split.rejects):
+            optimized = df._jdf.queryExecution().optimizedPlan().toString()
+            assert optimized.count("InMemoryRelation") == 1, optimized
+        nodes = _physical_node_names(split.rejects)
+        assert "InMemoryTableScan" in nodes, nodes
+        assert not any("Exchange" in n for n in nodes), nodes
+    finally:
+        for df in split.cached:
+            df.unpersist()

@@ -711,3 +711,41 @@ def test_gini_staged_ppm_no_overflow_at_scale(spark):
     ]
     want = [num * 1_000_000 // den for num, den in cases]
     assert got == want
+
+
+def test_user_sessions_sub_second_gap(spark, tmp_path):
+    """A gap of 1800.5 s opens a new session and a gap of exactly 1800 s
+    does not — the oracle's ``> INTERVAL 30 MINUTE`` at microsecond
+    precision, not whole seconds."""
+    from datetime import datetime, timedelta, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from retail_aws_etl_pipeline_spark.plans import all_specs
+    from tests.oracle import compare
+
+    t0 = datetime(2025, 6, 2, 8, 0, tzinfo=timezone.utc)
+    events = [
+        ("u1", t0, 1),
+        ("u1", t0 + timedelta(seconds=1800.5), 2),  # new session
+        ("u2", t0, 3),
+        ("u2", t0 + timedelta(seconds=1800), 4),  # same session
+        ("u2", t0 + timedelta(seconds=3600.25), 5),  # 1800.25 s: new session
+    ]
+    pq.write_table(
+        pa.table(
+            {
+                "user_id": [e[0] for e in events],
+                "ts": pa.array([e[1] for e in events], pa.timestamp("us", tz="UTC")),
+                "event_id": [e[2] for e in events],
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    spec = all_specs()["user_sessions"]
+    df = spec.spark_fn(spark, str(tmp_path))
+    got = sorted((r["user_id"], r["session_idx"], r["n_events"]) for r in df.collect())
+    assert got == [("u1", 1, 1), ("u1", 2, 1), ("u2", 1, 2), ("u2", 2, 1)]
+    result = compare(df, spec.oracle, str(tmp_path))
+    assert result["ok"], result
