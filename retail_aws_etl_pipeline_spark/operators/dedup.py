@@ -81,38 +81,13 @@ def shingles(
     )
 
 
-def exact_dup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Groups of byte-identical documents: (text_hash, n_docs, keep_id)."""
-    return (
-        df.select(F.col(id_col), F.md5(F.col(text_col)).alias("text_hash"))
-        .groupBy("text_hash")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("keep_id"))
-    )
-
-
-def minhash_signatures(gram_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """k lexicographic-min md5 signatures per doc: (id, s, mh).
-
-    ``min(md5(seed || '|' || gram))`` is a valid MinHash family: each seed
-    defines an independent uniform permutation of the gram universe via the
-    hash, and the lexicographic min over hex strings picks its minimum.
-    """
-    seeds = F.explode(F.array(*[F.lit(s) for s in range(NUM_HASHES)])).alias("s")
-    return (
-        gram_df.select(id_col, "gram", seeds)
-        .groupBy(id_col, "s")
-        .agg(F.min(F.md5(F.concat_ws("|", F.col("s"), F.col("gram")))).alias("mh"))
-    )
-
-
 def lsh_bands(gram_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Fused wide-form banding: (id, band, band_key) straight from grams.
 
     One groupBy(doc) computes all k min-hashes as k aggregate columns (no
     k× row explosion like the narrow form), then bands explode into a
-    NUM_BANDS-row-per-doc frame. Same values as
-    ``lsh_band_keys(minhash_signatures(...))`` with one shuffle less and
-    k× less pre-shuffle data — the form to use at scale.
+    NUM_BANDS-row-per-doc frame — one shuffle and k× less pre-shuffle
+    data than a narrow (doc, seed) signature frame banded afterwards.
     """
     mins = [
         F.min(F.md5(F.concat_ws("|", F.lit(s), F.col("gram")))).alias(f"mh{s}")
@@ -134,24 +109,6 @@ def lsh_bands(gram_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     ).alias("bp")
     return wide.select(F.col(id_col), bands).select(
         id_col, F.col("bp.band").alias("band"), F.col("bp.band_key").alias("band_key")
-    )
-
-
-def lsh_band_keys(sig_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Banded signature keys: (id, band, band_key); r signatures per band."""
-    parts = [
-        F.min(F.when(F.col("s") % ROWS_PER_BAND == r, F.col("mh"))).alias(f"p{r}")
-        for r in range(ROWS_PER_BAND)
-    ]
-    return (
-        sig_df.withColumn("band", (F.col("s") / ROWS_PER_BAND).cast("int"))
-        .groupBy(id_col, "band")
-        .agg(*parts)
-        .select(
-            F.col(id_col),
-            "band",
-            F.concat_ws("", *[F.col(f"p{r}") for r in range(ROWS_PER_BAND)]).alias("band_key"),
-        )
     )
 
 
@@ -519,127 +476,6 @@ def connected_components(
         edges.unpersist()
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    nodes: DataFrame,
-    id_col: str = "doc_id",
-    max_iter: int = 40,
-    checkpoint: str = "auto",
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star: (node, label).
-
-    Same contract as :func:`connected_components` (label = component-min
-    node id; singletons label themselves), different scaling envelope:
-    Kiveris et al., "Connected Components in MapReduce and Beyond"
-    (SOCC'14) prove O(log n) rounds regardless of graph diameter AND that
-    the edge set shrinks toward the final star graphs, so total shuffle
-    traffic is bounded — the algorithm of choice for dense or
-    adversarially chained graphs. Min-label propagation (the default)
-    has cheaper rounds on the shallow sparse graphs near-dup pairs
-    produce; pick per workload.
-
-    Both phases are pure groupBy-min + join (no per-node adjacency
-    lists are ever materialized — hot nodes stay combiner-friendly):
-
-    - large-star: every node ``v > u`` in ``Γ(u)`` re-attaches to
-      ``m(u) = min(Γ(u) ∪ {u})``;
-    - small-star: every smaller neighbor (and ``u`` itself) attaches to
-      ``u``'s minimum smaller neighbor.
-
-    Edges stay normalized as ``(big, small)``; the fixpoint is a union of
-    disjoint stars centered at component minima, read off directly as the
-    labeling. Rounds end in an eager lineage truncation (constant-size
-    plans; ``checkpoint`` picks local vs reliable — see
-    :func:`_truncate_lineage`).
-    """
-    norm = (
-        pairs.filter(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.greatest("id_a", "id_b").alias("big"),
-            F.least("id_a", "id_b").alias("small"),
-        )
-        .distinct()
-    )
-    # Convergence is edge-SET equality round over round. The exact check
-    # used to cost two anti-join jobs per round on top of the checkpoint;
-    # instead each round's checkpoint job observes a set signature —
-    # (count, bit_xor(xxhash64(big, small))) — and equal consecutive
-    # signatures SCREEN for the fixpoint. Both frames are .distinct()
-    # outputs, so multiset == set and xor never self-cancels; random
-    # collisions are ~2^-64 per round. But xxhash64 is non-cryptographic
-    # with a fixed public seed and this operator runs over untrusted
-    # web-crawl corpora, so an adversarially crafted input could produce
-    # two DIFFERENT equal-count edge sets with colliding xors — a matching
-    # signature is therefore CONFIRMED by the exact check before breaking:
-    # counts already agree, so one anti-join decides set equality. The
-    # confirm job runs only on the terminal round (plus any adversarial
-    # collision round, where it correctly keeps iterating), preserving
-    # the 3-jobs/round -> 1 saving everywhere else.
-    sig_aggs = (
-        F.count(F.lit(1)).alias("n"),
-        F.expr("bit_xor(xxhash64(big, small))").alias("h"),
-    )
-    edges, sig = _truncate_lineage_observed(norm, checkpoint, *sig_aggs)
-    converged = not sig["n"]
-    for _ in range(max_iter):
-        if converged:
-            break
-        # large-star: Γ over both directions, one groupBy for m(u)
-        bidir = edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("big").alias("src"), F.col("small").alias("dst")),
-                    F.struct(F.col("small").alias("src"), F.col("big").alias("dst")),
-                )
-            ).alias("e")
-        ).select("e.src", "e.dst")
-        mins = bidir.groupBy("src").agg(F.min("dst").alias("mn"))
-        ls = (
-            bidir.join(mins, "src")
-            .filter(F.col("dst") > F.col("src"))
-            .select(
-                F.col("dst").alias("big"),
-                F.least(F.col("mn"), F.col("src")).alias("small"),
-            )
-            .distinct()
-        )
-        # small-star: Γ_small(u) is exactly the normalized edges of u
-        mins2 = ls.groupBy("big").agg(F.min("small").alias("mn"))
-        part1 = (
-            ls.join(mins2, "big")
-            .filter(F.col("small") != F.col("mn"))
-            .select(F.col("small").alias("big"), F.col("mn").alias("small"))
-        )
-        part2 = mins2.select("big", F.col("mn").alias("small"))
-        new_edges, new_sig = _truncate_lineage_observed(
-            part1.unionByName(part2).distinct(), checkpoint, *sig_aggs
-        )
-        if (new_sig["n"], new_sig["h"]) == (sig["n"], sig["h"]):
-            # Signature match -> exact confirm (see the screening note
-            # above). Equal counts + empty one-sided anti-join == set
-            # equality; both frames are checkpointed, so this is one
-            # cheap terminal-round job.
-            converged = new_edges.join(
-                edges, ["big", "small"], "left_anti"
-            ).isEmpty()
-        edges, sig = new_edges, new_sig
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds"
-        )
-    labels = edges.select(F.col("big").alias("node"), F.col("small").alias("label"))
-    centers = (
-        edges.select(F.col("small").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    labeled = labels.unionByName(centers)
-    singletons = nodes.select(F.col(id_col).alias("node")).join(
-        labeled.select("node"), "node", "left_anti"
-    )
-    return labeled.unionByName(singletons.withColumn("label", F.col("node")))
-
-
 SIMHASH_BITS = 60  # 15 md5 nibbles x 4 bits; bit 63 would overflow int64
 
 
@@ -683,10 +519,10 @@ def per_doc_signatures(gram_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     The simhash majority vote and every MinHash signature are aggregates
     over the same gram stream, so a pipeline that wants several dedup
-    signals (cluster + banded candidates + fingerprints) should pay the
+    signals (cluster + banded candidates + simhash) should pay the
     shingle explosion and the groupBy(doc) exchange ONCE — this operator
-    is that fused pass. Equals ``simhash64`` ∪ the wide form of
-    ``minhash_signatures`` column-for-column.
+    is that fused pass. Equals ``simhash64`` ∪ the min-hash columns of
+    :func:`lsh_bands` column-for-column.
     """
     hashed = gram_df.withColumn("gh", F.md5("gram"))
     aggs = _packed_vote_aggs() + [
@@ -794,41 +630,6 @@ def token_chunks(
     )
 
 
-def chunk_dedup_stats(
-    df: DataFrame, w: int = CHUNK_W, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """C4-style span-level exact dedup: keep each span's FIRST occurrence.
-
-    First = min (doc_id, chunk_idx) over every occurrence of the exact
-    span text, corpus-wide (so repeats WITHIN a doc dedup too). Returns
-    per-doc stats: (doc_id, n_chunks, n_retained, n_tokens,
-    n_tokens_retained) — the write side would keep the retained spans and
-    re-join them in chunk_idx order.
-
-    Scale: one shuffle keyed on the span text (groupBy chunk, map-side
-    combined to a single min-struct per distinct span) + the equi-join
-    back — the canonical content-hash-partitioned dedup shape. No windows,
-    no collects.
-    """
-    chunks = token_chunks(df, w=w, id_col=id_col, text_col=text_col)
-    firsts = chunks.groupBy("chunk").agg(
-        F.min(F.struct(F.col(id_col), F.col("chunk_idx"))).alias("first")
-    )
-    flagged = chunks.join(firsts, "chunk").withColumn(
-        "retained",
-        (F.col("first")[id_col] == F.col(id_col))
-        & (F.col("first.chunk_idx") == F.col("chunk_idx")),
-    )
-    return flagged.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_chunks"),
-        F.sum(F.col("retained").cast("long")).alias("n_retained"),
-        F.sum("n_toks").alias("n_tokens"),
-        F.sum(F.when(F.col("retained"), F.col("n_toks")).otherwise(F.lit(0))).alias(
-            "n_tokens_retained"
-        ),
-    )
-
-
 def containment_prefix_candidates(
     gram_df: DataFrame,
     threshold_pct: int = 90,
@@ -913,46 +714,6 @@ def containment_pairs_prefix(
         counts.filter(F.col("common") * 100 >= F.lit(threshold_pct) * least)
         .withColumn("containment", F.col("common").cast("double") / least)
         .select("id_a", "id_b", "n_a", "n_b", "common", "containment")
-    )
-
-
-def chunk_dedup_corpus(
-    df: DataFrame, w: int = CHUNK_W, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """The WRITE side of span dedup: rebuild each doc from its retained
-    spans, in original chunk order — (doc_id, text, n_tokens_retained).
-
-    Docs whose every span was seen earlier come back with empty text
-    (n_tokens_retained = 0) rather than disappearing, so row count is
-    preserved for downstream joins; a curation pipeline drops them with
-    one filter. Reassembly is a groupBy(doc) over the retained spans with
-    an order-pinned aggregate (sort the collected (chunk_idx, chunk)
-    structs, then join) — the per-doc span list is bounded by doc length,
-    so the sort is in-memory per group, never a global order.
-    """
-    chunks = token_chunks(df, w=w, id_col=id_col, text_col=text_col)
-    firsts = chunks.groupBy("chunk").agg(
-        F.min(F.struct(F.col(id_col), F.col("chunk_idx"))).alias("first")
-    )
-    retained = chunks.join(firsts, "chunk").filter(
-        (F.col("first")[id_col] == F.col(id_col))
-        & (F.col("first.chunk_idx") == F.col("chunk_idx"))
-    )
-    rebuilt = retained.groupBy(id_col).agg(
-        F.array_join(
-            F.expr("transform(array_sort(collect_list(struct(chunk_idx, chunk))), s -> s.chunk)"),
-            " ",
-        ).alias(text_col),
-        F.sum("n_toks").alias("n_tokens_retained"),
-    )
-    return (
-        df.select(id_col)
-        .join(rebuilt, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col(text_col), F.lit("")).alias(text_col),
-            F.coalesce(F.col("n_tokens_retained"), F.lit(0)).alias("n_tokens_retained"),
-        )
     )
 
 
@@ -1131,104 +892,6 @@ def triangle_census(edges: DataFrame) -> DataFrame:
     # All three caches feed multiple branches of the returned one-row
     # plan; caller releases via caching.release_caches(result).
     return retaining(out, e, deg, oriented)
-
-
-def sorted_neighborhood_candidates(
-    df: DataFrame,
-    sort_exprs: list,
-    window: int,
-    id_col: str = "doc_id",
-    partitions: int | None = None,
-) -> DataFrame:
-    """Sorted-neighborhood blocking: (id_a, id_b, rank_dist) for every row
-    pair whose GLOBAL ranks under ``sort_exprs`` differ by at most
-    ``window`` — the classic entity-resolution alternative to LSH
-    banding: sort on a cheap blocking key (language + length here) and
-    only compare neighbors, O(n·w) candidates instead of O(n²).
-
-    No global window anywhere: ranks come from range partitions +
-    per-partition row_number + broadcast prefix offsets (the
-    customer_spend_deciles discipline), and the neighbor join is the
-    banded trick from pairs_within_window transplanted from time to rank
-    space — blocks are ``window`` ranks wide, each row probes its own
-    block and the next, the later-rank row anchors its own block, so
-    every qualifying pair is generated exactly once. ``sort_exprs`` must
-    end in a unique tiebreaker for deterministic ranks.
-
-    ``partitions`` defaults to the session's shuffle-partition count
-    (the r8 skew study's knob fix: the old fixed 16 capped the ranking
-    stage's parallelism regardless of cluster size — fine at 50k docs,
-    a bottleneck at 100 TB). Global ranks are partition-count-invariant
-    (per-partition row_number + broadcast prefix offsets), so the knob
-    moves only parallelism, never output. Skew note, measured
-    (scripts/skew_neighborhood_smoke.py): candidate count is a function
-    of corpus SIZE alone — rank-space blocks are `window` ranks wide by
-    construction, so a 90%-one-lang / 60%-one-length corpus produces
-    the IDENTICAL candidate set, and repartitionByRange splits the tie
-    mass via the unique tiebreaker (max/mean partition rows 1.15 under
-    that skew).
-    """
-    from pyspark.sql import Window as W
-
-    if partitions is None:
-        partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-
-    # PINNED: both the row_number branch and the counts branch consume
-    # this frame, and global ranks are only correct if both see the SAME
-    # range partition bounds. RangePartitioner samples at execution time,
-    # so an unpersisted frame would rely on exchange reuse
-    # (spark.sql.exchange.reuse) to guarantee one partitioning — persist
-    # makes the single materialization explicit instead of latent
-    # (ADVICE r7; same discipline as customer_spend_deciles).
-    ranged = (
-        df.repartitionByRange(partitions, *sort_exprs)
-        .withColumn("__pid", F.spark_partition_id())
-        .persist()
-    )
-    local = ranged.withColumn(
-        "__lrn", F.row_number().over(W.partitionBy("__pid").orderBy(*sort_exprs))
-    )
-    counts = ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
-    offsets = (
-        counts.alias("a")
-        .join(F.broadcast(counts.alias("b")), F.col("b.__pid") < F.col("a.__pid"), "left")
-        .groupBy(F.col("a.__pid").alias("__pid"))
-        .agg(F.coalesce(F.sum("b.__cnt"), F.lit(0)).alias("__offset"))
-    )
-    ranked = (
-        local.join(F.broadcast(offsets), "__pid")
-        .select(
-            F.col(id_col),
-            (F.col("__offset") + F.col("__lrn")).cast("long").alias("__rn"),
-        )
-        .withColumn("__blk", F.expr(f"__rn div {window}"))
-        .persist()
-    )
-    probes = ranked.withColumn(
-        "__pb", F.explode(F.array(F.col("__blk"), F.col("__blk") + 1))
-    ).select(
-        F.col(id_col).alias("__id_lo"),
-        F.col("__rn").alias("__rn_lo"),
-        F.col("__pb").alias("__b"),
-    )
-    anchors = ranked.select(
-        F.col(id_col).alias("__id_hi"),
-        F.col("__rn").alias("__rn_hi"),
-        F.col("__blk").alias("__b"),
-    )
-    out = (
-        probes.join(anchors, "__b")
-        .filter(
-            (F.col("__rn_hi") > F.col("__rn_lo"))
-            & (F.col("__rn_hi") - F.col("__rn_lo") <= window)
-        )
-        .select(
-            F.least("__id_lo", "__id_hi").alias("id_a"),
-            F.greatest("__id_lo", "__id_hi").alias("id_b"),
-            (F.col("__rn_hi") - F.col("__rn_lo")).cast("long").alias("rank_dist"),
-        )
-    )
-    return retaining(out, ranged, ranked)
 
 
 def kcore_peel(
@@ -1595,14 +1258,14 @@ def content_defined_chunks(
     """Split each document at CONTENT-DEFINED boundaries: (id, chunk_idx,
     chunk_text) — the shift-resistant alternative to fixed token windows.
 
-    Fixed-size chunk dedup (:func:`chunk_dedup_stats`) breaks when a
-    document gains one leading token: every window shifts and nothing
-    matches. Content-defined chunking (the storage-dedup technique —
-    Muthitacharoen et al., LBFS SOSP'01) places a boundary after token
-    ``i`` whenever the rolling hash of the last ``CDC_WINDOW`` tokens is
-    ``0 mod CDC_DIVISOR``, so boundaries are functions of LOCAL CONTENT:
-    an insertion re-chunks only up to the first surviving boundary and
-    every chunk after it is byte-identical again (pinned by test).
+    Fixed-size chunk dedup breaks when a document gains one leading token:
+    every window shifts and nothing matches. Content-defined chunking (the
+    storage-dedup technique — Muthitacharoen et al., LBFS SOSP'01) places a
+    boundary after token ``i`` whenever the rolling hash of the last
+    ``CDC_WINDOW`` tokens is ``0 mod CDC_DIVISOR``, so boundaries are
+    functions of LOCAL CONTENT: an insertion re-chunks only up to the first
+    surviving boundary and every chunk after it is byte-identical again
+    (pinned by test).
 
     Everything is per-row array algebra — token md5-nibble hashes, the
     windowed polynomial fold, boundary filter, and slice/join chunk
@@ -1816,13 +1479,13 @@ def quality_survivors(
     """One survivor per connected component: the argmax-``score_col``
     member, ties broken by smallest id.
 
-    ``comp`` is the (node, label) frame from ``connected_components`` /
-    ``connected_components_star``; ``scored`` carries (``id_col``,
-    ``score_col``) with a non-negative integer score. Production dedup
-    keeps the BEST document of each duplicate cluster — longest, highest
-    quality, most recent — not an arbitrary one; the min-id survivor
-    ``dedup_retained_corpus`` emits is a label artifact that discards a
-    better-written duplicate whenever it carries the larger id.
+    ``comp`` is the (node, label) frame from ``connected_components``;
+    ``scored`` carries (``id_col``, ``score_col``) with a non-negative
+    integer score. Production dedup keeps the BEST document of each
+    duplicate cluster — longest, highest quality, most recent — not an
+    arbitrary one; the min-id survivor ``dedup_retained_corpus`` emits is a
+    label artifact that discards a better-written duplicate whenever it
+    carries the larger id.
 
     The argmax is ONE groupBy(label) over a ``min(struct(-score, id))``
     aggregation buffer — no window, no rank join-back — so the shuffle
@@ -1861,7 +1524,6 @@ def quality_survivors(
 #: probes consuming the full 32-hex md5 digest (4 x 8 hex chars).
 BLOOM_BITS = 1024
 BLOOM_WORD_BITS = 32
-BLOOM_WORDS = BLOOM_BITS // BLOOM_WORD_BITS
 BLOOM_HASHES = 4
 
 
@@ -1882,12 +1544,12 @@ def bloom_positions(text_col: str = "text") -> Column:
 
 
 def bloom_build_words(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Build the corpus Bloom filter as a <= BLOOM_WORDS-row word table
-    ``(word_idx, word)`` — the distributable form of the bitset: each
-    document contributes k single-bit words and ``bit_or`` merges them,
-    an associative partial aggregate (map-side combined like any SUM), so
-    the filter build is ONE exchange of at most BLOOM_WORDS rows per
-    partition regardless of corpus size. The word table broadcasts to
+    """Build the corpus Bloom filter as a word table ``(word_idx, word)``
+    of at most BLOOM_BITS / BLOOM_WORD_BITS rows — the distributable form
+    of the bitset: each document contributes k single-bit words and
+    ``bit_or`` merges them, an associative partial aggregate (map-side
+    combined like any SUM), so the filter build is ONE exchange of at most
+    that many rows per partition regardless of corpus size. The word table broadcasts to
     probes — the whole standing filter is 128 bytes of payload."""
     pos = df.select(F.explode(bloom_positions(text_col)).alias("pos"))
     return (

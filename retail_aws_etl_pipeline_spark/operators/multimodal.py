@@ -328,36 +328,6 @@ def encode_wav(samples, sample_rate: int = 16000, n_channels: int = 1) -> bytes:
     ) + data
 
 
-def decode_wav(buf: bytes):
-    """WAV bytes → (sample_rate, n_channels, int16 numpy array). Walks the
-    RIFF chunk list (skipping unknown chunks, even-byte alignment) rather
-    than assuming fixed offsets."""
-    import numpy as np
-
-    if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE stream")
-    pos, sample_rate, n_channels, data = 12, None, None, None
-    while pos + 8 <= len(buf):
-        cid = buf[pos : pos + 4]
-        size = int.from_bytes(buf[pos + 4 : pos + 8], "little")
-        body = buf[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            audio_format = int.from_bytes(body[0:2], "little")
-            if audio_format != 1:
-                raise ValueError(f"only PCM supported, got format {audio_format}")
-            n_channels = int.from_bytes(body[2:4], "little")
-            sample_rate = int.from_bytes(body[4:8], "little")
-            bits = int.from_bytes(body[14:16], "little")
-            if bits != 16:
-                raise ValueError(f"only 16-bit PCM supported, got {bits}")
-        elif cid == b"data":
-            data = body
-        pos += 8 + size + (size & 1)  # chunks are even-aligned
-    if sample_rate is None or data is None:
-        raise ValueError("missing fmt/data chunk")
-    return sample_rate, n_channels, np.frombuffer(data, dtype="<i2")
-
-
 # ---------------------------------------------------------------------------
 # Deterministic synthesizers: payload bytes are an integer formula of the
 # id, so a SQL oracle can verify decoded features without seeing bytes.
@@ -424,36 +394,10 @@ def synth_media(ids: DataFrame, id_col: str, kind: str) -> DataFrame:
     return ids.select(id_col).mapInPandas(kernel, schema=MEDIA_SCHEMA)
 
 
-def decode_bmp_stats(media: DataFrame) -> DataFrame:
-    """Decode image payloads → (media_id, width, height, n_units, byte_sum,
-    c0_sum): full parse of every payload, features over the logical pixel
-    bytes (c0 = file channel 0, every 3rd byte)."""
-    import numpy as np
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                px = decode_bmp(bytes(payload))
-                flat = px.reshape(-1).astype(np.int64)
-                rows.append(
-                    (int(mid), px.shape[1], px.shape[0], flat.size,
-                     int(flat.sum()), int(flat[0::3].sum()))
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "n_units", "byte_sum", "c0_sum"]
-            )
-
-    return media.filter(F.col("kind") == "image").select("media_id", "payload").mapInPandas(
-        kernel,
-        schema="media_id long, width int, height int, n_units int, byte_sum long, c0_sum long",
-    )
-
-
 def decode_png_stats(media: DataFrame) -> DataFrame:
-    """Decode PNG payloads (kind='png') → the same feature tuple as
-    :func:`decode_bmp_stats`: a full inflate + unfilter of every payload,
-    features over the logical pixel bytes."""
+    """Decode PNG payloads (kind='png') → (media_id, width, height,
+    n_units, byte_sum, c0_sum): a full inflate + unfilter of every
+    payload, features over the logical pixel bytes."""
     import numpy as np
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -473,28 +417,6 @@ def decode_png_stats(media: DataFrame) -> DataFrame:
     return media.filter(F.col("kind") == "png").select("media_id", "payload").mapInPandas(
         kernel,
         schema="media_id long, width int, height int, n_units int, byte_sum long, c0_sum long",
-    )
-
-
-def decode_wav_stats(media: DataFrame) -> DataFrame:
-    """Decode audio payloads → (media_id, sample_rate, n_units, abs_sum,
-    max_sample) via the RIFF chunk walk."""
-    import numpy as np
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, _ch, samples = decode_wav(bytes(payload))
-                s = samples.astype(np.int64)
-                rows.append((int(mid), rate, len(s), int(np.abs(s).sum()), int(s.max())))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "sample_rate", "n_units", "abs_sum", "max_sample"]
-            )
-
-    return media.filter(F.col("kind") == "audio").select("media_id", "payload").mapInPandas(
-        kernel,
-        schema="media_id long, sample_rate int, n_units int, abs_sum long, max_sample int",
     )
 
 
@@ -856,7 +778,7 @@ def _avif_header_bytes(w: int, h: int, brand: bytes) -> bytes:
 def synth_avif_media(ids: DataFrame, id_col: str) -> DataFrame:
     """(id) → MEDIA_SCHEMA rows cycling the avif/heic brands by ``id % 2``
     with per-id dims (``_probe_dims_for`` — the shared formula); meta dims
-    stay NULL (see :func:`synth_header_media`)."""
+    stay NULL, so the probe must read them from the payload."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -887,37 +809,6 @@ def synth_webp_media(ids: DataFrame, id_col: str) -> DataFrame:
                 w, h = _probe_dims_for(mid)
                 payload = _webp_header_bytes(w, h, ("vp8", "vp8l", "vp8x")[mid % 3])
                 rows.append((mid, "image", payload, ("webp", None, None, None, None)))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
-
-    return ids.select(id_col).mapInPandas(kernel, schema=MEDIA_SCHEMA)
-
-
-def synth_header_media(ids: DataFrame, id_col: str) -> DataFrame:
-    """(id) → MEDIA_SCHEMA rows cycling jpeg/png/gif by ``id % 3``, each a
-    real header-valid payload of that format with per-id dimensions
-    (``_probe_dims_for``). meta dims are left NULL on purpose: the ONLY
-    place the dimensions exist is inside the payload bytes, so a probe
-    over this frame provably parses headers rather than echoing metadata."""
-    import struct
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                w, h = _probe_dims_for(mid)
-                fmt = ("jpeg", "png", "gif")[mid % 3]
-                if fmt == "jpeg":
-                    payload = _jpeg_header_bytes(w, h)
-                elif fmt == "png":
-                    payload = (
-                        PNG_SIG
-                        + _png_chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-                        + _png_chunk(b"IEND", b"")
-                    )
-                else:
-                    payload = _gif_header_bytes(w, h)
-                rows.append((mid, "image", payload, (fmt, None, None, None, None)))
             yield pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
 
     return ids.select(id_col).mapInPandas(kernel, schema=MEDIA_SCHEMA)
@@ -1078,7 +969,7 @@ def synth_ogg_media(ids: DataFrame, id_col: str) -> DataFrame:
     """(id) → MEDIA_SCHEMA rows cycling opus/vorbis by ``id % 2`` with the
     SAME stream-parameter formulas as the wav/flac corpus (sample rate
     ``8000 + (id%100)*80``, channels ``1 + id%2``) living only in the
-    payload bytes — see :func:`synth_header_media`."""
+    payload bytes."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1099,7 +990,7 @@ def synth_ogg_media(ids: DataFrame, id_col: str) -> DataFrame:
 def synth_audio_meta_media(ids: DataFrame, id_col: str) -> DataFrame:
     """(id) → MEDIA_SCHEMA rows cycling wav/flac/mp3 by ``id % 3``; stream
     parameters are per-id formulas that live ONLY in the payload headers
-    (meta stays NULL — see :func:`synth_header_media`): channels
+    (meta stays NULL): channels
     ``1 + id%2``; sample rate ``8000 + (id%100)*80`` for wav/flac, the
     MPEG1 table entry ``(id//3)%3`` for mp3 (odd ``id//3`` rows carry an
     ID3v2 prefix so the tag-skip path is exercised)."""

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from retail_aws_etl_pipeline_spark.operators.validate import _is_pruned_observation
+
 #: Number of hash buckets the id space is divided into.
 SPLIT_BUCKETS = 100
 
@@ -616,10 +618,13 @@ def perceptron_fit_trace(
             )
         try:
             cen = obs.get
-        except Exception:
+        except Exception as exc:
             # empty-at-runtime frame: AQE's empty-relation propagation can
             # prune the Observation node (the validate-module fallback) —
-            # re-aggregate the (empty) lineage explicitly
+            # re-aggregate the (empty) lineage explicitly. Any other
+            # failure is real and propagates.
+            if not _is_pruned_observation(exc):
+                raise
             cen = cen_frame.agg(*cen_aggs).first().asDict()
         w = list(w)
         for r in delta:

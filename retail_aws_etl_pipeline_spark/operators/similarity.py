@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (array<float>).
 
-Three implementations of cosine top-k, sharing one QUANTIZED contract so
+Cosine top-k implementations sharing one QUANTIZED contract so
 results are integer-exact and engine-reproducible:
 
     q_i = floor(x_i * 1024)          (int64, exact from the float)
@@ -9,15 +9,14 @@ results are integer-exact and engine-reproducible:
 
 - ``brute_force_topk``: exact scan — the correctness baseline. O(Q·N·d)
   but embarrassingly parallel; broadcast the probe set, no shuffle.
-- ``lsh_bucketed_topk``: random-hyperplane LSH — each vector gets a B-bit
-  sign code against B fixed pseudo-random planes (derived from md5, shared
-  constant, no RNG); candidates = same-bucket vectors only. The 100 TB
-  path: bucket is computed scan-side, the join is an equi-join on the
-  bucket id, and recall is tunable via B / multi-probe.
-- ``brute_force_topk_pandas``: the same contract through an Arrow-batched
-  ``mapInPandas`` + numpy kernel — the vectorized-UDF pattern for when the
-  expression form gets too wide (e.g. d in the thousands). Integer math in
-  numpy matches the SQL form bit-for-bit.
+- ``lsh_bucketed_topk_ball``: random-hyperplane LSH — each vector gets a
+  B-bit sign code against B fixed pseudo-random planes (derived from md5,
+  shared constant, no RNG); candidates = vectors within Hamming radius of
+  the probe's bucket. The 100 TB path: bucket is computed scan-side, the
+  join is an equi-join on the bucket id, and recall is tunable via B /
+  multi-probe.
+- ``ivf_topk`` / ``ivf_index_topk``: coarse-quantizer (IVF) search, in
+  memory or against an at-rest index partitioned by cell.
 """
 
 from __future__ import annotations
@@ -218,131 +217,6 @@ def _plane_digest(planes: list[list[int]]) -> str:
     return hashlib.md5(raw).hexdigest()
 
 
-#: Above this many probes the nested-loop bit_count(xor) theta-join loses
-#: to ball expansion + equi-join; `lsh_bucketed_topk` switches automatically.
-LSH_BALL_PROBE_THRESHOLD = 8
-
-
-def lsh_bucketed_topk(
-    df: DataFrame,
-    probe_ids: list[int],
-    k: int = 10,
-    id_col: str = "vec_id",
-    multiprobe_radius: int = 1,
-    planes: list[list[int]] | None = None,
-) -> DataFrame:
-    """Approximate top-k: candidates restricted to buckets within Hamming
-    distance ``multiprobe_radius`` of the probe's bucket (multi-probe LSH —
-    the standard recall lever; radius 0 = single bucket).
-
-    For a tiny broadcast probe set the radius condition is a cheap
-    nested-loop against ≤|probes| rows per scan row. Above
-    ``LSH_BALL_PROBE_THRESHOLD`` probes this auto-delegates to
-    :func:`lsh_bucketed_topk_ball` (identical candidate set and results):
-    each probe explodes into its Hamming radius-ball of bucket ids and the
-    match becomes a plain equi-join the planner can scale — the default can
-    never plan a nested loop over every (probe × row) pair for large probe
-    sets.
-    """
-    from pyspark.sql import Window as W
-
-    if len(probe_ids) > LSH_BALL_PROBE_THRESHOLD and multiprobe_radius <= 2:
-        return lsh_bucketed_topk_ball(
-            df,
-            probe_ids,
-            k,
-            id_col=id_col,
-            multiprobe_radius=multiprobe_radius,
-            planes=planes,
-        )
-
-    base = with_lsh_bucket(with_quantized(df), planes=planes).select(
-        id_col, "qvec", "qnorm", "bucket"
-    )
-    probes = (
-        base.filter(F.col(id_col).isin(probe_ids))
-        .select(
-            F.col(id_col).alias("probe_id"),
-            F.col("qvec").alias("p_qvec"),
-            F.col("qnorm").alias("p_qnorm"),
-            F.col("bucket").alias("p_bucket"),
-        )
-    )
-    joined = F.broadcast(probes).join(
-        base,
-        (
-            F.bit_count(F.col("p_bucket").bitwiseXOR(F.col("bucket")))
-            <= F.lit(multiprobe_radius)
-        )
-        & (F.col("probe_id") != F.col(id_col)),
-    )
-    scored = joined.withColumn("dot_q", _dot("p_qvec", "qvec")).withColumn(
-        "cosine", F.col("dot_q") / F.sqrt((F.col("p_qnorm") * F.col("qnorm")).cast("double"))
-    )
-    w = W.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", id_col, "dot_q", "cosine", F.col("rank").cast("long").alias("rank"))
-    )
-
-
-def lsh_candidate_pairs(
-    df: DataFrame,
-    probe_ids: list[int],
-    id_col: str = "vec_id",
-    multiprobe_radius: int = 1,
-    planes: list[list[int]] | None = None,
-) -> DataFrame:
-    """The (probe_id, vec_id) candidate set the LSH index scores — the
-    selectivity side of the recall/selectivity dial (see ann_recall_sweep)."""
-    base = with_lsh_bucket(with_quantized(df), planes=planes).select(id_col, "bucket")
-    probes = base.filter(F.col(id_col).isin(probe_ids)).select(
-        F.col(id_col).alias("probe_id"), F.col("bucket").alias("p_bucket")
-    )
-    return (
-        F.broadcast(probes)
-        .join(
-            base,
-            (
-                F.bit_count(F.col("p_bucket").bitwiseXOR(F.col("bucket")))
-                <= F.lit(multiprobe_radius)
-            )
-            & (F.col("probe_id") != F.col(id_col)),
-        )
-        .select("probe_id", id_col)
-    )
-
-
-def ivf_candidate_pairs(
-    df: DataFrame,
-    probe_ids: list[int],
-    id_col: str = "vec_id",
-    centroids: list[list[int]] | None = None,
-    nprobe: int = 1,
-) -> DataFrame:
-    """The (probe_id, vec_id) candidate set the IVF index scores at the
-    given ``nprobe`` — selectivity counterpart of :func:`ivf_topk`."""
-    cents = centroids if centroids is not None else ivf_centroids(df, id_col)
-    base = (
-        with_quantized(df)
-        .withColumn("cell", assign_centroid("qvec", cents))
-        .select(id_col, "cell")
-    )
-    probes = (
-        with_quantized(df.filter(F.col(id_col).isin(probe_ids)))
-        .select(
-            F.col(id_col).alias("probe_id"),
-            F.explode(ranked_centroids("qvec", cents, nprobe)).alias("p_cell"),
-        )
-    )
-    return (
-        F.broadcast(probes)
-        .join(base, (F.col("p_cell") == F.col("cell")) & (F.col("probe_id") != F.col(id_col)))
-        .select("probe_id", id_col)
-    )
-
-
 def lsh_bucketed_topk_ball(
     df: DataFrame,
     probe_ids: list[int],
@@ -353,8 +227,8 @@ def lsh_bucketed_topk_ball(
 ) -> DataFrame:
     """Multi-probe LSH via probe-side ball expansion + EQUI-join.
 
-    Same candidate set (hence identical results) as ``lsh_bucketed_topk``,
-    but built for many probes: each probe row explodes into the
+    Same candidate set as a bucket-Hamming nested-loop join (the oracle's
+    form), but built for many probes: each probe row explodes into the
     ``sum(C(B, r) for r <= radius)`` bucket ids of its Hamming ball (B=8,
     radius 1 → 9 rows) and the match is a plain equi-join on ``bucket`` —
     a shuffled/broadcast hash join the planner can scale, instead of a
@@ -399,152 +273,6 @@ def lsh_bucketed_topk_ball(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("probe_id", id_col, "dot_q", "cosine", F.col("rank").cast("long").alias("rank"))
-    )
-
-
-def brute_force_topk_pandas(
-    df: DataFrame, probe_ids: list[int], k: int = 10, id_col: str = "vec_id"
-) -> DataFrame:
-    """Same contract as ``brute_force_topk`` via mapInPandas + numpy.
-
-    The probe matrix is tiny → shipped in the closure (broadcast-variable
-    semantics); each Arrow batch computes an int64 GEMM against it. Output
-    is the per-partition candidate pool; the exact global top-k window runs
-    after (cheap: ≤ k rows per partition per probe would be a further
-    optimization; at d=64 the full scored set is fine).
-    """
-    import pandas as pd  # noqa: F401
-
-    spark = df.sparkSession
-    base = with_quantized(df).select(id_col, "qvec", "qnorm")
-    probe_rows = base.filter(F.col(id_col).isin(probe_ids)).collect()
-    import numpy as np
-
-    p_ids = np.array([r[id_col] for r in probe_rows], dtype=np.int64)
-    p_mat = stack_padded([r["qvec"] for r in probe_rows])
-    p_norm = np.array([r["qnorm"] for r in probe_rows], dtype=np.int64)
-
-    def score(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy(dtype="int64")
-            mat = stack_padded(pdf["qvec"].to_numpy(), min_width=p_mat.shape[1])
-            norms = pdf["qnorm"].to_numpy(dtype="int64")
-            pm = (
-                p_mat
-                if p_mat.shape[1] == mat.shape[1]
-                else np.pad(p_mat, ((0, 0), (0, mat.shape[1] - p_mat.shape[1])))
-            )
-            dots = mat @ pm.T  # (n, P) int64 exact
-            for j in range(len(p_ids)):
-                mask = ids != p_ids[j]
-                cos = dots[mask, j] / np.sqrt(
-                    (norms[mask] * p_norm[j]).astype("float64")
-                )
-                out = {
-                    "probe_id": np.full(mask.sum(), p_ids[j], dtype="int64"),
-                    id_col: ids[mask],
-                    "dot_q": dots[mask, j],
-                    "cosine": cos,
-                }
-                import pandas as _pd
-
-                yield _pd.DataFrame(out)
-
-    schema = f"probe_id long, {id_col} long, dot_q long, cosine double"
-    scored = base.mapInPandas(score, schema=schema)
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", id_col, "dot_q", "cosine", F.col("rank").cast("long").alias("rank"))
-    )
-
-
-def _pair_gemm(a_ids, a_mat, a_norms, b_ids, b_mat, b_norms, tau_sq, upper_triangle):
-    """int64 GEMM between two row sets; survivors of the sign-guarded
-    squared cross-multiplied cosine threshold, oriented ``id_a < id_b``.
-
-    ``upper_triangle=True`` means both sides are the SAME set: keep only
-    ``a_id < b_id`` cells so each unordered pair is emitted once. Otherwise
-    the two sets are disjoint and every qualifying cell is kept, reoriented
-    so the smaller id lands in ``id_a``.
-    """
-    import numpy as np
-    import pandas as pd
-
-    dots = a_mat @ b_mat.T  # exact int64
-    lhs = dots.astype("float64") ** 2
-    rhs = tau_sq * a_norms[:, None].astype("float64") * b_norms[None, :].astype("float64")
-    keep = (dots > 0) & (lhs >= rhs)
-    if upper_triangle:
-        keep &= a_ids[:, None] < b_ids[None, :]
-    ai, bi = np.nonzero(keep)
-    cos = dots[ai, bi] / np.sqrt((a_norms[ai] * b_norms[bi]).astype("float64"))
-    lo = np.minimum(a_ids[ai], b_ids[bi])
-    hi = np.maximum(a_ids[ai], b_ids[bi])
-    return pd.DataFrame({"id_a": lo, "id_b": hi, "cosine": cos})
-
-
-def near_dup_pairs_blocked(
-    df: DataFrame, min_cosine: float, id_col: str = "vec_id", n_blocks: int = 8
-) -> DataFrame:
-    """EXACT all-pairs near-dup (cosine ≥ τ) with no driver-side collect.
-
-    Distributed triangle (block-pair) join: every row is assigned a block
-    ``b = pmod(xxhash64(id), n_blocks)`` and replicated to the ``n_blocks``
-    group keys ``{(min(b,j), max(b,j)) : j}``; ``applyInPandas`` then runs
-    the int64 GEMM per block pair — within-block upper triangle on the
-    diagonal groups, full cross product off-diagonal. Each unordered pair
-    lands in exactly one group, so no dedup pass is needed.
-
-    Exact all-pairs is inherently O(N²) compute; this shape spreads it over
-    ``n_blocks·(n_blocks+1)/2`` independent tasks with shuffle volume
-    ``n_blocks × N`` rows and NOTHING through the driver — the executor
-    memory bound is one block pair (~2N/n_blocks rows), tunable via
-    ``n_blocks``. For sub-quadratic candidate generation at 100 TB use
-    ``near_dup_pairs_lsh_gemm`` instead.
-    """
-    import numpy as np
-
-    tau_sq = float(min_cosine) * float(min_cosine)
-    base = with_quantized(df).select(id_col, "qvec", "qnorm")
-    blk = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks))
-    pairs = [
-        F.struct(
-            F.least(blk, F.lit(j)).alias("ga"), F.greatest(blk, F.lit(j)).alias("gb")
-        )
-        for j in range(n_blocks)
-    ]
-    exploded = base.withColumn("g", F.explode(F.array_distinct(F.array(*pairs)))).select(
-        F.col("g.ga").alias("ga"), F.col("g.gb").alias("gb"), id_col, "qvec", "qnorm"
-    )
-
-    def kernel(key, pdf):
-        import pandas as pd
-
-        ga, gb = key
-        ids = pdf[id_col].to_numpy(dtype="int64")
-        mat = stack_padded(pdf["qvec"].to_numpy())
-        norms = pdf["qnorm"].to_numpy(dtype="int64")
-        # recompute each row's block to split the group into its two sides
-        if ga == gb:
-            return _pair_gemm(ids, mat, norms, ids, mat, norms, tau_sq, True)
-        blocks = pdf["_blk"].to_numpy(dtype="int64")
-        a = blocks == ga
-        b = blocks == gb
-        if not a.any() or not b.any():
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        return _pair_gemm(
-            ids[a], mat[a], norms[a], ids[b], mat[b], norms[b], tau_sq, False
-        )
-
-    exploded = exploded.withColumn("_blk", blk)
-    return exploded.groupBy("ga", "gb").applyInPandas(
-        kernel, schema="id_a long, id_b long, cosine double"
     )
 
 

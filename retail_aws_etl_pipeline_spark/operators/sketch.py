@@ -1,9 +1,7 @@
 """Deterministic HyperLogLog — the oracle-able form of the sketch family.
 
-``approx_sketch_stats`` (Spark's approx_count_distinct / HLL++) is
-RETIRED from the driver surface because its register layout is engine
-private: no ANSI-SQL oracle can recompute it, so it is only
-tolerance-gated against its exact twin. This module implements HLL
+Spark's approx_count_distinct (HLL++) has an engine-private register
+layout: no ANSI-SQL oracle can recompute it. This module implements HLL
 (Flajolet et al. 2007) from scratch on the engine-portable md5 hash
 family the repo already standardizes on (split_bucket / dsir_bucket),
 with EVERY step integer-exact:

@@ -132,21 +132,6 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Two deterministic document fingerprints:
-
-    - ``fp_exact``: md5 of the lowercased, whitespace-normalized text
-      (order-sensitive — exact-dup detection after trivial reformatting);
-    - ``fp_content``: md5 of the sorted distinct token set (order-
-      INsensitive — catches shuffled/re-ordered near-copies).
-    """
-    normalized = F.lower(F.regexp_replace(F.trim(F.col(text_col)), " +", " "))
-    sorted_toks = F.array_sort(F.array_distinct(F.split(normalized, " ")))
-    return df.withColumn("fp_exact", F.md5(normalized)).withColumn(
-        "fp_content", F.md5(F.concat_ws(" ", sorted_toks))
-    )
-
-
 # ---------------------------------------------------------------------------
 # PII detection + redaction — the standard pre-training scrub pass.
 # Pure native regexp Column expressions (scan-side, zero shuffle, codegen);
@@ -201,53 +186,6 @@ def scrub_pii(df: DataFrame, text_col: str = "text", out_col: str = "clean_text"
 BM25_IDF_SCALE = 1_000_000
 
 
-def bm25_scores(
-    df: DataFrame, terms: tuple[str, ...], id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """BM25-shaped relevance of every document against a fixed term set,
-    with a RATIONAL idf surrogate: ``w_t = (N * SCALE) div (df_t + 1)``
-    instead of the classical ``ln((N - df + .5)/(df + .5))``. Rationale:
-    ``ln`` is engine-divergent in final ulps (java.lang.Math.log vs libm),
-    which breaks bit-exact cross-engine verification; the rational weight
-    preserves the rarity ordering and keeps every operand an integer, so
-    the only doubles are one division and a fixed-order 3-term sum —
-    bit-identical in any IEEE-754 engine.
-
-    Plan shape (the 100 TB story): per-doc term frequencies and document
-    length are SCAN-SIDE array expressions (``size(filter(__toks, ...))``
-    — no explode, no shuffle); the corpus stats (N, T, df_t) are ONE tiny
-    global aggregate broadcast back; ranking is TakeOrderedAndProject.
-    Zero wide shuffles end to end.
-    """
-    toks = df.withColumn("__toks", whitespace_tokens(text_col))
-    tf_cols = [
-        F.expr(f"size(filter(__toks, x -> x = '{t}'))").cast("long").alias(f"tf_{i}")
-        for i, t in enumerate(terms)
-    ]
-    per_doc = toks.select(
-        F.col(id_col), F.size("__toks").cast("long").alias("dl"), *tf_cols
-    )
-    stats = per_doc.agg(
-        F.count(F.lit(1)).alias("N"),
-        F.sum("dl").alias("T"),
-        *[
-            F.sum((F.col(f"tf_{i}") > 0).cast("long")).alias(f"df_{i}")
-            for i in range(len(terms))
-        ],
-    )
-    contrib = " + ".join(
-        f"((N * {BM25_IDF_SCALE}) div (df_{i} + 1))"
-        f" * ((CAST(10 * tf_{i} * T AS DOUBLE)) / (10 * tf_{i} * T + 3 * T + 9 * dl * N))"
-        for i in range(len(terms))
-    )
-    any_hit = " + ".join(f"tf_{i}" for i in range(len(terms)))
-    return (
-        per_doc.crossJoin(F.broadcast(stats))
-        .filter(F.expr(any_hit) > 0)
-        .select(F.col(id_col), "dl", F.expr(contrib).alias("score"))
-    )
-
-
 def bm25_scores_multi(
     df: DataFrame,
     term_df: DataFrame,
@@ -256,8 +194,8 @@ def bm25_scores_multi(
 ) -> DataFrame:
     """Multi-query BM25: score every document against every query in
     ``term_df`` (columns ``query_id``, ``term``) — the many-queries form
-    of :func:`bm25_scores`, for when per-query scan-side columns stop
-    scaling (hundreds of queries).
+    of BM25, for when per-query scan-side columns stop scaling
+    (hundreds of queries).
 
     Shape: explode tokens ONCE, broadcast-join the tiny term table
     (selectivity applied at the join — non-matching tokens never reach
@@ -517,7 +455,7 @@ def bpe_train_merges(
 ) -> DataFrame:
     """Train ``rounds`` BPE merges on the corpus: (round, left_sym,
     right_sym, pair_count) — the actual tokenizer-training loop, not just
-    one pair census (``bpe_pair_stats`` is step 1; this iterates it).
+    one pair census (round 1 is the census; this iterates it).
 
     The standard trainer construction (Sennrich et al. 2016): collapse
     the corpus to a WORD-FREQUENCY table first — pair statistics are a
@@ -604,7 +542,7 @@ def bpe_encode_stats(
 ) -> DataFrame:
     """Apply trained BPE merges to every document: (id cols…, n_base_symbols,
     n_bpe_tokens) — the ENCODE step completing the tokenizer lifecycle
-    (bpe_pair_stats census → bpe_train_merges training → this).
+    (pair census → bpe_train_merges training → this).
 
     Each document becomes one symbol string in the trainer's two-space-
     separator representation (per word: characters + ``BPE_EOW``), then

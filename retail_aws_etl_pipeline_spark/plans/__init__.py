@@ -19,26 +19,15 @@ from retail_aws_etl_pipeline_spark.plans import extensions  # noqa: E402,F401
 # REGISTRY order); every other registered query relies on its archived
 # ``CORRECTNESS_r*.json`` row plus the local sf0.01 DuckDB oracle run
 # (tests/test_queries_oracle.py parametrizes over BOTH registries). The
-# COVERAGE.md §rotation policy: no entry's newest hard driver row may be
-# older than MAX_STALENESS_ROUNDS — with the registry capped at
-# WINDOW_SIZE * MAX_STALENESS_ROUNDS entries that is exactly the full-swap
-# cadence, so the SLO holds iff every round's window is the stalest tail.
+# window is DERIVED: sort every registered entry by (newest driver row,
+# name) and take the stalest WINDOW_SIZE. Never-proven entries come first
+# (a new registration's first row outranks any freshness refresh), then
+# the oldest rows, and the window re-derives itself the moment the driver
+# archives a new CORRECTNESS file.
 #
-# Rounds 4-8 maintained that invariant with hand-written _DEMOTE_R*/
-# _PROMOTE_R* tables (history: git log + COVERAGE.md §rotation), which made
-# ``pytest tests/`` red at every round open until the next table landed
-# (VERDICT r8 "standing red flag"). The window is now DERIVED: sort all
-# non-retired registered entries by (newest driver row, name) and take the
-# stalest WINDOW_SIZE. This reproduces the same promotion order the hand
-# tables encoded — never-proven entries first (a new registration's first
-# row outranks any freshness refresh, the standing policy), then the oldest
-# rows — and it re-derives itself the moment the driver archives a new
-# CORRECTNESS file, so round-open is mechanically green.
-#
-# tests/test_window_slo.py still enforces the SLO independently (it fails
-# when due entries outnumber the window — the signal to unregister a
-# weakest variant rather than rotate), and test_rotation_window.py pins
-# this derivation against a hand-computed window.
+# tests/test_window_slo.py enforces the staleness SLO independently, and
+# test_rotation_window.py pins this derivation against an independently
+# computed window.
 # ---------------------------------------------------------------------------
 
 import glob as _glob
@@ -48,339 +37,6 @@ import re as _re
 
 #: Driver checks this many entries per round.
 WINDOW_SIZE = 50
-
-#: Newest driver row may be at most this many rounds behind the upcoming
-#: round (current REGISTRY membership counts as the upcoming round's row).
-MAX_STALENESS_ROUNDS = 3
-
-#: Queries deliberately outside the driver proof surface, with the reason.
-#: They stay registered (local oracle coverage continues) but are never
-#: auto-promoted into the window and are exempt from the staleness SLO.
-#: EMPTY since r15: approx_sketch_stats — the one entry ever retired
-#: (oracle-less HLL/GK demo over Spark's engine-private HLL++) — left the
-#: registry outright when hll_distinct_report put the sketch surface
-#: under the hash gate; its tolerance battery now pins the UNREGISTERED
-#: spec (tests/test_extensions.py).
-RETIRED: dict[str, str] = {}
-
-#: Removed from the registry outright, by round, under the weakest-variant
-#: rule (COVERAGE.md §rotation): the registry sits at its
-#: WINDOW_SIZE * MAX_STALENESS_ROUNDS cap, so registering a new operator
-#: requires retiring a variant whose semantics stay driver-proven through a
-#: registered twin. Implementations and unit tests stay in the package.
-_UNREGISTER = {
-    # r8: the three weakest SHARED-ORACLE variants (each twin keeps the
-    # identical oracle string registered):
-    #  - ann_topk_lsh -> ann_topk_lsh_ball (same candidate set by
-    #    construction; the many-probe scale form);
-    #  - ann_topk_bruteforce -> ann_topk_pandas shared ANN_TOPK_ORACLE
-    #    bit-identically (the JVM brute kernel stays the recall-sweep
-    #    baseline);
-    #  - doc_containment_pairs -> doc_containment_pairs_prefix (prefix
-    #    lemma: no false negatives; measured strictly faster).
-    8: ("ann_topk_lsh", "ann_topk_bruteforce", "doc_containment_pairs"),
-    # r9 (VERDICT r8 items #1/#3's cap replacements — frees the window
-    # slots the staged streaming + crawl entries register into):
-    #  - hourly_event_rollup: streamed_hourly_rollup keeps the IDENTICAL
-    #    oracle string registered (the one remaining verbatim-twin pair
-    #    besides the deliberate near_dup_clusters/_star algorithm A/B);
-    #  - edit_distance_near_pairs: the exact quadratic-within-bucket
-    #    baseline; the production path edit_distance_near_pairs_lsh is
-    #    r8 driver-green under a banding-aware oracle;
-    #  - event_value_outliers: z-score form; event_value_mad_outliers is
-    #    the robust registered production variant;
-    #  - ann_topk_pandas: Arrow-GEMM form sharing ANN_TOPK_ORACLE with
-    #    the registered ann_topk_lsh_ball / ann_topk_ivf scale paths;
-    #  - bitext_margin_pairs: brute all-pairs baseline; the IVF scale
-    #    twin bitext_margin_pairs_ivf stays registered (nprobe = n_cells
-    #    recovers the brute form exactly — pinned by test);
-    #  - kmeans_cluster_profile: smallest-ids seeding variant; the
-    #    registered kmeans_farthest_profile runs the same quantized
-    #    Lloyd kernel and its oracle unrolls the superset schedule
-    #    (seed sweep AND Lloyd).
-    9: (
-        "hourly_event_rollup",
-        "edit_distance_near_pairs",
-        "event_value_outliers",
-        "ann_topk_pandas",
-        "bitext_margin_pairs",
-        "kmeans_cluster_profile",
-    ),
-    # r10 (the ROADMAP r10 schedule's one cap replacement, decided at
-    # round open against the then-current ADVICE — nothing in ADVICE r9
-    # touches containment semantics):
-    #  - containment_pairs_boilerplate: the unfiltered containment scan
-    #    over the boilerplate corpus; doc_containment_pairs_prefix is
-    #    the registered production twin carrying the same PPJoin prefix
-    #    lemma surface (no false negatives by the lemma; measured
-    #    strictly faster), and both are r9 driver-green so the freshness
-    #    loss is nil. Frees the cap entry the fourth crawl registration
-    #    (warc_record_stats / warc_text_corpus / crawl_host_report /
-    #    crawl_exact_dedup_stats) lands in.
-    10: ("containment_pairs_boilerplate",),
-    # r11 (the ROADMAP r11 tranche: the four batching/tokenizer audits +
-    # host_boilerplate_strip_stats + the ann_topk_ivf_indexed swap). The
-    # SLO due-list math binds harder than ROADMAP's candidate list: the
-    # 50 r8-row entries ALL come due at r11 (floor = r9), so every one of
-    # the six replacements below is drawn FROM the r8 due-list — the
-    # r9-row candidates ROADMAP named (sorted_neighborhood_pairs,
-    # token_chunk_dedup, bm25_query_scores, cross_source_dup_matrix,
-    # incremental_near_dup_pairs) would have displaced due entries and
-    # broken the SLO; they come due at r12 and pair with the r12 tranche
-    # instead. Twin coverage for each unregister:
-    #  - ann_topk_ivf: the at-rest index ann_topk_ivf_indexed registers
-    #    with the IDENTICAL _ivf_oracle string (same quantization, same
-    #    deterministic centroid fit, same cell assignment — persisted
-    #    instead of recomputed), so the proof surface is unchanged and
-    #    the registered form is the production build-once/query-many
-    #    shape. This is ROADMAP's planned r12 swap pulled to r11 because
-    #    the in-memory twin is r8-due now.
-    #  - ann_lsh_recall: ann_recall_sweep (r8-due, stays in the window)
-    #    is the strict superset — recall@10 of the SAME 8-plane LSH index
-    #    against the same exact scan, plus the 4/6-plane and IVF
-    #    nprobe-1/2 legs and candidate-set sizes; lsh_dedup_recall keeps
-    #    the dedup-side recall audit registered.
-    #  - embedding_near_dup_pairs: brute all-pairs baseline; the
-    #    registered near_dup_pairs_lsh (r8-due, stays) applies the
-    #    IDENTICAL sign-guarded cosine >= 0.35 verify on LSH-bucketed
-    #    candidates (the sub-quadratic production path), and
-    #    semantic_dedup_retained carries embedding-cosine dedup
-    #    end-to-end. Same precedent as bitext_margin_pairs at r9.
-    #  - exact_dup_docs: the md5 hash-groupBy surface stays registered
-    #    through dedup_signal_report (exact-hash groups inside the fused
-    #    per-doc signal pass), dedup_retained_corpus +
-    #    curation_funnel_report (chained exact dedup), and
-    #    crawl_exact_dedup_stats (r10-green).
-    #  - media_decode_stats: BMP/WAV full-decode; png_decode_stats
-    #    (r8-due, stays) proves the strictly-harder full-decode
-    #    mapInPandas kernel (zlib inflate + all 5 PNG filters), and
-    #    media_dims_probe / audio_meta_probe keep the image/audio
-    #    header-walk surfaces registered.
-    #  - minhash_lsh_pairs: both constituents stay registered verbatim —
-    #    the banded MinHash candidate join inside lsh_dedup_recall's
-    #    oracle (same GRAMS/SIGS/bands CTEs) and the exact-Jaccard
-    #    verify in ngram_jaccard_pairs; near_dup_clusters(_star) chain
-    #    the same pairs into components.
-    11: (
-        "ann_topk_ivf",
-        "ann_lsh_recall",
-        "embedding_near_dup_pairs",
-        "exact_dup_docs",
-        "media_decode_stats",
-        "minhash_lsh_pairs",
-    ),
-    # r12 (the ROADMAP r12 schedule, executed as drafted: 6 registrations
-    # = 1 free window slot + these 5 swaps, every one drawn from the
-    # 49-entry r9-row due-list; twin equivalences pinned in
-    # tests/test_r12_twin_equivalence.py BEFORE the round opened):
-    #  - token_chunk_dedup -> cdc_chunk_dedup, the shift-resistant
-    #    successor (pinned: both detect an unshifted mirrored passage;
-    #    after a one-token prefix shift only CDC keeps detecting it);
-    #    token_chunk_dedup_corpus stays registered carrying the
-    #    fixed-window end-to-end surface.
-    #  - bpe_pair_stats -> bpe_train_merges_report registers the
-    #    symbol-level pair counting under the hash gate every round, and
-    #    the census's adjacent WORD-pair count layer stays registered via
-    #    collocation_pairs (pinned: n_total per pair == the collocation
-    #    pair recount).
-    #  - sorted_neighborhood_pairs -> dsir_selected_docs; the rank-space
-    #    blocking surface stays via the shared _distributed_ntile
-    #    machinery (customer_spend_deciles, quality_by_length_decile,
-    #    length_bucket_padding_stats all registered) and the banded
-    #    interval join via event_pairs_within_window; the SN-specific
-    #    candidate-bit-identity-under-skew claim lives in
-    #    scripts/skew_neighborhood_smoke.py.
-    #  - bm25_query_scores -> gopher_quality_report;
-    #    bm25_multi_query_topk is the registered superset plan (pinned:
-    #    the multi form restricted to one query reproduces the single
-    #    form's scores).
-    #  - cross_source_dup_matrix -> zorder_pruning_stats; the matrix is a
-    #    one-groupBy rollup of the near-dup pair stream whose generating
-    #    surfaces stay registered (lsh_dedup_recall candidates +
-    #    ngram_jaccard_pairs verify + dedup_signal_report signals);
-    #    pinned: matrix == the rollup recomputed from the pair frame.
-    12: (
-        "token_chunk_dedup",
-        "bpe_pair_stats",
-        "sorted_neighborhood_pairs",
-        "bm25_query_scores",
-        "cross_source_dup_matrix",
-    ),
-    # r13 (the ROADMAP r13 schedule, executed as drafted: 6 registrations
-    # = 6 1:1 swaps, every one drawn from the 50-entry r10-cohort
-    # due-list; twin equivalences pinned in
-    # tests/test_r13_twin_equivalence.py BEFORE the round opened):
-    #  - doc_token_stats -> gopher_repetition_report; the per-doc
-    #    token-count layer stays registered via
-    #    tokenizer_fertility_by_lang (pinned: its per-language sums ARE
-    #    the groupBy(lang) rollup of doc_token_stats' per-doc columns)
-    #    and doc_quality (r10-due, stays in the window).
-    #  - doc_fingerprints -> duplicated_span_report, the strictly
-    #    stronger exact-dup signal (pinned: any fp_exact collision is a
-    #    full-length duplicated span); the robust-fingerprint surface
-    #    stays via doc_winnowing and the md5 layer inside
-    #    dedup_signal_report / crawl_exact_dedup_stats.
-    #  - median_order_by_priority -> c4_clean_report; the discrete-median
-    #    surface keeps three registered carriers (customer_spend_deciles
-    #    exact NTILE, sketch_accuracy_stats discrete percentiles,
-    #    customer_order_gap_stats histogram lower-median — pinned: the
-    #    shared _grouped_lower_median kernel reproduces the query).
-    #  - segment_buyers_intersect -> dedup_retained_by_quality; INTERSECT
-    #    stays via union_account_balances (U1) + distinct_buyer_counts
-    #    (pinned: INTERSECT == left-semi-join-of-distincts composition).
-    #  - supplier_nation_volume -> ngram_lm_report; the fact-to-
-    #    broadcast-dims volume family keeps four registered carriers
-    #    (two_nation_volume Q7, local_supplier_volume Q5,
-    #    nation_market_share Q8, product_type_profit Q9 — pinned: the
-    #    partial-aggregation-pushdown form is equal).
-    #  - top_revenue_suppliers -> training_shard_manifest; the
-    #    argmax-join-back surface stays via min_cost_supplier_parts (Q2)
-    #    and the _distributed_ntile family (pinned: the single-buffer
-    #    struct-argmax kernel keeps exactly the tied rows).
-    13: (
-        "doc_token_stats",
-        "doc_fingerprints",
-        "median_order_by_priority",
-        "segment_buyers_intersect",
-        "supplier_nation_volume",
-        "top_revenue_suppliers",
-    ),
-    # r14 (the ROADMAP r14 schedule, executed as drafted: 7 registrations
-    # = 7 1:1 swaps, every one drawn from the 50-entry r11-cohort
-    # due-list; twin equivalences pinned in
-    # tests/test_r14_twin_equivalence.py BEFORE the round opened):
-    #  - near_dup_clusters_star -> quality_classifier_report; the one
-    #    deliberate algorithm A/B — near_dup_clusters (min-label CC)
-    #    stays registered carrying the IDENTICAL oracle string, and the
-    #    large-star/small-star equality stays pinned locally.
-    #  - corpus_vocabulary -> unigram_lm_report; the trainer's seed fit
-    #    IS the word-frequency census (pinned: same exploded-token
-    #    groupBy), so the vocabulary layer rides the trainer's oracle.
-    #  - event_props_stats -> sitemap_url_inventory; semi-structured
-    #    parse surface — from_xml replaces one of two registered
-    #    JSON-parse carriers (jsonl_corpus_stats stays, the
-    #    load-bearing corpus interchange format; pinned: from_json
-    #    recomputes the query).
-    #  - split_leakage_pairs -> sitemap_index_inventory; the cross-split
-    #    rollup of the registered jaccard pair stream (the
-    #    cross_source_dup_matrix precedent at r12; pinned: rollup ==
-    #    pair-frame recompute).
-    #  - media_dims_probe -> webp_dims_probe; the header-walk discipline
-    #    re-proven on the harder container (VP8/VP8L/VP8X); PNG dims
-    #    stay driver-proven via png_decode_stats (full decode, pinned:
-    #    same IHDR on the same payloads), binary scan surface via
-    #    media_byte_histogram.
-    #  - doc_repetition_ratio -> ogg_meta_probe; gopher_repetition_report
-    #    (r13-green) strictly supersedes the repetition-ratio signal
-    #    (pinned: its dup/top-n-gram char fractions are the same
-    #    evidence); audio_meta_probe keeps the audio header surface.
-    #  - boilerplate_ngram_ratio -> avif_dims_probe; same supersession
-    #    (host_boilerplate_strip_stats + gopher_repetition_report carry
-    #    the boilerplate evidence; pinned: the per-doc rollup of the
-    #    shingle document-frequency frame recomputes the ratio);
-    #    video_meta_probe stays as the base ISO-BMFF box-walk surface.
-    14: (
-        "near_dup_clusters_star",
-        "corpus_vocabulary",
-        "event_props_stats",
-        "split_leakage_pairs",
-        "media_dims_probe",
-        "doc_repetition_ratio",
-        "boilerplate_ngram_ratio",
-    ),
-    # r15 (the ROADMAP r15 schedule, executed as drafted: 6 registrations
-    # = 6 1:1 swaps, every victim drawn from the 50-entry r12-cohort
-    # due-list; twin equivalences pinned in
-    # tests/test_r15_twin_equivalence.py BEFORE the round opened), PLUS
-    # the drafted deletion of the one RETIRED entry:
-    #  - char_bigram_fluency -> doc_perplexity_report; the perplexity
-    #    model's count layer IS the registered KN table (ngram_lm_report's
-    #    kernel — pinned row-for-row), and on a constructed fluency corpus
-    #    the flagged docs land in the perplexity tail bucket, so the
-    #    fluency-filter signal survives with smoothing + conditioning
-    #    gained.
-    #  - similarity_spectrum -> minhash_estimate_error; the spectrum is
-    #    the decile rollup of the exact-Jaccard pair surface whose kernel
-    #    stays registered (ngram_jaccard_pairs verify + lsh_dedup_recall
-    #    candidates); pinned: the spectrum recomputes from the shared
-    #    jaccard_counts kernel.
-    #  - lang_rebalanced_sample -> temperature_mixture_report; the new
-    #    query DERIVES the per-language mixing config the samplers
-    #    consume; pinned: on a uniform corpus the temperature quota is the
-    #    rebalanced sampler's no-op point (rate exactly 1e6 per group);
-    #    hash-gate selection semantics stay via corpus_mixture_sample.
-    #  - token_chunk_dedup_corpus -> bloom_prefilter_stats;
-    #    exact-duplicate membership transfers (pinned: a planted mirror is
-    #    caught by BOTH the chunk dedup and the Bloom census, whose
-    #    no-false-negative invariant passes it to the exact join); the
-    #    chunk-level surface stays via the registered cdc_chunk_dedup.
-    #  - order_value_histogram -> join_key_skew_report; the histogram is a
-    #    one-groupBy width_bucket recount of the orders scan (pinned: the
-    #    rollup precedent); the percentile/bucket surface keeps
-    #    customer_spend_deciles + sketch_accuracy_stats registered.
-    #  - event_trigram_paths -> hll_distinct_report; the trigram query is
-    #    the top-20 recount of the registered per-user lead() projection
-    #    (pinned); sequence mining stays via user_sessions /
-    #    conversion_funnel / event_pairs_within_window.
-    #  - approx_sketch_stats (RETIRED since r5, exempt from due-lists)
-    #    leaves the registry OUTRIGHT with hll_distinct_report's entry:
-    #    the deterministic HLL puts the sketch surface under the hash gate
-    #    (pinned: its error sits inside the same 3*1.04/sqrt(m) band the
-    #    tolerance gate allowed HLL++), the percentile half stays via
-    #    sketch_accuracy_stats, and the HLL++/GK tolerance battery keeps
-    #    pinning the UNREGISTERED spec. RETIRED is now empty.
-    15: (
-        "char_bigram_fluency",
-        "similarity_spectrum",
-        "lang_rebalanced_sample",
-        "token_chunk_dedup_corpus",
-        "order_value_histogram",
-        "event_trigram_paths",
-        "approx_sketch_stats",
-    ),
-    # r16 (the ROADMAP r16 schedule, executed as drafted: 6 registrations
-    # = 6 1:1 swaps, every victim drawn from the 50-entry r13-cohort
-    # due-list — re-derived against the REAL r15 archive at round open,
-    # the standing r11→r12 lesson; twin equivalences pinned in
-    # tests/test_r16_twin_equivalence.py BEFORE the round opened):
-    #  - returned_order_priorities -> badwords_filter_report; the plain
-    #    left-semi shape retires with its strictly harder siblings
-    #    registered (priority_order_counts Q4 inequality-EXISTS,
-    #    sole_return_suppliers Q21 double-correlated; pinned: semi ==
-    #    inner-join-to-distinct).
-    #  - monthly_revenue_yoy -> ngram_diversity_report; the time-series
-    #    surface stays via daily_revenue_gapfill (pinned: the monthly
-    #    layer == the gapfill month rollup; the 12-month-shift join is
-    #    recomputable from it) plus forecast_revenue /
-    #    decayed_revenue_by_segment.
-    #  - customer_order_history -> template_affix_report; the lag/lead/
-    #    running-frame demo retires with the window surface registered
-    #    via dedup_keep_latest / customer_order_gap_stats /
-    #    user_rolling_hour / weekly_retention_cohorts (pinned: the whole
-    #    frame == the window-free self-join recompute).
-    #  - large_volume_orders -> corpus_snapshot_delta; Q18's
-    #    semi-on-aggregated-subquery retires with the correlated family
-    #    on small_quantity_revenue (Q17) / min_cost_supplier_parts (Q2)
-    #    / sole_return_suppliers (Q21) (pinned: semi-on-aggregate ==
-    #    inner-on-qualifying-keys).
-    #  - part_revenue_share -> langid_confusion_report; the keyed
-    #    revenue layer IS top_items' layer (pinned: top-10 of the
-    #    recomputed layer == top_items row for row); share arithmetic
-    #    stays via nation_market_share / promo_revenue_ratio.
-    #  - partkey_skew_report -> hll_overlap_report; the core
-    #    skew-planning signal (rows, distinct keys, hottest-key count)
-    #    is carried by the r15-registered join_key_skew_report's
-    #    l_partkey family row (pinned column for column); the Gini
-    #    tail-profile layer stays locally pinned in the twin file.
-    16: (
-        "returned_order_priorities",
-        "monthly_revenue_yoy",
-        "customer_order_history",
-        "large_volume_orders",
-        "part_revenue_share",
-        "partkey_skew_report",
-    ),
-}
 
 
 def _repo_root() -> str:
@@ -408,36 +64,12 @@ def newest_driver_rows(root: str | None = None) -> dict[str, int]:
     return newest
 
 
-#: Specs removed by _UNREGISTER, kept addressable for LOCAL pins only
-#: (adversarial batteries that lock a fixed bug class to the spec's
-#: current oracle string as it stood at unregistration — including any
-#: later-than-original robustness fixes, e.g. event_props_stats' r14
-#: json_valid guard nesting): never in all_specs(), never driver-checked.
-UNREGISTERED: dict[str, QuerySpec] = {}
-
-
 def _rotate_driver_window() -> None:
-    for rnd, names in _UNREGISTER.items():
-        for name in names:
-            if name in REGISTRY:
-                UNREGISTERED[name] = REGISTRY.pop(name)
-            elif name in EXTRA_REGISTRY:
-                UNREGISTERED[name] = EXTRA_REGISTRY.pop(name)
-            else:
-                raise RuntimeError(
-                    f"_UNREGISTER[{rnd}] names {name!r}, which is in "
-                    "neither registry — stale unregister entry or a "
-                    "renamed query; fix the table in plans/__init__.py"
-                )
-
     merged = {}
     merged.update(EXTRA_REGISTRY)
     merged.update(REGISTRY)
     newest = newest_driver_rows()
-    order = sorted(
-        (n for n in merged if n not in RETIRED),
-        key=lambda n: (newest.get(n, 0), n),
-    )
+    order = sorted(merged, key=lambda n: (newest.get(n, 0), n))
     window = order[:WINDOW_SIZE]
 
     REGISTRY.clear()

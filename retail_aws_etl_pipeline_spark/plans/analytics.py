@@ -37,24 +37,6 @@ from retail_aws_etl_pipeline_spark.session import load_tables
 
 
 @register(
-    "segment_buyers_intersect",
-    """
-    SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-    INTERSECT
-    SELECT o_custkey AS c_custkey FROM orders
-    ORDER BY c_custkey
-    """,
-    description="INTERSECT: BUILDING-segment customers who actually ordered",
-    tags=("setop",),
-)
-def segment_buyers_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["customer", "orders"])
-    building = t["customer"].filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
-    buyers = t["orders"].select(F.col("o_custkey").alias("c_custkey"))
-    return building.intersect(buyers).orderBy("c_custkey")
-
-
-@register(
     "unordered_parts_except",
     """
     SELECT p_partkey FROM part
@@ -141,77 +123,6 @@ def rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Analytic windows: lag/lead, frames, discrete median
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    "customer_order_history",
-    f"""
-    SELECT o_custkey, o_orderkey, o_totalprice,
-           LAG(o_totalprice) OVER w AS prev_price,
-           LEAD(o_totalprice) OVER w AS next_price,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(28,6))) OVER (
-               PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) AS DOUBLE) AS running_spend,
-           CAST(ROW_NUMBER() OVER w AS BIGINT) AS order_seq
-    FROM orders
-    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-    """,
-    description="lag/lead + running-frame sum + sequence per customer",
-    tags=("window",),
-)
-def customer_order_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["orders"])
-    w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    wf = w.rowsBetween(W.unboundedPreceding, W.currentRow)
-    return t["orders"].select(
-        "o_custkey",
-        "o_orderkey",
-        "o_totalprice",
-        F.lag("o_totalprice").over(w).alias("prev_price"),
-        F.lead("o_totalprice").over(w).alias("next_price"),
-        F.sum(F.col("o_totalprice").cast(DEC)).over(wf).cast("double").alias("running_spend"),
-        F.row_number().over(w).cast("long").alias("order_seq"),
-    )
-
-
-@register(
-    "median_order_by_priority",
-    """
-    SELECT o_orderpriority, o_totalprice AS median_price
-    FROM (
-        SELECT o_orderpriority, o_totalprice,
-               ROW_NUMBER() OVER (PARTITION BY o_orderpriority
-                                  ORDER BY o_totalprice, o_orderkey) AS rn,
-               COUNT(*) OVER (PARTITION BY o_orderpriority) AS n
-        FROM orders
-    ) WHERE rn = (n + 1) // 2
-    ORDER BY o_orderpriority
-    """,
-    description="Discrete median via rank (deterministic percentile surface)",
-    tags=("window", "percentile"),
-)
-def median_order_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["orders"])
-    w = W.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
-    wc = W.partitionBy("o_orderpriority")
-    return (
-        t["orders"]
-        .select(
-            "o_orderpriority",
-            "o_totalprice",
-            F.row_number().over(w).alias("rn"),
-            F.count(F.lit(1)).over(wc).alias("n"),
-        )
-        .filter(F.col("rn") == ((F.col("n") + 1) / 2).cast("long"))
-        .select("o_orderpriority", F.col("o_totalprice").alias("median_price"))
-        .orderBy("o_orderpriority")
-    )
-
-
-# ---------------------------------------------------------------------------
 # Pivot
 # ---------------------------------------------------------------------------
 
@@ -243,29 +154,6 @@ def user_event_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Time-series: tumbling window, sessionization, as-of join
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "hourly_event_rollup",
-    f"""
-    SELECT time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP)) AS window_start,
-           event_type, COUNT(*) AS n, {sql_dec_sum("value")} AS total_value
-    FROM events
-    GROUP BY 1, 2
-    ORDER BY window_start, event_type
-    """,
-    description="Tumbling 1-hour window aggregation (streaming-equivalent batch)",
-    tags=("window", "timeseries", "streaming"),
-)
-def hourly_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["events"])
-    return (
-        t["events"]
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), dec_sum(F.col("value")).alias("total_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n", "total_value")
-        .orderBy("window_start", "event_type")
-    )
 
 
 @register(
@@ -473,51 +361,6 @@ def small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "large_volume_orders",
-    f"""
-    SELECT c.c_custkey, o.o_orderkey,
-           {sql_dec_sum("l.l_quantity")} AS total_qty,
-           {sql_dec_sum("l.l_extendedprice")} AS total_price
-    FROM orders o
-    JOIN customer c ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE o.o_orderkey IN (
-        SELECT l_orderkey FROM lineitem
-        GROUP BY l_orderkey
-        HAVING SUM(CAST(l_quantity AS DECIMAL(28,6))) > 250
-    )
-    GROUP BY c.c_custkey, o.o_orderkey
-    ORDER BY total_qty DESC, o.o_orderkey ASC
-    """,
-    description="Q18-style HAVING-subquery: orders whose total line quantity "
-    "exceeds a threshold, rejoined to customers (semi join on an aggregated "
-    "subquery; exact-decimal HAVING so both engines cut identically)",
-    tags=("join", "subquery", "agg", "semi"),
-)
-def large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["orders", "customer", "lineitem"])
-    li = t["lineitem"]
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast(DEC)).alias("oq"))
-        .filter(F.col("oq") > 250)
-        .select("l_orderkey")
-    )
-    return (
-        t["orders"]
-        .join(big.withColumnRenamed("l_orderkey", "o_orderkey"), "o_orderkey", "left_semi")
-        .join(t["customer"], F.col("c_custkey") == F.col("o_custkey"))
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("c_custkey", "o_orderkey")
-        .agg(
-            dec_sum(F.col("l_quantity")).alias("total_qty"),
-            dec_sum(F.col("l_extendedprice")).alias("total_price"),
-        )
-        .orderBy(F.desc("total_qty"), F.asc("o_orderkey"))
-    )
-
-
-@register(
     "timestamp_parse_extended",
     """
     WITH base AS (
@@ -685,37 +528,6 @@ def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("orderkey", "revenue", "orderdate", "o_orderpriority")
         .orderBy(F.desc("revenue"), F.asc("orderkey"))
         .limit(20)
-    )
-
-
-@register(
-    "supplier_nation_volume",
-    f"""
-    SELECT n.n_name AS nation,
-           {sql_dec_sum("l.l_extendedprice * (1 - l.l_discount)")} AS revenue,
-           COUNT(*) AS n_lines
-    FROM lineitem l
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey
-    JOIN nation n ON s.s_nationkey = n.n_nationkey
-    GROUP BY n.n_name
-    ORDER BY revenue DESC, nation ASC
-    """,
-    description="TPC-H-Q5-flavor supplier-nation volume: fact joined to "
-    "broadcast dims + agg",
-    tags=("join", "agg"),
-)
-def supplier_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["lineitem", "supplier", "nation"])
-    return (
-        t["lineitem"]
-        .join(F.broadcast(t["supplier"]), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(t["nation"]), F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-        .orderBy(F.desc("revenue"), F.asc("nation"))
     )
 
 
@@ -1078,47 +890,6 @@ def promo_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    "top_revenue_suppliers",
-    f"""
-    WITH srev AS (
-        SELECT l_suppkey, {sql_dec_sum("l_extendedprice * (1 - l_discount)")} AS total_rev
-        FROM lineitem
-        WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-          AND l_shipdate < TIMESTAMP '1997-04-01'
-        GROUP BY l_suppkey
-    )
-    SELECT s.s_suppkey, s.s_name, r.total_rev
-    FROM srev r
-    JOIN supplier s ON s.s_suppkey = r.l_suppkey
-    WHERE r.total_rev = (SELECT MAX(total_rev) FROM srev)
-    ORDER BY s.s_suppkey
-    """,
-    description="Q15-style top supplier: quarterly per-supplier revenue, "
-    "max-of-aggregate scalar subquery (exact-decimal sums make the double "
-    "equality engine-stable)",
-    tags=("join", "agg", "subquery", "tpch"),
-)
-def top_revenue_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["lineitem", "supplier"])
-    srev = (
-        t["lineitem"]
-        .filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
-        )
-        .groupBy("l_suppkey")
-        .agg(dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("total_rev"))
-    )
-    mx = srev.agg(F.max("total_rev").alias("max_rev"))
-    return (
-        srev.join(F.broadcast(mx), F.col("total_rev") == F.col("max_rev"))
-        .join(F.broadcast(t["supplier"]), F.col("s_suppkey") == F.col("l_suppkey"))
-        .select("s_suppkey", "s_name", "total_rev")
-        .orderBy("s_suppkey")
-    )
-
-
-@register_extra(
     "brand_quantity_revenue",
     f"""
     SELECT CAST(COUNT(*) AS BIGINT) AS n_lines,
@@ -1336,127 +1107,6 @@ def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "order_value_histogram",
-    """
-    SELECT CASE WHEN o_totalprice < 0.0 THEN CAST(0 AS BIGINT)
-                WHEN o_totalprice >= 500000.0 THEN CAST(21 AS BIGINT)
-                ELSE CAST(floor(o_totalprice / 25000.0) AS BIGINT) + 1 END AS bucket,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           MIN(o_totalprice) AS min_price, MAX(o_totalprice) AS max_price
-    FROM orders
-    GROUP BY 1
-    ORDER BY bucket
-    """,
-    description="Order-value histogram: scan-side width_bucket binning + "
-    "map-side-combined counts (the profiling/binning primitive); DuckDB "
-    "has no width_bucket, so the oracle mirrors its formula in identical "
-    "double ops (bucket width (hi-lo)/n = 25000.0 exactly)",
-    tags=("agg", "profiling"),
-)
-def order_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["orders"])
-    return (
-        t["orders"]
-        .select(
-            F.width_bucket("o_totalprice", F.lit(0.0), F.lit(500000.0), F.lit(20))
-            .cast("long")
-            .alias("bucket"),
-            "o_totalprice",
-        )
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.min("o_totalprice").alias("min_price"),
-            F.max("o_totalprice").alias("max_price"),
-        )
-        .orderBy("bucket")
-    )
-
-
-@register(
-    "event_value_outliers",
-    """
-    WITH q AS (
-        SELECT event_type, CAST(floor(value * 1000000) AS BIGINT) AS qv FROM events
-    ),
-    s AS (
-        SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(qv) AS BIGINT) AS sq,
-               SUM(CAST(qv AS DECIMAL(19,0)) * CAST(qv AS DECIMAL(19,0))) AS sqq
-        FROM q GROUP BY event_type
-    ),
-    m AS (
-        SELECT event_type, n,
-               CAST(sq AS DOUBLE) / n AS mean_q,
-               sqrt((CAST(sqq AS DOUBLE) - CAST(sq AS DOUBLE) * CAST(sq AS DOUBLE) / n)
-                    / (n - 1)) AS sd_q
-        FROM s
-    )
-    SELECT q.event_type, m.n AS n_events,
-           CAST(SUM(CASE WHEN abs(CAST(q.qv AS DOUBLE) - m.mean_q) > 2 * m.sd_q
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
-           m.mean_q / 1000000.0 AS mean_value,
-           m.sd_q / 1000000.0 AS stddev_value
-    FROM q JOIN m ON q.event_type = m.event_type
-    GROUP BY q.event_type, m.n, m.mean_q, m.sd_q
-    ORDER BY q.event_type
-    """,
-    description="Per-type z-score outlier counts (|x - mean| > 2σ): "
-    "moments from quantized-integer sums (exact across engines and "
-    "summation orders — double stddev_samp is NOT engine-stable), then "
-    "one broadcast join back over the stream; the profiling/anomaly "
-    "primitive",
-    tags=("agg", "profiling"),
-)
-def event_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["events"])
-    q = t["events"].select(
-        "event_type", F.floor(F.col("value") * 1000000).cast("long").alias("qv")
-    )
-    qd = F.col("qv").cast("decimal(19,0)")
-    s = q.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("qv").alias("sq"),
-        F.sum(qd * qd).alias("sqq"),
-    )
-    m = s.select(
-        "event_type",
-        "n",
-        (F.col("sq").cast("double") / F.col("n")).alias("mean_q"),
-        F.sqrt(
-            (
-                F.col("sqq").cast("double")
-                - F.col("sq").cast("double") * F.col("sq").cast("double") / F.col("n")
-            )
-            / (F.col("n") - 1)
-        ).alias("sd_q"),
-    )
-    return (
-        q.join(F.broadcast(m), "event_type")
-        .groupBy("event_type", "n", "mean_q", "sd_q")
-        .agg(
-            F.sum(
-                F.when(
-                    F.abs(F.col("qv").cast("double") - F.col("mean_q"))
-                    > 2 * F.col("sd_q"),
-                    1,
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias("n_outliers")
-        )
-        .select(
-            "event_type",
-            F.col("n").alias("n_events"),
-            "n_outliers",
-            (F.col("mean_q") / 1000000.0).alias("mean_value"),
-            (F.col("sd_q") / 1000000.0).alias("stddev_value"),
-        )
-        .orderBy("event_type")
-    )
-
-
 @register_extra(
     "customer_order_distribution",
     """
@@ -1597,7 +1247,6 @@ def pairs_within_window(e: DataFrame, width_us: int) -> DataFrame:
     )
 
 
-
 @register_extra(
     "event_pairs_within_window",
     f"""
@@ -1691,59 +1340,6 @@ def hopping_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_extra(
-    "event_trigram_paths",
-    """
-    WITH seq AS (
-        SELECT user_id, event_type,
-               LEAD(event_type, 1) OVER w AS t2,
-               LEAD(event_type, 2) OVER w AS t3
-        FROM events
-        WINDOW w AS (PARTITION BY user_id
-                     ORDER BY CAST(ts AS TIMESTAMP), event_id)
-    )
-    SELECT event_type AS step1, t2 AS step2, t3 AS step3,
-           CAST(COUNT(*) AS BIGINT) AS n_paths,
-           CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-    FROM seq
-    WHERE t2 IS NOT NULL AND t3 IS NOT NULL
-    GROUP BY 1, 2, 3
-    -- explicit NULLS FIRST: Spark's ASC default; DuckDB defaults NULLS
-    -- LAST, which cuts a different top-20 when NULL event types tie at
-    -- the boundary (r12 adversarial corpus finding)
-    ORDER BY n_paths DESC, step1 NULLS FIRST, step2 NULLS FIRST,
-             step3 NULLS FIRST
-    LIMIT 20
-    """,
-    description="Sequential pattern mining over event streams: the 20 "
-    "most common 3-step event-type paths (funnels generalized — no "
-    "hand-picked steps). Per-user ordering via lead() windows "
-    "PARTITIONED BY user (bounded partitions, (ts, event_id) "
-    "deterministic tiebreak), then one map-side-combined path count and "
-    "a TakeOrderedAndProject top-20 with full lexical tiebreaks.",
-    tags=("timeseries", "window", "sequence"),
-)
-def event_trigram_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["events"])
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = t["events"].select(
-        "user_id",
-        F.col("event_type").alias("step1"),
-        F.lead("event_type", 1).over(w).alias("step2"),
-        F.lead("event_type", 2).over(w).alias("step3"),
-    )
-    return (
-        seq.filter(F.col("step2").isNotNull() & F.col("step3").isNotNull())
-        .groupBy("step1", "step2", "step3")
-        .agg(
-            F.count(F.lit(1)).alias("n_paths"),
-            F.count_distinct("user_id").alias("n_users"),
-        )
-        .orderBy(F.desc("n_paths"), "step1", "step2", "step3")
-        .limit(20)
-    )
-
-
 def _grouped_lower_median(counted: DataFrame, val_col: str) -> DataFrame:
     """Lower median per event_type from a (event_type, value, cnt)
     HISTOGRAM frame: cumulative counts over the value-ordered distinct
@@ -1766,7 +1362,6 @@ def _grouped_lower_median(counted: DataFrame, val_col: str) -> DataFrame:
         .groupBy("event_type", "n")
         .agg(F.min(val_col).alias("med"))
     )
-
 
 
 @register_extra(
@@ -2114,7 +1709,7 @@ def _distributed_ntile(df: DataFrame, sort_cols: list, n_buckets: int, out_col: 
     counts branch consume it, and RangePartitioner samples at execution
     time — without the pin, rank correctness would rest on Spark's
     exchange reuse deduplicating the two executions (the latent
-    assumption ADVICE r7 flagged on sorted_neighborhood_candidates).
+    assumption ADVICE r7 flagged on range-partitioned rank kernels).
     Once materialized, ``__pid`` is a STORED column, so the global rank
     no longer depends on any later partitioning at all."""
     ranked = _distributed_rank(df, sort_cols, partitions=partitions)
@@ -2455,95 +2050,6 @@ def revenue_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "partkey_skew_report",
-    """
-    WITH kc AS (
-        SELECT l_partkey, CAST(COUNT(*) AS BIGINT) AS c FROM lineitem GROUP BY l_partkey
-    ),
-    hist AS (SELECT c, CAST(COUNT(*) AS BIGINT) AS m FROM kc GROUP BY c),
-    cum AS (
-        SELECT c, m,
-               CAST(COALESCE(SUM(m) OVER (ORDER BY c
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS prior
-        FROM hist
-    ),
-    gsum AS (
-        SELECT CAST(SUM(m) AS BIGINT) AS n_keys,
-               CAST(SUM(c * m) AS BIGINT) AS n_rows,
-               CAST(SUM(c * (m * prior + m * (m + 1) // 2)) AS BIGINT) AS s
-        FROM cum
-    ),
-    topk AS (
-        SELECT CAST(MAX(c) AS BIGINT) AS top1, CAST(SUM(c) AS BIGINT) AS top10
-        FROM (SELECT c FROM kc ORDER BY c DESC, l_partkey ASC LIMIT 10)
-    ),
-    gin AS (
-        SELECT n_keys, n_rows,
-               2 * s - (n_keys + 1) * n_rows AS num,
-               n_keys * n_rows AS den
-        FROM gsum
-    )
-    SELECT n_keys, n_rows,
-           CAST(top1 * 1000000 // n_rows AS BIGINT) AS top1_share_ppm,
-           CAST(top10 * 1000000 // n_rows AS BIGINT) AS top10_share_ppm,
-           CAST((num * 1000 // den) * 1000
-                + ((num * 1000 % den) * 1000) // den AS BIGINT) AS gini_ppm
-    FROM gin CROSS JOIN topk
-    """,
-    description="Partition-key skew report for the hottest fact-table join "
-    "key: per-key row counts reduced to a count-of-counts histogram, from "
-    "which the exact Gini coefficient comes out in closed form over TIES "
-    "(for each distinct count c with m keys and `prior` smaller keys, "
-    "sum(i*x_i) contributes c*(m*prior + m(m+1)/2)) — so the only window "
-    "runs over the TINY histogram (cardinality = distinct per-key counts, "
-    "not keys), never over the key set; top-1/top-10 shares ride a "
-    "TakeOrderedAndProject. This is the observability operator behind "
-    "every salting/AQE-skew decision in SCALING.md: gini_ppm and "
-    "top1_share_ppm are the numbers that say whether a keyed shuffle "
-    "needs skew handling before it runs.",
-    tags=("agg", "audit", "skew"),
-)
-def partkey_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["lineitem"])
-    kc = t["lineitem"].groupBy("l_partkey").agg(F.count(F.lit(1)).alias("c"))
-    hist = kc.groupBy("c").agg(F.count(F.lit(1)).alias("m"))
-    w = W.orderBy("c").rowsBetween(W.unboundedPreceding, -1)
-    cum = hist.withColumn("prior", F.coalesce(F.sum("m").over(w), F.lit(0)))
-    gsum = cum.agg(
-        F.sum("m").cast("long").alias("n_keys"),
-        F.sum(F.expr("c * m")).cast("long").alias("n_rows"),
-        F.sum(F.expr("c * (m * prior + m * (m + 1) div 2)")).cast("long").alias("s"),
-    )
-    topk = (
-        kc.orderBy(F.desc("c"), F.asc("l_partkey"))
-        .limit(10)
-        .agg(F.max("c").cast("long").alias("top1"), F.sum("c").cast("long").alias("top10"))
-    )
-    # gini_ppm stages the x1e6 as two x1000 steps with remainder
-    # correction — exactly floor(num * 1e6 / den), proven by
-    # num*1000 = q1*den + r1  =>  num*1e6 = (q1*1000)*den + r1*1000 —
-    # because the single-multiply form overflows int64 once den = n_keys
-    # * n_rows reaches ~1e13 (hit at the K=100 sweep: 60M rows x 2M keys
-    # made num * 1e6 ~ 1.2e21 under ANSI overflow). The staged form is
-    # exact through den ~ 9.2e15 — another decade of headroom, same
-    # div/% semantics in Spark and DuckDB for the non-negative operands.
-    return (
-        gsum.withColumn("num", F.expr("2 * s - (n_keys + 1) * n_rows"))
-        .withColumn("den", F.expr("n_keys * n_rows"))
-        .crossJoin(F.broadcast(topk))
-        .select(
-            "n_keys",
-            "n_rows",
-            F.expr("top1 * 1000000 div n_rows").cast("long").alias("top1_share_ppm"),
-            F.expr("top10 * 1000000 div n_rows").cast("long").alias("top10_share_ppm"),
-            F.expr("(num * 1000 div den) * 1000 + ((num * 1000 % den) * 1000) div den")
-            .cast("long")
-            .alias("gini_ppm"),
-        )
-    )
-
-
 #: Sequential-rule support floor (next-order transitions).
 SEQRULE_MIN_SUPPORT = 3
 
@@ -2592,7 +2098,11 @@ SEQRULE_MIN_SUPPORT = 3
 def sequential_item_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["orders", "lineitem"])
     b = t["lineitem"].select("l_orderkey", "l_partkey").distinct()
-    w = W.partitionBy("o_custkey").orderBy(F.asc("o_orderdate"), F.asc("o_orderkey"))
+    # NULLS LAST: the oracle's plain ASC, which DuckDB sorts NULLs last
+    # and Spark first — a NULL order date must not reorder the sequence.
+    w = W.partitionBy("o_custkey").orderBy(
+        F.asc_nulls_last("o_orderdate"), F.asc("o_orderkey")
+    )
     seq = t["orders"].select(
         "o_custkey", "o_orderkey", F.lead("o_orderkey").over(w).alias("next_orderkey")
     )
@@ -2859,9 +2369,8 @@ STREAMED_CUSTOMER_FEATURES_ORACLE = """
     tags=("streaming", "features"),
 )
 def streamed_customer_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Third streaming entry (registered at the r9 rotation via the
-    hourly_event_rollup cap replacement): the base+delta incremental
-    feature table under the driver hash gate. Orders are split into two
+    """Third streaming entry: the base+delta incremental feature table
+    under the driver hash gate. Orders are split into two
     DISJOINT waves (pmod of the order key) staged as separate files;
     ``maxFilesPerTrigger=1`` forces one micro-batch per wave through
     ``feature_delta_stream`` (one partial-aggregate row per customer per
@@ -3122,82 +2631,6 @@ def product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Q11-analog importance threshold: a part matters when its revenue exceeds
-#: this fraction of total revenue. 0.05% keeps ~half the sf0.01 parts — a
-#: non-trivial split on the synthetic near-uniform part distribution.
-PART_SHARE_FRACTION = "0.0005"
-
-
-@register(
-    "part_revenue_share",
-    f"""
-    WITH pr AS (
-        SELECT l_partkey,
-               SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))) AS r
-        FROM lineitem GROUP BY l_partkey
-    ),
-    tot AS (SELECT SUM(r) AS t FROM pr)
-    SELECT l_partkey AS p_partkey,
-           CAST(r AS DOUBLE) AS part_revenue,
-           CASE WHEN FLOOR(t) >= 1000000
-                THEN CAST(CAST(FLOOR(r) AS BIGINT) AS DOUBLE)
-                     / CAST(CAST(FLOOR(t) AS BIGINT) AS DOUBLE) * 1000000.0
-                ELSE CAST(CAST(r * 1000000 AS BIGINT) AS DOUBLE)
-                     / CAST(CAST(t * 1000000 AS BIGINT) AS DOUBLE) * 1000000.0
-           END AS share_ppm
-    FROM pr, tot
-    WHERE r > t * {PART_SHARE_FRACTION}
-    ORDER BY part_revenue DESC, p_partkey
-    """,
-    description="TPC-H Q11 shape (important stock / ratio-to-report): parts "
-    "whose revenue exceeds a fixed fraction of GLOBAL revenue — the "
-    "scalar-subquery-threshold shape, realized distributed as a 1-row "
-    "broadcast total crossJoined onto the per-part aggregate (no second "
-    "scan, no correlated subquery). Determinism: the threshold compare "
-    "runs entirely in exact DECIMAL (sum cast per row, fraction as an "
-    "exact decimal literal); the reported share snaps both revenues to "
-    "exact int64 at a MAGNITUDE-ADAPTIVE scale and divides in "
-    "identically-written double arithmetic: totals >= 1e6 units floor to "
-    "whole units (int64-safe to t ~ 9.2e18, ~sf 4e7; sub-unit truncation "
-    "shifts share_ppm by < 1e-6 relative there), smaller totals keep "
-    "exact micro-units (no truncation, and t*1e6 cannot overflow below "
-    "the branch point — also keeps the divisor nonzero for sub-unit "
-    "totals, a hypothesis-found ANSI divide-by-zero in the floor-only "
-    "form). The single-multiply micro form alone overflows at t ~ "
-    "9.2e12, ~sf 40 — the gini_ppm overflow class, ADVICE r7. Scale: one "
-    "keyed partkey aggregate + a 1-row broadcast; the output order rides "
-    "the aggregate, no window.",
-    tags=("join", "agg", "retail"),
-)
-def part_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["lineitem"])
-    pr = (
-        t["lineitem"]
-        .groupBy("l_partkey")
-        .agg(
-            F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(DEC)).alias("r")
-        )
-    )
-    tot = pr.agg(F.sum("r").alias("t"))
-    return (
-        pr.crossJoin(F.broadcast(tot))
-        .filter(F.col("r") > F.col("t") * F.expr(f"CAST({PART_SHARE_FRACTION} AS DECIMAL(7,6))"))
-        .select(
-            F.col("l_partkey").alias("p_partkey"),
-            F.col("r").cast("double").alias("part_revenue"),
-            F.expr(
-                "CASE WHEN FLOOR(t) >= 1000000"
-                " THEN CAST(CAST(FLOOR(r) AS BIGINT) AS DOUBLE)"
-                " / CAST(CAST(FLOOR(t) AS BIGINT) AS DOUBLE) * 1000000.0"
-                " ELSE CAST(CAST(r * 1000000 AS BIGINT) AS DOUBLE)"
-                " / CAST(CAST(t * 1000000 AS BIGINT) AS DOUBLE) * 1000000.0"
-                " END"
-            ).alias("share_ppm"),
-        )
-        .orderBy(F.desc("part_revenue"), F.asc("p_partkey"))
-    )
-
-
 @register(
     "sole_return_suppliers",
     """
@@ -3256,58 +2689,6 @@ def sole_return_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(t["supplier"], F.col("l_suppkey") == F.col("s_suppkey"))
         .select("s_suppkey", "s_name", "n_sole_return_orders")
         .orderBy(F.desc("n_sole_return_orders"), F.asc("s_suppkey"))
-    )
-
-
-@register(
-    "monthly_revenue_yoy",
-    """
-    WITH m AS (
-        SELECT CAST(DATE_TRUNC('month', o_orderdate) AS DATE) AS month,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE) AS revenue
-        FROM orders GROUP BY DATE_TRUNC('month', o_orderdate)
-    )
-    SELECT a.month, a.revenue,
-           b.revenue AS revenue_prev_year,
-           (a.revenue - b.revenue) / b.revenue * 1000000.0 AS yoy_growth_ppm
-    FROM m a LEFT JOIN m b ON b.month = a.month - INTERVAL 12 MONTH
-    ORDER BY a.month
-    """,
-    description="Year-over-year monthly revenue: monthly exact-decimal "
-    "totals, then a TIME-SHIFTED SELF-JOIN (month = month - 12 months) "
-    "rather than LAG(12) — correct even when months are missing from the "
-    "series, which the LAG form silently gets wrong. Growth is computed "
-    "in identically-written double arithmetic over the deterministic "
-    "decimal-snapped totals (NULL first year). Scale: the series is "
-    "date-domain bounded (one row per month), so the self-join is a "
-    "broadcast of a tiny aggregate — the heavy work is one keyed "
-    "month groupBy over orders.",
-    tags=("join", "agg", "timeseries"),
-)
-def monthly_revenue_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["orders"])
-    m = (
-        t["orders"]
-        .groupBy(F.date_trunc("month", "o_orderdate").cast("date").alias("month"))
-        .agg(dec_sum(F.col("o_totalprice")).alias("revenue"))
-    )
-    b = m.select(
-        F.add_months(F.col("month"), 12).alias("join_month"),
-        F.col("revenue").alias("revenue_prev_year"),
-    )
-    return (
-        m.join(F.broadcast(b), F.col("month") == F.col("join_month"), "left")
-        .select(
-            "month",
-            "revenue",
-            "revenue_prev_year",
-            (
-                (F.col("revenue") - F.col("revenue_prev_year"))
-                / F.col("revenue_prev_year")
-                * F.lit(1000000.0)
-            ).alias("yoy_growth_ppm"),
-        )
-        .orderBy("month")
     )
 
 

@@ -19,7 +19,7 @@ from retail_aws_etl_pipeline_spark.operators import clustering as C
 from retail_aws_etl_pipeline_spark.operators import dedup as D
 from retail_aws_etl_pipeline_spark.operators import similarity as S
 from retail_aws_etl_pipeline_spark.operators import textops as TX
-from retail_aws_etl_pipeline_spark.plans.queries import EXTRA_REGISTRY, register, register_extra
+from retail_aws_etl_pipeline_spark.plans.queries import register, register_extra
 from retail_aws_etl_pipeline_spark.session import load_tables
 
 # ---------------------------------------------------------------------------
@@ -75,28 +75,6 @@ n AS (
 ANN_PROBE_IDS = [0, 1, 2, 3, 4]
 ANN_K = 10
 
-ANN_TOPK_ORACLE = f"""
-WITH {_quant_cte()},
-pairs AS (
-    SELECT p.vec_id AS probe_id, c.vec_id,
-           CAST(list_sum(list_transform(range(1, len(p.qvec) + 1), i -> p.qvec[i] * c.qvec[i])) AS BIGINT) AS dot_q,
-           p.qnorm AS pn, c.qnorm AS cn
-    FROM n p, n c
-    WHERE p.vec_id IN ({", ".join(map(str, ANN_PROBE_IDS))}) AND c.vec_id != p.vec_id
-),
-ranked AS (
-    SELECT probe_id, vec_id, dot_q,
-           dot_q / sqrt(CAST(pn * cn AS DOUBLE)) AS cosine,
-           ROW_NUMBER() OVER (
-               PARTITION BY probe_id
-               ORDER BY dot_q / sqrt(CAST(pn * cn AS DOUBLE)) DESC, vec_id ASC) AS rank
-    FROM pairs
-)
-SELECT probe_id, vec_id, dot_q, cosine, rank
-FROM ranked WHERE rank <= {ANN_K}
-ORDER BY probe_id, rank
-"""
-
 
 def _planes_values(n_planes: int | None = None) -> str:
     planes = S.PLANES if n_planes is None else S.PLANES[:n_planes]
@@ -109,59 +87,6 @@ def _planes_values(n_planes: int | None = None) -> str:
 # ---------------------------------------------------------------------------
 # Dedup queries
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "exact_dup_docs",
-    """
-    SELECT md5(text) AS text_hash, COUNT(*) AS n_docs, MIN(doc_id) AS keep_id
-    FROM documents
-    GROUP BY md5(text)
-    ORDER BY text_hash
-    """,
-    description="Exact dedup: hash-groupBy with representative selection",
-    tags=("dedup",),
-)
-def exact_dup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    return D.exact_dup_groups(t["documents"]).orderBy("text_hash")
-
-
-@register(
-    "minhash_lsh_pairs",
-    f"""
-    WITH {GRAMS_CTE}, {SIGS_CTE},
-    cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a
-        JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
-                    AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
-        FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT c.id_a, c.id_b, sa.n AS n_a, sb.n AS n_b, cm.common
-    FROM cand c
-    JOIN common cm ON cm.id_a = c.id_a AND cm.id_b = c.id_b
-    JOIN sizes sa ON sa.doc_id = c.id_a
-    JOIN sizes sb ON sb.doc_id = c.id_b
-    ORDER BY c.id_a, c.id_b
-    """,
-    description="MinHash+LSH near-dup: shingle → k min-hash sigs → banded "
-    "bucket join → exact-Jaccard verify counts (integer-exact)",
-    tags=("dedup", "lsh"),
-)
-def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    # NOTE: deliberately NOT cached — persisting the exploded gram frame
-    # breaks whole-stage fusion of shingle-gen into the signature partial
-    # aggregation and measured 2x slower than recomputing the branches
-    grams = D.shingles(t["documents"])
-    cand = D.candidate_pairs(D.lsh_bands(grams))
-    return D.jaccard_counts(grams, pairs=cand).orderBy("id_a", "id_b")
 
 
 @register(
@@ -242,8 +167,8 @@ def simhash_near_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Persist the per-doc fingerprint frame: the banded self-join consumes
     # it twice, and recomputing means running the shingle explosion + the
     # 16-column majority-vote agg twice. (Persisting the GRAM frame is the
-    # wrong move — see minhash_lsh_pairs — but post-agg this is one tiny
-    # row per doc.)
+    # wrong move — it breaks whole-stage fusion of shingle generation into
+    # the aggregation — but post-agg this is one tiny row per doc.)
     sim = D.simhash64(D.shingles(t["documents"])).persist()
     return D.simhash_near_pairs(sim, max_hamming=3).orderBy("id_a", "id_b")
 
@@ -253,33 +178,10 @@ def simhash_near_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "ann_topk_bruteforce",
-    ANN_TOPK_ORACLE,
-    description="Exact cosine top-10 for 5 probes (quantized int contract); "
-    "broadcast probes, scan-side scoring",
-    tags=("similarity",),
-)
-def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["embeddings"])
-    return S.brute_force_topk(t["embeddings"], ANN_PROBE_IDS, ANN_K).orderBy("probe_id", "rank")
-
-
-@register_extra(
-    "ann_topk_pandas",
-    ANN_TOPK_ORACLE,
-    description="Same contract via Arrow-batched mapInPandas + numpy int64 "
-    "GEMM — the vectorized-UDF scale path, bit-identical to the SQL form",
-    tags=("similarity", "pandas_udf"),
-)
-def ann_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["embeddings"])
-    return S.brute_force_topk_pandas(t["embeddings"], ANN_PROBE_IDS, ANN_K).orderBy("probe_id", "rank")
-
-
-@register_extra(
-    "ann_topk_lsh",
-    f"""
+#: Oracle for :func:`ann_topk_lsh_ball`: the nested-loop form (bucket
+#: Hamming distance <= 1 as the join predicate). The Hamming-ball
+#: equi-join selects the same candidates, so results must match exactly.
+ANN_TOPK_LSH_ORACLE = f"""
     WITH {_quant_cte()},
     buckets AS (
         SELECT n.vec_id, n.qvec, n.qnorm,
@@ -308,63 +210,24 @@ def ann_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT probe_id, vec_id, dot_q, cosine, rank
     FROM ranked WHERE rank <= {ANN_K}
     ORDER BY probe_id, rank
-    """,
-    description="LSH-bucketed ANN: 8 fixed random-hyperplane sign bits, "
-    "multi-probe radius 1 — the 100 TB path (bucket computed scan-side)",
+    """
+
+
+@register_extra(
+    "ann_topk_lsh_ball",
+    ANN_TOPK_LSH_ORACLE,
+    description="Multi-probe LSH ANN via probe-side Hamming-ball "
+    "expansion + equi-join on bucket — the many-probe scale path (the "
+    "bit_count(xor) nested-loop in ann_topk_lsh evaluates every "
+    "probe x row combination; this shape hash-joins and produces "
+    "identical results)",
     tags=("similarity", "lsh"),
 )
-def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+def ann_topk_lsh_ball(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["embeddings"])
-    return S.lsh_bucketed_topk(t["embeddings"], ANN_PROBE_IDS, ANN_K).orderBy("probe_id", "rank")
-
-
-def _register_lsh_ball():
-    # Same candidate set by construction → shares ann_topk_lsh's oracle SQL
-    # (registered just above), so the driver hash-checks that the equi-join
-    # shape reproduces the nested-loop shape exactly.
-    @register_extra(
-        "ann_topk_lsh_ball",
-        EXTRA_REGISTRY["ann_topk_lsh"].oracle,
-        description="Multi-probe LSH ANN via probe-side Hamming-ball "
-        "expansion + equi-join on bucket — the many-probe scale path (the "
-        "bit_count(xor) nested-loop in ann_topk_lsh evaluates every "
-        "probe x row combination; this shape hash-joins and produces "
-        "identical results)",
-        tags=("similarity", "lsh"),
+    return S.lsh_bucketed_topk_ball(t["embeddings"], ANN_PROBE_IDS, ANN_K).orderBy(
+        "probe_id", "rank"
     )
-    def ann_topk_lsh_ball(spark: SparkSession, sf_dir: str) -> DataFrame:
-        t = load_tables(spark, sf_dir, ["embeddings"])
-        return S.lsh_bucketed_topk_ball(t["embeddings"], ANN_PROBE_IDS, ANN_K).orderBy(
-            "probe_id", "rank"
-        )
-
-
-_register_lsh_ball()
-
-
-@register(
-    "embedding_near_dup_pairs",
-    f"""
-    WITH {_quant_cte()},
-    pairs AS (
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               CAST(list_sum(list_transform(range(1, len(a.qvec) + 1), i -> a.qvec[i] * b.qvec[i])) AS BIGINT) AS dot_q,
-               a.qnorm AS na, b.qnorm AS nb
-        FROM n a JOIN n b ON a.vec_id < b.vec_id
-    )
-    SELECT id_a, id_b, dot_q / sqrt(CAST(na * nb AS DOUBLE)) AS cosine
-    FROM pairs
-    WHERE dot_q > 0 AND CAST(dot_q AS DOUBLE) * CAST(dot_q AS DOUBLE) >= 0.1225 * CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)
-    ORDER BY id_a, id_b
-    """,
-    description="Embedding near-dup pairs: cosine ≥ 0.35 via squared "
-    "cross-multiplication (sign-guarded, no sqrt in the predicate); "
-    "distributed block-pair GEMM — nothing collected to the driver",
-    tags=("dedup", "similarity"),
-)
-def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["embeddings"])
-    return S.near_dup_pairs_blocked(t["embeddings"], min_cosine=0.35).orderBy("id_a", "id_b")
 
 
 @register_extra(
@@ -404,35 +267,6 @@ def near_dup_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Text analysis queries
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "doc_token_stats",
-    f"""
-    SELECT doc_id,
-           len(string_split(text, ' ')) AS n_ws_tokens,
-           len(regexp_extract_all(text, '{TX.WORD_TOKEN_PATTERN}')) AS n_word_tokens,
-           length(text) AS n_chars_m
-    FROM documents
-    ORDER BY doc_id
-    """,
-    description="Token counting: whitespace + BPE-ish regex tokenizer",
-    tags=("text",),
-)
-def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    return (
-        t["documents"]
-        .select(
-            "doc_id",
-            TX.token_count("text").alias("n_ws_tokens"),
-            F.expr(f"size(regexp_extract_all(text, '{TX.WORD_TOKEN_PATTERN}', 0))")
-            .cast("long")
-            .alias("n_word_tokens"),
-            F.length("text").cast("long").alias("n_chars_m"),
-        )
-        .orderBy("doc_id")
-    )
 
 
 def _langid_scored_cte() -> str:
@@ -534,25 +368,6 @@ def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "doc_fingerprints",
-    """
-    SELECT doc_id,
-           md5(lower(regexp_replace(trim(text), ' +', ' ', 'g'))) AS fp_exact,
-           md5(array_to_string(list_sort(list_distinct(
-               string_split(lower(regexp_replace(trim(text), ' +', ' ', 'g')), ' '))), ' ')) AS fp_content
-    FROM documents
-    ORDER BY doc_id
-    """,
-    description="Document fingerprints: normalized-text md5 + order-"
-    "insensitive sorted-token-set md5",
-    tags=("text", "dedup"),
-)
-def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    return TX.fingerprints(t["documents"]).select("doc_id", "fp_exact", "fp_content").orderBy("doc_id")
-
-
 @register_extra(
     "embedding_norm_stats",
     f"""
@@ -598,73 +413,6 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "media_decode_stats",
-    """
-    WITH ids AS (SELECT doc_id FROM documents),
-    bi AS (SELECT UNNEST(generate_series(0, 71)) AS i),
-    bmp AS (
-        SELECT doc_id AS media_id, 'image' AS kind, 6 AS width, 4 AS height,
-               CAST(NULL AS INTEGER) AS sample_rate, 72 AS n_units,
-               CAST(SUM((doc_id * 31 + i) % 256) AS BIGINT) AS byte_sum,
-               CAST(SUM(CASE WHEN i % 3 = 0 THEN (doc_id * 31 + i) % 256 END) AS BIGINT) AS c0_sum,
-               CAST(NULL AS INTEGER) AS max_sample
-        FROM ids, bi GROUP BY doc_id
-    ),
-    wi AS (SELECT UNNEST(generate_series(0, 63)) AS i),
-    wav AS (
-        SELECT doc_id AS media_id, 'audio' AS kind, CAST(NULL AS INTEGER) AS width,
-               CAST(NULL AS INTEGER) AS height, 16000 AS sample_rate, 64 AS n_units,
-               CAST(SUM(ABS(((doc_id * 7 + i * 13) % 65536) - 32768)) AS BIGINT) AS byte_sum,
-               CAST(NULL AS BIGINT) AS c0_sum,
-               CAST(MAX(((doc_id * 7 + i * 13) % 65536) - 32768) AS INTEGER) AS max_sample
-        FROM ids, wi GROUP BY doc_id
-    )
-    SELECT * FROM bmp UNION ALL SELECT * FROM wav ORDER BY media_id, kind
-    """,
-    description="REAL multimodal decode: deterministic BMP/WAV payloads "
-    "synthesized per doc_id, parsed back by pure-numpy header-walking "
-    "codecs in mapInPandas; the oracle recomputes the decoded features "
-    "from the integer byte formula without ever seeing the payloads",
-    tags=("multimodal", "pandas_udf"),
-)
-def media_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from retail_aws_etl_pipeline_spark.operators import multimodal as MM
-    from retail_aws_etl_pipeline_spark.session import spread_for_compute
-
-    from retail_aws_etl_pipeline_spark.session import PY_KERNEL_MAX_PARTS
-
-    # full-decode kernels (see png_decode_stats) — spread; probes stay 1-task
-    ids = spread_for_compute(
-        load_tables(spark, sf_dir, ["documents"])["documents"].select("doc_id"),
-        max_parts=PY_KERNEL_MAX_PARTS,
-        keys=["doc_id"],
-    )
-    bmp = MM.decode_bmp_stats(MM.synth_media(ids, "doc_id", "image")).select(
-        "media_id",
-        F.lit("image").alias("kind"),
-        "width",
-        "height",
-        F.lit(None).cast("int").alias("sample_rate"),
-        "n_units",
-        "byte_sum",
-        "c0_sum",
-        F.lit(None).cast("int").alias("max_sample"),
-    )
-    wav = MM.decode_wav_stats(MM.synth_media(ids, "doc_id", "audio")).select(
-        "media_id",
-        F.lit("audio").alias("kind"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        "sample_rate",
-        "n_units",
-        F.col("abs_sum").alias("byte_sum"),
-        F.lit(None).cast("long").alias("c0_sum"),
-        "max_sample",
-    )
-    return bmp.unionByName(wav).orderBy("media_id", "kind")
-
-
 @register_extra(
     "png_decode_stats",
     """
@@ -699,30 +447,6 @@ def png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys=["doc_id"],
     )
     return MM.decode_png_stats(MM.synth_media(ids, "doc_id", "png")).orderBy("media_id")
-
-
-@register_extra(
-    "media_dims_probe",
-    """
-    SELECT doc_id AS media_id,
-           CASE doc_id % 3 WHEN 0 THEN 'jpeg' WHEN 1 THEN 'png' ELSE 'gif' END AS format,
-           CAST(16 + doc_id % 100 AS INT) AS width,
-           CAST(9 + (doc_id * 7) % 100 AS INT) AS height
-    FROM documents ORDER BY media_id
-    """,
-    description="Lib-free image METADATA probe: (format, width, height) "
-    "parsed from JPEG SOF / PNG IHDR / GIF screen-descriptor header bytes "
-    "alone — no pixel decode, O(header) bytes touched per payload. The "
-    "synth side writes per-id dims into real headers (meta stays NULL), so "
-    "the probe provably parses bytes; the oracle recomputes dims from the "
-    "id formula without seeing payloads",
-    tags=("multimodal", "pandas_udf", "metadata"),
-)
-def media_dims_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from retail_aws_etl_pipeline_spark.operators import multimodal as MM
-
-    ids = load_tables(spark, sf_dir, ["documents"])["documents"].select("doc_id")
-    return MM.probe_dims(MM.synth_header_media(ids, "doc_id")).orderBy("media_id")
 
 
 @register_extra(
@@ -815,60 +539,6 @@ def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir, ["documents"])
     return SMP.mixture_sample(t["documents"]).select("doc_id", "lang").orderBy("doc_id")
-
-
-#: A word 3-gram present in at least this many docs counts as boilerplate
-#: (the 99th-percentile doc-frequency of the synthetic corpus; production
-#: corpora would set this as a fraction of corpus size, not an absolute).
-BOILERPLATE_MIN_DOCS = 4
-
-
-@register_extra(
-    "boilerplate_ngram_ratio",
-    f"""
-    WITH {GRAMS_CTE},
-    gdf AS (
-        SELECT doc_id, gram, COUNT(*) OVER (PARTITION BY gram) AS df
-        FROM grams
-    )
-    SELECT doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_grams,
-           CAST(SUM(CASE WHEN df >= {BOILERPLATE_MIN_DOCS} THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler,
-           CAST(SUM(CASE WHEN df >= {BOILERPLATE_MIN_DOCS} THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*) AS boiler_ratio
-    FROM gdf GROUP BY doc_id ORDER BY doc_id
-    """,
-    description="Corpus-level boilerplate signal (the C4 repeated-span "
-    "filter re-expressed for word-stream docs): per doc, the share of its "
-    "distinct 3-grams whose corpus document-frequency is >= "
-    f"{BOILERPLATE_MIN_DOCS} — complements doc_repetition_ratio "
-    "(within-doc) with a cross-doc frequency lens; filter = WHERE on the "
-    "ratio. One gram-partition window + one doc groupBy (two shuffles, no "
-    "agg-join round trip)",
-    tags=("text", "quality", "curation"),
-)
-def boilerplate_ngram_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    t = load_tables(spark, sf_dir, ["documents"])
-    g = D.shingles(t["documents"])
-    gdf = g.withColumn("df", F.count(F.lit(1)).over(W.partitionBy("gram")))
-    boiler = F.sum(
-        F.when(F.col("df") >= BOILERPLATE_MIN_DOCS, 1).otherwise(0)
-    ).cast("long")
-    return (
-        gdf.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_grams"),
-            boiler.alias("n_boiler"),
-        )
-        .select(
-            "doc_id",
-            "n_grams",
-            "n_boiler",
-            (F.col("n_boiler").cast("double") / F.col("n_grams")).alias("boiler_ratio"),
-        )
-        .orderBy("doc_id")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1004,92 +674,6 @@ def media_byte_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.byte_histogram(media).orderBy("media_id", "byte")
 
 
-@register_extra(
-    "ann_lsh_recall",
-    f"""
-    WITH {_quant_cte()},
-    epairs AS (
-        SELECT p.vec_id AS probe_id, c.vec_id,
-               CAST(list_sum(list_transform(range(1, len(p.qvec) + 1), i -> p.qvec[i] * c.qvec[i])) AS BIGINT) AS dot_q,
-               p.qnorm AS pn, c.qnorm AS cn
-        FROM n p, n c
-        WHERE p.vec_id IN ({", ".join(map(str, ANN_PROBE_IDS))}) AND c.vec_id != p.vec_id
-    ),
-    exact_topk AS (
-        SELECT probe_id, vec_id FROM (
-            SELECT probe_id, vec_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY probe_id
-                       ORDER BY dot_q / sqrt(CAST(pn * cn AS DOUBLE)) DESC, vec_id ASC) AS rank
-            FROM epairs
-        ) WHERE rank <= {ANN_K}
-    ),
-    buckets AS (
-        SELECT n.vec_id, n.qvec, n.qnorm,
-               CAST(SUM(CASE WHEN CAST(list_sum(list_transform(range(1, len(n.qvec) + 1),
-                        i -> n.qvec[i] * w[i])) AS BIGINT) >= 0
-                        THEN 1 << p ELSE 0 END) AS BIGINT) AS bucket
-        FROM n, {_planes_values()}
-        GROUP BY n.vec_id, n.qvec, n.qnorm
-    ),
-    lsh_topk AS (
-        SELECT probe_id, vec_id FROM (
-            SELECT p.vec_id AS probe_id, c.vec_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY p.vec_id
-                       ORDER BY CAST(list_sum(list_transform(range(1, len(p.qvec) + 1), i -> p.qvec[i] * c.qvec[i])) AS BIGINT)
-                                / sqrt(CAST(p.qnorm * c.qnorm AS DOUBLE)) DESC, c.vec_id ASC) AS rank
-            FROM buckets p
-            JOIN buckets c ON bit_count(xor(p.bucket, c.bucket)) <= 1 AND c.vec_id != p.vec_id
-            WHERE p.vec_id IN ({", ".join(map(str, ANN_PROBE_IDS))})
-        ) WHERE rank <= {ANN_K}
-    )
-    SELECT e.probe_id,
-           COUNT(l.vec_id) AS n_common,
-           COUNT(l.vec_id) / {float(ANN_K)} AS recall
-    FROM exact_topk e
-    LEFT JOIN lsh_topk l ON l.probe_id = e.probe_id AND l.vec_id = e.vec_id
-    GROUP BY e.probe_id
-    ORDER BY e.probe_id
-    """,
-    description="ANN self-evaluation: recall@10 of the LSH-bucketed index "
-    "against the exact scan — the quality/latency dial, measured in-engine",
-    tags=("similarity", "lsh", "evaluation"),
-)
-def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from retail_aws_etl_pipeline_spark.operators.dedup import _truncate_lineage
-
-    t = load_tables(spark, sf_dir, ["embeddings"])
-    # ONE shared quantize+bucket pass: both the exact baseline and the LSH
-    # leg read the same materialized base (with_quantized/with_lsh_bucket
-    # pass through stored columns), so the corpus is projected once
-    # instead of once per branch — the same shared-base discipline as
-    # ann_recall_sweep, and the shape that matters at corpus scale where
-    # the projection pass IS the cost.
-    base = _truncate_lineage(
-        S.with_lsh_bucket(S.with_quantized(t["embeddings"])).select(
-            "vec_id", "qvec", "qnorm", "bucket"
-        ),
-        "auto",
-    )
-    exact = S.brute_force_topk(base, ANN_PROBE_IDS, ANN_K).select("probe_id", "vec_id")
-    lsh = (
-        S.lsh_bucketed_topk(base, ANN_PROBE_IDS, ANN_K)
-        .select(F.col("probe_id").alias("l_probe"), F.col("vec_id").alias("l_vec"))
-    )
-    joined = exact.join(
-        lsh, (F.col("probe_id") == F.col("l_probe")) & (F.col("vec_id") == F.col("l_vec")), "left"
-    )
-    return (
-        joined.groupBy("probe_id")
-        .agg(F.count("l_vec").alias("n_common"))
-        .select(
-            "probe_id", "n_common", (F.col("n_common") / F.lit(float(ANN_K))).alias("recall")
-        )
-        .orderBy("probe_id")
-    )
-
-
 WINNOW_WINDOW = 4  # k-gram window for winnowing (MOSS-style)
 
 
@@ -1222,43 +806,6 @@ def sketch_accuracy_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_extra(
-    "approx_sketch_stats",
-    None,  # sketches are engine-specific by nature -> local tolerance gate
-    description="Approximate aggregates (HLL distinct + GK quantiles) — the "
-    "100 TB knob for A2-style counters. Deliberately NOT driver-facing "
-    "(sketch internals differ per engine, so no hash oracle can exist); its "
-    "accuracy is proven two ways instead: the exact twin "
-    "sketch_accuracy_stats is hash-checked by the driver, and "
-    "tests/test_extensions.py::test_approx_sketch_within_tolerance gates "
-    "|approx-exact|/exact against the configured rsd/accuracy bounds. "
-    "Quantiles are projected to scalar p50/p90/p99 columns (flat schema — "
-    "array cells don't survive result canonicalizers that sort rows).",
-    tags=("agg", "approx"),
-)
-def approx_sketch_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["lineitem"])
-    q = F.expr("approx_percentile(l_extendedprice, array(0.5, 0.9, 0.99))")
-    return (
-        t["lineitem"]
-        .groupBy("l_returnflag")
-        .agg(
-            F.approx_count_distinct("l_partkey", 0.01).alias("approx_parts"),
-            q.alias("price_quantiles"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select(
-            "l_returnflag",
-            "approx_parts",
-            F.col("price_quantiles")[0].alias("p50"),
-            F.col("price_quantiles")[1].alias("p90"),
-            F.col("price_quantiles")[2].alias("p99"),
-            "n",
-        )
-        .orderBy("l_returnflag")
-    )
-
-
 # ---------------------------------------------------------------------------
 # IVF ANN: deterministic integer k-means cells (centroids shared w/ oracle)
 # ---------------------------------------------------------------------------
@@ -1349,8 +896,8 @@ def ivf_standing_index_dir(sf_dir: str) -> tuple[str, str, str]:
 
 @functools.cache
 def _ivf_oracle(sf_dir: str = "/root/testdata/sf0.01") -> str | None:
-    # Memoized (ADVICE r9): both the ann_topk_ivf registration and
-    # IVF_INDEXED_ORACLE call this at import time, and the centroid fit
+    # Memoized (ADVICE r9): IVF_INDEXED_ORACLE and the recall sweep call
+    # this at import time, and the centroid fit
     # (parquet read + numpy Lloyd iterations) is a nontrivial side effect
     # — one fit per process, not one per call site. The sf_dir parameter
     # exists for the REFIT-oracle scale proof (scripts/ivf_refit_proof.py
@@ -1412,28 +959,7 @@ def _ivf_oracle(sf_dir: str = "/root/testdata/sf0.01") -> str | None:
     """
 
 
-@register(
-    "ann_topk_ivf",
-    _ivf_oracle(),
-    description="IVF ANN: deterministic integer k-means coarse quantizer "
-    "(fit on a deterministic systematic SAMPLE — no full-corpus collect; "
-    "centroids broadcast as literals), candidates = the probe's nprobe "
-    "nearest cells — the clustered alternative to hyperplane LSH",
-    tags=("similarity", "ivf"),
-)
-def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    t = load_tables(spark, sf_dir, ["embeddings"])
-    cents = S.ivf_centroids_from_parquet(
-        os.path.join(sf_dir, "embeddings.parquet"), sample_mod=IVF_SAMPLE_MOD
-    )
-    return S.ivf_topk(
-        t["embeddings"], ANN_PROBE_IDS, ANN_K, centroids=cents, nprobe=IVF_NPROBE
-    ).orderBy("probe_id", "rank")
-
-
-#: Oracle for :func:`ann_topk_ivf_indexed` — IDENTICAL to ann_topk_ivf's by
+#: Oracle for :func:`ann_topk_ivf_indexed` — the in-memory IVF oracle by
 #: construction: the at-rest index persists the same quantization, the same
 #: deterministic centroid fit, and the same cell assignment the in-memory
 #: operator computes per query, so querying it with the same nprobe must
@@ -1455,8 +981,7 @@ IVF_INDEXED_ORACLE = _ivf_oracle()
     tags=("similarity", "ivf", "index"),
 )
 def ann_topk_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The IVF index AT REST (registered at the r11 rotation as the cap
-    swap for its in-memory twin ann_topk_ivf) — build once, query via static
+    """The IVF index AT REST — build once, query via static
     partition pruning. ``ivf_index_write`` materializes quantized vectors
     + norms partitioned by cell (centroids in a hidden ``_centroids``
     sidecar); ``ivf_index_topk`` computes the probes' cells scan-side and
@@ -1606,19 +1131,6 @@ def _near_dup_cluster_frame(spark: SparkSession, sf_dir: str, cc_impl) -> DataFr
 )
 def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _near_dup_cluster_frame(spark, sf_dir, D.connected_components)
-
-
-@register_extra(
-    "near_dup_clusters_star",
-    _NEAR_DUP_CLUSTERS_ORACLE,
-    description="Same clustering through the large-star/small-star "
-    "algorithm (O(log n) rounds independent of diameter; the dense-graph "
-    "scale path) — identical labeling, checked against the same "
-    "transitive-closure oracle",
-    tags=("dedup", "graph"),
-)
-def near_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _near_dup_cluster_frame(spark, sf_dir, D.connected_components_star)
 
 
 def _split_oracle() -> str:
@@ -1773,63 +1285,6 @@ def sequence_packing_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_extra(
-    "doc_repetition_ratio",
-    f"""
-    WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-    g AS (
-        SELECT doc_id,
-               greatest(len(toks) - {D.SHINGLE_N - 1}, 0) AS total_grams,
-               len(list_distinct(list_transform(
-                   range(1, greatest(len(toks) - {D.SHINGLE_N - 1}, 0) + 1),
-                   i -> array_to_string(toks[i:i + {D.SHINGLE_N - 1}], ' ')
-               ))) AS distinct_grams
-        FROM t
-    )
-    SELECT doc_id, CAST(total_grams AS BIGINT) AS total_grams,
-           CAST(distinct_grams AS BIGINT) AS distinct_grams,
-           CASE WHEN total_grams = 0 THEN 0.0
-                ELSE 1.0 - CAST(distinct_grams AS DOUBLE) / total_grams
-           END AS repetition_ratio
-    FROM g
-    ORDER BY doc_id
-    """,
-    description="Within-document repetition: 1 - distinct/total word "
-    "3-grams (the Gopher-style boilerplate/repetition quality signal); "
-    "pure scan-side array expressions, no shuffle",
-    tags=("text", "quality"),
-)
-def doc_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    n = D.SHINGLE_N
-    # size guard (the shingles-kernel lesson, r12): sequence(1, 0) is
-    # descending, so short docs need the explicit empty branch.
-    grams = (
-        f"CASE WHEN size(__toks) >= {n} THEN"
-        f" transform(sequence(1, size(__toks) - {n - 1}),"
-        f" i -> concat_ws(' ', slice(__toks, i, {n})))"
-        " ELSE array() END"
-    )
-    return (
-        t["documents"]
-        .withColumn("__toks", F.split("text", " "))
-        .select(
-            "doc_id",
-            F.greatest(F.size("__toks") - (n - 1), F.lit(0))
-            .cast("long")
-            .alias("total_grams"),
-            F.size(F.array_distinct(F.expr(grams))).cast("long").alias("distinct_grams"),
-        )
-        .withColumn(
-            "repetition_ratio",
-            F.when(F.col("total_grams") == 0, F.lit(0.0)).otherwise(
-                1.0 - F.col("distinct_grams").cast("double") / F.col("total_grams")
-            ),
-        )
-        .orderBy("doc_id")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Curation audits: decontamination, vocabulary, split leakage
 # ---------------------------------------------------------------------------
@@ -1862,134 +1317,6 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("shared_grams"))
         .orderBy("doc_id")
-    )
-
-
-@register_extra(
-    "corpus_vocabulary",
-    """
-    WITH toks AS (
-        SELECT doc_id, UNNEST(string_split(text, ' ')) AS tok FROM documents
-    )
-    SELECT tok, CAST(COUNT(*) AS BIGINT) AS n_total,
-           CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
-    FROM toks
-    WHERE tok <> ''
-    GROUP BY tok
-    ORDER BY n_total DESC, tok
-    LIMIT 200
-    """,
-    description="Corpus vocabulary: token totals + document frequency, "
-    "top-200 (map-side-combined groupBy over the exploded token stream; "
-    "the input to tokenizer/BPE corpus statistics)",
-    tags=("text", "curation"),
-)
-def corpus_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    return (
-        t["documents"]
-        .select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-        .filter(F.col("tok") != "")
-        .groupBy("tok")
-        .agg(
-            F.count(F.lit(1)).alias("n_total"),
-            F.count_distinct("doc_id").alias("n_docs"),
-        )
-        .orderBy(F.desc("n_total"), F.asc("tok"))
-        .limit(200)
-    )
-
-
-def _leakage_oracle() -> str:
-    from retail_aws_etl_pipeline_spark.operators import sampling as SMP
-
-    def split_sql(id_expr: str) -> str:
-        def nib(i: int) -> str:
-            return (
-                f"(strpos('0123456789abcdef',"
-                f" substr(md5(CAST({id_expr} AS VARCHAR)), {i}, 1)) - 1)"
-            )
-
-        bucket = (
-            f"(({nib(1)} * 4096 + {nib(2)} * 256 + {nib(3)} * 16 + {nib(4)})"
-            f" % {SMP.SPLIT_BUCKETS})"
-        )
-        return (
-            f"CASE WHEN {bucket} < {SMP.TRAIN_BUCKETS} THEN 'train'"
-            f" WHEN {bucket} < {SMP.TRAIN_BUCKETS + SMP.VALID_BUCKETS} THEN 'valid'"
-            f" ELSE 'test' END"
-        )
-
-    return f"""
-    WITH {GRAMS_CTE},
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
-        FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    ),
-    prs AS (
-        SELECT cm.id_a, cm.id_b
-        FROM common cm
-        JOIN sizes sa ON sa.doc_id = cm.id_a
-        JOIN sizes sb ON sb.doc_id = cm.id_b
-        WHERE cm.common * 5 >= (sa.n + sb.n - cm.common)
-    )
-    SELECT {split_sql('p.id_a')} AS split_a, {split_sql('p.id_b')} AS split_b,
-           CAST(COUNT(*) AS BIGINT) AS n_pairs
-    FROM prs p
-    WHERE {split_sql('p.id_a')} <> {split_sql('p.id_b')}
-    GROUP BY 1, 2
-    ORDER BY 1, 2
-    """
-
-
-@register(
-    "split_leakage_pairs",
-    _leakage_oracle(),
-    description="Split-leakage audit: near-dup pairs (n-gram Jaccard ≥ "
-    "0.2) whose endpoints fall in different train/valid/test splits — "
-    "the contamination check run before training; split is a scan-side "
-    "pure function of doc_id (no join against an assignment table)",
-    tags=("dedup", "curation"),
-)
-def split_leakage_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from retail_aws_etl_pipeline_spark.operators import sampling as SMP
-
-    def split_of(c: str):
-        hx = F.conv(F.substring(F.md5(F.col(c).cast("string")), 1, 4), 16, 10)
-        b = hx.cast("long") % SMP.SPLIT_BUCKETS
-        return (
-            F.when(b < SMP.TRAIN_BUCKETS, F.lit("train"))
-            .when(b < SMP.TRAIN_BUCKETS + SMP.VALID_BUCKETS, F.lit("valid"))
-            .otherwise(F.lit("test"))
-        )
-
-    t = load_tables(spark, sf_dir, ["documents"])
-    grams = D.shingles(t["documents"]).persist()
-    counts = D.jaccard_counts(grams)
-    # The checkpoint is a deliberate optimization BARRIER, not just a
-    # materialization: without it Catalyst pushes the md5-split predicate
-    # below the pair aggregation INTO the gram self-join condition, where
-    # it evaluates per joined gram row instead of per pair (measured 2.2x
-    # on the whole query). The near-dup pair list is tiny relative to the
-    # corpus — materializing it is what an audit would do anyway. Routed
-    # through _truncate_lineage("auto") so cluster sessions with a
-    # checkpoint dir get the executor-loss-safe reliable path.
-    pairs = D._truncate_lineage(
-        counts.filter(
-            F.col("common") * 5 >= (F.col("n_a") + F.col("n_b") - F.col("common"))
-        ).select("id_a", "id_b"),
-        "auto",
-    )
-    return (
-        pairs.select(
-            split_of("id_a").alias("split_a"), split_of("id_b").alias("split_b")
-        )
-        .filter(F.col("split_a") != F.col("split_b"))
-        .groupBy("split_a", "split_b")
-        .agg(F.count(F.lit(1)).alias("n_pairs"))
-        .orderBy("split_a", "split_b")
     )
 
 
@@ -2380,104 +1707,8 @@ def ann_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round 6: containment dedup + BM25-shaped relevance (new operator families)
 # ---------------------------------------------------------------------------
 
-#: Containment threshold (percent) for doc_containment_pairs.
+#: Containment threshold (percent) for doc_containment_pairs_prefix.
 CONTAINMENT_PCT = 90
-
-#: Fixed query-term set for bm25_query_scores — chosen for df spread in the
-#: synthetic corpus (two common terms, one rare) so the idf weights differ
-#: by >10x and the ranking genuinely exercises the rarity weighting.
-BM25_TERMS = ("join", "window", "dup")
-
-
-@register_extra(
-    "doc_containment_pairs",
-    f"""
-    WITH {GRAMS_CTE},
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
-        FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT cm.id_a, cm.id_b, sa.n AS n_a, sb.n AS n_b, cm.common,
-           CAST(cm.common AS DOUBLE) / LEAST(sa.n, sb.n) AS containment
-    FROM common cm
-    JOIN sizes sa ON sa.doc_id = cm.id_a
-    JOIN sizes sb ON sb.doc_id = cm.id_b
-    WHERE cm.common * 100 >= {CONTAINMENT_PCT} * LEAST(sa.n, sb.n)
-    ORDER BY cm.id_a, cm.id_b
-    """,
-    description="Asymmetric containment dedup: pairs where the smaller "
-    "document's shingle set is ≥ 90% inside the other — the quote/excerpt "
-    "duplication Jaccard under-scores when sizes differ. Same banded "
-    "inverted-index join as the Jaccard family (never all-pairs); "
-    "integer-percent threshold, one double division for the emitted ratio.",
-    tags=("dedup", "containment"),
-)
-def doc_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    # persist: jaccard_counts reads the shingle frame three times (sizes +
-    # both self-join sides) — same idiom as ngram_jaccard_pairs
-    grams = D.shingles(t["documents"]).persist()
-    return D.containment_pairs(grams, threshold_pct=CONTAINMENT_PCT).orderBy(
-        "id_a", "id_b"
-    )
-
-
-def _bm25_oracle() -> str:
-    from retail_aws_etl_pipeline_spark.operators.textops import BM25_IDF_SCALE
-
-    tf_exprs = ", ".join(
-        f"len(list_filter(string_split(text, ' '), x -> x = '{t}')) AS tf_{i}"
-        for i, t in enumerate(BM25_TERMS)
-    )
-    contrib = " + ".join(
-        f"((N * {BM25_IDF_SCALE}) // (df_{i} + 1))"
-        f" * (CAST(10 * tf_{i} * T AS DOUBLE) / (10 * tf_{i} * T + 3 * T + 9 * dl * N))"
-        for i in range(len(BM25_TERMS))
-    )
-    any_hit = " + ".join(f"tf_{i}" for i in range(len(BM25_TERMS)))
-    df_aggs = ", ".join(
-        f"SUM(CASE WHEN tf_{i} > 0 THEN 1 ELSE 0 END) AS df_{i}"
-        for i in range(len(BM25_TERMS))
-    )
-    return f"""
-    WITH per_doc AS (
-        SELECT doc_id, len(string_split(text, ' ')) AS dl, {tf_exprs}
-        FROM documents
-    ),
-    stats AS (
-        SELECT COUNT(*) AS N, SUM(dl) AS T, {df_aggs} FROM per_doc
-    )
-    SELECT doc_id, dl, {contrib} AS score
-    FROM per_doc, stats
-    WHERE {any_hit} > 0
-    ORDER BY score DESC, doc_id
-    LIMIT 50
-    """
-
-
-@register_extra(
-    "bm25_query_scores",
-    _bm25_oracle(),
-    description="BM25-shaped top-50 relevance against a fixed term set, "
-    "with a rational idf surrogate ((N*SCALE) div (df+1)) — ln() is "
-    "engine-divergent in final ulps, the rational weight keeps every "
-    "operand integer so the only doubles are one division per term and a "
-    "fixed-order sum. Scan-side tf/dl (array exprs, no explode), ONE tiny "
-    "global stats agg broadcast back, TakeOrderedAndProject ranking: zero "
-    "wide shuffles at any corpus size.",
-    tags=("text", "relevance"),
-)
-def bm25_query_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from retail_aws_etl_pipeline_spark.operators.textops import bm25_scores
-
-    t = load_tables(spark, sf_dir, ["documents"])
-    return (
-        bm25_scores(t["documents"], BM25_TERMS)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(50)
-    )
 
 
 _RETAINED_CORPUS_ORACLE = f"""
@@ -2549,59 +1780,6 @@ def dedup_retained_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(survivors, "doc_id")
         .select("doc_id", "lang", "source", "cluster_size")
         .orderBy("doc_id")
-    )
-
-
-@register_extra(
-    "bpe_pair_stats",
-    """
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-    pairs AS (
-        SELECT doc_id, toks[i.i] AS tok_a, toks[i.i + 1] AS tok_b
-        FROM toks, UNNEST(generate_series(1, len(toks) - 1)) AS i(i)
-    )
-    SELECT tok_a, tok_b, CAST(COUNT(*) AS BIGINT) AS n_total,
-           CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
-    FROM pairs
-    WHERE tok_a <> '' AND tok_b <> ''
-    GROUP BY tok_a, tok_b
-    ORDER BY n_total DESC, tok_a, tok_b
-    LIMIT 100
-    """,
-    description="BPE merge-candidate statistics (step 1 of tokenizer "
-    "training): corpus-wide adjacent-pair counts + document frequency, "
-    "top-100 with total tiebreak. Same map-side-combined explode->groupBy "
-    "shape as corpus_vocabulary, over pairs instead of unigrams — over a "
-    "byte-level pre-tokenization this IS the distributed inner loop of "
-    "BPE; each merge iteration re-runs it on the re-paired stream.",
-    tags=("text", "curation", "tokenizer"),
-)
-def bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    # size guard: sequence(1, 0) is DESCENDING [1, 0], so the greatest()
-    # idiom still indexes element 2 of a 1-element array on a
-    # single-token document (latent until the r10 BPE fuzz hit the same
-    # pattern in the trainer).
-    pairs_arr = (
-        "CASE WHEN size(__toks) >= 2 THEN"
-        " transform(sequence(1, size(__toks) - 1),"
-        " i -> struct(element_at(__toks, i) AS tok_a,"
-        " element_at(__toks, i + 1) AS tok_b))"
-        " ELSE array() END"
-    )
-    return (
-        t["documents"]
-        .withColumn("__toks", F.split("text", " "))
-        .select("doc_id", F.explode(F.expr(pairs_arr)).alias("p"))
-        .select("doc_id", "p.tok_a", "p.tok_b")
-        .filter((F.col("tok_a") != "") & (F.col("tok_b") != ""))
-        .groupBy("tok_a", "tok_b")
-        .agg(
-            F.count(F.lit(1)).alias("n_total"),
-            F.count_distinct("doc_id").alias("n_docs"),
-        )
-        .orderBy(F.desc("n_total"), F.asc("tok_a"), F.asc("tok_b"))
-        .limit(100)
     )
 
 
@@ -2789,50 +1967,6 @@ _KMEANS_CTES = f"""
     {_kmeans_assign_cte("1", "c1")}
 """
 
-_KMEANS_ORACLE = f"""
-    {_KMEANS_CTES}
-    SELECT a.cid AS cluster_id, CAST(COUNT(*) AS BIGINT) AS n_vectors,
-           CAST(SUM(a.dist) AS BIGINT) AS inertia,
-           CAST(COUNT(DISTINCT v.label) AS BIGINT) AS n_labels,
-           CAST(MIN(a.vec_id) AS BIGINT) AS min_vec_id
-    FROM a1 a JOIN kq v ON v.vec_id = a.vec_id
-    GROUP BY a.cid
-    ORDER BY cluster_id
-    """
-
-
-@register_extra(
-    "kmeans_cluster_profile",
-    _KMEANS_ORACLE,
-    description="Distributed k-means over the embedding corpus "
-    "(SemDeDup-style topic blocking): Lloyd's with deterministic init "
-    "(k smallest vec_ids), integer-exact distances on the shared "
-    "quantized contract, and floor-division centroid updates that are "
-    "provably identical under IEEE double division — so a DuckDB oracle "
-    "unrolls the full two-assignment/one-update schedule bit-for-bit. "
-    "Assignment is a scan-side array_min(struct(dist, cid)) over an "
-    "inlined centroid literal (no join, no shuffle, whole-stage codegen); "
-    "the update is a map-side-combined k-row aggregate + bounded k-row "
-    "driver collect, the same per-iteration sync MLlib performs. Output "
-    "profiles each cluster: size, inertia, label diversity.",
-    tags=("embedding", "clustering", "curation"),
-)
-def kmeans_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["embeddings"])
-    emb = t["embeddings"]
-    assigned = C.kmeans_assign(emb)
-    return (
-        assigned.join(emb.select("vec_id", "label"), "vec_id")
-        .groupBy("cluster_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_vectors"),
-            F.sum("dist").alias("inertia"),
-            F.count_distinct("label").alias("n_labels"),
-            F.min("vec_id").alias("min_vec_id"),
-        )
-        .orderBy("cluster_id")
-    )
-
 
 _SEMDEDUP_TAU2 = C.SEMDEDUP_MIN_COSINE * C.SEMDEDUP_MIN_COSINE
 
@@ -2890,133 +2024,10 @@ def semantic_dedup_retained(spark: SparkSession, sf_dir: str) -> DataFrame:
     return C.semantic_dedup_retained(t["embeddings"])
 
 
-_CHUNK_DEDUP_ORACLE = f"""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-    spans AS (
-        SELECT doc_id, j.j AS chunk_idx,
-               array_to_string(toks[j.j * {D.CHUNK_W} + 1 : j.j * {D.CHUNK_W} + {D.CHUNK_W}], ' ') AS chunk,
-               len(toks[j.j * {D.CHUNK_W} + 1 : j.j * {D.CHUNK_W} + {D.CHUNK_W}]) AS n_toks
-        FROM toks,
-             UNNEST(generate_series(
-                 0, CAST(ceil(len(toks) / {D.CHUNK_W}.0) AS INT) - 1)) AS j(j)
-    ),
-    flagged AS (
-        SELECT doc_id, chunk_idx, n_toks,
-               CASE WHEN ROW_NUMBER() OVER (
-                   PARTITION BY chunk ORDER BY doc_id, chunk_idx) = 1
-               THEN 1 ELSE 0 END AS retained
-        FROM spans
-    )
-    SELECT doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_chunks,
-           CAST(SUM(retained) AS BIGINT) AS n_retained,
-           CAST(SUM(n_toks) AS BIGINT) AS n_tokens,
-           CAST(SUM(CASE WHEN retained = 1 THEN n_toks ELSE 0 END) AS BIGINT)
-               AS n_tokens_retained
-    FROM flagged
-    GROUP BY doc_id
-    ORDER BY doc_id
-    """
-
-
-@register_extra(
-    "token_chunk_dedup",
-    _CHUNK_DEDUP_ORACLE,
-    description="C4/RefinedWeb-style span-level exact dedup: the corpus "
-    "splits into non-overlapping token spans and only each span's FIRST "
-    "occurrence (min (doc_id, chunk_idx), corpus-wide — so within-doc "
-    "repeats dedup too) survives; per-doc retention stats come back. One "
-    "shuffle keyed on the span text (groupBy + min-struct, map-side "
-    "combined to one row per distinct span) + the equi-join back — the "
-    "canonical content-hash-partitioned dedup; no windows on the Spark "
-    "side, no collects.",
-    tags=("dedup", "text", "curation"),
-)
-def token_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    return D.chunk_dedup_stats(t["documents"]).orderBy("doc_id")
-
-
-_FLUENCY_BOTTOM_K = 100
-
-_FLUENCY_ORACLE = f"""
-    WITH bi AS (
-        SELECT doc_id, substr(text, i.i, 2) AS bg
-        FROM documents, UNNEST(generate_series(1, len(text) - 1)) AS i(i)
-    ),
-    vocab AS (SELECT bg, COUNT(*) AS freq FROM bi GROUP BY bg),
-    perdoc AS (
-        SELECT b.doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-               CAST(SUM(v.freq) AS BIGINT) AS freq_sum
-        FROM bi b JOIN vocab v USING (bg)
-        GROUP BY b.doc_id
-    )
-    SELECT doc_id, n_bigrams, freq_sum
-    FROM perdoc
-    ORDER BY CAST(freq_sum AS DOUBLE) / n_bigrams ASC, doc_id ASC
-    LIMIT {_FLUENCY_BOTTOM_K}
-    """
-
-
-@register_extra(
-    "char_bigram_fluency",
-    _FLUENCY_ORACLE,
-    description="Corpus-LM fluency filter (the KenLM-perplexity quality "
-    "gate, integer-exact): the char-bigram frequency table IS the "
-    "language model — each doc scores the sum of corpus-wide frequencies "
-    "of its own bigrams, and the bottom-100 by mean frequency are the "
-    "least-corpus-like candidates for removal. The bigram vocabulary is "
-    "bounded by charset² (~1k rows) so the model joins back by "
-    "broadcast; bigram extraction is scan-side (tokenize-once transform), "
-    "leaving one real shuffle (per-doc sum). Ranking divides as double "
-    "ONLY in the sort key (both engines IEEE-divide identically; integer "
-    "columns carry the evidence), doc_id tiebreak.",
-    tags=("text", "quality", "curation"),
-)
-def char_bigram_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    # Explode the bigram stream ONCE into per-doc term counts (map-side
-    # combined); the corpus model then derives from the counts (freq =
-    # Σ tf over docs) instead of a second pass over the raw stream, and
-    # per-doc totals become Σ tf / Σ tf·freq. Bigrams come from ONE
-    # codegen'd JVM regex per doc (overlapping via lookahead capture) —
-    # measured 3x faster than the interpreted
-    # transform(sequence, substring) lambda, identical output.
-    perdoc_bg = (
-        t["documents"]
-        .select(
-            "doc_id",
-            F.explode(F.expr(r"regexp_extract_all(text, '(?=(..))', 1)")).alias("bg"),
-        )
-        .groupBy("doc_id", "bg")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        # consumed twice (model fit + scoring join): persist the compact
-        # count frame, not the raw bigram stream
-        .persist()
-    )
-    vocab = perdoc_bg.groupBy("bg").agg(F.sum("tf").alias("freq"))
-    perdoc = (
-        perdoc_bg.join(F.broadcast(vocab), "bg")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("tf").alias("n_bigrams"),
-            F.sum(F.col("tf") * F.col("freq")).alias("freq_sum"),
-        )
-    )
-    return (
-        perdoc.orderBy(
-            (F.col("freq_sum").cast("double") / F.col("n_bigrams")).asc(),
-            F.col("doc_id").asc(),
-        )
-        .limit(_FLUENCY_BOTTOM_K)
-        .select("doc_id", "n_bigrams", "freq_sum")
-    )
-
-
 @register_extra(
     "doc_containment_pairs_prefix",
-    # Same semantics as doc_containment_pairs -> the SAME oracle; the
-    # driver row proves the prefix-filtered plan returns identical results.
+    # The oracle is the unfiltered containment join; the driver row
+    # proves the prefix-filtered plan returns identical results.
     f"""
     WITH {GRAMS_CTE},
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id),
@@ -3054,55 +2065,6 @@ def doc_containment_pairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.containment_pairs_prefix(grams, threshold_pct=CONTAINMENT_PCT).orderBy(
         "id_a", "id_b"
     )
-
-
-_CHUNK_CORPUS_ORACLE = f"""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-    spans AS (
-        SELECT doc_id, j.j AS chunk_idx,
-               array_to_string(toks[j.j * {D.CHUNK_W} + 1 : j.j * {D.CHUNK_W} + {D.CHUNK_W}], ' ') AS chunk,
-               len(toks[j.j * {D.CHUNK_W} + 1 : j.j * {D.CHUNK_W} + {D.CHUNK_W}]) AS n_toks
-        FROM toks,
-             UNNEST(generate_series(
-                 0, CAST(ceil(len(toks) / {D.CHUNK_W}.0) AS INT) - 1)) AS j(j)
-    ),
-    retained AS (
-        SELECT doc_id, chunk_idx, chunk, n_toks FROM (
-            SELECT doc_id, chunk_idx, chunk, n_toks,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY chunk ORDER BY doc_id, chunk_idx) AS rn
-            FROM spans
-        ) WHERE rn = 1
-    ),
-    rebuilt AS (
-        SELECT doc_id,
-               string_agg(chunk, ' ' ORDER BY chunk_idx) AS text,
-               CAST(SUM(n_toks) AS BIGINT) AS n_tokens_retained
-        FROM retained GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           COALESCE(r.text, '') AS text,
-           COALESCE(r.n_tokens_retained, 0) AS n_tokens_retained
-    FROM documents d LEFT JOIN rebuilt r ON r.doc_id = d.doc_id
-    ORDER BY d.doc_id
-    """
-
-
-@register_extra(
-    "token_chunk_dedup_corpus",
-    _CHUNK_CORPUS_ORACLE,
-    description="The write side of span dedup: each document rebuilt from "
-    "only its RETAINED spans in original order — the deduped corpus a "
-    "curation pipeline would persist (token_chunk_dedup is its audit "
-    "twin). Reassembly sorts the per-doc retained (chunk_idx, chunk) "
-    "structs inside the aggregate — bounded by doc length, no global "
-    "sort; fully-duplicate docs come back empty rather than vanishing so "
-    "row identity survives for downstream joins.",
-    tags=("dedup", "text", "curation"),
-)
-def token_chunk_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    return D.chunk_dedup_corpus(t["documents"]).orderBy("doc_id")
 
 
 def _fp_init_ctes(k: int) -> str:
@@ -3598,53 +2560,6 @@ def corpus_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max_by(
             "doc_id", F.col("n_chars") * F.lit(100000000) + F.col("doc_id")
         ).alias("longest_doc_id"),
-    )
-
-
-@register_extra(
-    "similarity_spectrum",
-    f"""
-    WITH {GRAMS_CTE},
-    sp_sizes AS (SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id),
-    sp_pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
-        FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT CAST((p.common * 10) // (sa.n + sb.n - p.common) AS BIGINT) AS jaccard_decile,
-           CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           CAST(MIN(p.common) AS BIGINT) AS min_common,
-           CAST(MAX(p.common) AS BIGINT) AS max_common
-    FROM sp_pairs p
-    JOIN sp_sizes sa ON sa.doc_id = p.id_a
-    JOIN sp_sizes sb ON sb.doc_id = p.id_b
-    GROUP BY 1
-    ORDER BY jaccard_decile
-    """,
-    description="Corpus self-similarity spectrum: every sharing pair's "
-    "Jaccard bucketed into integer deciles (common·10 div union — floor "
-    "division, engine-exact) and counted — the duplication histogram "
-    "that tells a curation team where to SET the dedup threshold before "
-    "running it (mass near decile 0 = benign vocabulary overlap; a fat "
-    "tail at 5+ = real duplication). Same inverted-index join as the "
-    "Jaccard family feeding one tiny groupBy; at scale the "
-    "max_gram_freq hot-shingle guard applies unchanged.",
-    tags=("dedup", "audit", "curation"),
-)
-def similarity_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    grams = D.shingles(t["documents"]).persist()
-    counts = D.jaccard_counts(grams)
-    decile = F.expr("CAST((common * 10) DIV (n_a + n_b - common) AS BIGINT)")
-    return (
-        counts.select(decile.alias("jaccard_decile"), "common")
-        .groupBy("jaccard_decile")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.min("common").alias("min_common"),
-            F.max("common").alias("max_common"),
-        )
-        .orderBy("jaccard_decile")
     )
 
 
@@ -4153,321 +3068,6 @@ def graph_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.triangle_census(edges)
 
 
-_SN_WINDOW = 8
-
-_SN_ORACLE = f"""
-    WITH {GRAMS_CTE},
-    sn_rank AS (
-        SELECT doc_id,
-               ROW_NUMBER() OVER (ORDER BY lang, n_chars, doc_id) AS rn
-        FROM documents
-    ),
-    sn_cand AS (
-        SELECT LEAST(a.doc_id, b.doc_id) AS id_a,
-               GREATEST(a.doc_id, b.doc_id) AS id_b,
-               CAST(b.rn - a.rn AS BIGINT) AS rank_dist
-        FROM sn_rank a JOIN sn_rank b
-          ON b.rn > a.rn AND b.rn - a.rn <= {_SN_WINDOW}
-    ),
-    sn_sizes AS (SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id),
-    sn_common AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
-        FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT c.id_a, c.id_b, c.rank_dist,
-           CAST(sa.n AS BIGINT) AS n_a, CAST(sb.n AS BIGINT) AS n_b,
-           CAST(m.common AS BIGINT) AS common
-    FROM sn_cand c
-    JOIN sn_common m ON m.id_a = c.id_a AND m.id_b = c.id_b
-    JOIN sn_sizes sa ON sa.doc_id = c.id_a
-    JOIN sn_sizes sb ON sb.doc_id = c.id_b
-    WHERE m.common * 5 >= (sa.n + sb.n - m.common)
-    ORDER BY c.id_a, c.id_b
-"""
-
-
-@register_extra(
-    "sorted_neighborhood_pairs",
-    _SN_ORACLE,
-    description="Sorted-neighborhood dedup blocking: documents sort "
-    "globally on a cheap blocking key (lang, n_chars, doc_id), every "
-    "pair within 8 ranks becomes a candidate — O(n*w) candidates vs "
-    "O(n^2) all-pairs, the classic entity-resolution alternative to LSH "
-    "banding when near-dups share coarse attributes rather than "
-    "shingles. Candidates verify against exact Jaccard >= 0.2. The "
-    "global rank never builds a global window (range partitions + "
-    "per-partition row_number + broadcast prefix offsets, the "
-    "customer_spend_deciles discipline) and the neighbor join is the "
-    "pairs_within_window band trick in rank space — each pair generated "
-    "exactly once. Returns matched pairs with rank distance and the "
-    "integer Jaccard evidence.",
-    tags=("dedup", "blocking", "join"),
-)
-def sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    docs = t["documents"]
-    cands = D.sorted_neighborhood_candidates(
-        docs,
-        [F.asc("lang"), F.asc("n_chars"), F.asc("doc_id")],
-        window=_SN_WINDOW,
-    ).persist()
-    # Direct per-candidate verify (the containment_pairs_prefix lesson):
-    # candidates touch every doc ~2w times, so the doc-restricted
-    # jaccard_counts(pairs=...) form degenerates to the full gram
-    # self-join. Joining each candidate's id_a grams against id_b's
-    # posting list costs Σ_cand n_a — proportional to the O(n·w)
-    # candidate count, independent of gram co-occurrence blowup.
-    grams = D.shingles(docs).persist()
-    ga = grams.select(F.col("doc_id").alias("id_a"), "gram")
-    gb = grams.select(F.col("doc_id").alias("id_b"), "gram")
-    common = (
-        cands.select("id_a", "id_b")
-        .join(ga, "id_a")
-        .join(gb, ["id_b", "gram"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    counts = common.join(
-        sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a")), "id_a"
-    ).join(sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b")), "id_b")
-    matched = counts.filter(
-        F.col("common") * 5 >= (F.col("n_a") + F.col("n_b") - F.col("common"))
-    )
-    return (
-        matched.join(cands, ["id_a", "id_b"])
-        .select("id_a", "id_b", "rank_dist", "n_a", "n_b", "common")
-        .orderBy("id_a", "id_b")
-    )
-
-
-_BITEXT_ORACLE = f"""
-    WITH {_quant_cte()},
-    bx_sides AS (
-        SELECT n.vec_id AS id, n.qvec, n.qnorm AS qn, d.lang
-        FROM n JOIN documents d ON d.doc_id = n.vec_id
-    ),
-    bx_sc AS (
-        SELECT a.id AS id_a, b.id AS id_b, a.qn AS a_qn, b.qn AS b_qn,
-               CAST(list_sum(list_transform(range(1, len(a.qvec) + 1),
-                    i -> a.qvec[i] * b.qvec[i])) AS BIGINT) AS dot_q
-        FROM (SELECT * FROM bx_sides WHERE lang = 'en') a
-        CROSS JOIN (SELECT * FROM bx_sides WHERE lang = 'de') b
-    ),
-    bx_cos AS (
-        SELECT *, dot_q / sqrt(CAST(a_qn * b_qn AS DOUBLE)) AS cosine FROM bx_sc
-    ),
-    bx_fwd AS (
-        SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY id_a ORDER BY cosine DESC, id_b ASC) AS fr
-        FROM bx_cos
-    ),
-    bx_bwd AS (
-        SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY id_b ORDER BY cosine DESC, id_a ASC) AS br
-        FROM bx_cos
-    ),
-    bx_f2 AS (SELECT id_a, dot_q AS f2_dot, b_qn AS f2_qn FROM bx_fwd WHERE fr = 2),
-    bx_b2 AS (SELECT id_b, dot_q AS b2_dot, a_qn AS b2_qn FROM bx_bwd WHERE br = 2),
-    bx_m AS (
-        SELECT f.id_a, f.id_b, f.dot_q, f.a_qn, f.b_qn,
-               f2.f2_dot, f2.f2_qn, b2.b2_dot, b2.b2_qn
-        FROM (SELECT id_a, id_b, dot_q, a_qn, b_qn FROM bx_fwd WHERE fr = 1) f
-        JOIN (SELECT id_a, id_b FROM bx_bwd WHERE br = 1) bk
-          ON bk.id_a = f.id_a AND bk.id_b = f.id_b
-        LEFT JOIN bx_f2 f2 ON f2.id_a = f.id_a
-        LEFT JOIN bx_b2 b2 ON b2.id_b = f.id_b
-    )
-    SELECT id_a, id_b, dot_q,
-           ((CASE WHEN f2_dot IS NULL OR f2_dot <= 0 THEN TRUE
-                  ELSE (dot_q * dot_q) // {S.MARGIN_SQ_SCALE} * f2_qn * {S.MARGIN_DEN**2}
-                       >= (f2_dot * f2_dot) // {S.MARGIN_SQ_SCALE} * b_qn * {S.MARGIN_NUM**2}
-             END)
-            AND (CASE WHEN b2_dot IS NULL OR b2_dot <= 0 THEN TRUE
-                      ELSE (dot_q * dot_q) // {S.MARGIN_SQ_SCALE} * b2_qn * {S.MARGIN_DEN**2}
-                           >= (b2_dot * b2_dot) // {S.MARGIN_SQ_SCALE} * a_qn * {S.MARGIN_NUM**2}
-                 END)
-            AND dot_q > 0) AS margin_ok
-    FROM bx_m ORDER BY id_a
-"""
-
-
-@register_extra(
-    "bitext_margin_pairs",
-    _BITEXT_ORACLE,
-    description="Bitext mining (CCMatrix/LASER rule) between the 'en' and "
-    "'de' document embeddings: a pair is emitted when each side is the "
-    "other's cosine-nearest cross-lingual neighbor (forward-backward "
-    "consistency), with margin_ok flagging pairs whose best/second-best "
-    "cosine ratio clears 11/10 on BOTH sides — the hub filter that "
-    "separates translations from dense near-ties. The margin test never "
-    "compares floats: cross-multiplied squared dots with a 10^6 floor-div "
-    "reduction keep every term int64 and engine-exact; NN ranking uses "
-    "the module-wide (cosine DESC, id ASC) order. The all-pairs scoring "
-    "here is the brute baseline — at corpus scale the GEMM-blocked or "
-    "IVF candidate paths in operators/similarity.py are the drop-in "
-    "replacements for the cross join, and the rank windows stay "
-    "per-probe-id (bounded groups, keyed shuffles).",
-    tags=("embeddings", "similarity", "curation"),
-)
-def bitext_margin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents", "embeddings"])
-    emb = S.with_quantized(t["embeddings"])
-    langd = t["documents"].select("doc_id", "lang")
-    sided = emb.join(langd, emb.vec_id == langd.doc_id).select(
-        F.col("vec_id").alias("id"), "qvec", "qnorm", "lang"
-    )
-    a = sided.filter(F.col("lang") == "en").select("id", "qvec", "qnorm")
-    b = sided.filter(F.col("lang") == "de").select("id", "qvec", "qnorm")
-    return S.margin_mutual_pairs(a, b).orderBy("id_a")
-
-
-#: Fixed boilerplate tail appended to every third document — the hot-gram
-#: skew (site chrome, license footers) that motivates the PPJoin prefix
-#: filter. ~20 tokens so it dominates short docs' shingle sets.
-BOILERPLATE_TAIL = (
-    "subscribe to our newsletter terms of service apply all rights reserved "
-    "cookie policy contact us privacy statement follow us on social media"
-)
-
-_BP_ORACLE = f"""
-    WITH bp_docs AS (
-        SELECT doc_id,
-               CASE WHEN doc_id % 3 = 0 THEN text || ' {BOILERPLATE_TAIL}'
-                    ELSE text END AS text
-        FROM documents
-    ),
-    bp_toks AS (SELECT doc_id, string_split(text, ' ') AS toks FROM bp_docs),
-    bp_grams AS (
-        SELECT DISTINCT doc_id,
-               array_to_string(toks[i.i:i.i + {D.SHINGLE_N - 1}], ' ') AS gram
-        FROM bp_toks,
-             UNNEST(generate_series(1, len(toks) - {D.SHINGLE_N - 1})) AS i(i)
-    ),
-    bp_sizes AS (SELECT doc_id, COUNT(*) AS n FROM bp_grams GROUP BY doc_id),
-    bp_common AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
-        FROM bp_grams a JOIN bp_grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT cm.id_a, cm.id_b, sa.n AS n_a, sb.n AS n_b, cm.common,
-           CAST(cm.common AS DOUBLE) / LEAST(sa.n, sb.n) AS containment
-    FROM bp_common cm
-    JOIN bp_sizes sa ON sa.doc_id = cm.id_a
-    JOIN bp_sizes sb ON sb.doc_id = cm.id_b
-    WHERE cm.common * 100 >= {CONTAINMENT_PCT} * LEAST(sa.n, sb.n)
-    ORDER BY cm.id_a, cm.id_b
-"""
-
-
-def boilerplate_docs(docs: DataFrame) -> DataFrame:
-    """documents with the fixed BOILERPLATE_TAIL on every third doc — the
-    deterministic boilerplate-skew corpus (no files, no RNG)."""
-    return docs.withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(F.col("text"), F.lit(" " + BOILERPLATE_TAIL)),
-        ).otherwise(F.col("text")),
-    )
-
-
-@register_extra(
-    "containment_pairs_boilerplate",
-    _BP_ORACLE,
-    description="The PPJoin prefix-filter containment operator ON ITS "
-    "MOTIVATING DISTRIBUTION: every third document carries a fixed "
-    "20-token boilerplate tail (site chrome / license footer skew), the "
-    "regime where the raw inverted-index join blows up on hot shingles "
-    "and the rare-gram prefix probe wins (13-26x candidate reduction "
-    "measured in SCALING.md). Results are exact by the prefix lemma — "
-    "this oracle is the brute-force formulation over the same injected "
-    "corpus. Registered so the bench tracks the prefix path's cost on "
-    "skewed data every round, not just in one-off studies.",
-    tags=("dedup", "containment", "skew"),
-)
-def containment_pairs_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    grams = D.shingles(boilerplate_docs(t["documents"])).persist()
-    return D.containment_pairs_prefix(grams, threshold_pct=CONTAINMENT_PCT).orderBy(
-        "id_a", "id_b"
-    )
-
-
-#: Per-language keep-rates (buckets of 100) for the deterministic
-#: hash-gate rebalancing sample: the dominant language is cut hardest.
-REBALANCE_RATES = {"en": 40, "es": 80, "zh": 80, "de": 100, "fr": 100}
-#: Salt so the sampling hash is independent of dataset_split_assignment's.
-REBALANCE_SALT = "rs:"
-
-
-def _rebalance_oracle() -> str:
-    nib = lambda i: f"(strpos('0123456789abcdef', substr(h, {i}, 1)) - 1)"  # noqa: E731
-    bucket = f"({nib(1)} * 4096 + {nib(2)} * 256 + {nib(3)} * 16 + {nib(4)}) % 100"
-    rate = " ".join(
-        f"WHEN lang = '{g}' THEN {r}" for g, r in sorted(REBALANCE_RATES.items())
-    )
-    return f"""
-    WITH rb AS (
-        SELECT doc_id, lang,
-               md5('{REBALANCE_SALT}' || CAST(doc_id AS VARCHAR)) AS h
-        FROM documents
-    ),
-    rbb AS (
-        SELECT doc_id, lang, {bucket} AS bucket,
-               CASE {rate} ELSE 0 END AS rate
-        FROM rb
-    )
-    SELECT doc_id, lang, CAST(bucket AS BIGINT) AS bucket
-    FROM rbb WHERE bucket < rate
-    ORDER BY doc_id
-    """
-
-
-@register_extra(
-    "lang_rebalanced_sample",
-    _rebalance_oracle(),
-    description="Deterministic hash-gate rebalancing sample: each doc "
-    "keeps iff its salted 16-bit md5 bucket (mod 100) falls under its "
-    "language's keep-rate — the stateless Bernoulli complement to "
-    "corpus_mixture_sample's quota-exact ranks. The trade is explicit: "
-    "quotas hit target counts exactly but cost a rank shuffle; the hash "
-    "gate is a pure scan-side projection (ZERO shuffle at any corpus "
-    "size), idempotent under reprocessing and replay (the same doc "
-    "always makes the same decision — what streaming and incremental "
-    "backfills need), at the cost of binomial jitter around the target "
-    "rate. Salted so sampling stays independent of the train/valid/test "
-    "bucket hash. Languages ABSENT from the rate table get rate 0 and "
-    "drop entirely (explicit allow-list semantics — mirrored by the "
-    "oracle's CASE ... ELSE 0); list a language with rate 100 to pass "
-    "it through.",
-    tags=("sampling", "curation"),
-)
-def lang_rebalanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    hx = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(REBALANCE_SALT), F.col("doc_id").cast("string"))),
-            1,
-            4,
-        ),
-        16,
-        10,
-    )
-    rate = F.lit(0)
-    for g, r in sorted(REBALANCE_RATES.items()):
-        rate = F.when(F.col("lang") == g, F.lit(r)).otherwise(rate)
-    return (
-        t["documents"]
-        .withColumn("bucket", (hx.cast("long") % 100))
-        .withColumn("__rate", rate)
-        .filter(F.col("bucket") < F.col("__rate"))
-        .select("doc_id", "lang", "bucket")
-        .orderBy("doc_id")
-    )
-
-
 _CTFIDF_TOP_K = 3
 _CTFIDF_SCALE = 1_000_000
 
@@ -4630,75 +3230,6 @@ def oov_rate_by_split(spark: SparkSession, sf_dir: str) -> DataFrame:
                    " div count(*)").alias("oov_ppm"),
         )
         .orderBy("split")
-    )
-
-
-_XSRC_ORACLE = f"""
-    WITH {GRAMS_CTE},
-    xs_sizes AS (SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id),
-    xs_pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
-        FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    ),
-    xs_qual AS (
-        SELECT p.id_a, p.id_b, p.common FROM xs_pairs p
-        JOIN xs_sizes sa ON sa.doc_id = p.id_a
-        JOIN xs_sizes sb ON sb.doc_id = p.id_b
-        WHERE p.common * 5 >= (sa.n + sb.n - p.common)
-    )
-    SELECT LEAST(da.source, db.source) AS source_a,
-           GREATEST(da.source, db.source) AS source_b,
-           CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           CAST(SUM(q.common) AS BIGINT) AS sum_common
-    FROM xs_qual q
-    JOIN documents da ON da.doc_id = q.id_a
-    JOIN documents db ON db.doc_id = q.id_b
-    GROUP BY 1, 2
-    ORDER BY source_a, source_b
-"""
-
-
-@register_extra(
-    "cross_source_dup_matrix",
-    _XSRC_ORACLE,
-    description="Mirror-site detection: the near-dup pair set (Jaccard "
-    ">= 0.2, the shared inverted-index edge build) rolled up into a "
-    "source x source matrix (canonical least/greatest ordering) with "
-    "pair counts and total shared-shingle mass — the provenance audit "
-    "that tells a curation team WHICH feeds copy from each other, so "
-    "dedup policy (which source survives) can be set per source pair "
-    "rather than per document. The rollup adds one tiny keyed aggregate "
-    "on top of the pair stream; the doc->source attachments are "
-    "id-keyed joins that co-partition with the pair keys.",
-    tags=("dedup", "audit", "curation"),
-)
-def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    docs = t["documents"]
-    grams = D.shingles(docs).persist()
-    qual = D.jaccard_counts(grams).filter(
-        F.col("common") * 5 >= (F.col("n_a") + F.col("n_b") - F.col("common"))
-    )
-    src = docs.select("doc_id", "source")
-    return (
-        qual.join(
-            src.select(F.col("doc_id").alias("id_a"), F.col("source").alias("sa")),
-            "id_a",
-        )
-        .join(
-            src.select(F.col("doc_id").alias("id_b"), F.col("source").alias("sb")),
-            "id_b",
-        )
-        .groupBy(
-            F.least("sa", "sb").alias("source_a"),
-            F.greatest("sa", "sb").alias("source_b"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.sum("common").alias("sum_common"),
-        )
-        .orderBy("source_a", "source_b")
     )
 
 
@@ -5448,63 +3979,6 @@ def decayed_revenue_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: lands in the same or adjacent T-wide length buckets.
 EDIT_DIST_MAX = 25
 
-#: Deterministic salt fan-out for the length-bucket join. Length buckets are
-#: few (max_doc_len / T of them) and docs concentrate in a handful, so a
-#: plain bucket-keyed join runs ONE task per bucket regardless of cluster
-#: size. Salting the left side by doc_id % S and replicating the right
-#: side's probe rows S ways raises the join parallelism to buckets x S with
-#: identical results — the standard replicate-the-build-side skew treatment,
-#: here applied deterministically so the plan is replay-stable.
-EDIT_DIST_SALT = 8
-
-
-@register(
-    "edit_distance_near_pairs",
-    f"""
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           CAST(levenshtein(a.text, b.text) AS BIGINT) AS edit_distance
-    FROM documents a
-    JOIN documents b
-      ON a.doc_id < b.doc_id
-     AND abs(a.n_chars - b.n_chars) <= {EDIT_DIST_MAX}
-     AND levenshtein(a.text, b.text) <= {EDIT_DIST_MAX}
-    ORDER BY doc_a, doc_b
-    """,
-    description="Character-level near-duplicate pairs: all doc pairs within "
-    f"levenshtein distance {EDIT_DIST_MAX} — the byte-precise complement "
-    "to the token-level MinHash/SimHash/Jaccard family (catches small "
-    "in-place edits those can over- or under-count). The oracle is the "
-    "brute-force quadratic SEMANTICS; the Spark plan is the scale form: "
-    "length-bucket blocking (bucket width = the threshold) joins each doc "
-    "only against its own and one adjacent bucket — exact by the "
-    "levenshtein >= |len difference| lower bound — then verifies "
-    "candidates with the THRESHOLDED builtin levenshtein (early-exits "
-    "the DP once the band exceeds T; JVM-side, no UDF). Candidate volume "
-    "is sum over buckets of |b_i| * (|b_i| + |b_i+1|) ~ N * density "
-    "rather than N^2; the correctness gate doubles as the blocking "
-    "exactness proof. Pair emitted once: same-bucket pairs keep id_a < "
-    "id_b, cross-bucket pairs join only (bucket, bucket+1), re-ordered "
-    "by id on output. An Ed-Join prefix-filter variant (method='grams') "
-    "is the registered scale path for vocab-diverse corpora, where rare "
-    "q-grams discriminate; on THIS corpus's small shared vocabulary "
-    "every content filter measured vacuous (distinct-gram count kept "
-    "99.8% of candidates, PassJoin positional blocks passed 37%), so "
-    "near-length candidates + fast thresholded DP IS the optimum. "
-    "ENVELOPE (r8): this exact form is the ORACLE/AUDIT surface — "
-    "within a length bucket it is inherently quadratic (measured 70x "
-    "wall for 10x docs on the small-vocab corpus, SCALING.md), so its "
-    "registered role is bounded corpora and recall audits; the "
-    "corpus-scale default is edit_distance_near_pairs_lsh (banded "
-    "candidates + identical verify, 43.9s at K=100/500k docs), now "
-    "carrying its own driver row.",
-    tags=("dedup", "join", "text"),
-)
-def edit_distance_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    return D.edit_distance_pairs(
-        t["documents"], EDIT_DIST_MAX, salt=EDIT_DIST_SALT
-    ).orderBy("doc_a", "doc_b")
-
 
 @register(
     "edit_distance_near_pairs_lsh",
@@ -6030,7 +4504,7 @@ def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     a multilingual corpus (a high-fertility language pays more compute
     per sentence and effectively sees a shorter context window). Using
     the BPE-ish regex surrogate (letter runs / digit runs / single
-    symbols — the same WORD_TOKEN_PATTERN doc_token_stats proves against
+    symbols — the same WORD_TOKEN_PATTERN the oracle evaluates in
     DuckDB), report per language: doc count, whitespace-token and regex-
     token totals, char total, fertility (regex per whitespace token, ppm)
     and chars-per-token (ppm). One scan-side projection + one keyed
@@ -6166,8 +4640,8 @@ def quality_by_length_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return retaining(out, *retained_caches(nt))
 
 
-#: Oracle for :func:`webp_dims_probe` (STAGED — see above). Identical dims
-#: formula to media_dims_probe's corpus; only the format literal differs.
+#: Oracle for :func:`webp_dims_probe`: the synthetic corpus's id-formula
+#: dims; only the format literal differs from the other header probes.
 WEBP_DIMS_ORACLE = """
     SELECT doc_id AS media_id,
            'webp' AS format,
@@ -6193,8 +4667,8 @@ def webp_dims_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     id (VP8 lossy 14-bit dims after the keyframe start code, VP8L
     lossless 14-bit-packed fields, VP8X extended 24-bit canvas dims);
     the probe must parse three DIFFERENT layouts to agree with the one
-    id-formula oracle, which never sees payloads. Same Arrow-batched
-    O(header)-bytes-per-row kernel as media_dims_probe."""
+    id-formula oracle, which never sees payloads. Arrow-batched
+    O(header)-bytes-per-row kernel."""
     from retail_aws_etl_pipeline_spark.operators import multimodal as MM
 
     ids = load_tables(spark, sf_dir, ["documents"])["documents"].select("doc_id")
@@ -6235,7 +4709,7 @@ def ogg_meta_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Oracle for :func:`warc_record_stats` (STAGED — see above). Every parsed
 #: field is a pure function of the id (sources/warc._warc_record_bytes),
 #: so the oracle reconstructs the parse without ever seeing WARC bytes —
-#: the synth_header_media discipline applied to a container format.
+#: the media-probe corpus discipline applied to a container format.
 WARC_RECORD_ORACLE = """
     SELECT doc_id,
            CASE WHEN doc_id % 4 = 3 THEN 'request' ELSE 'response' END
@@ -6864,18 +5338,17 @@ CDC_CHUNK_ORACLE = f"""
     tags=("dedup", "cdc", "chunking"),
 )
 def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered r12 (was STAGED since r10): content-defined chunk
-    dedup — the SHIFT-RESISTANT
-    sub-document dedup (Rabin-style rolling-hash boundaries, the LBFS
-    storage-dedup technique applied to corpus curation). Fixed-window
-    chunk dedup (token_chunk_dedup) loses every match when a mirror adds
+    """Registered r12 (was STAGED since r10): content-defined chunk dedup —
+    the SHIFT-RESISTANT sub-document dedup (Rabin-style rolling-hash
+    boundaries, the LBFS storage-dedup technique applied to corpus
+    curation). Fixed-window chunk dedup loses every match when a mirror adds
     one leading token; CDC boundaries are functions of local content, so
-    chunks realign after any insertion (pinned by test) and shared
-    passages keep deduplicating. The whole chunker is per-row array
-    algebra inside one projection — no shuffle until the standard
-    content-keyed groupBy on the chunk hash — and the oracle re-expresses
-    the identical fold/filter/slice pipeline in DuckDB list algebra, so
-    the top-duplicated-chunk table is hash-exact."""
+    chunks realign after any insertion (pinned by test) and shared passages
+    keep deduplicating. The whole chunker is per-row array algebra inside
+    one projection — no shuffle until the standard content-keyed groupBy on
+    the chunk hash — and the oracle re-expresses the identical
+    fold/filter/slice pipeline in DuckDB list algebra, so the
+    top-duplicated-chunk table is hash-exact."""
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
     return (
         D.content_defined_chunks(docs)
@@ -7179,8 +5652,7 @@ def crawl_exact_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct texts, the largest mirror class, and the retained count
     (which must equal distinct texts — asserted by the oracle's
     independent reconstruction from the id formulas). At 100 TB this is
-    the same one content-keyed shuffle exact_dup_docs proves on the
-    documents table, here fed by the crawl source instead."""
+    one content-keyed shuffle, fed by the crawl source."""
     from retail_aws_etl_pipeline_spark.sources.warc import (
         synth_warc_shards,
         warc_html_documents,
@@ -7825,7 +6297,7 @@ def duplicated_span_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     every stride-1 {w}-token window occurring >= 2 times ANYWHERE in the
     corpus marks its token interval; overlapping marks merge into
     maximal duplicated spans per document. Unlike the stride-w chunk
-    dedup family (token_chunk_dedup / cdc_chunk_dedup), a repeated
+    dedup family (cdc_chunk_dedup), a repeated
     passage is detected at EVERY alignment — the suffix-array result
     re-expressed as windows + interval union, the missing member of the
     dedup family's exactness ladder (exact doc -> aligned chunk ->
@@ -8570,11 +7042,8 @@ def unigram_lm_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# r15 tranche (ROADMAP "r15 schedule", drafted r13, REGISTERED r15): the
-# first staged-from-scratch tranche after the pre-pinned queue emptied at
-# r14. Each registration swaps against its drafted r12-cohort victim via
-# _UNREGISTER[15] (plans/__init__.py); twin pins in
-# tests/test_r15_twin_equivalence.py predate the round.
+# r15 tranche: perplexity, minhash estimate error, temperature mixture,
+# Bloom prefilter, join-key skew and deterministic HLL.
 # ---------------------------------------------------------------------------
 
 
@@ -8665,22 +7134,19 @@ KN_DOC_PERPLEXITY_ORACLE = _kn_doc_perplexity_oracle()
     tags=("llm", "quality", "curation"),
 )
 def doc_perplexity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CCNet perplexity filter proper (Wenzek et al.
-    2020) — train an n-gram LM, score every document, bucket by
-    perplexity tercile (CCNet's head/middle/tail; training recipes keep
-    head+middle or reweight by bucket). The model is the registered KN
-    bigram machinery (ngram_lm_report's kernel, full table) fitted on
-    the same corpus — the deterministic stand-in for CCNet's external
-    Wikipedia KenLM. Per-pair probability contributes the EXACT integer
-    floor(log2(p_ppm^2)) via a threshold CASE ladder generated from
-    pure-integer isqrt arithmetic (textops.floor_log2_sq_sql, shared
-    verbatim with the oracle) — no libm log on either engine, so the
-    whole score + bucket assignment sits under the hash gate.
-    Supersedes char_bigram_fluency's raw-count signal (no smoothing, no
-    conditioning) per the drafted r15 pairing. Scale: the model build
-    is ONE corpus-wide exchange; scoring is a vocab-scale join + per-doc
-    fold; the tercile is the shared _distributed_ntile (one range
-    exchange, no global window)."""
+    """The CCNet perplexity filter proper (Wenzek et al. 2020) — train an
+    n-gram LM, score every document, bucket by perplexity tercile (CCNet's
+    head/middle/tail; training recipes keep head+middle or reweight by
+    bucket). The model is the registered KN bigram machinery
+    (ngram_lm_report's kernel, full table) fitted on the same corpus — the
+    deterministic stand-in for CCNet's external Wikipedia KenLM. Per-pair
+    probability contributes the EXACT integer floor(log2(p_ppm^2)) via a
+    threshold CASE ladder generated from pure-integer isqrt arithmetic
+    (textops.floor_log2_sq_sql, shared verbatim with the oracle) — no libm
+    log on either engine, so the whole score + bucket assignment sits under
+    the hash gate. Scale: the model build is ONE corpus-wide exchange;
+    scoring is a vocab-scale join + per-doc fold; the tercile is the shared
+    _distributed_ntile (one range exchange, no global window)."""
     from retail_aws_etl_pipeline_spark.operators.caching import (
         retained_caches,
         retaining,
@@ -8748,16 +7214,14 @@ MINHASH_ESTIMATE_ORACLE = f"""
     tags=("llm", "dedup", "similarity"),
 )
 def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRECISION side of the LSH audit family
-    (lsh_dedup_recall covers recall): every banded candidate pair scored
-    by the k-slot signature ESTIMATE and the exact Jaccard side by side,
-    with the absolute error — the measurement that decides whether a
-    pipeline can skip the exact-verify join and trust signatures alone
-    at its threshold. similarity_spectrum (the drafted r15 swap) is the
-    decile rollup of this report's exact leg. Scale: ONE gram exchange
-    feeds both legs via the fused per_doc_signatures pass; the exact
-    leg is the posting-list join restricted to candidate docs (never
-    all-pairs)."""
+    """The PRECISION side of the LSH audit family (lsh_dedup_recall covers
+    recall): every banded candidate pair scored by the k-slot signature
+    ESTIMATE and the exact Jaccard side by side, with the absolute error —
+    the measurement that decides whether a pipeline can skip the
+    exact-verify join and trust signatures alone at its threshold. Scale:
+    ONE gram exchange feeds both legs via the fused per_doc_signatures pass;
+    the exact leg is the posting-list join restricted to candidate docs
+    (never all-pairs)."""
     from retail_aws_etl_pipeline_spark.operators.caching import (
         retained_caches,
         retaining,
@@ -8811,14 +7275,13 @@ TEMPERATURE_MIXTURE_ORACLE = _temperature_oracle()
     tags=("llm", "sampling", "mixture"),
 )
 def temperature_mixture_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-sampling mixture derivation (mT5 / XLM-R:
-    w_l proportional to n_l^(1/tau), tau=2) — DERIVES the per-language
-    mixing config the consuming samplers (corpus_mixture_sample,
-    lang_rebalanced_sample) take as input: sqrt weight, natural vs
-    temperature share, same-N quota, and the resulting per-group
-    sampling rate (> 1e6 ppm = the group is up-sampled / repeated).
-    Exponent fixed at 1/2 so the weights are integer-exact on both
-    engines (correctly-rounded IEEE sqrt + floor; a libm pow would not
+    """Temperature-sampling mixture derivation (mT5 / XLM-R: w_l
+    proportional to n_l^(1/tau), tau=2) — DERIVES the per-language mixing
+    config the consuming samplers (corpus_mixture_sample) take as input:
+    sqrt weight, natural vs temperature share, same-N quota, and the
+    resulting per-group sampling rate (> 1e6 ppm = the group is up-sampled /
+    repeated). Exponent fixed at 1/2 so the weights are integer-exact on
+    both engines (correctly-rounded IEEE sqrt + floor; a libm pow would not
     hash-match). NULL lang is excluded from mixing — the shard-manifest
     discipline. Scale: one groupBy(lang) + a single-row broadcast."""
     from retail_aws_etl_pipeline_spark.operators import sampling as SMP
@@ -8913,21 +7376,18 @@ BLOOM_PREFILTER_ORACLE = _bloom_oracle()
     tags=("llm", "dedup", "sketch"),
 )
 def bloom_prefilter_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom membership prefilter census — the sub-linear
-    "seen before?" gate an incremental exact-dedup cadence runs BEFORE
-    its anti-join against the standing corpus. Standing half = even
-    doc_ids, ingest half = odd (the term_drift parity convention); the
-    filter is m=1024 bits as 32 x 32-bit words built by an associative
-    bit_or aggregate (map-side combined, <= 32 rows exchanged,
-    broadcast to probes), k=4 md5-derived probes consuming the full
-    digest. The one-row census carries the operating numbers (Bloom
-    positives, true dups, false positives, measured FPR ppm) plus the
-    exact-integer saturation model (s/m)^k in ppm AND the structural
-    no-false-negative invariant (n_missed_dups = 0) under the hash
-    gate. token_chunk_dedup_corpus (the drafted r15 swap) keeps its
-    fixed-window surface via the registered cdc_chunk_dedup. At 100 TB
-    the standing filter answers membership in 128 bytes; only
-    Bloom-positive documents pay the exact join."""
+    """Bloom membership prefilter census — the sub-linear "seen before?"
+    gate an incremental exact-dedup cadence runs BEFORE its anti-join
+    against the standing corpus. Standing half = even doc_ids, ingest half =
+    odd (the term_drift parity convention); the filter is m=1024 bits as 32
+    x 32-bit words built by an associative bit_or aggregate (map-side
+    combined, <= 32 rows exchanged, broadcast to probes), k=4 md5-derived
+    probes consuming the full digest. The one-row census carries the
+    operating numbers (Bloom positives, true dups, false positives, measured
+    FPR ppm) plus the exact-integer saturation model (s/m)^k in ppm AND the
+    structural no-false-negative invariant (n_missed_dups = 0) under the
+    hash gate. At 100 TB the standing filter answers membership in 128
+    bytes; only Bloom-positive documents pay the exact join."""
     t = load_tables(spark, sf_dir, ["documents"])
     docs = t["documents"]
     hist = docs.filter(F.col("doc_id") % 2 == 0)
@@ -9101,9 +7561,9 @@ HLL_DISTINCT_ORACLE = " UNION ALL ".join(
 )
 def hll_distinct_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic HyperLogLog distinct estimation — the
-    sketch family RE-ENTERS the driver proof regime. approx_sketch_stats
-    is RETIRED because Spark's HLL++ register layout is engine-private
-    (no ANSI oracle can recompute it); this operator builds HLL from
+    sketch family under the driver proof regime. Spark's HLL++ register
+    layout is engine-private (no ANSI oracle can recompute it), so this
+    operator builds HLL from
     scratch on the shared md5 hash family with every step integer-exact
     (generated threshold ladder for the leading-zero count, clamped
     registers bounding all arithmetic inside int64, remainder-corrected
@@ -9851,6 +8311,7 @@ def langid_confusion_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("lang", "lang_pred")
     )
+
 
 
 # ---------------------------------------------------------------------------

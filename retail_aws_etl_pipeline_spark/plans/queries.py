@@ -321,30 +321,6 @@ def region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "returned_order_priorities",
-    """
-    SELECT o_orderpriority, COUNT(*) AS n_orders
-    FROM orders
-    WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem WHERE l_returnflag = 'R')
-    GROUP BY o_orderpriority
-    ORDER BY o_orderpriority
-    """,
-    description="Left-semi join (EXISTS): orders with at least one returned line",
-    tags=("join", "semi"),
-)
-def returned_order_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["orders", "lineitem"])
-    returned = t["lineitem"].filter(F.col("l_returnflag") == "R").select("l_orderkey")
-    return (
-        t["orders"]
-        .join(returned, F.col("o_orderkey") == F.col("l_orderkey"), "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .orderBy("o_orderpriority")
-    )
-
-
-@register(
     "customers_without_orders",
     """
     SELECT c_custkey, c_name
@@ -363,66 +339,4 @@ def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(t["orders"], F.col("c_custkey") == F.col("o_custkey"), "left_anti")
         .select("c_custkey", "c_name")
         .orderBy("c_custkey")
-    )
-
-
-# ---------------------------------------------------------------------------
-# JSON / scalar function surface (events.props)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "event_props_stats",
-    """
-    SELECT event_type,
-           CAST(SUM(TRY_CAST(
-               CASE WHEN json_valid(props) THEN
-                   CASE WHEN regexp_matches(
-                            json_extract_string(props, '$.k'),
-                            '^-?[0-9]+$')
-                        THEN json_extract_string(props, '$.k') END
-               END AS BIGINT)) AS DECIMAL(38,0)) AS sum_k,
-           COUNT(*) AS n
-    FROM events
-    GROUP BY event_type
-    ORDER BY event_type
-    """,
-    description="JSON extraction (get_json_object) + agg over events.props",
-    tags=("json", "agg"),
-)
-def event_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["events"])
-    # try_cast, not cast: props is UNTRUSTED content, and under ANSI mode
-    # (the Spark 4 default) a non-numeric $.k crashes the whole query;
-    # DuckDB's plain CAST errors identically, hence TRY_CAST in the
-    # oracle too. Invalid values count toward n but not sum_k — the
-    # reject-tagging philosophy of the ingest path (r12 adversarial
-    # corpus finding).
-    return (
-        t["events"]
-        # One JSON parse per row: the guard and the cast both read this
-        # projected column (the r13 plan evaluated get_json_object twice
-        # inside the aggregate — the round's one perf flag).
-        .withColumn("k_raw", F.get_json_object("props", "$.k"))
-        .groupBy("event_type")
-        .agg(
-            # sum in DECIMAL(38,0): adversarial k values at the int64
-            # boundary overflow a long SUM under ANSI, while DuckDB
-            # promotes SUM(BIGINT) to HUGEINT — widening both sides keeps
-            # the pair exact and crash-free.
-            # Integral-pattern guard on BOTH engines (ADVICE r12): the
-            # engines' TRY_CASTs disagree on decimal text — DuckDB
-            # TRY_CAST('1.5' AS BIGINT) parses and ROUNDS to 2, Spark
-            # try_cast yields NULL — so only ^-?[0-9]+$ values count
-            # toward sum_k on either side. Out-of-int64-range integral
-            # strings TRY_CAST to NULL identically on both.
-            F.sum(
-                F.when(
-                    F.col("k_raw").rlike("^-?[0-9]+$"),
-                    F.col("k_raw").try_cast("bigint"),
-                ).cast("decimal(38,0)")
-            ).alias("sum_k"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .orderBy("event_type")
     )

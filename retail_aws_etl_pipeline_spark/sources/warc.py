@@ -13,7 +13,7 @@ The block of a ``response``/``request`` record is itself an HTTP message
 engine reads CSV drops only; WARC is part of the LLM-pipeline extension
 surface (TESTDATA has no WARC fixture, so the proof corpus is synthesized
 from id formulas exactly like the media-probe corpora —
-``operators/multimodal.synth_header_media``).
+``operators/multimodal.synth_webp_media``).
 
 Scale shape (100 TB): real crawls ship as ~1 GB shards, so parallelism is
 per-shard (shard count >> cores on any real crawl) and Spark's

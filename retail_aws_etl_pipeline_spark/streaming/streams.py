@@ -14,7 +14,7 @@ map directly onto Structured Streaming:
 | sessionization                       | session_window(ts, gap)            |
 
 Each streaming aggregation has a batch twin in the query registry
-(hourly_event_rollup, dedup_keep_latest, user_sessions) — tests assert the
+(an hourly window rollup, dedup_keep_latest, user_sessions) — tests assert the
 streaming result converges to the batch result, which is the strongest
 correctness statement available for non-SQL-expressible stateful ops.
 """
@@ -322,7 +322,7 @@ def gold_upsert_stream(
 
 def span_dedup_stream(docs: DataFrame, w: int | None = None) -> DataFrame:
     """Streaming keep-first span dedup — the cross-batch form of
-    ``operators.dedup.chunk_dedup_stats``: token spans explode scan-side
+    fixed-window span dedup: token spans explode scan-side
     and ``dropDuplicates`` on the span text carries seen-span state across
     micro-batches, so a span that arrived in ANY earlier batch never
     re-emits (the production cadence: each ingest wave dedups against
@@ -884,17 +884,16 @@ def make_bloom_batch_processor(text_col: str, delta_dir: str):
 def bloom_word_stream(
     docs: DataFrame, text_col: str, delta_dir: str, checkpoint_dir: str
 ):
-    """Incremental MEMBERSHIP-sketch maintenance under streaming ingest
-    — the Bloom twin of :func:`hll_register_stream` /
-    :func:`cms_cell_stream` / :func:`bottomk_sample_stream`, extending
-    the streamed sketch triple to the full quartet (distinct /
-    frequency / quantile / membership): each micro-batch bit_or-folds
-    ITS OWN rows into a <= BLOOM_WORDS-row word table appended as a
-    ``__batch_id`` partition; the standing filter is
-    :func:`read_bloom_snapshot`'s per-word bit_or fold, answerable at
-    any moment without a corpus rescan. OR-idempotence (set union)
-    makes any arrival interleaving and any retry converge to the
-    one-shot batch filter bit-identically — pinned by the
+    """Incremental MEMBERSHIP-sketch maintenance under streaming ingest —
+    the Bloom twin of :func:`hll_register_stream` / :func:`cms_cell_stream`
+    / :func:`bottomk_sample_stream`, extending the streamed sketch triple to
+    the full quartet (distinct / frequency / quantile / membership): each
+    micro-batch bit_or-folds ITS OWN rows into a <=
+    BLOOM_BITS/BLOOM_WORD_BITS-row word table appended as a ``__batch_id``
+    partition; the standing filter is :func:`read_bloom_snapshot`'s per-word
+    bit_or fold, answerable at any moment without a corpus rescan.
+    OR-idempotence (set union) makes any arrival interleaving and any retry
+    converge to the one-shot batch filter bit-identically — pinned by the
     stream == batch test.
 
     The 100 TB shape: the stream pays one scan per batch at arrival

@@ -71,12 +71,12 @@ DEFAULT_QUERIES = [
     "top_customers_per_nation",
     "dedup_keep_latest",
     "user_rolling_hour",
-    "minhash_lsh_pairs",
+    "lsh_dedup_recall",
     "ngram_jaccard_pairs",
     "simhash_near_pairs",
     "doc_winnowing",
-    "ann_topk_bruteforce",
-    "doc_token_stats",
+    "ann_topk_lsh_ball",
+    "tokenizer_fertility_by_lang",
 ]
 
 

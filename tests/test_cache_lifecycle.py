@@ -6,7 +6,6 @@ loops) or tag the returned frame via operators.caching so the caller can.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from retail_aws_etl_pipeline_spark.operators import clustering as C
 from retail_aws_etl_pipeline_spark.operators import dedup as D
@@ -69,9 +68,9 @@ def test_retaining_tags_and_release_unpersists(spark):
 
 
 def test_graph_operators_tag_their_caches(spark):
-    """pagerank_scaled / triangle_census / sorted_neighborhood_candidates
-    return plans that still need their persisted intermediates — the tag
-    hands lifecycle to the caller, and release leaves zero blocks."""
+    """pagerank_scaled / triangle_census return plans that still need
+    their persisted intermediates — the tag hands lifecycle to the
+    caller, and release leaves zero blocks."""
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4)], "id_a long, id_b long"
     )
@@ -87,16 +86,6 @@ def test_graph_operators_tag_their_caches(spark):
     assert tri.collect()[0]["n_triangles"] == 1
     assert len(retained_caches(tri)) == 3
     release_caches(tri)
-
-    docs = spark.createDataFrame(
-        [(i, "en", 10 + i) for i in range(8)], "doc_id long, lang string, n_chars long"
-    )
-    sn = D.sorted_neighborhood_candidates(
-        docs, [F.asc("lang"), F.asc("n_chars"), F.asc("doc_id")], window=2
-    )
-    assert sn.count() > 0
-    assert len(retained_caches(sn)) == 2
-    release_caches(sn)
 
     leaked = _storage_ids(spark) - before
     assert not leaked, leaked

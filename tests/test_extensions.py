@@ -1,160 +1,17 @@
-"""Tolerance gates for the approximate-sketch kernels.
-
-``approx_sketch_stats`` is deliberately not driver-facing: sketch internals
-(HyperLogLog registers, GK/KLL summaries) differ per engine, so no hash
-oracle can exist for it. Its accuracy is proven here instead, against the
-exact twin ``sketch_accuracy_stats`` (which IS hash-checked by the driver):
-
-- ``approx_count_distinct(col, rsd)``: relative error gated at 3*rsd
-  (HLL standard-error bound; 3 sigma ~ 99.7%).
-- ``approx_percentile(col, p, accuracy)``: rank-error gated at
-  n/accuracy + 1 — the documented GK guarantee — by recomputing the
-  actual rank of each approximate quantile value against the base table.
+"""Unit batteries for the LLM-data extension kernels: budget selection,
+banded interval joins, sketch merges, bitext margin mining, containment
+prefix filtering, RAG chunking and the scale variants of the gram/band
+kernels — each against a hand-computed or brute-force reference.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from retail_aws_etl_pipeline_spark.plans import all_specs
 from retail_aws_etl_pipeline_spark.session import load_tables
 from tests.conftest import SF_ORACLE
-
-#: Mirrors the kernel parameters inside approx_sketch_stats.
-HLL_RSD = 0.01
-GK_ACCURACY = 10000  # Spark default for approx_percentile
-
-
-def test_approx_sketch_within_tolerance(spark):
-    # approx_sketch_stats left the registry outright at r15 (the
-    # deterministic hll_distinct_report put the sketch surface under the
-    # hash gate); the HLL++/GK tolerance gate keeps pinning the
-    # UNREGISTERED spec so the engine-private kernels stay accuracy-proven.
-    from retail_aws_etl_pipeline_spark.plans import UNREGISTERED
-
-    specs = all_specs()
-    approx = {
-        r["l_returnflag"]: r
-        for r in UNREGISTERED["approx_sketch_stats"]
-        .spark_fn(spark, SF_ORACLE)
-        .collect()
-    }
-    exact = {
-        r["l_returnflag"]: r
-        for r in specs["sketch_accuracy_stats"].spark_fn(spark, SF_ORACLE).collect()
-    }
-    assert set(approx) == set(exact) and approx, "group keys must line up"
-
-    lineitem = load_tables(spark, SF_ORACLE, ["lineitem"])["lineitem"]
-    # One pass: per (flag, percentile-label) rank of the approx value.
-    rank_rows = (
-        lineitem.groupBy("l_returnflag")
-        .agg(
-            *[
-                F.sum(
-                    (F.col("l_extendedprice") <= F.lit(approx_row[label])).cast("long")
-                ).alias(f"rank_{label}_{flag}")
-                for flag, approx_row in approx.items()
-                for label in ("p50", "p90", "p99")
-            ]
-        )
-        .collect()
-    )
-    ranks = {r["l_returnflag"]: r for r in rank_rows}
-
-    for flag, a in approx.items():
-        e = exact[flag]
-        n = e["n"]
-        assert a["n"] == n, f"{flag}: exact COUNT(*) must agree"
-
-        # HLL: |approx - exact| / exact <= 3 * rsd
-        rel = abs(a["approx_parts"] - e["distinct_parts"]) / e["distinct_parts"]
-        assert rel <= 3 * HLL_RSD, (
-            f"{flag}: approx_count_distinct off by {rel:.4f} "
-            f"(> {3 * HLL_RSD}): {a['approx_parts']} vs {e['distinct_parts']}"
-        )
-
-        # GK: the returned value's true rank within n/accuracy + 1 of target.
-        tol = n / GK_ACCURACY + 1
-        for label, p in (("p50", 0.5), ("p90", 0.9), ("p99", 0.99)):
-            actual_rank = ranks[flag][f"rank_{label}_{flag}"]
-            target_rank = p * n
-            assert abs(actual_rank - target_rank) <= tol, (
-                f"{flag}/{label}: rank {actual_rank} vs target {target_rank} "
-                f"(tol {tol}) for approx value {a[label]}"
-            )
-
-
-def test_sketch_window_membership():
-    """The exact twin stays driver-checkable (oracle'd — window membership
-    itself rotates under the COVERAGE.md §rotation SLO, enforced by
-    test_window_slo.py); since r15 the approx sketch is UNREGISTERED
-    outright (hll_distinct_report carries the hash-gated sketch surface;
-    the local tolerance gate above keeps the HLL++/GK kernels proven) and
-    the RETIRED table is empty — every registered entry is oracle'd."""
-    from retail_aws_etl_pipeline_spark.plans import (
-        EXTRA_REGISTRY,
-        REGISTRY,
-        RETIRED,
-        UNREGISTERED,
-    )
-    from retail_aws_etl_pipeline_spark.plans.queries import all_specs
-
-    assert all_specs()["sketch_accuracy_stats"].oracle is not None
-    assert all_specs()["hll_distinct_report"].oracle is not None
-    assert "approx_sketch_stats" not in REGISTRY
-    assert "approx_sketch_stats" not in EXTRA_REGISTRY
-    assert "approx_sketch_stats" in UNREGISTERED
-    assert RETIRED == {}
-    # the whole driver window must be hash-checkable (VERDICT r5 #1) —
-    # and with RETIRED empty, so must the ENTIRE registry.
-    oracle_less = [n for n, s in all_specs().items() if s.oracle is None]
-    assert oracle_less == [], f"registry has unprovable entries: {oracle_less}"
-
-
-def test_chunk_dedup_handcrafted(spark):
-    from retail_aws_etl_pipeline_spark.operators.dedup import chunk_dedup_stats
-
-    # w=2 spans. doc 0: [a b][c d][a b] -> within-doc repeat dedups.
-    # doc 1: [a b][x y z's tail] -> cross-doc repeat of "a b" dedups,
-    # trailing partial span (1 token) retained.
-    docs = spark.createDataFrame(
-        [(0, "a b c d a b"), (1, "a b x")], ["doc_id", "text"]
-    )
-    out = {
-        r["doc_id"]: (
-            r["n_chunks"],
-            r["n_retained"],
-            r["n_tokens"],
-            r["n_tokens_retained"],
-        )
-        for r in chunk_dedup_stats(docs, w=2).collect()
-    }
-    # doc 0: 3 spans, "a b"@0 + "c d"@1 retained, third "a b" dropped.
-    assert out[0] == (3, 2, 6, 4)
-    # doc 1: spans "a b" (dup of doc0@0 -> dropped) + "x" (partial, kept).
-    assert out[1] == (2, 1, 3, 1)
-
-
-def test_chunk_dedup_corpus_rebuild(spark):
-    from retail_aws_etl_pipeline_spark.operators.dedup import chunk_dedup_corpus
-
-    docs = spark.createDataFrame(
-        [(0, "a b c d a b"), (1, "a b x"), (2, "a b c d")], ["doc_id", "text"]
-    )
-    out = {
-        r["doc_id"]: (r["text"], r["n_tokens_retained"])
-        for r in chunk_dedup_corpus(docs, w=2).collect()
-    }
-    # doc 0 keeps spans "a b"@0 and "c d"@1; the repeated "a b" drops.
-    assert out[0] == ("a b c d", 4)
-    # doc 1: "a b" already seen -> only the partial "x" survives.
-    assert out[1] == ("x", 1)
-    # doc 2: both spans already seen -> empty text, row preserved.
-    assert out[2] == ("", 0)
 
 
 def test_token_budget_greedy_edge(spark):
@@ -337,6 +194,12 @@ def test_margin_mutual_pairs_handcrafted(spark):
     assert coarse[(2, 11)] is True  # dot² div 1e15 == 0 on both sides
 
 
+BOILERPLATE_TAIL = (
+    "subscribe to our newsletter terms of service apply all rights reserved "
+    "cookie policy contact us privacy statement follow us on social media"
+)
+
+
 def test_containment_prefix_on_boilerplate_corpus(spark):
     """On the boilerplate-skew corpus the prefix path is (1) exactly equal
     to the brute inverted-index formulation — the prefix lemma under hot
@@ -349,15 +212,19 @@ def test_containment_prefix_on_boilerplate_corpus(spark):
         jaccard_counts,
         shingles,
     )
-    from retail_aws_etl_pipeline_spark.plans.extensions import (
-        CONTAINMENT_PCT,
-        boilerplate_docs,
-    )
+    from retail_aws_etl_pipeline_spark.plans.extensions import CONTAINMENT_PCT
     from retail_aws_etl_pipeline_spark.session import load_tables
     from tests.conftest import SF_ORACLE
 
-    docs = boilerplate_docs(
-        load_tables(spark, SF_ORACLE, ["documents"])["documents"]
+    # Every third doc gains one fixed boilerplate tail: hot grams shared by
+    # a third of the corpus, deterministic (no files, no RNG).
+    docs = load_tables(spark, SF_ORACLE, ["documents"])["documents"]
+    docs = docs.withColumn(
+        "text",
+        F.when(
+            F.col("doc_id") % 3 == 0,
+            F.concat(F.col("text"), F.lit(" " + BOILERPLATE_TAIL)),
+        ).otherwise(F.col("text")),
     )
     grams = shingles(docs).persist()
     brute = {
@@ -557,26 +424,6 @@ def test_funnel_step_latency_handcrafted(spark):
         "view->click": (2, 10_000_000),
         "click->purchase": (1, 30_000_000),
     }
-
-
-def test_brute_force_topk_jvm_equals_pandas(spark):
-    """The JVM F.aggregate brute-force ANN and the Arrow-batched numpy
-    GEMM form must be row-identical. Both were driver-proven against the
-    shared ANN_TOPK_ORACLE until r8 unregistered the JVM entry at the
-    150-cap (COVERAGE.md §rotation r8); this parity test keeps the
-    unregistered kernel pinned to the registered one."""
-    from retail_aws_etl_pipeline_spark.operators import similarity as S
-    from retail_aws_etl_pipeline_spark.plans.extensions import ANN_K, ANN_PROBE_IDS
-    from retail_aws_etl_pipeline_spark.session import load_tables
-    from tests.conftest import SF_SMOKE
-
-    t = load_tables(spark, SF_SMOKE, ["embeddings"])
-    key = lambda r: (r["probe_id"], r["rank"])  # noqa: E731
-    jvm = sorted(S.brute_force_topk(t["embeddings"], ANN_PROBE_IDS, ANN_K).collect(), key=key)
-    pd_ = sorted(
-        S.brute_force_topk_pandas(t["embeddings"], ANN_PROBE_IDS, ANN_K).collect(), key=key
-    )
-    assert jvm == pd_ and len(jvm) == len(ANN_PROBE_IDS) * ANN_K
 
 
 def test_hash_grams_scale_variant_is_output_identical(spark):

@@ -81,16 +81,6 @@ def adversarial_dir(tmp_path_factory):
 #: Registered documents-only pairs whose oracles are corpus-generic
 #: (fit-literal/pinned oracles excluded by construction).
 _REGISTERED = [
-    # doc_token_stats / doc_fingerprints left the registry at the r13
-    # rotation; their surfaces face this corpus through
-    # tokenizer_fertility_by_lang / doc_winnowing + the r13 registrations
-    # below. corpus_vocabulary / doc_repetition_ratio /
-    # boilerplate_ngram_ratio / split_leakage_pairs left at the r14
-    # rotation; their surfaces face this corpus through unigram_lm_report
-    # (the trainer's seed fit IS the word census),
-    # gopher_repetition_report (the superseding repetition evidence), and
-    # the registered jaccard pair stream (simhash_near_pairs /
-    # ngram_jaccard_pairs below).
     "doc_lang_id",
     "doc_quality",
     "gopher_quality_report",
@@ -127,33 +117,23 @@ _REGISTERED = [
     # excluded by construction; its at-scale proof is the refit-oracle
     # hash run (scripts/unigram_refit_proof.py).
     "quality_classifier_report",
-    # r15 documents-side registrations (corpus-generic oracles — the
-    # staged battery ran these same four pairs here since r14):
+    # r15 documents-side registrations (corpus-generic oracles):
     # empty/whitespace docs exercise the perplexity kernel's no-pair
     # drop and the Bloom/minhash gram paths, NULL lang the temperature
     # report's mixing exclusion, the 2,500-distinct-token doc the
-    # correlated-series oracles. char_bigram_fluency /
-    # similarity_spectrum / lang_rebalanced_sample /
-    # token_chunk_dedup_corpus left at the r15 rotation; their surfaces
-    # face this corpus through these successors plus cdc_chunk_dedup
-    # and corpus_mixture_sample. hll_distinct_report is registered but
+    # correlated-series oracles. hll_distinct_report is registered but
     # reads three tables (documents+lineitem+events), so it gets its own
     # tri-table hostile battery below instead of this documents-only one.
     "doc_perplexity_report",
     "minhash_estimate_error",
     "temperature_mixture_report",
     "bloom_prefilter_stats",
-    # r16 documents-side registrations (corpus-generic oracles — the
-    # staged battery ran these same five pairs here since r14):
+    # r16 documents-side registrations (corpus-generic oracles):
     # quote/backslash docs exercise the affix and n-gram string keys
     # through both engines' literal paths, empty/whitespace docs the
     # short-doc guards, NULL lang/source the keyed-census exclusions,
     # the 2,500-distinct-token doc the correlated-series n-gram
-    # oracles. returned_order_priorities / monthly_revenue_yoy /
-    # customer_order_history / large_volume_orders / part_revenue_share
-    # / partkey_skew_report left at the r16 rotation (retail-side; their
-    # adversarial coverage stays via the UNREGISTERED pins below and the
-    # twin file). hll_overlap_report is registered but reads three
+    # oracles. hll_overlap_report is registered but reads three
     # tables (documents+lineitem+events), so it joins
     # hll_distinct_report's tri-table hostile battery below instead.
     "badwords_filter_report",
@@ -335,20 +315,13 @@ def adversarial_events_dir(tmp_path_factory):
 
 
 _EVENT_PAIRS = [
-    # event_props_stats left the registry at the r14 rotation (the
-    # from_xml sitemap pair replaces one of two JSON-parse carriers);
-    # its integral-guard finding stays locked by the direct pair test
-    # below (the function and oracle remain in plans/queries.py).
     "user_event_pivot",
     "user_sessions",
     "event_value_mad_outliers",
     "hopping_event_rollup",
     "event_pairs_within_window",
-    # event_trigram_paths left the registry at the r15 rotation
-    # (hll_distinct_report took its slot); its lead()-projection surface
-    # faces this corpus through user_sessions / conversion_funnel /
-    # event_pairs_within_window, and the UNREGISTERED pin below keeps
-    # the tiebreak-determinism class locked to its oracle string.
+    # exact user/ts ties: the (ts, event_id) tiebreak of the per-user
+    # window orderings must be deterministic on both engines.
     "weekly_retention_cohorts",
     "user_rolling_hour",
     "conversion_funnel",
@@ -365,28 +338,6 @@ def test_event_pair_survives_adversarial_corpus(spark, adversarial_events_dir, n
         adversarial_events_dir,
     )
     assert r["ok"], (name, r)
-
-
-def test_event_props_stats_survives_adversarial_corpus(
-    spark, adversarial_events_dir
-):
-    """event_props_stats left the registry at r14 (from_xml sitemap swap)
-    but its integral-guard finding (DuckDB TRY_CAST rounds '1.5', Spark
-    try_casts to NULL — r12 adversarial corpus) stays locked against the
-    spec's CURRENT oracle string via the UNREGISTERED spec store.  That
-    string carries the r14 json_valid guard-nesting fix (nested CASE
-    replacing the non-short-circuit AND), so it is not the verbatim
-    pre-r14 text — the pinned bug class is the same."""
-    from retail_aws_etl_pipeline_spark.plans import UNREGISTERED
-
-    spec = UNREGISTERED["event_props_stats"]
-    assert spec.oracle is not None
-    r = compare(
-        spec.spark_fn(spark, adversarial_events_dir),
-        spec.oracle,
-        adversarial_events_dir,
-    )
-    assert r["ok"], r
 
 
 @pytest.fixture(scope="module")
@@ -533,13 +484,12 @@ _RETAIL_PAIRS = [
     "daily_revenue",
     "top_items",
     "pricing_summary",
-    # median_order_by_priority left at r13 and its replacement bucket
-    # carrier order_value_histogram left at r15 (join_key_skew_report
-    # took the slot); the orders-side bucket surface stays in front of
-    # the hostile numerics via the UNREGISTERED pin below, and the
-    # registered skew census faces the NULL-key lineitem here.
+    # the skew census faces the NULL-key lineitem here.
     "join_key_skew_report",
     "decimal_money_totals",
+    # the orders-side surface (negative prices, exact totalprice ties,
+    # NULL order dates) through the per-customer LEAD over orders.
+    "sequential_item_rules",
 ]
 
 
@@ -553,43 +503,6 @@ def test_retail_pair_survives_adversarial_corpus(spark, adversarial_retail_dir, 
         adversarial_retail_dir,
     )
     assert r["ok"], (name, r)
-
-
-def test_order_value_histogram_survives_adversarial_retail(
-    spark, adversarial_retail_dir
-):
-    """order_value_histogram left the registry at the r15 rotation but
-    the orders-side bucket/percentile surface stays locked against the
-    hostile numerics (negative prices below the bucket range, exact
-    ties, NULL dates) via the UNREGISTERED spec store."""
-    from retail_aws_etl_pipeline_spark.plans import UNREGISTERED
-
-    spec = UNREGISTERED["order_value_histogram"]
-    assert spec.oracle is not None
-    r = compare(
-        spec.spark_fn(spark, adversarial_retail_dir),
-        spec.oracle,
-        adversarial_retail_dir,
-    )
-    assert r["ok"], r
-
-
-def test_event_trigram_paths_survives_adversarial_events(
-    spark, adversarial_events_dir
-):
-    """event_trigram_paths left the registry at the r15 rotation but its
-    (ts, event_id) tiebreak-determinism class (exact user/ts ties in
-    this corpus) stays locked via the UNREGISTERED spec store."""
-    from retail_aws_etl_pipeline_spark.plans import UNREGISTERED
-
-    spec = UNREGISTERED["event_trigram_paths"]
-    assert spec.oracle is not None
-    r = compare(
-        spec.spark_fn(spark, adversarial_events_dir),
-        spec.oracle,
-        adversarial_events_dir,
-    )
-    assert r["ok"], r
 
 
 def test_bloom_census_at_the_bit_word_boundary(spark, tmp_path):

@@ -10,12 +10,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from retail_aws_etl_pipeline_spark.plans import UNREGISTERED, all_specs
+from retail_aws_etl_pipeline_spark.plans import all_specs
 
-# Plan-shape gates keep pinning unregistered implementations too (the
-# UNREGISTERED-store policy: a rotation swap must not relax a plan gate);
-# all_specs() wins on any (impossible) name collision.
-REGISTRY = {**UNREGISTERED, **all_specs()}
+REGISTRY = all_specs()
 from retail_aws_etl_pipeline_spark.session import load_tables
 from tests.conftest import SF_SMOKE
 
@@ -80,12 +77,6 @@ def test_agg_queries_stay_in_codegen(spark):
         assert any("HashAggregate" in ln for ln in starred), f"{name}: {plan[:1500]}"
 
 
-def test_semi_join_not_inner(spark):
-    """IN-subquery shapes must plan LeftSemi (no row multiplication)."""
-    plan = _plan(REGISTRY["returned_order_priorities"].spark_fn(spark, SF_SMOKE))
-    assert "LeftSemi" in plan, plan[:2000]
-
-
 def test_q6_filters_push_to_scan(spark):
     """forecast_revenue's tight conjunctive predicate must reach the
     parquet scan as pushed filters (the query is a scan+agg at scale)."""
@@ -114,39 +105,6 @@ def test_anti_join_shape(spark):
     """Q22-style NOT EXISTS must plan LeftAnti."""
     plan = _plan(REGISTRY["dormant_rich_customers"].spark_fn(spark, SF_SMOKE))
     assert "LeftAnti" in plan, plan[:2000]
-
-
-def test_near_dup_blocked_no_driver_collect(spark, monkeypatch):
-    """The exact near-dup pair query must never ship the corpus through the
-    driver (VERDICT r1: the old whole-corpus collect was the scale-killer).
-    Both building AND executing the plan must make zero DataFrame.collect
-    (or toPandas) calls."""
-    from pyspark.sql import DataFrame
-
-    calls: list[str] = []
-    orig_collect, orig_topandas = DataFrame.collect, DataFrame.toPandas
-
-    def spy_collect(self):
-        calls.append("collect")
-        return orig_collect(self)
-
-    def spy_topandas(self):
-        calls.append("toPandas")
-        return orig_topandas(self)
-
-    monkeypatch.setattr(DataFrame, "collect", spy_collect)
-    monkeypatch.setattr(DataFrame, "toPandas", spy_topandas)
-    # Call the operator directly: embedding_near_dup_pairs left the
-    # registry at the r11 cap swap (near_dup_pairs_lsh is the registered
-    # production twin), but the no-driver-collect guarantee is about the
-    # blocked-GEMM kernel itself and keeps its test.
-    from retail_aws_etl_pipeline_spark.operators import similarity as S
-    from retail_aws_etl_pipeline_spark.session import load_tables
-
-    emb = load_tables(spark, SF_SMOKE, ["embeddings"])["embeddings"]
-    df = S.near_dup_pairs_blocked(emb, min_cosine=0.35).orderBy("id_a", "id_b")
-    df.write.format("noop").mode("overwrite").save()
-    assert not calls, f"driver-side materialization in near-dup path: {calls}"
 
 
 def test_near_dup_lsh_gemm_no_driver_collect(spark, monkeypatch):
@@ -209,28 +167,6 @@ def test_ivf_default_sample_mod_bounds_driver_collect(spark):
     assert cents_default == cents_pq
 
 
-def test_lsh_topk_defaults_to_equi_join_above_probe_threshold(spark, monkeypatch):
-    """Above LSH_BALL_PROBE_THRESHOLD probes, lsh_bucketed_topk must plan
-    the ball-expansion EQUI-join (no nested-loop bit_count(xor) theta-join
-    over every (probe, row) pair) and return results identical to the
-    nested-loop form."""
-    from retail_aws_etl_pipeline_spark.operators import similarity as S
-
-    t = load_tables(spark, SF_SMOKE, ["embeddings"])
-    probe_ids = [r["vec_id"] for r in t["embeddings"].select("vec_id").limit(10).collect()]
-    assert len(probe_ids) > S.LSH_BALL_PROBE_THRESHOLD
-
-    auto = S.lsh_bucketed_topk(t["embeddings"], probe_ids, k=5)
-    assert "BroadcastNestedLoopJoin" not in _plan(auto), _plan(auto)[:2000]
-
-    # force the legacy nested-loop path for the parity check
-    monkeypatch.setattr(S, "LSH_BALL_PROBE_THRESHOLD", 10_000)
-    nested = S.lsh_bucketed_topk(t["embeddings"], probe_ids, k=5)
-    assert "BroadcastNestedLoopJoin" in _plan(nested)
-    key = lambda r: (r["probe_id"], r["rank"])  # noqa: E731
-    assert sorted(auto.collect(), key=key) == sorted(nested.collect(), key=key)
-
-
 def test_mixture_sample_plan_shape(spark):
     """corpus_mixture_sample: quota joined by BROADCAST (never a shuffled
     join against the tiny per-group quota), the per-group rank is the only
@@ -275,42 +211,6 @@ def test_customer_spend_deciles_no_global_window(spark):
     assert "ShuffledHashJoin" not in plan
 
 
-def test_bm25_plan_is_scan_side(spark):
-    """bm25_query_scores: tf/dl are array expressions on the scan (no
-    explode/generate), corpus stats come back via broadcast (nested-loop
-    on a 1-row frame is fine; never a shuffled join), ranking is
-    TakeOrderedAndProject, and the scan prunes to doc_id + text."""
-    # unregistered at r12 (bm25_multi_query_topk carries the surface);
-    # the implementation + this plan gate stay, called directly.
-    from retail_aws_etl_pipeline_spark.plans.extensions import bm25_query_scores
-
-    df = bm25_query_scores(spark, SF_SMOKE)
-    plan = _plan(df)
-    assert "TakeOrderedAndProject" in plan
-    assert "Generate" not in plan  # no explode: tf via size(filter(...))
-    assert "SortMergeJoin" not in plan
-    assert "ShuffledHashJoin" not in plan
-    read_schema = next(ln for ln in plan.splitlines() if "ReadSchema" in ln)
-    assert "text" in read_schema and "doc_id" in read_schema
-    assert "lang" not in read_schema and "source" not in read_schema
-
-
-def test_bpe_pair_stats_plan(spark):
-    """bpe_pair_stats: ONE map-side-combined groupBy over the exploded
-    pair stream, TakeOrderedAndProject ranking, scan pruned to
-    doc_id + text."""
-    # unregistered at r12 (the trainer + collocation_pairs carry the
-    # layers); the implementation + this plan gate stay, called directly.
-    from retail_aws_etl_pipeline_spark.plans.extensions import bpe_pair_stats
-
-    df = bpe_pair_stats(spark, SF_SMOKE)
-    plan = _plan(df)
-    assert "TakeOrderedAndProject" in plan
-    assert "partial_count" in plan or "HashAggregate" in plan
-    read_schema = next(ln for ln in plan.splitlines() if "ReadSchema" in ln)
-    assert "text" in read_schema and "lang" not in read_schema
-
-
 def test_dedup_retained_corpus_partitions_the_corpus(spark):
     """Survivors are exactly one per cluster: their count equals the
     distinct cluster count of near_dup_clusters, every survivor is its
@@ -340,39 +240,6 @@ def test_bm25_multi_plan_shape(spark):
     assert "WindowGroupLimit" in plan
     read_schema = next(ln for ln in plan.splitlines() if "ReadSchema" in ln)
     assert "text" in read_schema and "lang" not in read_schema
-
-
-def test_char_bigram_fluency_plan(spark):
-    """The bigram 'model' joins back by BROADCAST (vocab is charset²-
-    bounded), ranking is TakeOrderedAndProject, scan pruned to
-    doc_id + text."""
-    # unregistered at r15 (doc_perplexity_report is the registered
-    # smoothed successor); the implementation + this plan gate stay.
-    from retail_aws_etl_pipeline_spark.plans.extensions import char_bigram_fluency
-
-    df = char_bigram_fluency(spark, SF_SMOKE)
-    plan = _plan(df)
-    assert "BroadcastHashJoin" in plan, plan[:2000]
-    assert "TakeOrderedAndProject" in plan
-    assert "SortMergeJoin" not in plan
-    read_schema = next(ln for ln in plan.splitlines() if "ReadSchema" in ln)
-    assert "text" in read_schema and "lang" not in read_schema
-
-
-def test_token_chunk_dedup_plan(spark):
-    """Span dedup must be the groupBy+join shape — no Window over the
-    span stream (a window would sort every span partition), no driver
-    collect, scan pruned to doc_id + text."""
-    # unregistered at r12 (cdc_chunk_dedup is the registered successor);
-    # the implementation + this plan gate stay, called directly.
-    from retail_aws_etl_pipeline_spark.plans.extensions import token_chunk_dedup
-
-    df = token_chunk_dedup(spark, SF_SMOKE)
-    plan = _plan(df)
-    assert "WindowExec" not in plan and "RunningWindowFunction" not in plan
-    assert "CartesianProduct" not in plan
-    read_schema = next(ln for ln in plan.splitlines() if "ReadSchema" in ln)
-    assert "text" in read_schema and "source" not in read_schema
 
 
 def test_semantic_dedup_anti_join_on_cluster(spark):
@@ -412,31 +279,6 @@ def test_tfidf_top_terms_plan(spark):
     assert "SortMergeJoin" not in plan
     read_schema = next(ln for ln in plan.splitlines() if "ReadSchema" in ln)
     assert "text" in read_schema and "lang" not in read_schema
-
-
-def test_lang_rebalanced_sample_zero_shuffle(spark):
-    """The hash-gate sample is a pure scan-side projection: no Exchange of
-    any kind before the final presentation sort, no joins, no windows —
-    the property that makes it streaming/backfill-safe at any scale."""
-    # unregistered at r15 (temperature_mixture_report derives the config
-    # this sampler consumes; corpus_mixture_sample keeps the hash-gate
-    # selection registered); the implementation + this plan gate stay.
-    from retail_aws_etl_pipeline_spark.plans.extensions import (
-        lang_rebalanced_sample,
-    )
-
-    df = lang_rebalanced_sample(spark, SF_SMOKE)
-    # Strip the orderBy: presentation-only (the driver compare is
-    # order-insensitive); the operator itself is the filter projection.
-    core = df._jdf.queryExecution().executedPlan().toString()
-    body = core[core.index("Sort") :] if "Sort" in core else core
-    assert "SortMergeJoin" not in core and "ShuffledHashJoin" not in core
-    assert "BroadcastHashJoin" not in core and "Window" not in core
-    # exactly the one range-partitioning exchange the global sort needs
-    assert core.count("Exchange") <= 1, core
-    read_schema = next(ln for ln in core.splitlines() if "ReadSchema" in ln)
-    assert "doc_id" in read_schema and "lang" in read_schema
-    assert "text" not in read_schema
 
 
 def test_cluster_topic_terms_plan(spark):
@@ -529,18 +371,6 @@ def test_item_affinity_plan_shape(spark):
         assert col not in plan, f"scan not pruned: reads {col}"
 
 
-def test_partkey_skew_report_windows_are_histogram_bounded(spark):
-    """The Gini window may be unpartitioned ONLY because it runs over the
-    count-of-counts histogram (cardinality = distinct per-key counts);
-    assert the top-10 share rides a TakeOrderedAndProject, not a full
-    sort, and the fact scan prunes to the key column."""
-    df = REGISTRY["partkey_skew_report"].spark_fn(spark, SF_SMOKE)
-    plan = _plan(df)
-    assert "TakeOrderedAndProject" in plan
-    for col in ("l_extendedprice", "l_comment", "l_quantity"):
-        assert col not in plan, f"scan not pruned: reads {col}"
-
-
 def test_sequential_item_rules_plan_shape(spark):
     """The order-sequence window partitions by customer (keyed, never a
     global window); basket joins are equi-joins; the only cross join is
@@ -602,20 +432,6 @@ def test_product_type_profit_pushes_type_filter(spark):
         assert col not in plan, f"scan not pruned: reads {col}"
 
 
-def test_part_revenue_share_single_broadcast_total(spark):
-    """Q11 shape: the scalar-subquery threshold is realized as ONE
-    broadcast nested-loop join of the 1-row total — never a shuffled
-    join, never a second scan-side aggregation of lineitem."""
-    df = REGISTRY["part_revenue_share"].spark_fn(spark, SF_SMOKE)
-    plan = _plan(df)
-    assert plan.count("BroadcastNestedLoopJoin") == 1
-    assert "SortMergeJoin" not in plan
-    assert "ShuffledHashJoin" not in plan
-    # one lineitem scan feeds both the per-part agg and (via reuse or the
-    # agg output) the total — the plan must not scan lineitem twice
-    assert plan.count("lineitem.parquet") <= 2
-
-
 def test_sole_return_suppliers_topk_and_no_subquery_scans(spark):
     """Q21 shape: the EXISTS/NOT-EXISTS pair is rewritten into keyed
     aggregates — the executed plan has no broadcast-nested-loop or
@@ -628,18 +444,6 @@ def test_sole_return_suppliers_topk_and_no_subquery_scans(spark):
     assert "BroadcastNestedLoopJoin" not in plan
     for col in ("l_extendedprice", "l_comment", "l_quantity"):
         assert col not in plan, f"scan not pruned: reads {col}"
-
-
-def test_monthly_revenue_yoy_no_window(spark):
-    """YoY uses the time-shifted self-join, NOT LAG(12) — the executed
-    plan must contain no Window operator at all, and the year-ago side
-    joins broadcast (date-domain bounded aggregate)."""
-    import re
-
-    df = REGISTRY["monthly_revenue_yoy"].spark_fn(spark, SF_SMOKE)
-    plan = _plan(df)
-    assert not re.search(r"\bWindow \[", plan), "unexpected Window operator"
-    assert "BroadcastHashJoin" in plan
 
 
 def test_customer_order_gap_stats_windows_are_keyed_or_histogram(spark):
@@ -664,13 +468,12 @@ def test_edit_distance_pairs_salted_equi_join(spark):
     (bucket, salt) — no cartesian / nested-loop candidate generation —
     and the verify must use the thresholded builtin levenshtein
     (JVM-side, no BatchEvalPython)."""
-    # Unregistered at r9 (LSH production twin carries the driver row);
-    # the salted-equi-join kernel stays in the package and stays gated.
-    from retail_aws_etl_pipeline_spark.plans.extensions import (
-        edit_distance_near_pairs,
-    )
+    # The exact blocked kernel is the reference the LSH production path
+    # (edit_distance_near_pairs_lsh) is tested against; it stays gated.
+    from retail_aws_etl_pipeline_spark.operators.dedup import edit_distance_pairs
 
-    df = edit_distance_near_pairs(spark, SF_SMOKE)
+    docs = load_tables(spark, SF_SMOKE, ["documents"])["documents"]
+    df = edit_distance_pairs(docs, 25, salt=8).orderBy("doc_a", "doc_b")
     plan = _plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

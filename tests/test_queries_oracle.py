@@ -35,11 +35,9 @@ def test_oracle_match(spark, name):
 
 
 def test_no_rows_only_queries_remain():
-    """Since the r15 rotation (approx_sketch_stats unregistered outright,
-    RETIRED emptied) EVERY registered entry carries a DuckDB oracle — the
-    weaker rows-only driver check is extinct. If this ever fails, a new
-    oracle-less entry slipped into a registry: either give it an oracle
-    or pin it in the UNREGISTERED store with a local gate."""
+    """EVERY registered entry carries a DuckDB oracle — the weaker
+    rows-only driver check is extinct. If this ever fails, a new
+    oracle-less entry slipped into a registry: give it an oracle."""
     assert ROWS_ONLY_QUERIES == []
 
 

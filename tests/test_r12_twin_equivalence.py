@@ -1,21 +1,9 @@
-"""Twin-equivalence pins for the drafted r12 cap replacements.
+"""Dedup identities for registered kernels:
 
-VERDICT r10 item #3: every r12 swap's twin relation must be pinned by a
-test BEFORE r12 opens, so unregistering the weakest variant provably
-keeps its semantics on the driver proof surface. One test per pairing in
-ROADMAP's "r12 schedule" section:
-
-1. cdc_chunk_dedup ↔ token_chunk_dedup — CDC detects everything the
-   fixed window detects on unshifted mirrors AND keeps detecting after
-   the one-token shift that blinds the fixed window.
-2. bpe_pair_stats ↔ collocation_pairs — the census's word-pair count
-   layer equals the collocation pair aggregation.
-3. gopher_quality_report swap: bm25_query_scores ↔ bm25_multi_query_topk
-   — the multi form restricted to one query reproduces the single form.
-4. zorder_pruning_stats swap: cross_source_dup_matrix == the rollup
-   recomputed from the registered jaccard pair surface.
-5. sitemap reserve: incremental_jaccard_counts == the batch self-join
-   restricted to batch-crossing pairs.
+1. cdc_chunk_dedup keeps detecting a mirrored passage after the one-token
+   prefix shift that blinds a fixed-window chunker.
+2. incremental_jaccard_counts == the batch self-join restricted to
+   batch-crossing pairs.
 """
 
 from __future__ import annotations
@@ -62,113 +50,6 @@ def test_cdc_supersedes_fixed_window_chunk_dedup(spark):
         "a one-token shift should blind the fixed window on this corpus"
     )
     assert cross_doc_dups(cdc_s) > 0, "CDC must keep matching after the shift"
-
-
-def test_bpe_pair_stats_equals_collocation_pair_layer(spark):
-    """bpe_pair_stats' n_total per (tok_a, tok_b) is the SAME adjacent
-    word-pair aggregation collocation_pairs composes (its n_pair), so
-    the count layer stays registered after the r12 swap."""
-    from retail_aws_etl_pipeline_spark.plans.extensions import bpe_pair_stats
-
-    census = {
-        (r.tok_a, r.tok_b): r.n_total
-        for r in bpe_pair_stats(spark, SF_ORACLE).collect()
-    }
-    docs = load_tables(spark, SF_ORACLE, ["documents"])["documents"].withColumn(
-        "__toks", F.split("text", " ")
-    )
-    pairs_arr = (
-        "CASE WHEN size(__toks) >= 2 THEN"
-        " transform(sequence(1, size(__toks) - 1),"
-        " i -> struct(element_at(__toks, i) AS tok_a,"
-        " element_at(__toks, i + 1) AS tok_b))"
-        " ELSE array() END"
-    )
-    colloc = {
-        (r.tok_a, r.tok_b): r.n_pair
-        for r in (
-            docs.select(F.explode(F.expr(pairs_arr)).alias("p"))
-            .select("p.tok_a", "p.tok_b")
-            .filter((F.col("tok_a") != "") & (F.col("tok_b") != ""))
-            .groupBy("tok_a", "tok_b")
-            .agg(F.count(F.lit(1)).alias("n_pair"))
-            .collect()
-        )
-    }
-    assert census, "census empty — fixture corpus has no adjacent pairs?"
-    for k, v in census.items():  # census is the top-100 slice of the layer
-        assert colloc.get(k) == v, (k, v, colloc.get(k))
-
-
-def test_bm25_multi_restricted_to_one_query_matches_single(spark):
-    """bm25_scores_multi with a single query reproduces bm25_scores —
-    same docs, same scores up to the documented DECIMAL(28,6)
-    accumulator rounding (<= 1e-6 absolute per term)."""
-    from retail_aws_etl_pipeline_spark.operators.textops import (
-        bm25_scores,
-        bm25_scores_multi,
-    )
-
-    docs = load_tables(spark, SF_ORACLE, ["documents"])["documents"]
-    terms = ("alpha", "data", "beta")
-    single = {
-        r.doc_id: r.score for r in bm25_scores(docs, terms).collect()
-    }
-    term_df = spark.createDataFrame(
-        [("q0", t) for t in terms], "query_id string, term string"
-    )
-    multi = {
-        r.doc_id: r.score
-        for r in bm25_scores_multi(docs, term_df).collect()
-    }
-    assert single, "no document matched the probe terms at sf0.01"
-    assert set(multi) == set(single)
-    for d, s in single.items():
-        assert abs(multi[d] - s) <= 1e-5 * max(1.0, abs(s)), (d, s, multi[d])
-
-
-def test_cross_source_dup_matrix_is_the_pair_rollup(spark):
-    """cross_source_dup_matrix == the source x source rollup recomputed
-    from the registered jaccard pair surface (ngram_jaccard_pairs'
-    threshold on jaccard_counts) — the rollup adds nothing the pair
-    frame doesn't carry, so the r12 swap loses no proof surface."""
-    from retail_aws_etl_pipeline_spark.plans.extensions import (
-        cross_source_dup_matrix,
-    )
-
-    got = {
-        (r.source_a, r.source_b): (r.n_pairs, r.sum_common)
-        for r in cross_source_dup_matrix(spark, SF_ORACLE).collect()
-    }
-    docs = load_tables(spark, SF_ORACLE, ["documents"])["documents"]
-    grams = D.shingles(docs)
-    pairs = D.jaccard_counts(grams).filter(
-        F.col("common") * 5 >= (F.col("n_a") + F.col("n_b") - F.col("common"))
-    )
-    src = docs.select("doc_id", "source")
-    rolled = (
-        pairs.join(
-            src.select(F.col("doc_id").alias("id_a"), F.col("source").alias("sa")),
-            "id_a",
-        )
-        .join(
-            src.select(F.col("doc_id").alias("id_b"), F.col("source").alias("sb")),
-            "id_b",
-        )
-        .groupBy(
-            F.least("sa", "sb").alias("source_a"),
-            F.greatest("sa", "sb").alias("source_b"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.sum("common").alias("sum_common"),
-        )
-    )
-    want = {
-        (r.source_a, r.source_b): (r.n_pairs, r.sum_common)
-        for r in rolled.collect()
-    }
-    assert got == want and got, (got, want)
 
 
 def test_incremental_jaccard_is_the_restricted_self_join(spark):

@@ -1,151 +1,11 @@
-"""Twin-equivalence pins for the PROVISIONAL r14 cap replacements.
-
-ROADMAP's "r14 schedule" drafts seven swaps from the r11 cohort for the
-seven remaining staged ops (final pairing defers to ADVICE r12/r13, per
-the cadence). These pins hold regardless of the final pairing — each
-shows a drafted swap target's semantics stay on (or derivable from) the
-registered proof surface:
-
-1. near_dup_clusters == near_dup_clusters_star — the deliberate
-   algorithm A/B (min-label CC vs large-star/small-star) computing the
-   identical labeling; either can be unregistered with the other
-   carrying the oracle.
-2. corpus_vocabulary == the unigram trainer's word-census layer (same
-   exploded-token groupBy the trainer's seed fit runs).
-3. event_props_stats == its from_json recomputation (the registered
-   JSONL parse primitive covers the get_json_object surface).
-4. split_leakage_pairs == the split rollup of the registered jaccard
-   pair frame (the cross_source_dup_matrix precedent from r12).
-5. media_dims_probe's PNG header walk == png_decode_stats' decoded dims
-   on the SAME payloads (full decode reads the same IHDR).
-6. doc_repetition_ratio == composition of the registered shingle frame
-   (distinct grams) and the registered whitespace-token layer (total).
-7. boilerplate_ngram_ratio == the per-doc rollup of the shingle
-   document-frequency frame the LSH/jaccard carriers keep registered.
+"""The PNG header walk (probe_dims) reports the same dims as the full
+decode (png_decode_stats) on the same payloads.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from retail_aws_etl_pipeline_spark.operators import dedup as D
-from retail_aws_etl_pipeline_spark.operators import textops as TX
 from retail_aws_etl_pipeline_spark.session import load_tables
 from tests.conftest import SF_ORACLE
-
-
-def test_cluster_labelings_agree_registry_level(spark):
-    """near_dup_clusters (min-label CC) and near_dup_clusters_star
-    (large-star/small-star) share one oracle string because they compute
-    the identical labeling — pinned here at the REGISTRY level (the
-    kernel-level hypothesis tests live in test_sampling_clusters.py),
-    so either side of the A/B can carry the driver row."""
-    from retail_aws_etl_pipeline_spark.plans.extensions import (
-        near_dup_clusters,
-        near_dup_clusters_star,
-    )
-
-    a = [tuple(r) for r in near_dup_clusters(spark, SF_ORACLE).collect()]
-    b = [tuple(r) for r in near_dup_clusters_star(spark, SF_ORACLE).collect()]
-    assert a == b and a
-
-
-def test_corpus_vocabulary_is_the_trainer_word_census(spark):
-    """corpus_vocabulary's layers == the exploded-token groupBy the
-    unigram trainer's seed fit runs (same kernel family) — the
-    vocabulary census stays registered through the trainer after the
-    r14 swap."""
-    from retail_aws_etl_pipeline_spark.plans.extensions import (
-        corpus_vocabulary,
-    )
-
-    want = [
-        (r.tok, r.n_total, r.n_docs)
-        for r in corpus_vocabulary(spark, SF_ORACLE).collect()
-    ]
-    docs = load_tables(spark, SF_ORACLE, ["documents"])["documents"]
-    got = [
-        (r.tok, r.n_total, r.n_docs)
-        for r in docs.select(
-            "doc_id", F.explode(F.split("text", " ")).alias("tok")
-        )
-        .filter(F.col("tok") != "")
-        .groupBy("tok")
-        .agg(
-            F.count(F.lit(1)).alias("n_total"),
-            F.count_distinct("doc_id").alias("n_docs"),
-        )
-        .orderBy(F.desc("n_total"), F.asc("tok"))
-        .limit(200)
-        .collect()
-    ]
-    assert got == want and got
-
-
-def test_event_props_via_from_json_matches_get_json_object(spark):
-    """event_props_stats (get_json_object) == the from_json
-    recomputation — the JSON-parse surface the registered JSONL source
-    family uses covers the swapped-out query's semantics."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from retail_aws_etl_pipeline_spark.plans.queries import event_props_stats
-
-    want = {
-        r.event_type: (r.sum_k, r.n)
-        for r in event_props_stats(spark, SF_ORACLE).collect()
-    }
-    events = load_tables(spark, SF_ORACLE, ["events"])["events"]
-    schema = StructType([StructField("k", LongType())])
-    got = {
-        r.event_type: (r.sum_k, r.n)
-        for r in events.select(
-            "event_type", F.from_json("props", schema).alias("p")
-        )
-        .groupBy("event_type")
-        .agg(F.sum("p.k").alias("sum_k"), F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == want and got
-
-
-def test_split_leakage_is_the_pair_rollup(spark):
-    """split_leakage_pairs == the split x split rollup recomputed from
-    the registered jaccard pair surface — the same precedent that
-    justified the cross_source_dup_matrix swap at r12."""
-    from retail_aws_etl_pipeline_spark.operators import sampling as SMP
-    from retail_aws_etl_pipeline_spark.plans.extensions import (
-        split_leakage_pairs,
-    )
-
-    got = {
-        (r.split_a, r.split_b): r.n_pairs
-        for r in split_leakage_pairs(spark, SF_ORACLE).collect()
-    }
-
-    def split_of(c):
-        hx = F.conv(F.substring(F.md5(F.col(c).cast("string")), 1, 4), 16, 10)
-        b = hx.cast("long") % SMP.SPLIT_BUCKETS
-        return (
-            F.when(b < SMP.TRAIN_BUCKETS, F.lit("train"))
-            .when(b < SMP.TRAIN_BUCKETS + SMP.VALID_BUCKETS, F.lit("valid"))
-            .otherwise(F.lit("test"))
-        )
-
-    docs = load_tables(spark, SF_ORACLE, ["documents"])["documents"]
-    pairs = D.jaccard_counts(D.shingles(docs)).filter(
-        F.col("common") * 5 >= (F.col("n_a") + F.col("n_b") - F.col("common"))
-    )
-    want = {
-        (r.split_a, r.split_b): r.n_pairs
-        for r in pairs.select(
-            split_of("id_a").alias("split_a"), split_of("id_b").alias("split_b")
-        )
-        .filter(F.col("split_a") != F.col("split_b"))
-        .groupBy("split_a", "split_b")
-        .agg(F.count(F.lit(1)).alias("n_pairs"))
-        .collect()
-    }
-    assert got == want and got
 
 
 def test_png_header_walk_matches_full_decode_dims(spark):
@@ -175,66 +35,3 @@ def test_png_header_walk_matches_full_decode_dims(spark):
             assert (w, h) == decoded[mid], (mid, (w, h), decoded[mid])
     finally:
         media.unpersist()
-
-
-def test_repetition_ratio_from_registered_layers(spark):
-    """doc_repetition_ratio == (registered shingle frame for the
-    distinct-gram count) + (registered whitespace-token layer for the
-    total) — both generating surfaces stay driver-proven after the r14
-    swap."""
-    from retail_aws_etl_pipeline_spark.plans.extensions import (
-        doc_repetition_ratio,
-    )
-
-    want = {
-        r.doc_id: (r.total_grams, r.distinct_grams)
-        for r in doc_repetition_ratio(spark, SF_ORACLE).collect()
-    }
-    docs = load_tables(spark, SF_ORACLE, ["documents"])["documents"]
-    distinct = (
-        D.shingles(docs)
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("distinct_grams"))
-    )
-    total = docs.select(
-        "doc_id",
-        F.greatest(
-            TX.token_count("text") - (D.SHINGLE_N - 1), F.lit(0).cast("long")
-        ).alias("total_grams"),
-    )
-    got = {
-        r.doc_id: (r.total_grams, r.distinct_grams or 0)
-        for r in total.join(distinct, "doc_id", "left").collect()
-    }
-    assert got == want and got
-
-
-def test_boilerplate_ratio_is_the_gram_df_rollup(spark):
-    """boilerplate_ngram_ratio == the per-doc rollup of the shingle
-    document-frequency frame (the same D.shingles the registered
-    LSH/jaccard carriers prove) — nothing the swap would orphan."""
-    from retail_aws_etl_pipeline_spark.plans.extensions import (
-        BOILERPLATE_MIN_DOCS,
-        boilerplate_ngram_ratio,
-    )
-
-    want = {
-        r.doc_id: (r.n_grams, r.n_boiler)
-        for r in boilerplate_ngram_ratio(spark, SF_ORACLE).collect()
-    }
-    docs = load_tables(spark, SF_ORACLE, ["documents"])["documents"]
-    grams = D.shingles(docs)
-    df = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
-    got = {
-        r.doc_id: (r.n_grams, r.n_boiler)
-        for r in grams.join(df, "gram")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_grams"),
-            F.sum(
-                F.when(F.col("df") >= BOILERPLATE_MIN_DOCS, 1).otherwise(0)
-            ).alias("n_boiler"),
-        )
-        .collect()
-    }
-    assert got == want and got

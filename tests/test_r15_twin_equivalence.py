@@ -1,32 +1,13 @@
-"""Twin-equivalence pins for the drafted r15 cap replacements
-(PROVISIONAL — drafted at r13 with the staging tranche; ROADMAP "r15
-schedule". Final pairing decisions defer to ADVICE r14 as always; these
-pins make the drafted swaps executable the moment r15 opens).
+"""Identities for the r15 registrations:
 
-One test per pairing:
-
-1. doc_perplexity_report ↔ char_bigram_fluency — the perplexity model's
-   count layer IS the registered KN table (shared kernel), and on a
-   constructed fluency corpus the docs the fluency filter flags land in
-   the perplexity tail bucket — the filter signal survives the swap.
-2. minhash_estimate_error ↔ similarity_spectrum — the spectrum is the
-   decile rollup of the exact-Jaccard pair surface whose kernel stays
-   registered (ngram_jaccard_pairs / the dedup verify family); pinned by
-   recomputing the spectrum from the shared jaccard_counts kernel.
-3. temperature_mixture_report ↔ lang_rebalanced_sample — on a uniform
-   corpus the temperature quota reduces to the natural share (rate
-   exactly 1e6 per group), i.e. the derived config reproduces the
-   rebalanced sampler's no-op point; the hash-gate selection semantics
-   stay registered via corpus_mixture_sample (the quota-exact sibling).
-4. bloom_prefilter_stats ↔ token_chunk_dedup_corpus — exact-duplicate
-   membership transfers: a planted exact mirror is detected by BOTH the
-   corpus chunk dedup and the Bloom census (n_true_dups counts it, and
-   the no-false-negative invariant guarantees the Bloom gate passes it
-   to the exact join); the chunk-level surface stays via the registered
-   cdc_chunk_dedup (pinned at r12).
-5. join_key_skew_report ↔ order_value_histogram — the histogram is the
-   one-groupBy width_bucket recount of the orders scan (the
-   cross_source_dup_matrix rollup precedent).
+1. doc_perplexity_report scores against the registered KN table
+   (ngram_lm_report's kernel), and its tail bucket catches a constructed
+   disfluent doc.
+2. temperature_mixture_report on a uniform corpus reduces to the natural
+   share (rate exactly 1e6 per group).
+3. bloom_prefilter_stats counts a planted exact mirror with zero misses.
+4. the deterministic HLL's error sits inside the 3*1.04/sqrt(m) band
+   Spark's HLL++ is held to.
 """
 
 from __future__ import annotations
@@ -36,7 +17,6 @@ from pyspark.sql import functions as F
 from retail_aws_etl_pipeline_spark.operators import dedup as D
 from retail_aws_etl_pipeline_spark.operators import sampling as SMP
 from retail_aws_etl_pipeline_spark.operators import textops as TX
-from retail_aws_etl_pipeline_spark.plans import all_specs
 from retail_aws_etl_pipeline_spark.session import load_tables
 from tests.conftest import SF_SMOKE
 
@@ -81,39 +61,6 @@ def test_perplexity_tail_catches_the_fluency_corpus(spark):
     assert buckets[0] == 1  # head
 
 
-def test_spectrum_is_the_rollup_of_the_shared_jaccard_kernel(spark):
-    """similarity_spectrum == the decile recount of jaccard_counts over
-    the same grams — the generating kernel stays registered through the
-    dedup verify family, so unregistering the rollup loses no proof
-    surface."""
-    # unregistered at r15 (minhash_estimate_error is the registered
-    # precision successor); the implementation stays, called directly.
-    from retail_aws_etl_pipeline_spark.plans.extensions import similarity_spectrum
-
-    docs = load_tables(spark, SF_SMOKE, ["documents"])["documents"]
-    grams = D.shingles(docs).persist()
-    try:
-        jc = D.jaccard_counts(grams)
-        rolled = {
-            (r["decile"], r["n_pairs"])
-            for r in jc.select(
-                F.expr(
-                    "CAST((common * 10) DIV (n_a + n_b - common) AS BIGINT)"
-                ).alias("decile")
-            )
-            .groupBy("decile")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
-            .collect()
-        }
-        got = {
-            (r["jaccard_decile"], r["n_pairs"])
-            for r in similarity_spectrum(spark, SF_SMOKE).collect()
-        }
-        assert got == rolled and got
-    finally:
-        grams.unpersist()
-
-
 def test_temperature_uniform_corpus_is_the_rebalancer_noop_point(spark):
     """Equal-size groups: sqrt weights equal, temperature share ==
     natural share, quota == group size, rate exactly 1e6 — the derived
@@ -131,9 +78,8 @@ def test_temperature_uniform_corpus_is_the_rebalancer_noop_point(spark):
 
 def test_bloom_census_counts_the_chunk_dedups_planted_mirror(spark):
     """A planted exact mirror (even id = standing, odd id = mirror) is
-    dup-counted by the Bloom census with zero misses — the exact-dup
-    membership surface token_chunk_dedup_corpus carries transfers; its
-    chunk-level shift surface stays via cdc_chunk_dedup (r12 pin)."""
+    dup-counted by the Bloom census with zero misses (the
+    no-false-negative invariant)."""
     body = " ".join(f"tok{i}" for i in range(64))
     docs = spark.createDataFrame(
         [(0, body), (1, body), (2, "unrelated fresh content here"),
@@ -147,45 +93,11 @@ def test_bloom_census_counts_the_chunk_dedups_planted_mirror(spark):
     assert row["n_missed_dups"] == 0
 
 
-def test_order_value_histogram_is_a_width_bucket_recount(spark):
-    """order_value_histogram == the one-groupBy width_bucket recount of
-    the orders scan — the swapped-out query is a rollup whose inputs and
-    bucket expression stay registered (customer_spend_deciles /
-    sketch_accuracy_stats keep the percentile surface)."""
-    # unregistered at r15 (join_key_skew_report takes the slot); the
-    # implementation stays, called directly.
-    from retail_aws_etl_pipeline_spark.plans.analytics import order_value_histogram
-
-    orders = load_tables(spark, SF_SMOKE, ["orders"])["orders"]
-    recount = (
-        orders.select(
-            F.width_bucket("o_totalprice", F.lit(0.0), F.lit(500000.0), F.lit(20))
-            .cast("long")
-            .alias("bucket"),
-            "o_totalprice",
-        )
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.min("o_totalprice").alias("min_price"),
-            F.max("o_totalprice").alias("max_price"),
-        )
-    )
-    got = {tuple(r) for r in order_value_histogram(spark, SF_SMOKE).collect()}
-    want = {tuple(r) for r in recount.collect()}
-    assert got == want and got
-
-
 def test_hll_supersedes_the_retired_approx_sketch(spark):
-    """Pairing #6 (drafted r13 session): hll_distinct_report enters and
-    approx_sketch_stats — the registry's ONE RETIRED entry — leaves
-    outright, taking the retired count to zero. The supersession claim:
-    on the same corpus the deterministic HLL's error is within the same
-    band the approx tolerance gate allows Spark's engine-private HLL++
-    (rsd ~ 1.04/sqrt(m)) — so the sketch surface keeps its accuracy
-    contract while GAINING a hash-gateable oracle. The percentile half
-    of the retired query stays via sketch_accuracy_stats (registered,
-    exact)."""
+    """On the same corpus the deterministic HLL's error is within the
+    band Spark's engine-private HLL++ is held to (rsd ~ 1.04/sqrt(m)) —
+    the sketch surface keeps its accuracy contract while gaining a
+    hash-gateable oracle."""
     import math
 
     from pyspark.sql import functions as F
@@ -200,42 +112,3 @@ def test_hll_supersedes_the_retired_approx_sketch(spark):
     band = 3 * 1.04 / math.sqrt(SK.HLL_BUCKETS)
     assert abs(det - exact) <= band * exact, (det, exact)
     assert abs(approx - exact) <= band * exact, (approx, exact)
-
-
-def test_trigram_paths_is_a_lead_projection_recount(spark):
-    """Pairing #6's cohort victim: event_trigram_paths == the top-20
-    recount of the same per-user lead() projection (the rollup
-    precedent); the sequence-mining surface keeps user_sessions /
-    conversion_funnel / event_pairs_within_window registered and the
-    LAG/LEAD window kernel stays via customer_order_gap_stats."""
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    from retail_aws_etl_pipeline_spark.plans import all_specs
-    from retail_aws_etl_pipeline_spark.session import load_tables
-
-    # unregistered at r15 (hll_distinct_report takes the slot); the
-    # implementation stays, called directly.
-    from retail_aws_etl_pipeline_spark.plans.analytics import event_trigram_paths
-
-    ev = load_tables(spark, SF_SMOKE, ["events"])["events"]
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    tri = (
-        ev.select(
-            "user_id",
-            F.col("event_type").alias("step1"),
-            F.lead("event_type", 1).over(w).alias("step2"),
-            F.lead("event_type", 2).over(w).alias("step3"),
-        )
-        .filter(F.col("step2").isNotNull() & F.col("step3").isNotNull())
-        .groupBy("step1", "step2", "step3")
-        .agg(
-            F.count(F.lit(1)).alias("n_paths"),
-            F.count_distinct("user_id").alias("n_users"),
-        )
-        .orderBy(F.desc("n_paths"), "step1", "step2", "step3")
-        .limit(20)
-    )
-    got = {tuple(r) for r in event_trigram_paths(spark, SF_SMOKE).collect()}
-    want = {tuple(r) for r in tri.collect()}
-    assert got == want and got

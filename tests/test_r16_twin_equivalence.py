@@ -1,211 +1,15 @@
-"""Twin-equivalence pins for the PROVISIONAL r16 cap replacements.
-
-ROADMAP's "r16 schedule" drafts six swaps from the r13 cohort for the
-six staged ops (hll_overlap_report, staged r13, plus the five staged
-this round — final pairing defers to ADVICE r14/r15, per the cadence).
-These pins hold regardless of the final pairing — each shows a drafted
-swap target's semantics stay on (or derivable from) the registered
-proof surface:
-
-1. returned_order_priorities (left-semi) == the inner-join-to-distinct
-   recompute; the strictly harder semi shapes stay registered
-   (priority_order_counts Q4 inequality-EXISTS, sole_return_suppliers
-   Q21 double-correlated).
-2. monthly_revenue_yoy's monthly layer == the month rollup of
-   daily_revenue_gapfill's daily layer (zero-filled gap days change
-   nothing), and the YoY columns == the 12-month-shift self-join
-   recompute of that layer.
-3. customer_order_history (lag/lead/running-frame/row_number) == the
-   window-free self-join recompute; the window surface keeps
-   dedup_keep_latest, customer_order_gap_stats, user_rolling_hour,
-   weekly_retention_cohorts registered.
-4. large_volume_orders' left-semi-on-aggregated-subquery == the
-   inner-join-on-qualifying-keys recompute (Q17/Q2/Q21 keep the
-   correlated-subquery family registered).
-5. part_revenue_share's keyed revenue layer IS top_items' layer —
-   top-10 of the recomputed layer equals top_items row for row.
-6. join_key_skew_report's l_partkey family row carries
-   partkey_skew_report's core skew-planning signal (n_rows, n_keys,
-   hottest-key count); only the Gini tail-profile layer is unique to
-   the retiring form, and it stays locally pinned by this test file.
+"""The keyed part-revenue layer, recomputed and cut to top-10, equals
+top_items row for row.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from retail_aws_etl_pipeline_spark.session import load_tables
 from tests.conftest import SF_ORACLE
 
 DEC = "decimal(28,6)"
-
-
-def test_returned_order_priorities_semi_equals_in_distinct(spark):
-    from retail_aws_etl_pipeline_spark.plans.queries import (
-        returned_order_priorities,
-    )
-
-    want = [tuple(r) for r in returned_order_priorities(spark, SF_ORACLE).collect()]
-    t = load_tables(spark, SF_ORACLE, ["orders", "lineitem"])
-    keys = (
-        t["lineitem"]
-        .filter(F.col("l_returnflag") == "R")
-        .select(F.col("l_orderkey").alias("o_orderkey"))
-        .distinct()
-    )
-    got = [
-        tuple(r)
-        for r in t["orders"]
-        .join(keys, "o_orderkey")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .orderBy("o_orderpriority")
-        .collect()
-    ]
-    assert got == want and got
-
-
-def test_monthly_yoy_layer_is_the_gapfill_rollup(spark):
-    """The monthly revenue layer == month rollup of daily_revenue_gapfill's
-    daily layer (gap days are exact zero), and the YoY frame is the
-    12-month-shift self-join of that layer — both derivable from
-    registered carriers after the swap."""
-    from retail_aws_etl_pipeline_spark.plans.analytics import (
-        daily_revenue_gapfill,
-        monthly_revenue_yoy,
-    )
-
-    yoy = monthly_revenue_yoy(spark, SF_ORACLE).collect()
-    monthly_from_gapfill = {
-        (r["month"], round(r["revenue"], 6))
-        for r in daily_revenue_gapfill(spark, SF_ORACLE)
-        .groupBy(F.date_trunc("month", "date").cast("date").alias("month"))
-        .agg(F.sum(F.col("revenue").cast(DEC)).cast("double").alias("revenue"))
-        .collect()
-        if r["revenue"] != 0.0
-    }
-    assert {(r["month"], round(r["revenue"], 6)) for r in yoy} == monthly_from_gapfill
-    by_month = {r["month"]: r["revenue"] for r in yoy}
-    for r in yoy:
-        prev_month = r["month"].replace(year=r["month"].year - 1)
-        assert r["revenue_prev_year"] == by_month.get(prev_month)
-
-
-def test_customer_order_history_equals_windowfree_selfjoin(spark):
-    """lag/lead/running-sum/row_number recomputed with NO window: seq =
-    1 + count of strictly-earlier orders per customer; prev/next/running
-    via the seq self-join — the derivability pin for the swap."""
-    from retail_aws_etl_pipeline_spark.plans.analytics import (
-        customer_order_history,
-    )
-
-    want = {
-        (r["o_custkey"], r["o_orderkey"]): (
-            r["prev_price"],
-            r["next_price"],
-            round(r["running_spend"], 6),
-            r["order_seq"],
-        )
-        for r in customer_order_history(spark, SF_ORACLE).collect()
-    }
-    o = load_tables(spark, SF_ORACLE, ["orders"])["orders"].select(
-        "o_custkey", "o_orderkey", "o_orderdate", "o_totalprice"
-    )
-    a, b = o.alias("a"), o.alias("b")
-    earlier = (
-        (F.col("b.o_orderdate") < F.col("a.o_orderdate"))
-        | (
-            (F.col("b.o_orderdate") == F.col("a.o_orderdate"))
-            & (F.col("b.o_orderkey") < F.col("a.o_orderkey"))
-        )
-    )
-    seq = (
-        a.join(b, (F.col("a.o_custkey") == F.col("b.o_custkey")) & earlier, "left")
-        .groupBy(
-            F.col("a.o_custkey").alias("ck"),
-            F.col("a.o_orderkey").alias("ok"),
-            F.col("a.o_totalprice").alias("price"),
-        )
-        .agg(
-            (F.count("b.o_orderkey") + 1).cast("long").alias("seq"),
-            (
-                F.sum(F.coalesce(F.col("b.o_totalprice").cast(DEC), F.lit(0).cast(DEC)))
-                + F.first(F.col("a.o_totalprice")).cast(DEC)
-            )
-            .cast("double")
-            .alias("running"),
-        )
-    )
-    s1, s2 = seq.alias("s1"), seq.alias("s2")
-    prev = s1.join(
-        s2,
-        (F.col("s1.ck") == F.col("s2.ck")) & (F.col("s2.seq") == F.col("s1.seq") - 1),
-        "left",
-    ).select(
-        F.col("s1.ck").alias("ck"),
-        F.col("s1.ok").alias("ok"),
-        F.col("s1.seq").alias("seq"),
-        F.col("s1.running").alias("running"),
-        F.col("s2.price").alias("prev_price"),
-    )
-    s3 = seq.alias("s3")
-    full = prev.alias("p").join(
-        s3,
-        (F.col("p.ck") == F.col("s3.ck")) & (F.col("s3.seq") == F.col("p.seq") + 1),
-        "left",
-    )
-    got = {
-        (r["ck"], r["ok"]): (
-            r["prev_price"],
-            r["next_price"],
-            round(r["running"], 6),
-            r["seq"],
-        )
-        for r in full.select(
-            "p.ck",
-            "p.ok",
-            "p.prev_price",
-            F.col("s3.price").alias("next_price"),
-            "p.running",
-            "p.seq",
-        ).collect()
-    }
-    want_rounded = {k: (v[0], v[1], v[2], v[3]) for k, v in want.items()}
-    assert got == want_rounded and got
-
-
-def test_large_volume_orders_semi_equals_inner_on_keys(spark):
-    from retail_aws_etl_pipeline_spark.plans.analytics import (
-        large_volume_orders,
-    )
-
-    want = [tuple(r) for r in large_volume_orders(spark, SF_ORACLE).collect()]
-    t = load_tables(spark, SF_ORACLE, ["orders", "customer", "lineitem"])
-    li = t["lineitem"]
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast(DEC)).alias("oq"))
-        .filter(F.col("oq") > 250)
-        .select(F.col("l_orderkey").alias("o_orderkey"))
-    )
-    got = [
-        tuple(r)
-        for r in t["orders"]
-        .join(big, "o_orderkey")
-        .join(t["customer"], F.col("c_custkey") == F.col("o_custkey"))
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("c_custkey", "o_orderkey")
-        .agg(
-            F.sum(F.col("l_quantity").cast(DEC)).cast("double").alias("total_qty"),
-            F.sum(F.col("l_extendedprice").cast(DEC))
-            .cast("double")
-            .alias("total_price"),
-        )
-        .orderBy(F.desc("total_qty"), F.asc("o_orderkey"))
-        .collect()
-    ]
-    assert got == want and got
 
 
 def test_part_revenue_layer_is_top_items_layer(spark):
@@ -233,27 +37,3 @@ def test_part_revenue_layer_is_top_items_layer(spark):
         .collect()
     ]
     assert got == want and got
-
-
-def test_skew_census_carries_the_partkey_profile(spark):
-    """join_key_skew_report's l_partkey family row agrees with
-    partkey_skew_report's core columns (rows, distinct keys, hottest-key
-    count) — the skew-planning signal survives the swap; the Gini tail
-    layer is the retiring form's unique remainder and stays pinned here."""
-    from retail_aws_etl_pipeline_spark.plans.analytics import (
-        partkey_skew_report,
-    )
-    from retail_aws_etl_pipeline_spark.plans.extensions import (
-        join_key_skew_report,
-    )
-
-    census = {
-        r["key_family"]: r for r in join_key_skew_report(spark, SF_ORACLE).collect()
-    }["l_partkey"]
-    profile = partkey_skew_report(spark, SF_ORACLE).collect()[0]
-    assert census["n_rows"] == profile["n_rows"]
-    assert census["n_keys"] == profile["n_keys"]
-    top1 = profile["top1_share_ppm"]
-    assert census["max_per_key"] * 1_000_000 // profile["n_rows"] == top1
-    # Gini stays internally consistent: 0 <= gini_ppm < 1e6
-    assert 0 <= profile["gini_ppm"] < 1_000_000

@@ -1,32 +1,16 @@
-"""Twin-equivalence pins for the drafted r17 cap replacements
-(PROVISIONAL — drafted at r15 with the tranche completion; ROADMAP "r17
-schedule". Final pairing decisions defer to ADVICE r15/r16 as always;
-these pins make the drafted swaps executable the moment r17 opens).
+"""Recount pins for registered queries — each recomputes the query through
+an independent formulation over a shared kernel:
 
-One test per pairing:
-
-1. countmin_topk_report ↔ fuzzy_part_names — the blocked fuzzy join's
-   Levenshtein kernel stays registered via edit_distance_near_pairs_lsh
-   (the production edit-distance path); pinned by recounting the query
-   through the same F.levenshtein verify.
-2. hash_sample_quantile_report ↔ length_bucket_padding_stats — the
-   padding audit is a rollup of the shared _distributed_ntile
-   assignments (customer_spend_deciles keeps the kernel registered;
-   sequence_packing_chunks the packing surface); pinned by recount.
-3. streamed_hll_snapshot_report ↔ user_rolling_hour — the rolling-hour
-   range window == the bounded self-join recount (the events
-   time-window surface keeps hopping_event_rollup / user_sessions /
-   event_pairs_within_window registered).
-4. quality_gate_agreement_report ↔ quality_top_half_per_lang — the
-   top-half cut == the per-lang rank recount over the SAME
-   quality_features kernel (quality_by_length_decile and
-   dedup_retained_by_quality keep the quality-selection surface).
-5. zipf_fit_report ↔ grouping_sets_revenue — GROUPING SETS == the
-   UNION-ALL-of-groupBys recount (rollup_region_nation keeps the
-   expanded-grouping surface registered).
-6. vocab_coverage_report ↔ embedding_norm_stats — the norm census is a
-   one-groupBy rollup of the shared with_quantized kernel every
-   registered ANN/semantic-dedup oracle consumes; pinned by recount.
+1. fuzzy_part_names == the blocked fuzzy join recounted through the same
+   F.levenshtein verify.
+2. length_bucket_padding_stats == a rollup of the shared
+   _distributed_ntile assignments.
+3. user_rolling_hour's range window == the bounded self-join recount.
+4. quality_top_half_per_lang == the per-lang rank recount over the same
+   quality_features kernel.
+5. grouping_sets_revenue == the UNION-ALL-of-groupBys recount.
+6. embedding_norm_stats == a one-groupBy rollup of the shared
+   with_quantized kernel.
 """
 
 from __future__ import annotations

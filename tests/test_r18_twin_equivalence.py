@@ -1,39 +1,15 @@
-"""Twin-equivalence pins for the drafted r18 cap replacements
-(PROVISIONAL — drafted at r16 around the five r15-staged seeds; ROADMAP
-"r18 schedule". Final pairing decisions defer to ADVICE r16/r17 as
-always; these pins make the drafted swaps executable the moment r18
-opens).
+"""Recount pins for registered queries:
 
-The r18 due-list is the 50-entry r15 cohort (keys of
-CORRECTNESS_r15.json); five registrations = five 1:1 swaps drawn from
-it. One test per pairing — each shows the drafted victim's semantics
-stay on (or derivable from) the registered proof surface:
-
-1. streamed_cms_topk_report ↔ corpus_snapshot_diff — the epoch-diff
-   surface is carried VERBATIM by the r16-registered
-   corpus_snapshot_delta (the strictly richer FULL-OUTER census:
-   content hashes + the NULL-text CASE ladder); pinned here by
-   recomputing the retiring diff's status census through independent
-   set algebra (anti/semi/inner joins) instead of its own FULL OUTER
-   CASE.
-2. token_drift_psi_report ↔ term_drift_report — the drift signal
-   migrates to the quantized-PSI monitor; the retiring smoothed-ratio
-   top-k is pinned as a pure recount: exact Fraction arithmetic over
-   the (term, half) document-frequency frame reproduces the ranking.
-3. streamed_bottomk_quantile_report ↔ sketch_accuracy_stats — the
-   est-vs-exact quantile audit moves onto the hash-gated bottom-k
-   family (hash_sample_quantile_report r17 + the streamed twin); the
-   retiring percentile_disc closed form is pinned against the discrete
+1. corpus_snapshot_diff's status census == independent set algebra
+   (anti/semi/inner joins) instead of its FULL OUTER CASE.
+2. term_drift_report's smoothed-ratio top-k == exact Fraction arithmetic
+   over the (term, half) document-frequency frame.
+3. sketch_accuracy_stats' percentile_disc closed form == the discrete
    definition recomputed from the raw value histogram.
-4. tiff_dims_probe ↔ exif_orientation_probe — the dual-endian TIFF IFD
-   walk is THE shared discipline: the EXIF probe's embedded TIFF block
-   parses to the same dims through probe_image_dims (both endians,
-   byte-level pin); the JPEG marker-scan layer stays locally pinned by
-   the retained exif battery (UNREGISTERED-store rule).
-5. source_priority_dedup_report ↔ normalized_dedup_gain — the raw
-   md5-distinct leg is a recount of the same md5(text) group frame the
-   priority census argmins over; the normalizer layer keeps its
-   property tests + the retained battery.
+4. exif_orientation_probe's embedded TIFF block parses to the same dims
+   through probe_image_dims (both endians, byte-level pin).
+5. normalized_dedup_gain's raw md5-distinct leg == a recount of the
+   md5(text) group frame.
 """
 
 from __future__ import annotations

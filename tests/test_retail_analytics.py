@@ -459,55 +459,6 @@ def test_edit_distance_lsh_is_verified_subset(spark):
     assert exact, "expected near-dup pairs in the smoke corpus"
 
 
-def test_monthly_yoy_correct_under_missing_months(spark, tmp_path_factory):
-    """The time-shifted self-join reads NULL for a year-ago month that had
-    no orders — the exact case where LAG(12) over the observed series
-    silently compares against the wrong month."""
-    import datetime as dt
-
-    from retail_aws_etl_pipeline_spark.plans import UNREGISTERED
-
-    tmp = tmp_path_factory.mktemp("yoy")
-    # Year 1: Jan..Dec except June missing. Year 2: Jan..Jul present.
-    rows = []
-    k = 0
-    for y, months in ((1995, [1, 2, 3, 4, 5, 7, 8, 9, 10, 11, 12]), (1996, range(1, 8))):
-        for m in months:
-            k += 1
-            rows.append((k, 1, dt.datetime(y, m, 15), 100.0 * k))
-    _write_parquet(
-        tmp / "orders.parquet",
-        {
-            "o_orderkey": [r[0] for r in rows],
-            "o_custkey": [r[1] for r in rows],
-            "o_orderdate": [r[2] for r in rows],
-            "o_totalprice": [r[3] for r in rows],
-        },
-    )
-    out = {
-        r["month"].strftime("%Y-%m"): (r["revenue_prev_year"], r["yoy_growth_ppm"])
-        for r in UNREGISTERED["monthly_revenue_yoy"].spark_fn(spark, str(tmp)).collect()
-    }
-    # 1996-06's year-ago month (1995-06) had no orders: prev must be NULL
-    # — LAG(12) over the OBSERVED series would instead read 1995-05's
-    # revenue (June 1995 is absent, shifting every offset by one).
-    prev_96_06, growth_96_06 = out["1996-06"]
-    assert prev_96_06 is None and growth_96_06 is None
-    # Months whose year-ago month exists compare against exactly it.
-    prev_96_07, growth_96_07 = out["1996-07"]
-    assert prev_96_07 is not None and growth_96_07 is not None
-    # Every 1995 row has no prior year: prev and growth NULL.
-    for key, (prev, growth) in out.items():
-        if key.startswith("1995"):
-            assert prev is None and growth is None
-    # And the LAG formulation WOULD have mismatched here: 12 observed
-    # rows before 1996-06 is 1995-05, not a June — pin that the join
-    # used the calendar, not row offsets.
-    months_sorted = sorted(out)
-    idx = months_sorted.index("1996-06")
-    assert months_sorted[idx - 12] == "1995-05"
-
-
 @given(
     lines=st.lists(
         st.tuples(
@@ -568,53 +519,6 @@ def test_min_cost_argmin_matches_python(spark, tmp_path_factory, lines):
     assert got == want
 
 
-@given(
-    revs=st.lists(
-        st.tuples(st.integers(1, 6), st.integers(1, 10_000_000)),  # (partkey, revenue micros)
-        min_size=1,
-        max_size=25,
-    )
-)
-@settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_part_revenue_share_threshold_exact(spark, tmp_path_factory, revs):
-    """The Q11 threshold compare runs in exact DECIMAL: the kept set
-    equals a Python fractions computation, including boundary ties
-    (r == t * fraction must be EXCLUDED — strict >)."""
-    from fractions import Fraction
-
-    from retail_aws_etl_pipeline_spark.plans import UNREGISTERED
-    from retail_aws_etl_pipeline_spark.plans.analytics import PART_SHARE_FRACTION
-
-    tmp = tmp_path_factory.mktemp("share")
-    # discount 0 so revenue == extendedprice exactly
-    _write_parquet(
-        tmp / "lineitem.parquet",
-        {
-            "l_partkey": [p for p, _ in revs],
-            "l_extendedprice": [m / 1_000_000.0 for _, m in revs],
-            "l_discount": [0.0] * len(revs),
-        },
-    )
-    per = {}
-    for p, m in revs:
-        # mirror the engine: each double is snapped to DECIMAL(28,6)
-        dec = Fraction(round(Fraction(m, 1_000_000) * 10**6), 10**6)
-        per[p] = per.get(p, Fraction(0)) + dec
-    total = sum(per.values())
-    frac = Fraction(PART_SHARE_FRACTION)
-    want = {p for p, r in per.items() if r > total * frac}
-
-    got = {
-        r["p_partkey"]
-        for r in UNREGISTERED["part_revenue_share"].spark_fn(spark, str(tmp)).collect()
-    }
-    assert got == want
-
-
 def test_edit_distance_pairs_negative_ids_exact(spark):
     """The salted length-bucket join must stay exact for NEGATIVE ids:
     Spark's % keeps the dividend sign, so an `id % S` salt would key
@@ -637,57 +541,6 @@ def test_edit_distance_pairs_negative_ids_exact(spark):
                 a, b = sorted((i - 3, j - 3))
                 want[(a, b)] = d
     assert got == want and any(a < 0 for a, _ in got)
-
-
-def test_part_revenue_share_survives_second_decade_totals(spark, tmp_path_factory):
-    """share_ppm must not overflow int64 once total revenue t exceeds
-    ~9.2e12 (where a micro-unit BIGINT snap dies under ANSI — the gini_ppm
-    overflow class, ADVICE r7): the floored whole-unit form is exact
-    int64 through t ~ 9.2e18 and matches Python double arithmetic."""
-    from math import floor
-
-    from retail_aws_etl_pipeline_spark.plans import UNREGISTERED
-
-    tmp = tmp_path_factory.mktemp("share_scale")
-    # three parts, revenues ~5e12 each => t ~ 1.5e13 > the 9.2e12 ceiling
-    revs = [5_000_000_000_000.25, 4_999_999_999_999.75, 5_000_000_000_001.5]
-    _write_parquet(
-        tmp / "lineitem.parquet",
-        {
-            "l_partkey": [1, 2, 3],
-            "l_extendedprice": revs,
-            "l_discount": [0.0] * 3,
-        },
-    )
-    got = {
-        r["p_partkey"]: r["share_ppm"]
-        for r in UNREGISTERED["part_revenue_share"].spark_fn(spark, str(tmp)).collect()
-    }
-    t = floor(sum(revs))
-    want = {k + 1: float(floor(r)) / float(t) * 1_000_000.0 for k, r in enumerate(revs)}
-    assert got == want
-
-    # the small-total branch: sub-unit revenues must use exact micro-units
-    # (the floor-only form divides by zero here — hypothesis-found)
-    tmp2 = tmp_path_factory.mktemp("share_tiny")
-    tiny = [0.25, 0.5]  # t = 0.75 < 1 unit
-    _write_parquet(
-        tmp2 / "lineitem.parquet",
-        {
-            "l_partkey": [1, 2],
-            "l_extendedprice": tiny,
-            "l_discount": [0.0] * 2,
-        },
-    )
-    got2 = {
-        r["p_partkey"]: r["share_ppm"]
-        for r in UNREGISTERED["part_revenue_share"].spark_fn(spark, str(tmp2)).collect()
-    }
-    want2 = {
-        k + 1: float(round(r * 1e6)) / 750_000.0 * 1_000_000.0
-        for k, r in enumerate(tiny)
-    }
-    assert got2 == want2
 
 
 def test_gini_staged_ppm_no_overflow_at_scale(spark):

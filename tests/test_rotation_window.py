@@ -1,15 +1,13 @@
 """Pin the archive-derived driver window (plans.__init__._rotate_driver_window).
 
-The window is no longer a hand-written table: it is the stalest
-WINDOW_SIZE non-retired registry entries under (newest driver row, name)
-order. These tests recompute that selection from the raw artifacts with
-independent code and require the importing package to agree, and pin the
-policy properties the hand tables used to encode:
+The window is the stalest WINDOW_SIZE registry entries under (newest
+driver row, name) order. These tests recompute that selection from the
+raw artifacts with independent code and require the importing package to
+agree, and pin the policy properties:
 
 - never-proven entries (first-ever rows) outrank any freshness refresh;
 - within a staleness tier, membership is deterministic (name order);
-- retired entries never occupy a window slot;
-- unregistered names are gone from BOTH registries.
+- the next round's due-list fits in one window.
 
 No Spark session needed — pure JSON + registry dicts.
 """
@@ -24,9 +22,7 @@ import re
 from retail_aws_etl_pipeline_spark.plans import (
     EXTRA_REGISTRY,
     REGISTRY,
-    RETIRED,
     WINDOW_SIZE,
-    _UNREGISTER,
 )
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -46,9 +42,7 @@ def _newest_independent() -> dict[str, int]:
 
 def test_window_is_the_stalest_tail():
     newest = _newest_independent()
-    names = [
-        n for n in set(REGISTRY) | set(EXTRA_REGISTRY) if n not in RETIRED
-    ]
+    names = set(REGISTRY) | set(EXTRA_REGISTRY)
     expected = set(
         sorted(names, key=lambda n: (newest.get(n, 0), n))[:WINDOW_SIZE]
     )
@@ -62,193 +56,24 @@ def test_first_ever_rows_outrank_refreshes():
     unproven = [
         n
         for n in set(REGISTRY) | set(EXTRA_REGISTRY)
-        if n not in RETIRED and newest.get(n, 0) == 0
+        if newest.get(n, 0) == 0
     ]
     missing = [n for n in unproven if n not in REGISTRY]
     assert not missing, f"never-proven entries outside the window: {missing}"
 
 
-def test_retired_entries_stay_out_of_the_window():
-    for name in RETIRED:
-        assert name not in REGISTRY, f"retired entry in window: {name}"
-
-
-def test_unregistered_names_are_gone():
-    for rnd, names in _UNREGISTER.items():
-        for name in names:
-            assert name not in REGISTRY and name not in EXTRA_REGISTRY, (
-                f"{name} (unregistered r{rnd}) still present"
-            )
-
-
-def test_unregistered_specs_stay_locally_addressable():
-    """Every swapped-out spec lands in the UNREGISTERED store with its
-    ORIGINAL oracle intact — the adversarial battery pins fixed bug
-    classes (e.g. event_props_stats' integral guard) against it, so the
-    store is load-bearing, not a convenience."""
-    from retail_aws_etl_pipeline_spark.plans import UNREGISTERED
-
-    for rnd, names in _UNREGISTER.items():
-        for name in names:
-            assert name in UNREGISTERED, f"{name} (r{rnd}) not in the store"
-    spec = UNREGISTERED["event_props_stats"]
-    assert spec.oracle and "json_valid" in spec.oracle
-    assert not set(UNREGISTERED) & (set(REGISTRY) | set(EXTRA_REGISTRY))
-
-
-def test_retired_entries_remain_locally_covered():
-    """Retirement removes the driver row, not the registration — the
-    local oracle suite must still see the entry."""
-    for name in RETIRED:
-        assert name in EXTRA_REGISTRY, f"retired entry dropped: {name}"
-
-
-#: Drafted swap targets per ROADMAP schedule, keyed by the SIMULATED round
-#: (the round whose due-list the forward simulation below computes). The
-#: r11 lesson (VERDICT r11 item #1): a hand-pinned list inside a dynamic
-#: simulation goes stale the moment the driver archives the next
-#: CORRECTNESS file and the simulation advances a round — so the pins are
-#: a dict keyed by round, extended each session when ROADMAP drafts the
-#: next schedule, and the test SKIPS rounds with no drafted schedule
-#: instead of failing at round open.
-#:
-#: value = (expected due-list size, drafted swap targets that must be due)
-_DRAFTED_SCHEDULES: dict[int, tuple[int, tuple[str, ...]]] = {
-    # ROADMAP r12 schedule: 49 r9-rows due (one free slot); the r11
-    # session registered the tranche against these targets.
-    12: (
-        49,
-        (
-            "token_chunk_dedup",
-            "bpe_pair_stats",
-            "sorted_neighborhood_pairs",
-            "bm25_query_scores",
-            "cross_source_dup_matrix",
-            "incremental_near_dup_pairs",
-        ),
-    ),
-    # ROADMAP r13 schedule (ROADMAP.md "r13 schedule"): the full 50-entry
-    # r10 cohort comes due (zero free slots — every r13 registration is a
-    # 1:1 swap drawn FROM the cohort); the drafted swap targets.
-    13: (
-        50,
-        (
-            "doc_token_stats",
-            "doc_fingerprints",
-            "median_order_by_priority",
-            "segment_buyers_intersect",
-            "supplier_nation_volume",
-            "top_revenue_suppliers",
-        ),
-    ),
-    # ROADMAP r14 schedule (PROVISIONAL, drafted r12 — pairing decisions
-    # defer to ADVICE r12/r13): the full 50-entry r11 cohort comes due;
-    # the seven remaining staged ops swap against these.
-    14: (
-        50,
-        (
-            "near_dup_clusters_star",
-            "corpus_vocabulary",
-            "event_props_stats",
-            "split_leakage_pairs",
-            "media_dims_probe",
-            "doc_repetition_ratio",
-            "boilerplate_ngram_ratio",
-        ),
-    ),
-    # ROADMAP r15 schedule (PROVISIONAL, drafted r13 — the first
-    # staged-from-scratch tranche after the queue empties at r14;
-    # pairing decisions defer to ADVICE r13/r14): the full 50-entry r12
-    # cohort comes due; the five newly-staged ops swap against these.
-    15: (
-        50,
-        (
-            "char_bigram_fluency",
-            "similarity_spectrum",
-            "lang_rebalanced_sample",
-            "token_chunk_dedup_corpus",
-            "order_value_histogram",
-            # pairing #6: hll_distinct_report enters; this cohort victim
-            # frees its window slot, and approx_sketch_stats (RETIRED —
-            # exempt from due-lists, so not listed here) leaves the
-            # registry outright, taking the retired count to zero.
-            "event_trigram_paths",
-        ),
-    ),
-    # ROADMAP r16 schedule (PROVISIONAL, drafted r14 — pairing decisions
-    # defer to ADVICE r14/r15): the full 50-entry r13 cohort comes due;
-    # the six staged ops (hll_overlap_report from r13 + the five staged
-    # r14) swap against these.
-    16: (
-        50,
-        (
-            "returned_order_priorities",
-            "monthly_revenue_yoy",
-            "customer_order_history",
-            "large_volume_orders",
-            "part_revenue_share",
-            "partkey_skew_report",
-        ),
-    ),
-    # ROADMAP r17 schedule (PROVISIONAL, drafted r15 — pairing decisions
-    # defer to ADVICE r15/r16): the full 50-entry r14 cohort comes due;
-    # the six staged r17 ops (the two r14 sketch seeds + the four built
-    # at r15) swap against these. Twin pins:
-    # tests/test_r17_twin_equivalence.py.
-    17: (
-        50,
-        (
-            "fuzzy_part_names",  # <- countmin_topk_report
-            "length_bucket_padding_stats",  # <- hash_sample_quantile_report
-            "user_rolling_hour",  # <- streamed_hll_snapshot_report
-            "quality_top_half_per_lang",  # <- quality_gate_agreement_report
-            "grouping_sets_revenue",  # <- zipf_fit_report
-            "embedding_norm_stats",  # <- vocab_coverage_report
-        ),
-    ),
-    # ROADMAP r18 schedule (PROVISIONAL, drafted r16 — pairing decisions
-    # defer to ADVICE r16/r17): the full 50-entry r15 cohort comes due;
-    # the five r15-staged seeds swap against these. Twin pins:
-    # tests/test_r18_twin_equivalence.py.
-    18: (
-        50,
-        (
-            "corpus_snapshot_diff",  # <- streamed_cms_topk_report
-            "term_drift_report",  # <- token_drift_psi_report
-            "sketch_accuracy_stats",  # <- streamed_bottomk_quantile_report
-            "exif_orientation_probe",  # <- tiff_dims_probe
-            "normalized_dedup_gain",  # <- source_priority_dedup_report
-        ),
-    ),
-}
-
-
-def test_next_due_list_matches_the_drafted_schedule():
+def test_next_due_list_fits_the_window():
     """Forward simulation of the next rotation: pretend the driver just
     archived a CORRECTNESS row for every current window entry (that is
     what window membership means), then check the NEXT round's due-list
-    is exactly what ROADMAP's drafted schedule for that round assumes —
-    expected size, containing every drafted swap target. Catches
-    registration math errors a round early. Round-aware: the simulated
-    round advances when the driver archives a new CORRECTNESS file, and
-    the pins travel with it via _DRAFTED_SCHEDULES."""
-    import pytest
-
-    from retail_aws_etl_pipeline_spark.plans import (
-        EXTRA_REGISTRY,
-        REGISTRY,
-        RETIRED,
-        WINDOW_SIZE,
-    )
-
+    fits in one window — otherwise a registration displaced due entries
+    and the staleness SLO breaks a round later."""
     newest = _newest_independent()
     upcoming = max(newest.values()) + 1
     simulated = dict(newest)
     for name in REGISTRY:
         simulated[name] = upcoming
-    names = [
-        n for n in set(REGISTRY) | set(EXTRA_REGISTRY) if n not in RETIRED
-    ]
+    names = set(REGISTRY) | set(EXTRA_REGISTRY)
     nxt = upcoming + 1
     floor = nxt - 3 + 1
     due = sorted(n for n in names if simulated.get(n, 0) < floor)
@@ -256,9 +81,3 @@ def test_next_due_list_matches_the_drafted_schedule():
         f"r{nxt} due-list ({len(due)}) exceeds the window — the r{upcoming} "
         "registrations displaced due entries"
     )
-    if nxt not in _DRAFTED_SCHEDULES:
-        pytest.skip(f"no drafted schedule for r{nxt} yet — draft it in ROADMAP")
-    expected_size, swap_targets = _DRAFTED_SCHEDULES[nxt]
-    assert len(due) == expected_size, due
-    for swap_target in swap_targets:
-        assert swap_target in due, f"{swap_target} not in the r{nxt} due-list"

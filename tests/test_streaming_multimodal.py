@@ -37,14 +37,15 @@ def events_dir(spark, tmp_path_factory):
 def test_hourly_rollup_stream_matches_batch(spark, events_dir):
     stream = hourly_rollup_stream(events_stream(spark, events_dir))
     got = run_stream_to_memory(stream, "rollup_out", output_mode="complete")
-    # hourly_event_rollup was unregistered at r9 (streamed_hourly_rollup
-    # keeps the identical oracle registered); the batch function remains
-    # the stream's equivalence baseline here.
-    from retail_aws_etl_pipeline_spark.plans.analytics import (
-        hourly_event_rollup,
-    )
+    # Batch twin: the same tumbling 1-hour window over the events table.
+    from retail_aws_etl_pipeline_spark.plans.queries import dec_sum
 
-    batch = hourly_event_rollup(spark, SF_SMOKE)
+    batch = (
+        load_tables(spark, SF_SMOKE, ["events"])["events"]
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"), dec_sum(F.col("value")).alias("total_value"))
+        .select(F.col("w.start").alias("window_start"), "event_type", "n", "total_value")
+    )
     g = {(r["window_start"], r["event_type"]): (r["n"], r["total_value"]) for r in got.collect()}
     b = {(r["window_start"], r["event_type"]): (r["n"], r["total_value"]) for r in batch.collect()}
     assert set(g) == set(b)
@@ -205,49 +206,6 @@ def test_png_decode_kernel(spark):
         assert (r["width"], r["height"], r["n_units"]) == (MM.PNG_W, MM.PNG_H, n)
         assert r["byte_sum"] == expect_sum
         assert r["c0_sum"] == expect_c0
-
-
-def test_wav_roundtrip_and_chunk_walk():
-    """encode→decode identity, and the parser walks past an unknown
-    odd-length chunk inserted before fmt/data (even-byte alignment)."""
-    import numpy as np
-
-    s = (np.arange(100, dtype=np.int64) * 997 % 65536 - 32768).astype(np.int16)
-    buf = MM.encode_wav(s, sample_rate=22050)
-    rate, ch, out = MM.decode_wav(buf)
-    assert (rate, ch) == (22050, 1)
-    assert (out == s).all()
-    # splice an unknown 3-byte chunk right after the WAVE id
-    alien = b"LIST" + (3).to_bytes(4, "little") + b"abc" + b"\x00"
-    spliced = buf[:12] + alien + buf[12:]
-    rate2, _ch2, out2 = MM.decode_wav(spliced)
-    assert rate2 == 22050 and (out2 == s).all()
-
-
-def test_synth_media_decode_kernels(spark):
-    """The distributed path: synth → real decode kernels, checked against
-    the same integer formulas computed directly."""
-    import numpy as np
-
-    ids = spark.range(5).select(F.col("id").alias("doc_id"))
-    img = MM.synth_media(ids, "doc_id", "image")
-    stats = {r["media_id"]: r for r in MM.decode_bmp_stats(img).collect()}
-    for mid in range(5):
-        flat = MM._bmp_bytes_for(mid).reshape(-1).astype(np.int64)
-        r = stats[mid]
-        assert (r["width"], r["height"], r["n_units"]) == (MM.BMP_W, MM.BMP_H, flat.size)
-        assert r["byte_sum"] == flat.sum()
-        assert r["c0_sum"] == flat[0::3].sum()
-
-    aud = MM.synth_media(ids, "doc_id", "audio")
-    wstats = {r["media_id"]: r for r in MM.decode_wav_stats(aud).collect()}
-    for mid in range(5):
-        s = MM._wav_samples_for(mid).astype(np.int64)
-        r = wstats[mid]
-        assert r["sample_rate"] == MM.WAV_RATE
-        assert r["n_units"] == len(s)
-        assert r["abs_sum"] == np.abs(s).sum()
-        assert r["max_sample"] == s.max()
 
 
 def test_resize_and_frame_sampling(spark):

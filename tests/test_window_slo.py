@@ -4,8 +4,8 @@ The driver hash-checks only the 50 ``REGISTRY`` entries per round; every
 other registry query relies on its archived ``CORRECTNESS_r*.json`` row
 plus the local sf0.01 oracle run.  The COVERAGE.md §rotation policy says
 no entry's newest hard driver row may be older than 3 rounds — with a
-133-entry registry and a 50-slot window that is exactly the full-swap
-cadence (ceil(133/50) = 3), so the SLO holds iff every rotation promotes
+150-entry registry and a 50-slot window that is exactly the full-swap
+cadence (ceil(150/50) = 3), so the SLO holds iff every rotation promotes
 the stalest tail.  This test reads the archive and fails the build when
 rotation upkeep lapses, instead of leaving it to prose.
 
@@ -21,11 +21,9 @@ import re
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-#: Canonical definitions live next to the rotation they govern.
-from retail_aws_etl_pipeline_spark.plans import (  # noqa: E402
-    MAX_STALENESS_ROUNDS,
-    RETIRED,
-)
+#: Newest driver row may be at most this many rounds behind the upcoming
+#: round (current REGISTRY membership counts as the upcoming round's row).
+MAX_STALENESS_ROUNDS = 3
 
 
 def _archive() -> tuple[int, dict[str, int]]:
@@ -56,8 +54,6 @@ def test_every_registry_entry_has_a_fresh_driver_row():
 
     violations = []
     for name in sorted(set(REGISTRY) | set(EXTRA_REGISTRY)):
-        if name in RETIRED:
-            continue
         effective = upcoming if name in REGISTRY else newest.get(name, 0)
         if effective < floor:
             violations.append(
@@ -82,23 +78,12 @@ def test_window_is_exactly_the_driver_capacity():
 def test_registry_size_within_rotation_budget():
     """COVERAGE.md §rotation: registry growth is capped so the 3-round SLO
     stays satisfiable — 50 slots/round × 3 rounds = 150 DRIVER-CHECKABLE
-    entries max (the policy's own wording). RETIRED entries are exempt
-    from the SLO (never auto-promoted, no driver row needed), so they
-    don't consume rotation budget — they're capped separately below so
-    the exemption can't become a leak."""
-    from retail_aws_etl_pipeline_spark.plans import (
-        EXTRA_REGISTRY,
-        REGISTRY,
-        RETIRED,
-    )
+    entries max (the policy's own wording)."""
+    from retail_aws_etl_pipeline_spark.plans import EXTRA_REGISTRY, REGISTRY
 
-    names = set(REGISTRY) | set(EXTRA_REGISTRY)
-    checkable = len([n for n in names if n not in RETIRED])
+    checkable = len(set(REGISTRY) | set(EXTRA_REGISTRY))
     assert checkable <= 150, (
         f"registry has {checkable} driver-checkable entries; >150 cannot "
         "all get a driver row within 3 rounds at 50/round — replace a "
         "weakest variant instead"
     )
-    # Retirement is the exception, not a second registry: each retired
-    # entry needs its documented local gate, and the list stays tiny.
-    assert len(RETIRED) <= 3, sorted(RETIRED)
