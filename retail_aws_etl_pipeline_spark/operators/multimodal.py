@@ -701,28 +701,6 @@ def _tiff_header_bytes(w: int, h: int, endian: str, wide_types: bool) -> bytes:
     return order + u(42, 2) + u(8, 4) + u(4, 2) + entries + u(0, 4)
 
 
-def synth_tiff_media(ids: DataFrame, id_col: str) -> DataFrame:
-    """(id) → MEDIA_SCHEMA rows cycling the four TIFF layout corners by
-    id (little/big endian × SHORT/LONG dims types), each a real
-    header-valid payload with per-id dims (``_probe_dims_for`` — the
-    shared formula, so the one id-formula oracle covers this probe
-    too). meta dims stay NULL: the dims exist only inside the bytes."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                w, h = _probe_dims_for(mid)
-                payload = _tiff_header_bytes(
-                    w, h, ("little", "big")[mid % 2], bool((mid // 2) % 2)
-                )
-                rows.append((mid, "image", payload, ("tiff", None, None, None, None)))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
-
-    return ids.select(id_col).mapInPandas(kernel, schema=MEDIA_SCHEMA)
-
-
 #: Dims formulas for the synthetic probe corpus (shared with the oracle —
 #: the oracle recomputes these from the id, never seeing the payloads).
 def _probe_dims_for(mid: int) -> tuple[int, int]:

@@ -319,130 +319,3 @@ def hll_overlap_split(df: DataFrame, key: Column, is_a: Column) -> DataFrame:
         F.col("__e_u").alias("est_union"),
         F.expr("__e_a + __e_b - __e_u").alias("est_overlap"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Count-min sketch (Cormode & Muthukrishnan 2005) — the FREQUENCY member
-# of the deterministic sketch family (HLL above covers distincts,
-# bottomk_sample below covers quantiles). Same engine-portable md5
-# discipline: every cell is an exact int64 SUM, so the sketch — and any
-# estimate read from it — hash-matches a relational oracle.
-# ---------------------------------------------------------------------------
-
-#: Sketch geometry: d independent hash rows x w columns. Cells at rest =
-#: d*w = 1024 rows; expected overcount per estimate ~ N/w (point query
-#: err <= 2N/w with prob 1 - (1/2)^d).
-CMS_DEPTH = 4
-CMS_WIDTH = 256
-
-
-def cms_bucket(key: Column, row: int) -> Column:
-    """Column 0..CMS_WIDTH-1 for hash row ``row``: first 2 md5 hex chars
-    of the seeded key — the HLL slicing discipline, one seed per row."""
-    return (
-        F.conv(F.substring(F.md5(F.concat(F.lit(f"cm{row}:"), key)), 1, 2), 16, 10)
-        .cast("long")
-    )
-
-
-def cms_cells(counted: DataFrame, key_col: str, n_col: str) -> DataFrame:
-    """(row, col, cell) — at most CMS_DEPTH * CMS_WIDTH rows — from a
-    PRE-COUNTED (key, n) frame (count first, then sketch: the vocab
-    groupBy is the one corpus-scale exchange; the sketch build is a
-    vocab-scale projection + a <= d*w-row reduce). Cells are exact int64
-    sums, so the merge rule is elementwise + (see :func:`cms_merge`).
-
-    NULL keys are excluded inside the kernel (the hll_registers
-    contract): md5(NULL) would silently drop the seeded concat to NULL
-    and the row would land nowhere on one engine, somewhere on another.
-    """
-    df = counted.filter(F.col(key_col).isNotNull())
-    legs = F.array(
-        *[
-            F.struct(
-                F.lit(r).cast("long").alias("row"),
-                cms_bucket(F.col(key_col), r).alias("col"),
-            )
-            for r in range(CMS_DEPTH)
-        ]
-    )
-    return (
-        df.select(F.col(n_col).alias("__n"), F.explode(legs).alias("g"))
-        .groupBy(F.col("g.row").alias("row"), F.col("g.col").alias("col"))
-        .agg(F.sum("__n").cast("long").alias("cell"))
-    )
-
-
-def cms_merge(cells_a: DataFrame, cells_b: DataFrame) -> DataFrame:
-    """Merge two cell tables: elementwise SUM — sketch(A) + sketch(B) ==
-    sketch(A ⊎ B) bit-identically (sum is associative/commutative), so
-    shards sketch independently and combine with a <= d*w-row union."""
-    return (
-        cells_a.unionByName(cells_b)
-        .groupBy("row", "col")
-        .agg(F.sum("cell").cast("long").alias("cell"))
-    )
-
-
-def cms_estimates(cells: DataFrame, keys: DataFrame, key_col: str) -> DataFrame:
-    """(key, est_n) for each probe key: min over the d rows of the
-    addressed cells. ``keys`` is a bounded probe frame (broadcast); the
-    join touches d rows per key. Absent cells read 0 (a key the sketch
-    never saw estimates 0 only if some row's cell is empty)."""
-    probes = keys.select(
-        F.col(key_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).cast("long").alias("row"),
-                        cms_bucket(F.col(key_col), r).alias("col"),
-                    )
-                    for r in range(CMS_DEPTH)
-                ]
-            )
-        ).alias("g"),
-    ).select(key_col, F.col("g.row").alias("row"), F.col("g.col").alias("col"))
-    # Broadcast the CELLS side: Spark cannot build a BroadcastHashJoin
-    # on the stream (left) side of a left-outer join, so hinting the
-    # probes would be silently ignored.  The cells table is bounded at
-    # d*w rows by construction, always broadcastable.
-    return (
-        probes.join(F.broadcast(cells), ["row", "col"], "left")
-        .groupBy(key_col)
-        .agg(F.min(F.coalesce(F.col("cell"), F.lit(0))).cast("long").alias("est_n"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# Bottom-k hash sample (Cohen & Kaplan 2007) — the QUANTILE member: the
-# k rows with the smallest md5(row-key) are a uniform, DETERMINISTIC,
-# MERGEABLE sample (bottomk(A ∪ B) == bottomk(bottomk(A) ∪ bottomk(B))),
-# so empirical quantiles read from it are hash-gateable end to end.
-# ---------------------------------------------------------------------------
-
-#: Sample size: quantile error ~ 1/sqrt(k) in rank space.
-BOTTOMK_K = 256
-
-
-def bottomk_sample(
-    df: DataFrame, row_key: Column, value: Column, k: int = BOTTOMK_K
-) -> DataFrame:
-    """(h, v) — the k rows with the smallest md5 hex of ``row_key``
-    (ties on the full 32-hex string are ties on the key itself when the
-    key is unique). orderBy(...).limit(k) plans TakeOrderedAndProject —
-    a distributed per-partition top-k + a k-row driver merge, never a
-    global sort.
-
-    NULL row keys are excluded inside the kernel (the hll_registers
-    contract): md5(NULL) is NULL, and the two engines ORDER NULLs at
-    opposite ends (Spark first, DuckDB last), so an unkeyed row would
-    silently displace a real sample member on exactly one engine.
-    Callers wanting every row sampled should make the key total
-    (COALESCE sentinel parts) before calling."""
-    return (
-        df.filter(row_key.isNotNull())
-        .select(F.md5(row_key.cast("string")).alias("h"), value.alias("v"))
-        .orderBy(F.asc("h"), F.asc("v"))
-        .limit(k)
-    )

@@ -8313,1097 +8313,12 @@ def langid_confusion_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-# ---------------------------------------------------------------------------
-# STAGED r17 seeds (built r14, beyond the r16 tranche): the remaining two
-# members of the deterministic sketch family — frequency (count-min) and
-# quantiles (bottom-k hash sample) — completing the arc the HLL started:
-# every sketch primitive a 100 TB pipeline actually uses (distinct /
-# frequency / quantile), each with an integer-exact, hash-gateable
-# estimate. Pairing decided at r16/r17 open against the then-current
-# ADVICE; until then they carry the full local battery
-# (tests/test_staged_r17_seeds.py).
-# ---------------------------------------------------------------------------
-
-#: Probe set size for the count-min audit (the exact top-K heavy hitters).
-CMS_TOPK = 16
-
-
-def _countmin_oracle() -> str:
-    """Oracle for :func:`countmin_topk_report`: the same seeded md5
-    column addressing, exact int64 cell sums, and min-over-rows point
-    reads, re-derived relationally."""
-    from retail_aws_etl_pipeline_spark.operators.sketch import CMS_DEPTH
-
-    def col_sql(row: int) -> str:
-        seed = f"'cm{row}:' || tok"
-        return f"CAST(('0x' || substr(md5({seed}), 1, 2)) AS BIGINT)"
-
-    legs = " UNION ALL ".join(
-        f"SELECT CAST({r} AS BIGINT) AS row,"
-        f" {col_sql(r)} AS col, n FROM cm_vocab"
-        for r in range(CMS_DEPTH)
-    )
-    probes = " UNION ALL ".join(
-        f"SELECT tok, n, CAST({r} AS BIGINT) AS row,"
-        f" {col_sql(r)} AS col FROM cm_topk"
-        for r in range(CMS_DEPTH)
-    )
-    return f"""
-    WITH cm_tok AS (
-        SELECT unnest(string_split(text, ' ')) AS tok FROM documents
-    ),
-    cm_vocab AS (
-        SELECT tok, CAST(COUNT(*) AS BIGINT) AS n FROM cm_tok GROUP BY tok
-    ),
-    cm_cells AS (
-        SELECT row, col, CAST(SUM(n) AS BIGINT) AS cell
-        FROM ({legs}) GROUP BY row, col
-    ),
-    cm_topk AS (
-        SELECT tok, n FROM cm_vocab ORDER BY n DESC, tok ASC LIMIT {CMS_TOPK}
-    ),
-    cm_probe AS ({probes})
-    SELECT p.tok, p.n AS exact_n,
-           CAST(MIN(COALESCE(c.cell, 0)) AS BIGINT) AS est_n,
-           CAST(MIN(COALESCE(c.cell, 0)) - p.n AS BIGINT) AS overcount
-    FROM cm_probe p LEFT JOIN cm_cells c ON c.row = p.row AND c.col = p.col
-    GROUP BY p.tok, p.n
-    ORDER BY exact_n DESC, tok ASC
-"""
-
-
-COUNTMIN_TOPK_ORACLE = _countmin_oracle()
-
-
-def countmin_topk_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED r17 seed: count-min heavy-hitter audit (Cormode &
-    Muthukrishnan 2005) — the FREQUENCY member of the deterministic
-    sketch family. The corpus token stream is counted once (the one
-    corpus-scale exchange), sketched into d x w = 1024 exact int64
-    cells, and the exact top-{CMS_TOPK} tokens are read back from the
-    sketch: (token, exact_n, est_n, overcount). overcount >= 0 is
-    STRUCTURAL (count-min never undercounts — pinned by test); expected
-    overcount ~ N/w. The 100 TB shape is the point: per-shard sketches
-    merge by elementwise + (<= 1024 rows each at rest) and answer any
-    point-frequency question later without rescanning — the estimate
-    itself sits under the hash gate like the HLL's."""
-    from retail_aws_etl_pipeline_spark.operators import sketch as SK
-
-    t = load_tables(spark, sf_dir, ["documents"])
-    vocab = (
-        t["documents"]
-        .select(F.explode(F.split("text", " ")).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .persist()
-    )
-    cells = SK.cms_cells(vocab, "tok", "n")
-    topk = vocab.orderBy(F.desc("n"), F.asc("tok")).limit(CMS_TOPK)
-    est = SK.cms_estimates(cells, topk, "tok")
-    out = (
-        topk.join(est, "tok")
-        .select(
-            "tok",
-            F.col("n").alias("exact_n"),
-            "est_n",
-            (F.col("est_n") - F.col("n")).cast("long").alias("overcount"),
-        )
-        .orderBy(F.desc("exact_n"), F.asc("tok"))
-    )
-    from retail_aws_etl_pipeline_spark.operators.caching import retaining
-
-    # vocab was persisted HERE (not tagged by an upstream operator), so
-    # tag the frame itself — retained_caches(vocab) is always [] and
-    # would leak the persisted blocks past release_caches(out).
-    return retaining(out, vocab)
-
-
-#: Quantile percents the hash-sample audit reads (percentile_disc
-#: convention: smallest value whose cume rank reaches q).
-HASH_SAMPLE_QS = ((25, 4, 1), (50, 2, 1), (75, 4, 3), (90, 10, 9))
-
-
-def _hash_sample_oracle() -> str:
-    """Oracle for :func:`hash_sample_quantile_report`: the same bottom-k
-    selection (ORDER BY md5 hex), the same integer-exact cum-histogram
-    discrete quantiles on both the sample and the full column."""
-    from retail_aws_etl_pipeline_spark.operators.sketch import BOTTOMK_K
-
-    def qcols(src: str, suffix: str) -> str:
-        return ", ".join(
-            f"(SELECT MIN(CASE WHEN cum * {mul} >= {rhs} * n THEN v END)"
-            f" FROM {src}) AS q{q}_{suffix}"
-            for q, mul, rhs in HASH_SAMPLE_QS
-        )
-
-    return f"""
-    WITH hs_all AS (
-        SELECT md5(COALESCE(CAST(l_orderkey AS VARCHAR), '~') || ':'
-                   || COALESCE(CAST(l_linenumber AS VARCHAR), '~')) AS h,
-               l_extendedprice AS v
-        FROM lineitem WHERE l_extendedprice IS NOT NULL
-    ),
-    hs_s AS (SELECT v FROM hs_all ORDER BY h ASC, v ASC LIMIT {BOTTOMK_K}),
-    hs_sc AS (
-        SELECT v, SUM(c) OVER (ORDER BY v) AS cum,
-               (SELECT CAST(COUNT(*) AS BIGINT) FROM hs_s) AS n
-        FROM (SELECT v, CAST(COUNT(*) AS BIGINT) AS c FROM hs_s GROUP BY v)
-    ),
-    hs_fc AS (
-        SELECT v, SUM(c) OVER (ORDER BY v) AS cum,
-               (SELECT CAST(COUNT(*) AS BIGINT) FROM hs_all) AS n
-        FROM (SELECT v, CAST(COUNT(*) AS BIGINT) AS c FROM hs_all GROUP BY v)
-    )
-    SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM hs_all) AS n_rows,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM hs_s) AS sample_k,
-           {qcols('hs_sc', 'est')},
-           {qcols('hs_fc', 'exact')}
-"""
-
-
-HASH_SAMPLE_ORACLE = _hash_sample_oracle()
-
-
-def hash_sample_quantile_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED r17 seed: bottom-k hash-sample quantile audit (Cohen &
-    Kaplan 2007) — the QUANTILE member of the deterministic sketch
-    family. The k rows with the smallest md5(row-key) are a uniform,
-    deterministic, MERGEABLE sample; discrete (element-picking)
-    quantiles read from it sit next to the exact full-column quantiles
-    in one row: (n_rows, sample_k, q{{25,50,75,90}}_est/_exact). Both
-    legs use the integer-exact cum-histogram rank thresholds
-    (sketch_accuracy_stats' discipline — no percentile interpolation
-    floats). 100 TB shape: the sample is a TakeOrderedAndProject
-    (per-partition top-k + a k-row merge, never a global sort), shards'
-    samples re-merge by re-taking the bottom k, and the exact leg —
-    needed only for the audit — is one value-domain histogram."""
-    from pyspark.sql import Window as W
-
-    from retail_aws_etl_pipeline_spark.operators import sketch as SK
-
-    t = load_tables(spark, sf_dir, ["lineitem"])
-    # NULL values are excluded on both engines (standard quantile
-    # semantics — SQL percentile aggregates ignore NULLs); the row key
-    # is made TOTAL with COALESCE sentinels so dirty rows with NULL join
-    # keys still participate in the sample (the engines order NULL
-    # hashes at opposite ends — the kernel refuses NULL keys outright).
-    li = t["lineitem"].filter(F.col("l_extendedprice").isNotNull())
-    sample = SK.bottomk_sample(
-        li, _hash_sample_row_key(), F.col("l_extendedprice")
-    )
-    return _hash_sample_frame(li, sample)
-
-
-#: The total row key as a SQL string — shared by the batch kernel call
-#: and the streaming foreachBatch path (COALESCE sentinels so dirty rows
-#: with NULL join keys still participate — the engines order NULL hashes
-#: at opposite ends, so the kernel refuses NULL keys). A string, not a
-#: Column: Column construction needs an active SparkContext, which does
-#: not exist at module import.
-HASH_SAMPLE_ROW_KEY_SQL = (
-    "concat(coalesce(CAST(l_orderkey AS STRING), '~'), ':',"
-    " coalesce(CAST(l_linenumber AS STRING), '~'))"
-)
-
-
-def _hash_sample_row_key():
-    """The shared row key as a Column (built lazily)."""
-    return F.expr(HASH_SAMPLE_ROW_KEY_SQL)
-
-
-def _hash_sample_frame(li: DataFrame, sample: DataFrame) -> DataFrame:
-    """Assemble the one-row (n_rows, sample_k, q*_est, q*_exact) audit
-    frame from the filtered lineitem and a (h, v) bottom-k sample —
-    shared by the batch and streamed quantile-sketch entries (the
-    oracle string is shared verbatim, so the assembly must be too)."""
-    from pyspark.sql import Window as W
-
-    def disc_quantiles(values: DataFrame, suffix: str) -> DataFrame:
-        hist = values.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("c"))
-        w = W.orderBy("v").rowsBetween(W.unboundedPreceding, 0)
-        cum = hist.withColumn("cum", F.sum("c").over(w))
-        tot = hist.agg(F.sum("c").cast("long").alias("n"))
-        return (
-            cum.crossJoin(F.broadcast(tot))
-            .agg(
-                *[
-                    F.min(
-                        F.when(
-                            F.col("cum") * mul >= rhs * F.col("n"), F.col("v")
-                        )
-                    ).alias(f"q{q}_{suffix}")
-                    for q, mul, rhs in HASH_SAMPLE_QS
-                ]
-            )
-        )
-
-    est = disc_quantiles(sample.select("v"), "est")
-    exact = disc_quantiles(
-        li.select(F.col("l_extendedprice").alias("v")), "exact"
-    )
-    counts = li.agg(F.count(F.lit(1)).cast("long").alias("n_rows")).crossJoin(
-        F.broadcast(
-            sample.agg(F.count(F.lit(1)).cast("long").alias("sample_k"))
-        )
-    )
-    return (
-        counts.crossJoin(F.broadcast(est))
-        .crossJoin(F.broadcast(exact))
-        .select(
-            "n_rows",
-            "sample_k",
-            "q25_est",
-            "q25_exact",
-            "q50_est",
-            "q50_exact",
-            "q75_est",
-            "q75_exact",
-            "q90_est",
-            "q90_exact",
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# STAGED r17 tranche (built r15, completing the seeds to the ~6/round
-# rate): the streamed-sketch registry entry (stream==batch sketch algebra
-# under the hash gate), the quality-gate agreement census (Cohen's kappa
-# between the registered C4 and Gopher batteries), and the two
-# rank-spectrum audits over the word census (Zipf fit, vocab coverage)
-# sharing the factored _distributed_rank kernel. Pairing decided at
-# r16/r17 open against the then-current ADVICE; until then these carry
-# the full local battery (tests/test_staged_r17.py).
-# ---------------------------------------------------------------------------
-
-
-def _streamed_hll_oracle() -> str:
-    """Oracle for :func:`streamed_hll_snapshot_report`: the from-scratch
-    batch HLL re-derivation (the SAME shared block hll_distinct_report
-    uses for this target — stream==batch is exactly the claim), plus the
-    per-wave distinct-bucket recount proving the delta table really is
-    per-batch partials (wave = event_id parity, the staging split)."""
-    block = _hll_metric_oracle("events.user_id", "events", "user_id")
-    return f"""
-    SELECT o.*, w.n_delta_rows FROM ({block}) o CROSS JOIN (
-        SELECT CAST(SUM(nb) AS BIGINT) AS n_delta_rows FROM (
-            SELECT event_id % 2 AS wave,
-                   COUNT(DISTINCT CAST(('0x' || substr(
-                       md5(CAST(user_id AS VARCHAR)), 1, 2)) AS BIGINT)) AS nb
-            FROM events WHERE user_id IS NOT NULL
-            GROUP BY event_id % 2
-        )
-    ) w
-    """
-
-
-STREAMED_HLL_SNAPSHOT_ORACLE = _streamed_hll_oracle()
-
-
-def streamed_hll_snapshot_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED r17: incremental sketch maintenance under the driver hash
-    gate — the fourth streaming guarantee in the window (after dedup
-    state, windowed completeness, and partial-aggregate reassembly):
-    SKETCH-ALGEBRA reassembly. Events arrive in two disjoint waves
-    (event_id parity, staged as separate files, maxFilesPerTrigger=1 →
-    separate micro-batches); each batch sketches ONLY its own rows into
-    a ≤256-row register partition (streaming/streams.py::
-    hll_register_stream); the snapshot's per-bucket MAX fold must equal
-    the one-shot batch sketch BIT-IDENTICALLY (MAX-merge is the sketch
-    algebra), so the estimate hash-matches the from-scratch SQL
-    re-derivation — the same shared oracle block as hll_distinct_report.
-    n_delta_rows additionally pins that the delta table is genuinely
-    per-batch partials (sum of per-wave distinct buckets), not a
-    one-shot sketch. 100 TB shape: the stream pays one scan per batch
-    at arrival; every later cardinality read is a ≤(batches×256)-row
-    fold — never a corpus rescan."""
-    import shutil
-    import tempfile
-
-    from retail_aws_etl_pipeline_spark.operators import sketch as SK
-    from retail_aws_etl_pipeline_spark.streaming.streams import (
-        hll_register_stream,
-        read_hll_snapshot,
-    )
-
-    events = load_tables(spark, sf_dir, ["events"])["events"]
-    keyed = events.select("event_id", "user_id")
-    staging = tempfile.mkdtemp(prefix="streamed_hll_src_")
-    delta = tempfile.mkdtemp(prefix="streamed_hll_delta_")
-    ckpt = tempfile.mkdtemp(prefix="streamed_hll_ckpt_")
-    try:
-        for i in range(2):  # disjoint waves -> separate micro-batches
-            (
-                keyed.filter(
-                    F.pmod(F.coalesce(F.col("event_id"), F.lit(0)), F.lit(2)) == i
-                )
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(staging)
-            )
-        stream = (
-            spark.readStream.schema(keyed.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staging)
-        )
-        q = hll_register_stream(stream, "user_id", delta_dir=delta, checkpoint_dir=ckpt)
-        q.awaitTermination()
-        # bounded driver scalar: the delta table is ≤ batches × 256 rows
-        n_delta = spark.read.parquet(delta).count()
-        snap = read_hll_snapshot(spark, delta).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(delta, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    est = SK.hll_estimate(snap)
-    exact = events.filter(F.col("user_id").isNotNull()).agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.count_distinct(F.col("user_id")).cast("long").alias("exact_distinct"),
-    )
-    return exact.crossJoin(F.broadcast(est)).select(
-        F.lit("events.user_id").alias("metric"),
-        "n_rows",
-        "exact_distinct",
-        "hll_estimate",
-        F.expr(
-            "abs(hll_estimate - exact_distinct) * 1000000L"
-            " div greatest(exact_distinct, 1L)"
-        ).alias("err_ppm"),
-        "v_zero_registers",
-        "rc_max_register",
-        F.lit(n_delta).cast("long").alias("n_delta_rows"),
-    )
-
-
-#: Oracle for :func:`quality_gate_agreement_report`. Both gates come from
-#: the SAME shared fragments their registered oracles are built from
-#: (_gopher_m_cte/_GOPHER_PASS_SQL, _c4_page_cte/_C4_PAGE_KEPT_SQL), so
-#: the agreement census can never drift from the gate definitions.
-QUALITY_GATE_AGREEMENT_ORACLE = f"""
-    WITH {_gopher_m_cte("qa_gb", "qa_gm")},
-    qa_g AS (SELECT doc_id, {_GOPHER_PASS_SQL} AS g FROM qa_gm),
-    {_c4_page_cte("qa_cb", "qa_cc")},
-    qa_c AS (SELECT doc_id, {_C4_PAGE_KEPT_SQL} AS c FROM qa_cc),
-    qa_j AS (
-        SELECT d.source, g.g, c.c
-        FROM documents d
-        JOIN qa_g g ON g.doc_id = d.doc_id
-        JOIN qa_c c ON c.doc_id = d.doc_id
-        WHERE d.source IS NOT NULL
-    ),
-    qa_s AS (
-        SELECT source,
-               CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(CASE WHEN g AND c THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_both_keep,
-               CAST(SUM(CASE WHEN NOT g AND NOT c THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_both_drop,
-               CAST(SUM(CASE WHEN g AND NOT c THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_gopher_only,
-               CAST(SUM(CASE WHEN NOT g AND c THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_c4_only
-        FROM qa_j GROUP BY source
-    ),
-    qa_p AS (
-        SELECT *,
-               (n_both_keep + n_both_drop) * 1000000 // n_docs AS po_ppm,
-               ((n_both_keep + n_gopher_only) * (n_both_keep + n_c4_only)
-                + (n_both_drop + n_c4_only) * (n_both_drop + n_gopher_only))
-                   * 1000000 // (n_docs * n_docs) AS pe_ppm
-        FROM qa_s
-    )
-    SELECT source, n_docs, n_both_keep, n_both_drop, n_gopher_only, n_c4_only,
-           CAST(po_ppm AS BIGINT) AS po_ppm,
-           CAST(pe_ppm AS BIGINT) AS pe_ppm,
-           CAST((po_ppm - pe_ppm) * 1000000
-                // GREATEST(1000000 - pe_ppm, 1) AS BIGINT) AS kappa_ppm
-    FROM qa_p ORDER BY source
-"""
-
-
-def quality_gate_agreement_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED r17: inter-gate agreement census — Cohen's kappa (in ppm)
-    between the two registered document gates (C4 page_kept, Gopher
-    gopher_pass), per source. Running several quality gates and
-    reconciling them is standard curation practice (Dolma, FineWeb ship
-    multiple filter verdicts per doc); the kappa census is the QA view
-    that says whether two gates agree beyond chance — a gate pair with
-    near-zero kappa is measuring different things and their intersection
-    needs review before it gates 100 TB. Every quantity is integer
-    (observed/chance agreement in ppm, kappa via single-floor divisions;
-    both engines truncate integer division toward zero, verified r15,
-    so the possibly-negative kappa numerator is portable). Envelope:
-    pe's n² term needs n_docs < 3.0e9 per source — shard the census by
-    epoch above that. Scale shape: BOTH gate batteries are scan-side
-    projections computed in ONE chained pass (no join between gates),
-    then a single groupBy(source) whose output is |sources| rows. NULL
-    source is excluded (the manifest discipline)."""
-    t = load_tables(spark, sf_dir, ["documents"])
-    docs = t["documents"].filter(F.col("source").isNotNull())
-    flagged = TX.c4_clean_flags(TX.gopher_quality_flags(docs))
-    g, c = F.col("gopher_pass"), F.col("page_kept")
-    s = flagged.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum((g & c).cast("long")).cast("long").alias("n_both_keep"),
-        F.sum(((~g) & (~c)).cast("long")).cast("long").alias("n_both_drop"),
-        F.sum((g & (~c)).cast("long")).cast("long").alias("n_gopher_only"),
-        F.sum(((~g) & c).cast("long")).cast("long").alias("n_c4_only"),
-    )
-    p = s.withColumn(
-        "po_ppm",
-        F.expr("(n_both_keep + n_both_drop) * 1000000L div n_docs"),
-    ).withColumn(
-        "pe_ppm",
-        F.expr(
-            "((n_both_keep + n_gopher_only) * (n_both_keep + n_c4_only)"
-            " + (n_both_drop + n_c4_only) * (n_both_drop + n_gopher_only))"
-            " * 1000000L div (n_docs * n_docs)"
-        ),
-    )
-    return p.select(
-        "source",
-        "n_docs",
-        "n_both_keep",
-        "n_both_drop",
-        "n_gopher_only",
-        "n_c4_only",
-        "po_ppm",
-        "pe_ppm",
-        F.expr(
-            "(po_ppm - pe_ppm) * 1000000L"
-            " div greatest(1000000L - pe_ppm, 1L)"
-        ).alias("kappa_ppm"),
-    ).orderBy("source")
-
-
-def _word_census_cte(v: str) -> str:
-    """The corpus word census as a CTE — shared by the Zipf and coverage
-    oracles (and semantically the same exploded-token groupBy the
-    unigram trainer's seed fit runs)."""
-    return f"""{v} AS (
-        SELECT tok, CAST(COUNT(*) AS BIGINT) AS n
-        FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
-        WHERE tok <> '' GROUP BY tok
-    )"""
-
-
-def _zipf_oracle() -> str:
-    """Oracle for :func:`zipf_fit_report`: the same census, ROW_NUMBER
-    rank, and the SAME generated floor-log2 threshold ladder (shared
-    verbatim with the Spark plan — never a libm log)."""
-    from retail_aws_etl_pipeline_spark.operators.sketch import floor_log2_sql
-
-    return f"""
-    WITH {_word_census_cte("zf_v")},
-    zf_r AS (
-        SELECT n, ROW_NUMBER() OVER (ORDER BY n DESC, tok ASC) AS rank
-        FROM zf_v
-    ),
-    zf_t AS (SELECT CAST(SUM(n) AS BIGINT) AS total FROM zf_v),
-    zf_b AS (
-        SELECT CAST({floor_log2_sql("rank")} AS BIGINT) AS bucket,
-               CAST(COUNT(*) AS BIGINT) AS n_types,
-               CAST(SUM(n) AS BIGINT) AS occ,
-               CAST(MAX(n) AS BIGINT) AS top_freq
-        FROM zf_r GROUP BY 1
-    )
-    SELECT b.bucket,
-           CAST(CAST(1 AS BIGINT) << CAST(b.bucket AS INT) AS BIGINT)
-               AS first_rank,
-           b.n_types, b.occ,
-           CAST(b.occ * 1000000 // t.total AS BIGINT) AS mass_ppm,
-           b.top_freq,
-           CAST({floor_log2_sql("b.top_freq")} AS BIGINT) AS llq_top
-    FROM zf_b b, zf_t t ORDER BY b.bucket
-    """
-
-
-ZIPF_FIT_ORACLE = _zipf_oracle()
-
-
-def zipf_fit_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED r17: Zipf-law fit census over the corpus word frequencies —
-    the tokenizer/vocab-planning diagnostic (Zipf 1949; every natural
-    corpus should show log-frequency falling ~linearly in log-rank, and
-    a corpus that DOESN'T — a flat head or a truncated tail — signals
-    boilerplate flooding or dedup damage). Types are ranked by
-    (frequency desc, token asc) via the factored _distributed_rank (one
-    range exchange over the VOCAB, never a global window), bucketed by
-    floor(log2(rank)) through the same generated threshold ladder the
-    oracle embeds, and each octave reports types, occurrence mass (ppm,
-    single-floor), top frequency and its floor-log2 — adjacent llq_top
-    deltas read out the Zipf slope in whole bits. Envelope: occ * 1e6
-    exact for per-corpus token counts < 9.2e12 (shard above). Scale:
-    census = one map-combined token exchange; rank = one vocab-scale
-    range exchange; the report is ≤52 rows."""
-    from retail_aws_etl_pipeline_spark.operators import sketch as SK
-    from retail_aws_etl_pipeline_spark.operators.caching import (
-        retained_caches,
-        retaining,
-    )
-    from retail_aws_etl_pipeline_spark.plans.analytics import _distributed_rank
-
-    docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    census = (
-        docs.select(F.explode(F.split("text", " ")).alias("tok"))
-        .filter(F.col("tok") != "")
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    ranked = _distributed_rank(
-        census, [F.desc("n"), F.asc("tok")], out_col="rank"
-    )
-    tot = ranked.agg(F.sum("n").cast("long").alias("__total"))
-    out = (
-        ranked.withColumn(
-            "bucket", F.expr(SK.floor_log2_sql("rank")).cast("long")
-        )
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_types"),
-            F.sum("n").cast("long").alias("occ"),
-            F.max("n").cast("long").alias("top_freq"),
-        )
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "bucket",
-            F.expr("shiftleft(1L, CAST(bucket AS INT))").alias("first_rank"),
-            "n_types",
-            "occ",
-            F.expr("occ * 1000000L div __total").alias("mass_ppm"),
-            "top_freq",
-            F.expr(SK.floor_log2_sql("top_freq")).cast("long").alias("llq_top"),
-        )
-        .orderBy("bucket")
-    )
-    return retaining(out, *retained_caches(ranked))
-
-
-#: Vocabulary sizes the coverage audit reads (powers of 4: head through
-#: a realistic small-tokenizer vocab).
-VOCAB_COVERAGE_KS = (16, 64, 256, 1024, 4096)
-
-
-def _vocab_coverage_oracle() -> str:
-    """Oracle for :func:`vocab_coverage_report`: same census + rank, one
-    conditional-sum row, unrolled per K (single-floor ppm)."""
-    cov_cols = ", ".join(
-        f"CAST(SUM(CASE WHEN rank <= {k} THEN n ELSE 0 END) AS BIGINT)"
-        f" AS cov_{k}"
-        for k in VOCAB_COVERAGE_KS
-    )
-    blocks = " UNION ALL ".join(
-        f"""
-        SELECT CAST({k} AS BIGINT) AS vocab_k,
-               CAST(LEAST({k}, n_types) AS BIGINT) AS n_types_used,
-               cov_{k} AS covered_occ,
-               CAST(cov_{k} * 1000000 // total AS BIGINT) AS coverage_ppm,
-               CAST((total - cov_{k}) * 1000000 // total AS BIGINT) AS oov_ppm
-        FROM vc_a"""
-        for k in VOCAB_COVERAGE_KS
-    )
-    return f"""
-    WITH {_word_census_cte("vc_v")},
-    vc_r AS (
-        SELECT n, ROW_NUMBER() OVER (ORDER BY n DESC, tok ASC) AS rank
-        FROM vc_v
-    ),
-    vc_a AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_types,
-               CAST(SUM(n) AS BIGINT) AS total, {cov_cols}
-        FROM vc_r
-    )
-    SELECT * FROM ({blocks}) ORDER BY vocab_k
-    """
-
-
-VOCAB_COVERAGE_ORACLE = _vocab_coverage_oracle()
-
-
-def vocab_coverage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED r17: vocabulary coverage / OOV-rate audit — the
-    vocab-size-selection number tokenizer planning actually reads: for
-    each candidate vocab size K, the share of corpus token OCCURRENCES
-    covered by the top-K types (frequency desc, token asc — the same
-    total order as the Zipf census) and the residual OOV rate, both in
-    single-floor ppm. The coverage CDF across the K ladder is the
-    curve whose knee picks the vocab size; the unigram/BPE trainers
-    (registered) build the pieces, this audits what a WORD-level vocab
-    of each size would cover. Scale: shares the census + one
-    vocab-scale rank exchange with zipf_fit_report, then ONE
-    conditional-sum row unrolled to |KS| output rows — the coverage
-    read is free once the rank exists."""
-    from retail_aws_etl_pipeline_spark.operators.caching import (
-        retained_caches,
-        retaining,
-    )
-    from retail_aws_etl_pipeline_spark.plans.analytics import _distributed_rank
-
-    docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    census = (
-        docs.select(F.explode(F.split("text", " ")).alias("tok"))
-        .filter(F.col("tok") != "")
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    ranked = _distributed_rank(
-        census, [F.desc("n"), F.asc("tok")], out_col="rank"
-    )
-    agg = ranked.agg(
-        F.count(F.lit(1)).cast("long").alias("n_types"),
-        F.sum("n").cast("long").alias("total"),
-        *[
-            F.sum(F.when(F.col("rank") <= k, F.col("n")).otherwise(F.lit(0)))
-            .cast("long")
-            .alias(f"cov_{k}")
-            for k in VOCAB_COVERAGE_KS
-        ],
-    )
-    rows = agg.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).cast("long").alias("vocab_k"),
-                        F.col(f"cov_{k}").alias("covered_occ"),
-                    )
-                    for k in VOCAB_COVERAGE_KS
-                ]
-            )
-        ).alias("s"),
-        "n_types",
-        "total",
-    )
-    out = rows.select(
-        F.col("s.vocab_k").alias("vocab_k"),
-        F.least(F.col("s.vocab_k"), F.col("n_types"))
-        .cast("long")
-        .alias("n_types_used"),
-        F.col("s.covered_occ").alias("covered_occ"),
-        F.expr("s.covered_occ * 1000000L div total").alias("coverage_ppm"),
-        F.expr("(total - s.covered_occ) * 1000000L div total").alias("oov_ppm"),
-    ).orderBy("vocab_k")
-    return retaining(out, *retained_caches(ranked))
-
-
-# ---------------------------------------------------------------------------
-# STAGED r18 seeds (built r15, beyond the r17 tranche): the count-min
-# twin of the streamed-HLL registry entry (SUM-fold sketch reassembly
-# under the hash gate) and the single-score distribution-drift monitor
-# (quantized PSI over DSIR feature buckets — the alerting complement to
-# term_drift_report's top-movers view). Pairing decided at r17/r18 open
-# against the then-current ADVICE; until then they carry the local
-# battery (tests/test_staged_r18_seeds.py).
-# ---------------------------------------------------------------------------
-
-
-def streamed_cms_topk_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED r18 seed: incremental FREQUENCY-sketch maintenance under
-    the hash gate — the count-min twin of streamed_hll_snapshot_report.
-    The corpus token stream arrives in two disjoint waves (doc_id
-    parity, maxFilesPerTrigger=1 → separate micro-batches); each batch
-    counts ONLY its own tokens into ≤ d·w cells appended as a
-    __batch_id partition (streaming/streams.py::cms_cell_stream — SUM
-    is not idempotent, so exactly-once storage is the batch-partitioned
-    dynamic overwrite), and the snapshot's per-cell SUM fold must equal
-    the one-shot batch sketch EXACTLY (integer sums are associative
-    across any wave split). The top-K read-back therefore hash-matches
-    the SAME oracle string as countmin_topk_report — the
-    streamed_hourly_rollup verbatim-twin precedent: stream == batch is
-    the whole claim. 100 TB shape: arrival-time scan per batch; any
-    later point-frequency answer is a ≤(batches × 1024)-row fold."""
-    import shutil
-    import tempfile
-
-    from retail_aws_etl_pipeline_spark.operators import sketch as SK
-    from retail_aws_etl_pipeline_spark.operators.caching import retaining
-    from retail_aws_etl_pipeline_spark.streaming.streams import (
-        cms_cell_stream,
-        read_cms_snapshot,
-    )
-
-    docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("tok")
-    )
-    staging = tempfile.mkdtemp(prefix="streamed_cms_src_")
-    delta = tempfile.mkdtemp(prefix="streamed_cms_delta_")
-    ckpt = tempfile.mkdtemp(prefix="streamed_cms_ckpt_")
-    try:
-        for i in range(2):  # disjoint waves -> separate micro-batches
-            (
-                toks.filter(
-                    F.pmod(F.coalesce(F.col("doc_id"), F.lit(0)), F.lit(2)) == i
-                )
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(staging)
-            )
-        stream = (
-            spark.readStream.schema(toks.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staging)
-        )
-        q = cms_cell_stream(stream, "tok", delta_dir=delta, checkpoint_dir=ckpt)
-        q.awaitTermination()
-        cells = read_cms_snapshot(spark, delta).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(delta, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    vocab = (
-        docs.select(F.explode(F.split("text", " ")).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .persist()
-    )
-    topk = vocab.orderBy(F.desc("n"), F.asc("tok")).limit(CMS_TOPK)
-    est = SK.cms_estimates(cells, topk, "tok")
-    out = (
-        topk.join(est, "tok")
-        .select(
-            "tok",
-            F.col("n").alias("exact_n"),
-            "est_n",
-            (F.col("est_n") - F.col("n")).cast("long").alias("overcount"),
-        )
-        .orderBy(F.desc("exact_n"), F.asc("tok"))
-    )
-    return retaining(out, vocab)
-
-
-#: The streamed count-min entry shares the batch oracle VERBATIM —
-#: stream == batch (SUM-fold reassembly) is the registered claim.
-STREAMED_CMS_TOPK_ORACLE = COUNTMIN_TOPK_ORACLE
-
-
-def _token_psi_oracle() -> str:
-    """Oracle for :func:`token_drift_psi_report`: the same DSIR feature
-    buckets (first 16 md5 bits mod 256), parity-half conditional sums,
-    single-floor ppm shares, and the SAME generated floor-log2-squared
-    ladder (textops.floor_log2_sq_sql, shared verbatim) for the
-    quantized log factor."""
-    from retail_aws_etl_pipeline_spark.operators.sampling import DSIR_BUCKETS
-
-    llq_a = TX.floor_log2_sq_sql("GREATEST(p_ppm, 1)")
-    llq_b = TX.floor_log2_sq_sql("GREATEST(q_ppm, 1)")
-    return f"""
-    WITH psi_tok AS (
-        SELECT doc_id % 2 AS half,
-               CAST(('0x' || substr(md5(tok), 1, 4)) AS BIGINT)
-                   % {DSIR_BUCKETS} AS bucket
-        FROM (
-            SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-            FROM documents
-        ) WHERE tok <> ''
-    ),
-    psi_b AS (
-        SELECT bucket,
-               CAST(COUNT(*) FILTER (WHERE half = 0) AS BIGINT) AS n_a,
-               CAST(COUNT(*) FILTER (WHERE half = 1) AS BIGINT) AS n_b
-        FROM psi_tok GROUP BY bucket
-    ),
-    psi_t AS (
-        SELECT CAST(SUM(n_a) AS BIGINT) AS t_a, CAST(SUM(n_b) AS BIGINT) AS t_b
-        FROM psi_b
-    ),
-    psi_p AS (
-        SELECT bucket, n_a, n_b,
-               CAST(n_a * 1000000 // GREATEST(t.t_a, 1) AS BIGINT) AS p_ppm,
-               CAST(n_b * 1000000 // GREATEST(t.t_b, 1) AS BIGINT) AS q_ppm
-        FROM psi_b, psi_t t
-    ),
-    psi_q AS (
-        SELECT bucket, n_a, n_b, p_ppm, q_ppm,
-               CAST({llq_a} AS BIGINT) AS llq_a,
-               CAST({llq_b} AS BIGINT) AS llq_b
-        FROM psi_p
-    )
-    SELECT bucket, n_a, n_b, p_ppm, q_ppm, llq_a, llq_b,
-           CAST((p_ppm - q_ppm) * (llq_a - llq_b) AS BIGINT) AS psi_contrib
-    FROM psi_q ORDER BY bucket
-    """
-
-
-TOKEN_PSI_ORACLE = _token_psi_oracle()
-
-
-def token_drift_psi_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED r18 seed: quantized population-stability drift score over
-    hashed token-feature buckets — the single-number distribution-drift
-    MONITOR (the quantity an ingest pipeline alerts on between corpus
-    snapshots), complementing term_drift_report's top-movers view: that
-    query names WHICH terms moved; this one scores HOW MUCH the whole
-    token distribution moved, over the same DSIR feature buckets the
-    registered importance sampler hashes into (operators/sampling.py::
-    dsir_bucket — shared kernel). Epoch halves are the standing doc_id
-    parity convention. Per bucket: occurrence counts, single-floor ppm
-    shares, the quantized half-bit logs via the SAME generated
-    floor-log2-squared ladder as the perplexity family (no libm log —
-    textops.floor_log2_sq_sql, shared verbatim with the oracle), and
-    the PSI contribution (p-q)·(llq_p - llq_q) ≥ 0 (the ladder is
-    monotone, so both factors share sign — pinned). sum(psi_contrib) is
-    the corpus drift score in ppm·half-bits. Integer division truncates
-    toward zero identically on both engines (verified r15), so every
-    column is hash-gateable. Scale: one exploded-token pass with the
-    parity flag, one 256-bucket conditional groupBy (map-side
-    combined), a one-row broadcast of the half totals — the report is
-    ≤256 rows however large the corpus."""
-    from retail_aws_etl_pipeline_spark.operators.sampling import dsir_bucket
-
-    docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    toks = (
-        docs.select(
-            (F.col("doc_id") % 2).alias("half"),
-            F.explode(F.split("text", " ")).alias("tok"),
-        )
-        .filter(F.col("tok") != "")
-        .select("half", dsir_bucket(F.col("tok")).alias("bucket"))
-    )
-    b = toks.groupBy("bucket").agg(
-        F.sum(F.when(F.col("half") == 0, 1).otherwise(0))
-        .cast("long")
-        .alias("n_a"),
-        F.sum(F.when(F.col("half") == 1, 1).otherwise(0))
-        .cast("long")
-        .alias("n_b"),
-    )
-    t = b.agg(
-        F.sum("n_a").cast("long").alias("t_a"),
-        F.sum("n_b").cast("long").alias("t_b"),
-    )
-    p = b.crossJoin(F.broadcast(t)).select(
-        "bucket",
-        "n_a",
-        "n_b",
-        F.expr("n_a * 1000000L div greatest(t_a, 1L)").alias("p_ppm"),
-        F.expr("n_b * 1000000L div greatest(t_b, 1L)").alias("q_ppm"),
-    )
-    q = p.withColumn(
-        "llq_a",
-        F.expr(TX.floor_log2_sq_sql("GREATEST(p_ppm, 1)")).cast("long"),
-    ).withColumn(
-        "llq_b",
-        F.expr(TX.floor_log2_sq_sql("GREATEST(q_ppm, 1)")).cast("long"),
-    )
-    return q.select(
-        "bucket",
-        "n_a",
-        "n_b",
-        "p_ppm",
-        "q_ppm",
-        "llq_a",
-        "llq_b",
-        F.expr("(p_ppm - q_ppm) * (llq_a - llq_b)")
-        .cast("long")
-        .alias("psi_contrib"),
-    ).orderBy("bucket")
-
-
-#: Oracle for :func:`tiff_dims_probe` (STAGED r18 seed). Identical dims
-#: formula to the jpeg/png/gif/webp corpus; only the format literal
-#: differs — the oracle never sees the payload bytes.
-TIFF_DIMS_ORACLE = """
-    SELECT doc_id AS media_id,
-           'tiff' AS format,
-           CAST(16 + doc_id % 100 AS INT) AS width,
-           CAST(9 + (doc_id * 7) % 100 AS INT) AS height
-    FROM documents ORDER BY media_id
-"""
-
-
-def tiff_dims_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED r18 seed: TIFF header probe — the ONE dual-endian walk in
-    the probe family (jpeg/png/gif/webp/avif are each single-endian).
-    The synth side writes per-id dims into real TIFF headers cycling
-    all four layout corners by id (II/MM byte order × SHORT/LONG dims
-    types, with distractor tags around the dims entries); the probe
-    must honor the byte-order marker for every later field AND the
-    spec's left-justified count-1 SHORT value slot — under 'MM' the
-    value sits in the HIGH half, where an endian-naive reader silently
-    misparses rather than erroring, which is exactly why the four-corner
-    corpus is cycled. Same Arrow-batched O(header-bytes) kernel and the
-    same payload-blind id-formula oracle as the rest of the family."""
-    from retail_aws_etl_pipeline_spark.operators import multimodal as MM
-
-    ids = load_tables(spark, sf_dir, ["documents"])["documents"].select("doc_id")
-    return MM.probe_dims(MM.synth_tiff_media(ids, "doc_id")).orderBy("media_id")
-
-
-def _source_priority_oracle() -> str:
-    """Oracle for :func:`source_priority_dedup_report`: the same named-
-    struct argmin winner (priority = source string rank, ties to the
-    smallest doc_id) and the same per-source census, re-derived
-    relationally. NULL source/text are excluded in the CTE — the struct
-    MIN would otherwise diverge on NULL ordering between engines."""
-    return """
-    WITH sp_docs AS (
-        SELECT doc_id, source, md5(text) AS h
-        FROM documents WHERE source IS NOT NULL AND text IS NOT NULL
-    ),
-    sp_win AS (
-        SELECT h, MIN({'s': source, 'd': doc_id}) AS win
-        FROM sp_docs GROUP BY h
-    ),
-    sp_g AS (
-        SELECT h, CAST(COUNT(*) AS BIGINT) AS n_copies FROM sp_docs GROUP BY h
-    ),
-    sp_j AS (
-        SELECT d.source, d.doc_id, g.n_copies,
-               CASE WHEN w.win.s = d.source AND w.win.d = d.doc_id
-                    THEN 1 ELSE 0 END AS kept,
-               CASE WHEN w.win.s <> d.source THEN 1 ELSE 0 END AS cross_loss
-        FROM sp_docs d
-        JOIN sp_win w ON w.h = d.h
-        JOIN sp_g g ON g.h = d.h
-    )
-    SELECT source,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(CASE WHEN n_copies > 1 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_in_dup_groups,
-           CAST(SUM(kept) AS BIGINT) AS n_kept,
-           CAST(SUM(1 - kept) AS BIGINT) AS n_dropped,
-           CAST(SUM(CASE WHEN kept = 0 AND cross_loss = 1 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_lost_cross_source
-    FROM sp_j GROUP BY source ORDER BY source
-    """
-
-
-SOURCE_PRIORITY_DEDUP_ORACLE = _source_priority_oracle()
-
-
-def source_priority_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED r18 seed: SOURCE-PRIORITY exact dedup census — the policy
-    layer production dedup actually runs (Dolma, RefinedWeb: when the
-    same document appears in several sources, keep the copy from the
-    most-trusted source, not an arbitrary one): exact-duplicate groups
-    (md5(text)) each elect ONE winner by (source priority, doc_id), and
-    the per-source census reports what the policy did — docs, docs in
-    multi-copy groups, kept, dropped, and the copies LOST TO A
-    DIFFERENT source (the number that tells a source owner their corpus
-    is being deduplicated away). Priority here is the source string's
-    sort order (a production deployment supplies its curated rank map —
-    the policy shape is what's under test); the winner is one
-    single-buffer struct argmin per group, deterministic on both
-    engines. NULL source/text are excluded INSIDE the kernel (struct
-    MIN diverges on NULL ordering between engines — the standing
-    NULL-ORDER-BY class). Scale: one content-keyed exchange (the same
-    md5-groups shuffle every exact-dedup entry pays), a broadcast-size
-    winner join back, and a |sources|-row census."""
-    docs = (
-        load_tables(spark, sf_dir, ["documents"])["documents"]
-        .filter(F.col("source").isNotNull() & F.col("text").isNotNull())
-        .select("doc_id", "source", F.md5("text").alias("h"))
-    )
-    grp = docs.groupBy("h").agg(
-        F.min(F.struct(F.col("source").alias("s"), F.col("doc_id").alias("d"))).alias("win"),
-        F.count(F.lit(1)).cast("long").alias("n_copies"),
-    )
-    j = docs.join(grp, "h").select(
-        "source",
-        "n_copies",
-        (
-            (F.col("win.s") == F.col("source")) & (F.col("win.d") == F.col("doc_id"))
-        )
-        .cast("long")
-        .alias("kept"),
-        (F.col("win.s") != F.col("source")).cast("long").alias("cross_loss"),
-    )
-    return (
-        j.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum((F.col("n_copies") > 1).cast("long"))
-            .cast("long")
-            .alias("n_in_dup_groups"),
-            F.sum("kept").cast("long").alias("n_kept"),
-            F.sum(F.lit(1) - F.col("kept")).cast("long").alias("n_dropped"),
-            F.sum(
-                F.when((F.col("kept") == 0) & (F.col("cross_loss") == 1), 1)
-                .otherwise(0)
-            )
-            .cast("long")
-            .alias("n_lost_cross_source"),
-        )
-        .orderBy("source")
-    )
-
-
-def streamed_bottomk_quantile_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED r18 seed: incremental QUANTILE-sketch maintenance under
-    the hash gate — the third member of the streamed sketch triple
-    (HLL distincts by MAX fold, count-min frequencies by SUM fold, and
-    now bottom-k quantiles by RE-TAKE): lineitem arrives in two
-    disjoint waves (COALESCE'd orderkey parity so NULL-key rows still
-    route, maxFilesPerTrigger=1 → separate micro-batches); each batch
-    stores ITS OWN k smallest md5(row-key) rows as a __batch_id
-    partition (streaming/streams.py::bottomk_sample_stream — bottom-k
-    is mergeable but not idempotent under duplication, so exactly-once
-    storage is the batch-partitioned dynamic overwrite), and the
-    snapshot's re-take must equal the one-shot batch sample EXACTLY by
-    Cohen & Kaplan mergeability. The audit frame therefore hash-matches
-    the SAME oracle string as hash_sample_quantile_report — the third
-    verbatim twin. 100 TB shape: arrival-time scan per batch; any later
-    quantile read is a re-take over ≤(batches × k) stored rows."""
-    import shutil
-    import tempfile
-
-    from retail_aws_etl_pipeline_spark.streaming.streams import (
-        bottomk_sample_stream,
-        read_bottomk_snapshot,
-    )
-
-    li_all = load_tables(spark, sf_dir, ["lineitem"])["lineitem"]
-    keyed = li_all.select("l_orderkey", "l_linenumber", "l_extendedprice")
-    staging = tempfile.mkdtemp(prefix="streamed_bk_src_")
-    delta = tempfile.mkdtemp(prefix="streamed_bk_delta_")
-    ckpt = tempfile.mkdtemp(prefix="streamed_bk_ckpt_")
-    try:
-        for i in range(2):  # disjoint waves; NULL keys route to wave 0
-            (
-                keyed.filter(
-                    F.pmod(F.coalesce(F.col("l_orderkey"), F.lit(0)), F.lit(2)) == i
-                )
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(staging)
-            )
-        stream = (
-            spark.readStream.schema(keyed.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staging)
-        )
-        q = bottomk_sample_stream(
-            stream,
-            HASH_SAMPLE_ROW_KEY_SQL,
-            "l_extendedprice",
-            delta_dir=delta,
-            checkpoint_dir=ckpt,
-        )
-        q.awaitTermination()
-        sample = read_bottomk_snapshot(spark, delta).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(delta, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    li = li_all.filter(F.col("l_extendedprice").isNotNull())
-    return _hash_sample_frame(li, sample)
-
-
-#: The streamed bottom-k entry shares the batch oracle VERBATIM —
-#: stream == batch (mergeable re-take) is the registered claim.
-STREAMED_BOTTOMK_ORACLE = HASH_SAMPLE_ORACLE
-
-
 # ---------------------------------------------------------------------------
 # r19 queue seeds (staged r16): the curation-audit completions — char-level
 # entropy quality signal, split-level n-gram novelty, heavy-hitter churn,
 # k-anonymity risk, UniMax mixture allocation, and the streamed Bloom
-# membership sketch completing the streamed quartet. Pairings decided at
-# r17/r18 open against the then-current ADVICE (the standing cadence).
+# membership sketch. Not registered; each carries its local oracle battery
+# (tests/test_staged_r19.py).
 # ---------------------------------------------------------------------------
 
 
@@ -9678,10 +8593,8 @@ TOPK_CHURN_ORACLE = f"""
 
 def topk_churn_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STAGED (r19 queue): heavy-hitter CHURN between corpus halves —
-    the epoch-over-epoch vocabulary-drift monitor a refresh cadence
-    reads next to the PSI drift score (token_drift_psi_report measures
-    distributional shift over hashed buckets; this names WHICH heavy
-    hitters moved): exact top-{K} tokens per half under the
+    the epoch-over-epoch vocabulary-drift monitor that names WHICH
+    heavy hitters moved: exact top-{K} tokens per half under the
     deterministic (count desc, token asc) order, then the set churn —
     common / entered / exited counts and the top-set Jaccard in ppm,
     plus each half's #1 token via the single-buffer struct argmax.
@@ -10010,10 +8923,7 @@ def unimax_allocation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def streamed_bloom_filter_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STAGED (r19 queue): MEMBERSHIP-sketch maintenance under streaming
-    ingest — the Bloom twin completing the streamed sketch QUARTET
-    (distinct: streamed_hll_snapshot / frequency: streamed_cms_topk /
-    quantile: streamed_bottomk_quantile / membership: this): the
-    standing half's 32-word filter is maintained by
+    ingest: the standing half's 32-word filter is maintained by
     streaming.bloom_word_stream — each micro-batch bit_or-folds its own
     rows into a __batch_id partition; read_bloom_snapshot's per-word
     bit_or fold reassembles the standing filter (OR-idempotent sketch

@@ -645,222 +645,13 @@ def ivf_retrieval_stream(
     )
 
 
-def make_hll_batch_processor(key_col: str, delta_dir: str):
-    """The foreachBatch body of :func:`hll_register_stream`, exposed so
-    tests can replay a batch verbatim (the at-least-once crash point).
-    Idempotent twice over: the per-batch register table lands in its own
-    ``__batch_id`` partition under dynamic overwrite (a retry replaces
-    itself), and the snapshot fold is per-bucket MAX — idempotent even
-    if a duplicate partition ever survived."""
-    from pyspark.sql import functions as F
-
-    from retail_aws_etl_pipeline_spark.operators.sketch import hll_registers
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        regs = hll_registers(batch_df, F.col(key_col))
-        (
-            regs.withColumn("__batch_id", F.lit(batch_id))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(delta_dir)
-        )
-
-    return process
-
-
-def hll_register_stream(
-    docs: DataFrame, key_col: str, delta_dir: str, checkpoint_dir: str
-):
-    """Incremental distinct-count sketch maintenance under streaming
-    ingest: each micro-batch sketches ONLY its own rows into a
-    <= HLL_BUCKETS-row register table appended as a ``__batch_id``
-    partition (the feature_delta_stream base+delta discipline), so the
-    standing corpus cardinality is answerable at any moment from
-    :func:`read_hll_snapshot` — one per-bucket MAX fold over a table
-    whose size is batches x <= 256 rows, NEVER a rescan of the corpus.
-    MAX-merge idempotence (sketch algebra) makes any arrival
-    interleaving AND any foreachBatch retry converge to the one-shot
-    batch sketch bit-identically — pinned by the stream==batch test.
-
-    The 100 TB shape: the stream pays one scan per batch at arrival
-    time; every later "how many distincts so far?" is a 256-row read.
-    """
-    return (
-        docs.writeStream.foreachBatch(make_hll_batch_processor(key_col, delta_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_hll_snapshot(spark: SparkSession, delta_dir: str) -> DataFrame:
-    """Current (bucket, register) table from the delta partitions: one
-    per-bucket MAX fold — the same merge :func:`operators.sketch.hll_merge`
-    defines, so the snapshot IS sketch(all rows so far)."""
-    from pyspark.sql import functions as F
-
-    return (
-        spark.read.parquet(delta_dir)
-        .groupBy("bucket")
-        .agg(F.max("register").cast("long").alias("register"))
-    )
-
-
-def make_cms_batch_processor(key_col: str, delta_dir: str):
-    """The foreachBatch body of :func:`cms_cell_stream` (exposed for
-    verbatim-replay tests). Unlike the HLL's MAX fold, count-min merges
-    by SUM — which is NOT idempotent — so the per-batch partition under
-    dynamic overwrite is the load-bearing idempotence here: a retried
-    batch REPLACES its own cells instead of double-counting."""
-    from pyspark.sql import functions as F
-
-    from retail_aws_etl_pipeline_spark.operators.sketch import cms_cells
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        counted = (
-            batch_df.filter(F.col(key_col).isNotNull())
-            .groupBy(key_col)
-            .agg(F.count(F.lit(1)).cast("long").alias("__n"))
-        )
-        cells = cms_cells(counted, key_col, "__n")
-        (
-            cells.withColumn("__batch_id", F.lit(batch_id))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(delta_dir)
-        )
-
-    return process
-
-
-def cms_cell_stream(
-    docs: DataFrame, key_col: str, delta_dir: str, checkpoint_dir: str
-):
-    """Incremental FREQUENCY-sketch maintenance under streaming ingest —
-    the count-min twin of :func:`hll_register_stream`: each micro-batch
-    counts its own keys and sketches them into <= d*w cells appended as
-    a ``__batch_id`` partition; the standing sketch is
-    :func:`read_cms_snapshot`'s per-cell SUM fold (the cms_merge
-    algebra), answerable at any moment without a corpus rescan. Sum is
-    not idempotent, so exactly-once STORAGE comes from the
-    batch-partitioned dynamic overwrite (a retry replaces itself) — the
-    stream==batch + verbatim-retry test pins both properties."""
-    return (
-        docs.writeStream.foreachBatch(make_cms_batch_processor(key_col, delta_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_cms_snapshot(spark: SparkSession, delta_dir: str) -> DataFrame:
-    """Current (row, col, cell) table from the delta partitions: one
-    per-cell SUM fold — exactly :func:`operators.sketch.cms_merge` over
-    every batch's sketch, so the snapshot IS sketch(all rows so far)."""
-    from pyspark.sql import functions as F
-
-    return (
-        spark.read.parquet(delta_dir)
-        .groupBy("row", "col")
-        .agg(F.sum("cell").cast("long").alias("cell"))
-    )
-
-
-def make_bottomk_batch_processor(
-    row_key_expr: str, value_col: str, delta_dir: str, k: int | None = None
-):
-    """The foreachBatch body of :func:`bottomk_sample_stream` (exposed
-    for verbatim-replay tests). Bottom-k is mergeable but NOT idempotent
-    under row duplication (a replayed batch's copies would occupy sample
-    slots and displace legitimate members), so — like the count-min
-    cells — exactly-once storage comes from the batch-partitioned
-    dynamic overwrite: a retried batch REPLACES its own partition."""
-    from pyspark.sql import functions as F
-
-    from retail_aws_etl_pipeline_spark.operators.sketch import (
-        BOTTOMK_K,
-        bottomk_sample,
-    )
-
-    kk = BOTTOMK_K if k is None else k
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        samp = bottomk_sample(
-            batch_df.filter(F.col(value_col).isNotNull()),
-            F.expr(row_key_expr),
-            F.col(value_col),
-            kk,
-        )
-        (
-            samp.withColumn("__batch_id", F.lit(batch_id))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(delta_dir)
-        )
-
-    return process
-
-
-def bottomk_sample_stream(
-    rows: DataFrame,
-    row_key_expr: str,
-    value_col: str,
-    delta_dir: str,
-    checkpoint_dir: str,
-    k: int | None = None,
-):
-    """Incremental QUANTILE-sketch maintenance under streaming ingest —
-    the bottom-k twin of :func:`hll_register_stream` /
-    :func:`cms_cell_stream`, completing the streamed sketch triple
-    (distinct / frequency / quantile): each micro-batch takes ITS OWN
-    k smallest md5(row-key) rows and appends them as a ``__batch_id``
-    partition; the standing sample is :func:`read_bottomk_snapshot`'s
-    re-take over batches × k rows — never a rescan. Correctness rests
-    on bottom-k mergeability (Cohen & Kaplan 2007:
-    bottomk(A ∪ B) == bottomk(bottomk(A) ∪ bottomk(B)) under the
-    (h, v) total order), pinned by the stream==batch test."""
-    return (
-        rows.writeStream.foreachBatch(
-            make_bottomk_batch_processor(row_key_expr, value_col, delta_dir, k)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_bottomk_snapshot(
-    spark: SparkSession, delta_dir: str, k: int | None = None
-) -> DataFrame:
-    """Current (h, v) sample from the delta partitions: re-take the
-    bottom k over the ≤ batches × k stored rows — exactly the
-    mergeability identity, so the snapshot IS bottomk(all rows so far)."""
-    from pyspark.sql import functions as F
-
-    from retail_aws_etl_pipeline_spark.operators.sketch import BOTTOMK_K
-
-    kk = BOTTOMK_K if k is None else k
-    return (
-        spark.read.parquet(delta_dir)
-        .select("h", "v")
-        .orderBy(F.asc("h"), F.asc("v"))
-        .limit(kk)
-    )
-
-
 def make_bloom_batch_processor(text_col: str, delta_dir: str):
     """The foreachBatch body of :func:`bloom_word_stream` (exposed for
-    verbatim-replay tests). Bloom words merge by bit_or — idempotent
-    like the HLL's MAX, so a replayed batch could not corrupt the fold
-    even without storage-level exactly-once; the batch-partitioned
-    dynamic overwrite is kept anyway for uniformity with the sketch
-    family (one recovery story across all four streams)."""
+    verbatim-replay tests). Bloom words merge by bit_or, which is
+    idempotent, so a replayed batch could not corrupt the fold even
+    without storage-level exactly-once; the batch-partitioned dynamic
+    overwrite is kept anyway, the same sink discipline as
+    :func:`feature_delta_stream` (a retry replaces its own partition)."""
     from pyspark.sql import functions as F
 
     from retail_aws_etl_pipeline_spark.operators.dedup import bloom_build_words
@@ -884,10 +675,8 @@ def make_bloom_batch_processor(text_col: str, delta_dir: str):
 def bloom_word_stream(
     docs: DataFrame, text_col: str, delta_dir: str, checkpoint_dir: str
 ):
-    """Incremental MEMBERSHIP-sketch maintenance under streaming ingest —
-    the Bloom twin of :func:`hll_register_stream` / :func:`cms_cell_stream`
-    / :func:`bottomk_sample_stream`, extending the streamed sketch triple to
-    the full quartet (distinct / frequency / quantile / membership): each
+    """Incremental MEMBERSHIP-sketch maintenance under streaming ingest,
+    in the base+delta layout of :func:`feature_delta_stream`: each
     micro-batch bit_or-folds ITS OWN rows into a <=
     BLOOM_BITS/BLOOM_WORD_BITS-row word table appended as a ``__batch_id``
     partition; the standing filter is :func:`read_bloom_snapshot`'s per-word

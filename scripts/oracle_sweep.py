@@ -66,49 +66,6 @@ def _staged_pairs():
     # doc_lang_id's corpus-independent scored CTE generator — so none
     # joins SF001_PINNED and none needs a refit script.
     return [
-        # staged r17 seeds (built r14): the frequency + quantile sketches
-        ("countmin_topk_report", E.countmin_topk_report, E.COUNTMIN_TOPK_ORACLE),
-        (
-            "hash_sample_quantile_report",
-            E.hash_sample_quantile_report,
-            E.HASH_SAMPLE_ORACLE,
-        ),
-        # staged r17 tranche completion (built r15): all corpus-generic
-        # (the agreement oracle shares the registered gate fragments;
-        # the rank-spectrum oracles embed only the generated log2
-        # ladder; the streamed sketch re-derives registers from scratch)
-        (
-            "streamed_hll_snapshot_report",
-            E.streamed_hll_snapshot_report,
-            E.STREAMED_HLL_SNAPSHOT_ORACLE,
-        ),
-        (
-            "quality_gate_agreement_report",
-            E.quality_gate_agreement_report,
-            E.QUALITY_GATE_AGREEMENT_ORACLE,
-        ),
-        ("zipf_fit_report", E.zipf_fit_report, E.ZIPF_FIT_ORACLE),
-        ("vocab_coverage_report", E.vocab_coverage_report, E.VOCAB_COVERAGE_ORACLE),
-        # staged r18 seeds (built r15): the streamed count-min twin
-        # (verbatim batch oracle) + the quantized-PSI drift monitor —
-        # both corpus-generic.
-        (
-            "streamed_cms_topk_report",
-            E.streamed_cms_topk_report,
-            E.STREAMED_CMS_TOPK_ORACLE,
-        ),
-        ("token_drift_psi_report", E.token_drift_psi_report, E.TOKEN_PSI_ORACLE),
-        ("tiff_dims_probe", E.tiff_dims_probe, E.TIFF_DIMS_ORACLE),
-        (
-            "source_priority_dedup_report",
-            E.source_priority_dedup_report,
-            E.SOURCE_PRIORITY_DEDUP_ORACLE,
-        ),
-        (
-            "streamed_bottomk_quantile_report",
-            E.streamed_bottomk_quantile_report,
-            E.STREAMED_BOTTOMK_ORACLE,
-        ),
         # staged r19-queue tranche (built r16): all corpus-generic —
         # the entropy ladder is generated from pure integer arithmetic
         # (a function of the ppm scale alone), the novelty/churn/

@@ -153,50 +153,14 @@ def test_registered_pair_survives_adversarial_corpus(spark, adversarial_dir, nam
 
 
 def test_staged_pairs_survive_adversarial_corpus(spark, adversarial_dir):
-    """The staged r17 + r18 documents-side pairs through the hostile
-    corpus BEFORE registration (all corpus-generic): quote/backslash
-    docs exercise the n-gram string keys through both engines' literal
-    paths, empty/whitespace docs the short-doc guards, NULL lang/source
-    the keyed-census exclusions, and the 2,500-distinct-token doc the
-    correlated-series n-gram oracles."""
+    """The staged r19 documents-side pairs through the hostile corpus
+    (all corpus-generic): quote/backslash docs exercise the n-gram string
+    keys through both engines' literal paths, empty/whitespace docs the
+    short-doc guards, NULL lang/source the keyed-census exclusions, and
+    the 2,500-distinct-token doc the correlated-series n-gram oracles."""
     from retail_aws_etl_pipeline_spark.plans import extensions as E
 
     for fn, oracle in [
-        # (the r16 tranche registered at r16 and moved to the
-        # _REGISTERED parametrization above)
-        # r17 seed: the count-min audit reads the same hostile token
-        # stream (quotes/backslashes/CJK through the seeded md5 legs)
-        (E.countmin_topk_report, E.COUNTMIN_TOPK_ORACLE),
-        # r17 tranche completion (built r15), documents-side: the
-        # agreement census runs BOTH gate batteries over the hostile
-        # text (empty docs, CJK, the 2,500-distinct-token doc), and the
-        # rank-spectrum pair pushes the hostile token stream (quotes,
-        # backslashes, 300-char tokens) through the census + rank + the
-        # generated log2 ladders.
-        (
-            E.quality_gate_agreement_report,
-            E.QUALITY_GATE_AGREEMENT_ORACLE,
-        ),
-        (E.zipf_fit_report, E.ZIPF_FIT_ORACLE),
-        (E.vocab_coverage_report, E.VOCAB_COVERAGE_ORACLE),
-        # r18 seeds (built r15), documents-side: the streamed count-min
-        # twin drains the hostile token stream through per-batch cells,
-        # and the PSI monitor hashes it through the DSIR buckets + the
-        # generated log ladder (NULL lang/source rows keep their tokens
-        # — the census is unconditional).
-        (E.streamed_cms_topk_report, E.STREAMED_CMS_TOPK_ORACLE),
-        (E.token_drift_psi_report, E.TOKEN_PSI_ORACLE),
-        # source-priority dedup: the hostile corpus's NULL lang/source
-        # rows and duplicate-heavy docs exercise the in-kernel NULL
-        # exclusion (struct MIN would diverge on NULL ordering) and the
-        # cross-source loss accounting. tiff_dims_probe synthesizes
-        # payloads from doc_id alone (hostile text cannot reach it);
-        # its hostile-input battery is byte-level in
-        # test_staged_r18_seeds.py.
-        (
-            E.source_priority_dedup_report,
-            E.SOURCE_PRIORITY_DEDUP_ORACLE,
-        ),
         # r19-queue tranche (built r16), documents-side: the entropy
         # ladder eats the empty/whitespace/CJK/300-char-token docs (the
         # char histogram is where those bite), the novelty + churn
@@ -216,48 +180,6 @@ def test_staged_pairs_survive_adversarial_corpus(spark, adversarial_dir):
     ]:
         r = compare(fn(spark, adversarial_dir), oracle, adversarial_dir)
         assert r["ok"], (fn.__name__, r)
-
-
-def test_staged_streamed_hll_survives_adversarial_events(
-    spark, adversarial_events_dir
-):
-    """The r17-staged streamed-sketch report through the hostile events
-    corpus: NULL user_ids must be excluded from registers AND the
-    per-wave delta recount on both engines, and exact (user, ts) ties
-    don't perturb the order-free MAX fold."""
-    from retail_aws_etl_pipeline_spark.plans import extensions as E
-
-    r = compare(
-        E.streamed_hll_snapshot_report(spark, adversarial_events_dir),
-        E.STREAMED_HLL_SNAPSHOT_ORACLE,
-        adversarial_events_dir,
-    )
-    assert r["ok"], r
-
-
-def test_staged_hash_sample_survives_adversarial_retail(
-    spark, adversarial_retail_dir
-):
-    """The r17-seed quantile audit through the hostile lineitem: NULL
-    join keys ride the COALESCE-sentinel row key into the sample, and
-    the NULL-hash ordering divergence the kernel refuses never arises."""
-    from retail_aws_etl_pipeline_spark.plans import extensions as E
-
-    r = compare(
-        E.hash_sample_quantile_report(spark, adversarial_retail_dir),
-        E.HASH_SAMPLE_ORACLE,
-        adversarial_retail_dir,
-    )
-    assert r["ok"], r
-    # the r18-seed streamed twin on the same hostile corpus: NULL
-    # orderkeys must still ROUTE to a wave (COALESCE'd parity split) so
-    # stream == batch holds with dirty keys in play
-    r = compare(
-        E.streamed_bottomk_quantile_report(spark, adversarial_retail_dir),
-        E.STREAMED_BOTTOMK_ORACLE,
-        adversarial_retail_dir,
-    )
-    assert r["ok"], r
 
 
 @pytest.fixture(scope="module")

@@ -167,8 +167,8 @@ def test_exif_embedded_tiff_parses_identically_in_both_probes(spark):
     block (payload[12:] — SOI + APP1 marker + length + 'Exif\\0\\0')
     walks to the SAME dims through probe_image_dims as the EXIF probe's
     own IFD scan reports, under BOTH byte orders, and the orientation
-    follows the id formula. The shared discipline IS the dual-endian
-    IFD walk tiff_dims_probe registers."""
+    follows the id formula. Both probes rest on the same dual-endian
+    IFD walk: probe_image_dims' TIFF branch."""
     from retail_aws_etl_pipeline_spark.operators import multimodal as MM
 
     ids = spark.range(0, 8).select(F.col("id").alias("doc_id"))

@@ -62,3 +62,45 @@ def test_py_kernel_cap_scales_with_parallelism(spark):
             S._SCAN_DEFICIT.pop(key, None)
         else:
             S._SCAN_DEFICIT[key] = old
+
+
+def _conf_set_sites() -> set[str]:
+    """``module.function`` of every ``<expr>.conf.set(...)`` call in the
+    package outside session.py (dotted through nested defs)."""
+    import ast
+    from pathlib import Path
+
+    sites: set[str] = set()
+
+    def visit(node: ast.AST, scope: tuple[str, ...]) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            scope = scope + (node.name,)
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "set"
+            and isinstance(node.func.value, ast.Attribute)
+            and node.func.value.attr == "conf"
+        ):
+            sites.add(".".join(scope if len(scope) > 1 else scope + ("<module>",)))
+        for child in ast.iter_child_nodes(node):
+            visit(child, scope)
+
+    session_py = Path(S.__file__)
+    for path in sorted(session_py.parent.rglob("*.py")):
+        if path != session_py:
+            visit(ast.parse(path.read_text(), str(path)), (path.stem,))
+    return sites
+
+
+def test_session_conf_mutations_are_the_known_sites():
+    """Session-global conf is set only by session.py and three known
+    drains. A new ``spark.conf.set`` anywhere else fails here: prefer a
+    per-write option or a ``newSession()``."""
+    assert _conf_set_sites() == {
+        # parquet.nanosAsLong for the nanosecond events source, never restored
+        "streams.events_stream",
+        # shuffle.partitions narrowed around the drain, restored after
+        "streams.run_stream_to_memory",
+        "analytics.streamed_customer_features",
+    }

@@ -4,8 +4,8 @@ integer log ladder), ngram_novelty_report (held-out n-gram novelty),
 topk_churn_report (heavy-hitter churn between halves),
 k_anonymity_report (quasi-identifier risk census),
 unimax_allocation_report (exact integer UniMax water-filling), and
-streamed_bloom_filter_report (membership sketch maintenance completing
-the streamed quartet — shares the registered batch oracle VERBATIM).
+streamed_bloom_filter_report (streamed membership sketch maintenance —
+shares the registered batch oracle VERBATIM).
 Same discipline as every staged predecessor: DuckDB oracle compares at
 two gate scales, handcrafted semantics, hostile inputs, stream==batch +
 verbatim-retry pins, and plan gates."""
@@ -344,10 +344,9 @@ def test_unimax_windows_are_language_bounded(spark):
 
 def test_streamed_bloom_is_the_verbatim_batch_twin(spark):
     """The streamed entry shares bloom_prefilter_stats' oracle string
-    VERBATIM (the fourth verbatim twin — the full streamed sketch
-    quartet now pairs this way), and the two one-row frames are
-    identical: OR-idempotent word folding makes the snapshot THE batch
-    filter."""
+    VERBATIM (the streamed_hourly_rollup precedent), and the two
+    one-row frames are identical: OR-idempotent word folding makes the
+    snapshot THE batch filter."""
     assert E.STREAMED_BLOOM_ORACLE is E.BLOOM_PREFILTER_ORACLE
     a = [tuple(r) for r in E.bloom_prefilter_stats(spark, SF_SMOKE).collect()]
     b = [
@@ -361,8 +360,7 @@ def test_streamed_bloom_snapshot_and_retry(spark, tmp_path):
     """Kernel-level stream==batch: three arrival waves through
     bloom_word_stream, snapshot == the one-shot word table
     bit-identically; then a VERBATIM replay of the last wave — bit_or
-    is idempotent, so the retry must change NOTHING (the easiest
-    recovery story in the quartet, pinned anyway)."""
+    is idempotent, so the retry must change NOTHING."""
     from retail_aws_etl_pipeline_spark.operators.dedup import bloom_build_words
     from retail_aws_etl_pipeline_spark.session import load_tables
     from retail_aws_etl_pipeline_spark.streaming.streams import (

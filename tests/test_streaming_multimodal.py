@@ -376,6 +376,67 @@ def test_probe_image_dims_headers_and_errors():
         probe_image_dims(b"GIF89a\x40")
 
 
+def test_tiff_four_corner_layouts_parse():
+    """All four layout corners (II/MM × SHORT/LONG) parse to the same
+    dims — and under 'MM' the SHORT value sits in the HIGH half of the
+    value slot, where an endian-naive low-half read would return the
+    zero padding instead (the trap the dual-endian walk exists for)."""
+    from retail_aws_etl_pipeline_spark.operators.multimodal import (
+        _tiff_header_bytes,
+        probe_image_dims,
+    )
+
+    for endian in ("little", "big"):
+        for wide in (False, True):
+            buf = _tiff_header_bytes(640, 480, endian, wide)
+            assert probe_image_dims(buf) == ("tiff", 640, 480), (endian, wide)
+    # the misparse trap, demonstrated: naive low-half read of the MM
+    # SHORT slot yields 0 — the correct parser must NOT return that
+    mm_short = _tiff_header_bytes(640, 480, "big", False)
+    e = 8 + 2 + 12  # second entry = ImageWidth
+    naive = int.from_bytes(mm_short[e + 10 : e + 12], "big")  # low half
+    assert naive == 0  # padding — what a left-justification-blind reader sees
+
+
+def test_tiff_hostile_inputs_raise_or_unknown():
+    """Truncations inside a recognized TIFF must RAISE (never misreport);
+    an unrecognized byte-order marker is 'unknown'; an IFD whose entry
+    count points past EOF raises; an unsupported dims type raises."""
+    import pytest as _pytest
+
+    from retail_aws_etl_pipeline_spark.operators.multimodal import (
+        _tiff_header_bytes,
+        probe_image_dims,
+    )
+
+    good = _tiff_header_bytes(33, 44, "little", False)
+    assert probe_image_dims(good) == ("tiff", 33, 44)
+    assert probe_image_dims(b"IX*\x00" + good[4:])[0] == "unknown"
+    with _pytest.raises(ValueError):
+        probe_image_dims(good[:6])  # no IFD offset
+    with _pytest.raises(ValueError):
+        probe_image_dims(good[:12])  # IFD entries beyond EOF
+    # entry count lies: claims 200 entries in a 4-entry buffer
+    lying = bytearray(good)
+    lying[8:10] = (200).to_bytes(2, "little")
+    with _pytest.raises(ValueError):
+        probe_image_dims(bytes(lying))
+    # unsupported dims type (RATIONAL=5) must raise, not misread
+    bad_type = bytearray(good)
+    e = 8 + 2 + 12  # ImageWidth entry
+    bad_type[e + 2 : e + 4] = (5).to_bytes(2, "little")
+    with _pytest.raises(ValueError):
+        probe_image_dims(bytes(bad_type))
+    # IFD offset pointing INSIDE the 8-byte header (e.g. 0) is
+    # structurally invalid — must raise, never parse header bytes as
+    # IFD entries (ADVICE r15)
+    for bogus in (0, 4, 7):
+        inside = bytearray(good)
+        inside[4:8] = bogus.to_bytes(4, "little")
+        with _pytest.raises(ValueError):
+            probe_image_dims(bytes(inside))
+
+
 def test_decode_png_rejects_truncated_chunk_length():
     """ADVICE r4: a chunk whose declared length points past the buffer must
     fail with a clear 'truncated' error, not a confusing downstream one."""
