@@ -1569,7 +1569,6 @@ def bloom_prefilter_census(
     probes: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    words: DataFrame | None = None,
 ) -> DataFrame:
     """Bloom membership prefilter census — the sub-linear gate an
     incremental exact-dedup cadence runs BEFORE the anti-join: build the
@@ -1591,14 +1590,8 @@ def bloom_prefilter_census(
     onto one pass over the probes. At 100 TB the filter answers "seen
     before?" without touching the standing corpus; only Bloom-positive
     documents proceed to the exact anti-join.
-
-    ``words`` lets a caller supply a PREBUILT (word_idx, word) filter —
-    the streamed-maintenance path reads it from the bit_or snapshot
-    instead of rescanning ``hist``; the census itself is unchanged, so
-    stream == batch rides the word table's merge identity.
     """
-    if words is None:
-        words = bloom_build_words(hist, text_col)
+    words = bloom_build_words(hist, text_col)
     probe_bits = (
         probes.select(
             F.col(id_col),

@@ -1,7 +1,7 @@
 """Multi-column data layout: Z-order (Morton) clustering for scans.
 
 Range-sorting a table on ONE key gives every file a tight min-max on
-that key and nothing on any other (tests/test_bucketing.py pins the
+that key and nothing on any other (tests/test_layout.py pins the
 single-key lever). Real 100 TB tables are queried on more than one
 column; the standard public technique (Morton/Z-order curves — the same
 layout Delta Lake's OPTIMIZE ZORDER BY and many warehouses use) maps

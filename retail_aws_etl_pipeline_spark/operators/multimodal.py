@@ -9,9 +9,10 @@ handled), PNG (stdlib zlib deflate/inflate + per-scanline unfiltering of
 all five filter types, 8-bit RGB/RGBA), PCM16 WAV (RIFF chunk walk),
 nearest-neighbor BMP resize, and frame sampling over a concatenated-BMP
 "video" container (frames split by each BMP header's file-size field).
-JPEG/MP4 still require PIL / cv2, which are NOT in this container — those
-kernels remain STUBBED behind an import-try with a clearly-marked
-``NotImplementedError``; the Spark-side plumbing is identical either way.
+Compressed formats (JPEG, WebP, AVIF, MP4, FLAC, MP3, Ogg) are probed
+from their headers for dimensions and stream parameters, never decoded:
+pixel or frame decode would need PIL / cv2, which the package does not
+depend on.
 
 At 100 TB: payloads dominate row size — the operators project only
 (id, payload) so Parquet column pruning keeps metadata-only queries from
@@ -1165,60 +1166,6 @@ def probe_dims(media: DataFrame) -> DataFrame:
 
     return media.select("media_id", "payload").mapInPandas(
         kernel, schema="media_id long, format string, width int, height int"
-    )
-
-
-def _require(module: str, op: str):
-    try:
-        return __import__(module)
-    except ImportError as exc:  # pragma: no cover - container has no media libs
-        raise NotImplementedError(
-            f"{op} requires '{module}', which is not available in this "
-            f"environment. The Spark plumbing (schema/batching) is complete; "
-            f"plug the kernel in when the library is present."
-        ) from exc
-
-
-def decode_images(media: DataFrame) -> DataFrame:
-    """image payload → (media_id, width, height, mode). STUB: needs PIL."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        PIL = _require("PIL.Image", "decode_images")
-        import io
-
-        for pdf in batches:
-            rows = {"media_id": [], "width": [], "height": [], "mode": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                img = PIL.Image.open(io.BytesIO(payload))
-                rows["media_id"].append(mid)
-                rows["width"].append(img.width)
-                rows["height"].append(img.height)
-                rows["mode"].append(img.mode)
-            yield pd.DataFrame(rows)
-
-    return media.filter(F.col("kind") == "image").select("media_id", "payload").mapInPandas(
-        kernel, schema="media_id long, width int, height int, mode string"
-    )
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """image payload → resized payload. STUB: needs PIL."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _require("PIL.Image", "resize_images")
-        yield from ()  # pragma: no cover
-
-    return media.filter(F.col("kind") == "image").select("media_id", "payload").mapInPandas(
-        kernel, schema="media_id long, payload binary"
-    )
-
-
-def sample_frames(media: DataFrame, every_n: int = 30) -> DataFrame:
-    """video payload → sampled frame payloads. STUB: needs cv2."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _require("cv2", "sample_frames")
-        yield from ()  # pragma: no cover
-
-    return media.filter(F.col("kind") == "video").select("media_id", "payload").mapInPandas(
-        kernel, schema="media_id long, frame_idx int, payload binary"
     )
 
 

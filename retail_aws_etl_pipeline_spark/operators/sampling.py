@@ -529,9 +529,9 @@ def _perceptron_margins(feats: DataFrame, w: list[int], id_col: str) -> DataFram
     )
 
 
-def perceptron_fit(
+def perceptron_fit_trace(
     feats: DataFrame, rounds: int = PCTRON_ROUNDS, id_col: str = "doc_id"
-) -> list[list[int]]:
+) -> tuple[list[list[int]], list[tuple[int, int, int]]]:
     """Batch ("parallel") perceptron: per round, every currently
     misclassified document (margin y·(w·x) <= 0; w starts at 0, so round
     1 updates on the whole corpus) contributes y·x to the weight update
@@ -547,16 +547,9 @@ def perceptron_fit(
     dsir_fit path) — scoring under fixed literal weights has no such
     bound (SCALING.md watchlist row).
 
-    Returns the weight vector AFTER each round (len = ``rounds``).
-    """
-    return perceptron_fit_trace(feats, rounds, id_col)[0]
-
-
-def perceptron_fit_trace(
-    feats: DataFrame, rounds: int = PCTRON_ROUNDS, id_col: str = "doc_id"
-) -> tuple[list[list[int]], list[tuple[int, int, int]]]:
-    """:func:`perceptron_fit` plus the per-round error census
-    (n_mis, n_mis_pos, n_mis_neg) under each round's INCOMING weights.
+    Returns ``(weights, census)``: the weight vector AFTER each round
+    (len = ``rounds``) and the per-round error census (n_mis, n_mis_pos,
+    n_mis_neg) under each round's INCOMING weights.
 
     The census rides the SAME job as the update aggregate: an
     ``Observation`` on the margins frame fires during the delta collect
@@ -636,14 +629,6 @@ def perceptron_fit_trace(
     return out, trace
 
 
-#: Temperature-sampling default: tau = 2, i.e. group weight n_g^(1/2).
-#: The exponent is fixed at 1/2 deliberately — floor(sqrt(n)) is
-#: integer-EXACT on both engines (IEEE-754 sqrt is correctly rounded and
-#: counts below 2^52 are exactly representable), where a general n^(1/tau)
-#: via pow/exp/log is libm-dependent and can hash-mismatch across engines.
-TEMP_TAU = 2
-
-
 def temperature_quota(
     df: DataFrame, group_col: str = "lang", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -661,6 +646,11 @@ def temperature_quota(
     natural corpus share (ppm), temperature share (ppm), the same-N
     quota, and the resulting sampling rate (ppm of the group's own docs;
     > 1e6 means the group is UP-sampled, i.e. repeated epochs).
+
+    tau is fixed at 2 on purpose: floor(sqrt(n)) is integer-exact on
+    both engines (IEEE-754 sqrt is correctly rounded and counts below
+    2^52 are exactly representable), where a general n^(1/tau) via
+    pow/exp/log is libm-dependent and can hash-mismatch across engines.
 
     Everything is integer floor arithmetic. Envelope: w_g*1e6 and
     w_g*N stay within int64 for N up to ~4.4e12 docs (N^1.5 < 2^63);

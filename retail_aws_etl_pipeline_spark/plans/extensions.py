@@ -7240,7 +7240,7 @@ def _temperature_oracle() -> str:
     """Oracle for :func:`temperature_mixture_report`.
     floor(sqrt(n)) is exact on both engines: counts < 2^52 are exactly
     representable and IEEE-754 sqrt is correctly rounded — the reason
-    TEMP_TAU is fixed at 2 instead of a libm pow exponent."""
+    tau is fixed at 2 instead of a libm pow exponent."""
     return """
     WITH tc AS (
         SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -8311,674 +8311,3 @@ def langid_confusion_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("lang", "lang_pred")
     )
-
-
-# ---------------------------------------------------------------------------
-# r19 queue seeds (staged r16): the curation-audit completions — char-level
-# entropy quality signal, split-level n-gram novelty, heavy-hitter churn,
-# k-anonymity risk, UniMax mixture allocation, and the streamed Bloom
-# membership sketch. Not registered; each carries its local oracle battery
-# (tests/test_staged_r19.py).
-# ---------------------------------------------------------------------------
-
-
-def _char_entropy_oracle() -> str:
-    """Oracle for :func:`char_entropy_report`: per-char ppm probability
-    through the SAME generated floor(log2(p^2)) ladder the Spark plan
-    compiles (textops.floor_log2_sq_sql — shared verbatim, no libm log
-    on either engine), terciles via NTILE mirroring _distributed_ntile."""
-    ladder = TX.floor_log2_sq_sql("GREATEST(t.c * 1000000 // n.n, 1)")
-    return f"""
-    WITH ce_ch AS (
-        SELECT doc_id, UNNEST(string_split(text, '')) AS ch
-        FROM documents WHERE text IS NOT NULL AND text <> ''
-    ),
-    ce_cnt AS (
-        SELECT doc_id, ch, CAST(COUNT(*) AS BIGINT) AS c
-        FROM ce_ch GROUP BY doc_id, ch
-    ),
-    ce_n AS (
-        SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n FROM ce_cnt GROUP BY doc_id
-    ),
-    ce_sc AS (
-        SELECT t.doc_id, CAST(SUM(t.c * {ladder}) AS BIGINT) AS ll_q
-        FROM ce_cnt t JOIN ce_n n ON n.doc_id = t.doc_id
-        GROUP BY t.doc_id
-    ),
-    ce_m AS (
-        SELECT s.doc_id, n.n AS n_chars, s.ll_q,
-               CAST(s.ll_q * 1000000 // n.n AS BIGINT) AS mean_llq_ppm
-        FROM ce_sc s JOIN ce_n n ON n.doc_id = s.doc_id
-    )
-    SELECT doc_id, n_chars, ll_q, mean_llq_ppm,
-           CAST(NTILE(3) OVER (ORDER BY mean_llq_ppm DESC, doc_id)
-                AS BIGINT) AS entropy_bucket
-    FROM ce_m ORDER BY doc_id
-    """
-
-
-CHAR_ENTROPY_ORACLE = _char_entropy_oracle()
-
-
-def char_entropy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED (r19 queue): character-entropy quality signal — the
-    compression-style fluency proxy of the Gopher line (Rae et al. 2021
-    use compressibility; CCNet uses LM perplexity — this is the
-    model-free char-level analogue): each document's character
-    distribution scored by the EXACT integer floor(log2(p^2)) ladder
-    (p in ppm; textops.floor_log2_sq_sql, shared verbatim with the
-    oracle — the doc_perplexity_report discipline at character level),
-    so low-entropy documents (repeated chars, padding, binary junk)
-    surface with a HIGH mean score. Tercile buckets via the shared
-    _distributed_ntile — never a global window over raw rows.
-
-    Scale shape: one (doc, char)-keyed exchange (alphabet-bounded per
-    doc — the char census is also how gopher's symbol ratios scan), a
-    per-doc fold, and the ntile's range exchange. 100 TB: the char
-    exchange is <= |alphabet| rows per doc, strictly smaller than any
-    token-level explode this engine already runs."""
-    from retail_aws_etl_pipeline_spark.operators.caching import (
-        retained_caches,
-        retaining,
-    )
-    from retail_aws_etl_pipeline_spark.plans.analytics import _distributed_ntile
-
-    t = load_tables(spark, sf_dir, ["documents"])
-    docs = t["documents"].filter(
-        F.col("text").isNotNull() & (F.col("text") != "")
-    )
-    from retail_aws_etl_pipeline_spark.session import spread_for_compute
-
-    # doc-keyed spread (r17): the per-CHARACTER explode is the heaviest
-    # fan-out in the text family — parallelize it and keep the (doc, ch)
-    # aggregate exchange-free
-    cnt = (
-        spread_for_compute(docs.select("doc_id", "text"), keys=["doc_id"])
-        .select("doc_id", F.explode(F.split("text", "")).alias("ch"))
-        .groupBy("doc_id", "ch")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    n = cnt.groupBy("doc_id").agg(F.sum("c").cast("long").alias("n_chars"))
-    ladder = TX.floor_log2_sq_sql("greatest(c * 1000000L div n_chars, 1L)")
-    scores = (
-        cnt.join(n, "doc_id")
-        .withColumn("__llq", F.expr(f"c * {ladder}"))
-        .groupBy("doc_id", "n_chars")
-        .agg(F.sum("__llq").cast("long").alias("ll_q"))
-        .withColumn(
-            "mean_llq_ppm", F.expr("ll_q * 1000000L div n_chars").cast("long")
-        )
-    )
-    nt = _distributed_ntile(
-        scores, [F.desc("mean_llq_ppm"), F.asc("doc_id")], 3, "entropy_bucket"
-    )
-    out = nt.select(
-        "doc_id", "n_chars", "ll_q", "mean_llq_ppm", "entropy_bucket"
-    ).orderBy("doc_id")
-    return retaining(out, *retained_caches(nt))
-
-
-#: n-gram sizes the novelty census sweeps (shared with the diversity census).
-NGRAM_NOVELTY_SIZES = (1, 2, 3)
-
-
-def _ngram_novelty_oracle() -> str:
-    legs = []
-    for n in NGRAM_NOVELTY_SIZES:
-        legs.append(f"""
-        SELECT half, CAST({n} AS BIGINT) AS n,
-               array_to_string(t[i:i + {n - 1}], ' ') AS gram
-        FROM (SELECT half, t,
-                     UNNEST(generate_series(1, len(t) - {n - 1})) AS i
-              FROM nv_toks WHERE len(t) >= {n})""")
-    body = " UNION ALL ".join(legs)
-    return f"""
-    WITH nv_toks AS (
-        SELECT ABS(COALESCE(doc_id, 0)) % 2 AS half,
-               string_split(text, ' ') AS t
-        FROM documents WHERE text IS NOT NULL
-    ),
-    nv_grams AS ({body}),
-    nv_cnt AS (
-        SELECT n, gram,
-               CAST(SUM(CASE WHEN half = 1 THEN 1 ELSE 0 END) AS BIGINT)
-                   AS c_test,
-               MAX(CASE WHEN half = 0 THEN 1 ELSE 0 END) AS seen_train
-        FROM nv_grams GROUP BY n, gram
-    )
-    SELECT n,
-           CAST(SUM(c_test) AS BIGINT) AS n_test_total,
-           CAST(SUM(CASE WHEN c_test > 0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_test_distinct,
-           CAST(SUM(CASE WHEN seen_train = 0 THEN c_test ELSE 0 END)
-                AS BIGINT) AS n_novel_occurrences,
-           CAST(SUM(CASE WHEN c_test > 0 AND seen_train = 0 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_novel_distinct,
-           CAST(SUM(CASE WHEN seen_train = 0 THEN c_test ELSE 0 END) * 1000000
-                // GREATEST(SUM(c_test), 1) AS BIGINT) AS novelty_occ_ppm,
-           CAST(SUM(CASE WHEN c_test > 0 AND seen_train = 0 THEN 1 ELSE 0 END)
-                * 1000000
-                // GREATEST(SUM(CASE WHEN c_test > 0 THEN 1 ELSE 0 END), 1)
-                AS BIGINT) AS novelty_distinct_ppm
-    FROM nv_cnt
-    GROUP BY n ORDER BY n
-    """
-
-
-NGRAM_NOVELTY_ORACLE = _ngram_novelty_oracle()
-
-
-def ngram_novelty_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED (r19 queue): split-level n-gram NOVELTY census — the
-    generalization/memorization audit (the complement of
-    benchmark_contamination's overlap direction and oov_rate_by_split's
-    token-level OOV): for n in {1,2,3}, how much of the held-out half's
-    n-gram mass is UNSEEN in the training half? A novelty collapse at
-    high n means the split leaks sequences (memorization risk measures
-    on duplicated corpora overstate generalization — Lee et al. 2021);
-    a unigram novelty spike means vocabulary drift. Halves by
-    ABS(COALESCE(doc_id, 0)) % 2 — the sign-safe, NULL-safe parity both
-    engines compute identically.
-
-    Scale shape: ONE explode over the three sizes carrying the half tag
-    (the diversity-census discipline) into one (n, gram) exchange whose
-    FUSED aggregate answers both questions at once — test occurrence
-    count AND train membership flag — so the novelty "anti join" is a
-    per-gram flag, not a join, and the corpus is scanned exactly once
-    (the shared-lineage re-explode trap never opens). Rollup: 3 rows."""
-    t = load_tables(spark, sf_dir, ["documents"])
-    docs = t["documents"].filter(F.col("text").isNotNull()).select(
-        F.expr("abs(coalesce(doc_id, 0L)) % 2").alias("half"), "text"
-    )
-    arrays = ", ".join(
-        f"CASE WHEN size(__toks) >= {n} THEN"
-        f" transform(sequence(1, size(__toks) - {n - 1}),"
-        f" i -> named_struct('n', {n}L, 'gram',"
-        f" concat_ws(' ', slice(__toks, i, {n}))))"
-        " ELSE array() END"
-        for n in NGRAM_NOVELTY_SIZES
-    )
-    grams = (
-        docs.withColumn("__toks", F.split("text", " "))
-        .select("half", F.explode(F.expr(f"concat({arrays})")).alias("g"))
-        .select("half", F.col("g.n").alias("n"), F.col("g.gram").alias("gram"))
-    )
-    # ONE fused pass decides both questions per (n, gram) — test count
-    # and train membership — so the corpus is exploded exactly once and
-    # the novelty "anti join" degenerates into a flag (no second scan,
-    # no join at all; the shared-lineage re-explode trap never opens).
-    cnt = grams.groupBy("n", "gram").agg(
-        F.sum((F.col("half") == 1).cast("long")).cast("long").alias("c_test"),
-        F.max((F.col("half") == 0).cast("int")).alias("seen_train"),
-    )
-    return (
-        cnt.groupBy("n")
-        .agg(
-            F.sum("c_test").cast("long").alias("n_test_total"),
-            F.sum((F.col("c_test") > 0).cast("long"))
-            .cast("long")
-            .alias("n_test_distinct"),
-            F.sum(F.when(F.col("seen_train") == 0, F.col("c_test")).otherwise(0))
-            .cast("long")
-            .alias("n_novel_occurrences"),
-            F.sum(
-                ((F.col("c_test") > 0) & (F.col("seen_train") == 0)).cast("long")
-            )
-            .cast("long")
-            .alias("n_novel_distinct"),
-        )
-        .select(
-            "n",
-            "n_test_total",
-            "n_test_distinct",
-            "n_novel_occurrences",
-            "n_novel_distinct",
-            F.expr(
-                "n_novel_occurrences * 1000000L div greatest(n_test_total, 1L)"
-            ).cast("long").alias("novelty_occ_ppm"),
-            F.expr(
-                "n_novel_distinct * 1000000L div greatest(n_test_distinct, 1L)"
-            ).cast("long").alias("novelty_distinct_ppm"),
-        )
-        .orderBy("n")
-    )
-
-
-#: Heavy-hitter churn: top-K size (small enough that both top lists ride
-#: TakeOrderedAndProject / LIMIT — never a full sort).
-TOPK_CHURN_K = 32
-
-TOPK_CHURN_ORACLE = f"""
-    WITH tc_tok AS (
-        SELECT ABS(COALESCE(doc_id, 0)) % 2 AS half, t.tok
-        FROM (SELECT doc_id,
-                     UNNEST(string_split(text, ' ')) AS tok
-              FROM documents WHERE text IS NOT NULL) t
-        WHERE t.tok <> ''
-    ),
-    tc_a AS (
-        SELECT tok, CAST(COUNT(*) AS BIGINT) AS c
-        FROM tc_tok WHERE half = 0 GROUP BY tok
-        ORDER BY c DESC, tok LIMIT {TOPK_CHURN_K}
-    ),
-    tc_b AS (
-        SELECT tok, CAST(COUNT(*) AS BIGINT) AS c
-        FROM tc_tok WHERE half = 1 GROUP BY tok
-        ORDER BY c DESC, tok LIMIT {TOPK_CHURN_K}
-    ),
-    tc_j AS (
-        SELECT a.tok AS tok_a, b.tok AS tok_b
-        FROM tc_a a FULL OUTER JOIN tc_b b ON b.tok = a.tok
-    ),
-    tc_c AS (
-        SELECT CAST(SUM(CASE WHEN tok_a IS NOT NULL AND tok_b IS NOT NULL
-                             THEN 1 ELSE 0 END) AS BIGINT) AS n_common,
-               CAST(SUM(CASE WHEN tok_b IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_exited,
-               CAST(SUM(CASE WHEN tok_a IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_entered,
-               CAST(COUNT(*) AS BIGINT) AS n_union
-        FROM tc_j
-    ),
-    tc_ta AS (SELECT MIN({{'nc': -c, 't': tok}}).t AS top_token_a FROM tc_a),
-    tc_tb AS (SELECT MIN({{'nc': -c, 't': tok}}).t AS top_token_b FROM tc_b)
-    SELECT CAST({TOPK_CHURN_K} AS BIGINT) AS k,
-           c.n_common, c.n_entered, c.n_exited,
-           CAST(c.n_common * 1000000 // GREATEST(c.n_union, 1) AS BIGINT)
-               AS jaccard_ppm,
-           ta.top_token_a, tb.top_token_b
-    FROM tc_c c, tc_ta ta, tc_tb tb
-    """
-
-
-def topk_churn_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED (r19 queue): heavy-hitter CHURN between corpus halves —
-    the epoch-over-epoch vocabulary-drift monitor that names WHICH
-    heavy hitters moved: exact top-{K} tokens per half under the
-    deterministic (count desc, token asc) order, then the set churn —
-    common / entered / exited counts and the top-set Jaccard in ppm,
-    plus each half's #1 token via the single-buffer struct argmax.
-    Halves by the sign-safe ABS(COALESCE(doc_id, 0)) %% 2 parity.
-
-    Scale shape: one (half, token) exchange; each top list rides a
-    TakeOrderedAndProject (K = 32 rows cross the wire); the churn join
-    is K x K at most. 100 TB: the census never materializes more than
-    2K rows past the token count."""
-    t = load_tables(spark, sf_dir, ["documents"])
-    toks = (
-        t["documents"]
-        .filter(F.col("text").isNotNull())
-        .select(
-            F.expr("abs(coalesce(doc_id, 0L)) % 2").alias("half"),
-            F.explode(F.split("text", " ")).alias("tok"),
-        )
-        .filter(F.col("tok") != "")
-    )
-    counts = toks.groupBy("half", "tok").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-
-    def top(half: int) -> DataFrame:
-        return (
-            counts.filter(F.col("half") == half)
-            .select("tok", "c")
-            .orderBy(F.desc("c"), F.asc("tok"))
-            .limit(TOPK_CHURN_K)
-        )
-
-    a, b = top(0), top(1)
-    # counts ride THROUGH the full-outer join so the #1-token argmax
-    # folds into the same single aggregate as the churn census — the
-    # top lists are computed exactly once (two TakeOrderedAndProject
-    # branches, nothing else re-derives them)
-    joined = a.select(
-        F.col("tok").alias("tok_a"), F.col("c").alias("c_a")
-    ).join(
-        b.select(F.col("tok").alias("tok_b"), F.col("c").alias("c_b")),
-        F.col("tok_a") == F.col("tok_b"),
-        "full_outer",
-    )
-    churn = joined.agg(
-        F.sum(
-            (F.col("tok_a").isNotNull() & F.col("tok_b").isNotNull()).cast("long")
-        ).alias("n_common"),
-        F.sum(F.col("tok_a").isNull().cast("long")).alias("n_entered"),
-        F.sum(F.col("tok_b").isNull().cast("long")).alias("n_exited"),
-        F.count(F.lit(1)).cast("long").alias("n_union"),
-        F.min(
-            F.when(
-                F.col("tok_a").isNotNull(),
-                F.struct((-F.col("c_a")).alias("nc"), F.col("tok_a").alias("t")),
-            )
-        )
-        .getField("t")
-        .alias("top_token_a"),
-        F.min(
-            F.when(
-                F.col("tok_b").isNotNull(),
-                F.struct((-F.col("c_b")).alias("nc"), F.col("tok_b").alias("t")),
-            )
-        )
-        .getField("t")
-        .alias("top_token_b"),
-    )
-    return (
-        churn.select(
-            F.lit(TOPK_CHURN_K).cast("long").alias("k"),
-            "n_common",
-            "n_entered",
-            "n_exited",
-            F.expr("n_common * 1000000L div greatest(n_union, 1L)")
-            .cast("long")
-            .alias("jaccard_ppm"),
-            "top_token_a",
-            "top_token_b",
-        )
-    )
-
-
-#: k-anonymity risk thresholds the census sweeps.
-K_ANON_THRESHOLDS = (2, 5, 10, 20)
-
-#: Quasi-identifier width of the n_chars generalization bucket.
-K_ANON_CHARS_BUCKET = 256
-
-K_ANONYMITY_ORACLE = f"""
-    WITH ka_cls AS (
-        SELECT lang, source, n_chars // {K_ANON_CHARS_BUCKET} AS len_bucket,
-               CAST(COUNT(*) AS BIGINT) AS g
-        FROM documents
-        GROUP BY lang, source, n_chars // {K_ANON_CHARS_BUCKET}
-    ),
-    ka_tot AS (
-        SELECT CAST(SUM(g) AS BIGINT) AS n_docs,
-               CAST(COUNT(*) AS BIGINT) AS n_classes,
-               CAST(MIN(g) AS BIGINT) AS min_class_size,
-               CAST(MAX(g) AS BIGINT) AS max_class_size
-        FROM ka_cls
-    )
-    SELECT CAST(k.k AS BIGINT) AS k,
-           CAST(SUM(CASE WHEN c.g < k.k THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_classes_below_k,
-           CAST(SUM(CASE WHEN c.g < k.k THEN c.g ELSE 0 END) AS BIGINT)
-               AS n_docs_at_risk,
-           CAST(SUM(CASE WHEN c.g < k.k THEN c.g ELSE 0 END) * 1000000
-                // GREATEST(t.n_docs, 1) AS BIGINT) AS risk_ppm,
-           t.n_docs, t.n_classes, t.min_class_size, t.max_class_size
-    FROM ka_cls c,
-         (SELECT UNNEST([{", ".join(str(k) for k in K_ANON_THRESHOLDS)}]) AS k) k,
-         ka_tot t
-    GROUP BY k.k, t.n_docs, t.n_classes, t.min_class_size, t.max_class_size
-    ORDER BY k
-    """
-
-
-def k_anonymity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED (r19 queue): k-anonymity risk census over the corpus's
-    quasi-identifier tuple (lang, source, generalized length bucket) —
-    the re-identification audit (Sweeney 2002) a privacy review runs
-    BEFORE releasing a curated corpus: for each threshold k in
-    {K_ANON_THRESHOLDS}, how many equivalence classes are smaller than
-    k and how many documents sit in them (at-risk mass, ppm). NULL QI
-    values are deliberately KEPT as class values — "metadata absent" is
-    itself an identifying signature, and GROUP BY treats NULL as one
-    class on both engines (the divergence class only bites
-    COUNT(DISTINCT), which this census never uses).
-
-    Scale shape: one QI-keyed exchange partial-aggregated to class
-    sizes (bounded by |langs| x |sources| x length buckets — design
-    cardinality, not corpus size), then a threshold sweep over the
-    class frame crossed with a broadcast single-row total. 100 TB: the
-    class frame is the only exchange; everything after is
-    literal-bounded."""
-    t = load_tables(spark, sf_dir, ["documents"])
-    cls = (
-        t["documents"]
-        .groupBy(
-            "lang",
-            "source",
-            F.expr(f"n_chars div {K_ANON_CHARS_BUCKET}").alias("len_bucket"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("g"))
-    )
-    tot = cls.agg(
-        F.sum("g").cast("long").alias("n_docs"),
-        F.count(F.lit(1)).cast("long").alias("n_classes"),
-        F.min("g").cast("long").alias("min_class_size"),
-        F.max("g").cast("long").alias("max_class_size"),
-    )
-    ks = ", ".join(str(k) for k in K_ANON_THRESHOLDS)
-    swept = cls.select(
-        F.explode(F.expr(f"array({ks})")).alias("__k"), "g"
-    ).select(F.col("__k").cast("long").alias("k"), "g")
-    return (
-        swept.groupBy("k")
-        .agg(
-            F.sum((F.col("g") < F.col("k")).cast("long")).alias(
-                "n_classes_below_k"
-            ),
-            F.sum(F.when(F.col("g") < F.col("k"), F.col("g")).otherwise(0))
-            .cast("long")
-            .alias("n_docs_at_risk"),
-        )
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "k",
-            "n_classes_below_k",
-            "n_docs_at_risk",
-            F.expr("n_docs_at_risk * 1000000L div greatest(n_docs, 1L)")
-            .cast("long")
-            .alias("risk_ppm"),
-            "n_docs",
-            "n_classes",
-            "min_class_size",
-            "max_class_size",
-        )
-        .orderBy("k")
-    )
-
-
-#: UniMax epoch cap: no language may be sampled more than this many times
-#: over (Chung et al. 2023 use N epochs as the only knob).
-UNIMAX_EPOCH_CAP = 2
-
-UNIMAX_ORACLE = f"""
-    WITH ux_l AS (
-        SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs
-        FROM documents WHERE lang IS NOT NULL GROUP BY lang
-    ),
-    ux_tot AS (
-        SELECT CAST(SUM(n_docs) AS BIGINT) AS budget,
-               CAST(COUNT(*) AS BIGINT) AS n_langs
-        FROM ux_l
-    ),
-    ux_rk AS (
-        SELECT lang, n_docs, n_docs * {UNIMAX_EPOCH_CAP} AS cap,
-               CAST(ROW_NUMBER() OVER (ORDER BY n_docs * {UNIMAX_EPOCH_CAP}, lang)
-                    AS BIGINT) AS i,
-               CAST(COALESCE(SUM(n_docs * {UNIMAX_EPOCH_CAP})
-                    OVER (ORDER BY n_docs * {UNIMAX_EPOCH_CAP}, lang
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                    AS BIGINT) AS cap_before
-        FROM ux_l
-    ),
-    ux_sat AS (
-        SELECT r.*, t.budget, t.n_langs,
-               CASE WHEN r.cap * (t.n_langs - r.i + 1) <= t.budget - r.cap_before
-                    THEN 1 ELSE 0 END AS saturated
-        FROM ux_rk r, ux_tot t
-    ),
-    ux_lvl AS (
-        SELECT CAST(COALESCE(SUM(CASE WHEN saturated = 1 THEN cap END), 0)
-                    AS BIGINT) AS c_sat,
-               CAST(SUM(saturated) AS BIGINT) AS i_star
-        FROM ux_sat
-    ),
-    ux_a AS (
-        SELECT s.lang, s.n_docs, s.cap, s.saturated, s.budget,
-               s.n_langs - l.i_star AS m,
-               s.budget - l.c_sat AS r,
-               s.i - l.i_star AS j
-        FROM ux_sat s, ux_lvl l
-    )
-    SELECT lang, n_docs, cap,
-           CAST(CASE WHEN saturated = 1 THEN cap
-                     WHEN j > m - (r % m) THEN r // m + 1
-                     ELSE r // m END AS BIGINT) AS alloc,
-           CAST(saturated AS BIGINT) AS saturated,
-           CAST((CASE WHEN saturated = 1 THEN cap
-                      WHEN j > m - (r % m) THEN r // m + 1
-                      ELSE r // m END) * 1000000
-                // GREATEST(budget, 1) AS BIGINT) AS quota_ppm
-    FROM ux_a ORDER BY lang
-    """
-
-
-def unimax_allocation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED (r19 queue): UniMax mixture allocation (Chung et al. 2023)
-    — the budget-capped UNIFORM language sampling that replaced
-    temperature sampling for mT5-class multilingual pretraining: spread
-    a total budget (here: one corpus-size worth of samples) uniformly
-    across languages, but never sample any language past its epoch cap
-    (n_docs x {UNIMAX_EPOCH_CAP}). Exact integer water-filling in
-    closed form: with languages sorted by (cap asc, lang asc),
-    saturation is a prefix property (cap_i * langs_remaining <=
-    budget_remaining — provably monotone for ascending caps), and the
-    unsaturated suffix takes the sequential floor division, whose
-    remainder lands on the LAST r positions of the order
-    (floor-division water level). Complements
-    temperature_mixture_report: same per-language census in, the OTHER
-    published mixing policy out.
-
-    Scale shape: one groupBy(lang) exchange; every window below it runs
-    over the |langs|-bounded aggregate frame (the histogram-bounded
-    window exemption, never a window over raw rows), and the level
-    computation is a broadcast single-row join. NULL lang excluded (the
-    shard-manifest discipline)."""
-    from pyspark.sql import Window as W
-
-    t = load_tables(spark, sf_dir, ["documents"])
-    langs = (
-        t["documents"]
-        .filter(F.col("lang").isNotNull())
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-        .withColumn("cap", (F.col("n_docs") * UNIMAX_EPOCH_CAP).cast("long"))
-    )
-    tot = langs.agg(
-        F.sum("n_docs").cast("long").alias("budget"),
-        F.count(F.lit(1)).cast("long").alias("n_langs"),
-    )
-    w = W.orderBy("cap", "lang")
-    ranked = (
-        langs.withColumn("i", F.row_number().over(w).cast("long"))
-        .withColumn(
-            "cap_before",
-            F.coalesce(
-                F.sum("cap").over(w.rowsBetween(W.unboundedPreceding, -1)),
-                F.lit(0),
-            ).cast("long"),
-        )
-        .crossJoin(F.broadcast(tot))
-        .withColumn(
-            "saturated",
-            (
-                F.col("cap") * (F.col("n_langs") - F.col("i") + 1)
-                <= F.col("budget") - F.col("cap_before")
-            ).cast("long"),
-        )
-    )
-    lvl = ranked.agg(
-        F.coalesce(
-            F.sum(F.when(F.col("saturated") == 1, F.col("cap"))), F.lit(0)
-        )
-        .cast("long")
-        .alias("c_sat"),
-        F.sum("saturated").cast("long").alias("i_star"),
-    )
-    alloc = F.expr(
-        """
-        CASE WHEN saturated = 1 THEN cap
-             WHEN i - i_star > (n_langs - i_star) - ((budget - c_sat) % (n_langs - i_star))
-             THEN (budget - c_sat) div (n_langs - i_star) + 1L
-             ELSE (budget - c_sat) div (n_langs - i_star) END
-        """
-    )
-    return (
-        ranked.crossJoin(F.broadcast(lvl))
-        .withColumn("alloc", alloc.cast("long"))
-        .select(
-            "lang",
-            "n_docs",
-            "cap",
-            "alloc",
-            "saturated",
-            F.expr("alloc * 1000000L div greatest(budget, 1L)")
-            .cast("long")
-            .alias("quota_ppm"),
-        )
-        .orderBy("lang")
-    )
-
-
-def streamed_bloom_filter_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED (r19 queue): MEMBERSHIP-sketch maintenance under streaming
-    ingest: the standing half's 32-word filter is maintained by
-    streaming.bloom_word_stream — each micro-batch bit_or-folds its own
-    rows into a __batch_id partition; read_bloom_snapshot's per-word
-    bit_or fold reassembles the standing filter (OR-idempotent sketch
-    algebra, so stream == batch bit-identically) — and the census is
-    the REGISTERED bloom_prefilter_stats contract on the snapshot
-    words: same probes, same flags, same one-row output, so the oracle
-    is shared VERBATIM (the streamed_hourly_rollup precedent; the
-    strongest pairing story). Waves split the standing half by
-    pmod(coalesce(doc_id, 0) div 2, 2) — NULL-safe (the ADVICE r15
-    lesson) and orthogonal to the standing/ingest parity.
-
-    100 TB: the stream pays one scan per arriving batch; the standing
-    "seen before?" gate is a 128-byte read forever after."""
-    import shutil
-    import tempfile
-
-    from retail_aws_etl_pipeline_spark.streaming.streams import (
-        bloom_word_stream,
-        read_bloom_snapshot,
-    )
-
-    docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    hist = docs.filter(F.col("doc_id") % 2 == 0)
-    probes = docs.filter(F.col("doc_id") % 2 == 1)
-    staging = tempfile.mkdtemp(prefix="streamed_bloom_src_")
-    delta = tempfile.mkdtemp(prefix="streamed_bloom_delta_")
-    ckpt = tempfile.mkdtemp(prefix="streamed_bloom_ckpt_")
-    try:
-        for i in range(2):  # disjoint waves -> separate micro-batches
-            (
-                hist.select("doc_id", "text")
-                .filter(F.expr("pmod(coalesce(doc_id, 0L) div 2, 2)") == i)
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(staging)
-            )
-        stream = (
-            spark.readStream.schema(hist.select("doc_id", "text").schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staging)
-        )
-        q = bloom_word_stream(
-            stream, "text", delta_dir=delta, checkpoint_dir=ckpt
-        )
-        q.awaitTermination()
-        # bounded driver scalar: the word table is <= batches x 32 rows
-        words = read_bloom_snapshot(spark, delta).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(delta, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    return D.bloom_prefilter_census(hist, probes, words=words)
-
-
-#: The streamed Bloom entry shares the batch oracle VERBATIM —
-#: stream == batch (OR-idempotent word fold) is the registered claim.
-STREAMED_BLOOM_ORACLE = BLOOM_PREFILTER_ORACLE

@@ -43,8 +43,6 @@ REQUIRED_COLUMNS = [
     "revenue",
 ]
 
-OPTIONAL_COLUMNS = ["item_category", "payment_method", "customer_id"]
-
 #: Header synonym map after normalization
 #: (glue_job_raw_to_processed.py:148-170, docs/schema_mapping.md).
 HEADER_SYNONYMS = {

@@ -128,30 +128,6 @@ def read_jsonl_documents(
     return parse_jsonl_lines(spark.read.text(path), schema)
 
 
-def jsonl_documents_stream(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType = DOCUMENTS_JSONL_SCHEMA,
-    max_files_per_trigger: int = 1,
-) -> tuple[DataFrame, DataFrame]:
-    """Streaming JSONL corpus ingest: the arrival path for corpora shipped
-    as JSONL drops (one file per producer flush). Same parse as the batch
-    reader — literally the same function over ``readStream.text`` — so
-    the audits and the good-frame contract are identical; downstream this
-    feeds the standing streaming dedup (near_dup_stream's foreachBatch
-    gram index) exactly like a staged parquet directory would. Text
-    streaming sources track processed FILES in the checkpoint, so
-    exactly-once ingest per file holds under restart like every other
-    file-source stream here.
-    """
-    return parse_jsonl_lines(
-        spark.readStream.option("maxFilesPerTrigger", int(max_files_per_trigger)).text(
-            path
-        ),
-        schema,
-    )
-
-
 def ingest_jsonl_corpus(
     spark: SparkSession,
     src_path: str,

@@ -286,34 +286,3 @@ def warc_html_documents(shards: DataFrame) -> DataFrame:
         )
         .withColumn("n_chars", F.length("text").cast("long"))
     )
-
-
-#: binaryFile's fixed schema — streaming file sources require an explicit
-#: schema; binaryFile's is invariant so it is pinned here.
-BINARYFILE_SCHEMA = (
-    "path string, modificationTime timestamp, length long, content binary"
-)
-
-
-def warc_records_stream(
-    spark,
-    path: str,
-    include_body: bool = False,
-    max_files_per_trigger: int = 1,
-):
-    """Streaming WARC ingest: the arrival path for a live crawl — each
-    landed shard becomes (a batch of) records through the SAME
-    parse_warc_records kernel as the batch reader, so stream==batch holds
-    by construction and downstream (extraction, dedup index upkeep) is
-    shared. File sources track processed shards in the checkpoint, so
-    exactly-once per shard holds under restart like every other
-    file-source stream here. ``pathGlobFilter`` keeps non-WARC debris in
-    a landing dir out of the stream."""
-    shards = (
-        spark.readStream.format("binaryFile")
-        .schema(BINARYFILE_SCHEMA)
-        .option("pathGlobFilter", "*.warc*")
-        .option("maxFilesPerTrigger", int(max_files_per_trigger))
-        .load(path)
-    )
-    return parse_warc_records(shards, include_body=include_body)

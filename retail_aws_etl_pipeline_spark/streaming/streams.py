@@ -320,193 +320,6 @@ def gold_upsert_stream(
     return writer.start()
 
 
-def span_dedup_stream(docs: DataFrame, w: int | None = None) -> DataFrame:
-    """Streaming keep-first span dedup — the cross-batch form of
-    fixed-window span dedup: token spans explode scan-side
-    and ``dropDuplicates`` on the span text carries seen-span state across
-    micro-batches, so a span that arrived in ANY earlier batch never
-    re-emits (the production cadence: each ingest wave dedups against
-    everything already ingested, without re-reading the corpus).
-
-    State is one entry per DISTINCT span — unbounded by design: exact
-    corpus-wide dedup has no time horizon. Deployments that can accept
-    recency-windowed dedup bound it by adding an ingest-time watermark
-    column and passing it to dropDuplicates; the exact form instead
-    relies on the state store the same way the batch form relies on the
-    span-keyed shuffle. Provider choice is measured, not asserted
-    (SCALING.md "state-store choice"): the default heap provider wins
-    ~2.3× wall while state fits executor heap (~200 B/key resident —
-    10M keys ≈ 2.0 GB measured), so flip
-    ``spark.sql.streaming.stateStore.providerClass`` to RocksDB only
-    when per-partition state outgrows heap — bounded off-heap memory +
-    disk-resident SSTs, at ~2.3× wall and ~3.3× checkpoint size.
-    """
-    from retail_aws_etl_pipeline_spark.operators.dedup import CHUNK_W, token_chunks
-
-    chunks = token_chunks(docs, w=w if w is not None else CHUNK_W)
-    return chunks.dropDuplicates(["chunk"])
-
-
-def near_dup_stream(
-    docs: DataFrame,
-    index_dir: str,
-    pairs_dir: str,
-    checkpoint_dir: str,
-):
-    """Production streaming near-dup dedup: every micro-batch checks its
-    documents against the STANDING corpus and emits qualifying pairs,
-    then adds itself to the corpus — the incremental cadence of
-    ``incremental_jaccard_counts``, driven by Structured Streaming.
-
-    Per batch (foreachBatch):
-      1. shingle the batch (scan-side);
-      2. within-batch pairs via the inverted-index self-join;
-      3. cross pairs via batch-grams ⋈ standing-gram-index (parquet —
-         cost tracks the ARRIVAL RATE, not corpus²);
-      4. append pairs (normalized id_a < id_b) and the batch's grams.
-
-    Each qualifying pair is emitted EXACTLY ONCE regardless of arrival
-    order: the pair surfaces when its later-arriving member processes
-    (same batch -> within-pairs; earlier batch -> cross-pairs), and
-    cross/within candidate spaces are disjoint. Both sinks partition by
-    batch id under dynamic overwrite, so a foreachBatch RETRY replaces
-    its own partition instead of appending duplicates (at-least-once
-    execution, exactly-once storage). The convergence test asserts the
-    streamed union equals the batch corpus self-join.
-
-    Integer-threshold Jaccard ≥ 0.2, same as the batch family. The gram
-    index append is the state here — unbounded like any exact corpus
-    index, stored as data (parquet), not executor state, so executors
-    stay stateless and the index is queryable/compactable like any table.
-    """
-    process = make_near_dup_batch_processor(index_dir, pairs_dir)
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def make_near_dup_batch_processor(index_dir: str, pairs_dir: str):
-    """The foreachBatch body of :func:`near_dup_stream`, exposed so tests
-    can invoke a single batch directly — in particular to simulate a
-    RETRY (same batch_df + batch_id re-processed after a crash that
-    already committed both sinks) and assert storage stays identical."""
-    from pyspark.sql import functions as F
-
-    from retail_aws_etl_pipeline_spark.operators.dedup import (
-        incremental_jaccard_counts,
-        jaccard_counts,
-        shingles,
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        grams = shingles(batch_df).persist()
-        within = (
-            jaccard_counts(grams)
-            .filter(F.col("common") * 5 >= (F.col("n_a") + F.col("n_b") - F.col("common")))
-            .select("id_a", "id_b", "common")
-        )
-        pairs = within
-        # First batch: the index doesn't exist yet. Catch ONLY the
-        # missing-path AnalysisException — a corrupt index or permission
-        # failure must surface, not silently restart dedup from empty
-        # (the events_stream fallback got the same narrowing in r6).
-        from pyspark.errors import AnalysisException
-
-        try:
-            corpus = spark.read.parquet(index_dir)
-        except AnalysisException:
-            corpus = None
-        if corpus is not None:
-            # RETRY GUARD: a crash after the index write leaves this
-            # batch's own grams in the standing index; re-processing
-            # would then match the batch against itself (self-pairs at
-            # Jaccard 1, within-pairs double-counted as cross). Exclude
-            # the batch's own doc ids from the corpus side — a no-op on
-            # the first attempt, exact idempotence on retry.
-            own_ids = batch_df.select("doc_id").distinct()
-            corpus = corpus.join(F.broadcast(own_ids), "doc_id", "left_anti")
-            cross = (
-                incremental_jaccard_counts(grams, corpus)
-                .filter(
-                    F.col("common") * 5
-                    >= (F.col("n_batch") + F.col("n_corpus") - F.col("common"))
-                )
-                .select(
-                    F.least("batch_id", "corpus_id").alias("id_a"),
-                    F.greatest("batch_id", "corpus_id").alias("id_b"),
-                    "common",
-                )
-            )
-            pairs = pairs.unionByName(cross)
-        # foreachBatch is at-least-once: a failed/retried batch re-runs
-        # process(). Partitioning both sinks by batch id and dynamically
-        # overwriting makes the replay idempotent (the retry replaces its
-        # own partition instead of appending a duplicate) — the same
-        # discipline as the gold upsert sink.
-        (
-            pairs.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(pairs_dir)
-        )
-        (
-            grams.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(index_dir)
-        )
-        grams.unpersist()
-
-    return process
-
-
-def compact_gram_index(spark: SparkSession, index_dir: str, buckets: int = 8) -> int:
-    """Maintenance for :func:`near_dup_stream`'s standing gram index: the
-    per-batch dynamic-overwrite sink leaves one partition directory per
-    micro-batch (the classic streaming small-files problem — thousands
-    of tiny files after a day of 1-minute triggers). Rewrite the index
-    into ``buckets`` files hash-clustered by gram, REPLACING the batch
-    partitioning: the gram is the join key of every subsequent
-    cross-batch probe, so clustering by it also tightens the inverted
-    join's input. Stage-and-swap via a temp dir + atomic rename per the
-    lake's commit discipline (a crash mid-compaction leaves the old
-    index intact). Single-maintainer contract: between the two renames
-    there is a brief window where the path does not exist, so run
-    compaction from the same scheduler slot as the stream (never
-    concurrently with a triggering batch); deployments needing
-    concurrent readers should publish the index through the
-    manifest-pointer flip in ``lake_manifest`` instead, which swaps a
-    pointer rather than the directory. Returns the number of
-    (doc_id, gram) rows compacted.
-
-    The compacted layout drops the __batch_id column; subsequent batches
-    append new __batch_id partitions beside it, and the next compaction
-    folds them in — the standard base+delta table maintenance loop.
-    """
-    import os
-    import shutil
-
-    cur = spark.read.parquet(index_dir).select("doc_id", "gram")
-    n = cur.count()
-    tmp = index_dir.rstrip("/") + ".compacting"
-    cur.repartition(buckets, "gram").write.mode("overwrite").parquet(tmp)
-    old = index_dir.rstrip("/") + ".old"
-    # A prior compaction crashed between its renames may leave .old
-    # debris; clear it or the swap's first rename fails forever (the
-    # live index was never touched in that crash, so the debris is dead).
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(index_dir, old)
-    os.rename(tmp, index_dir)
-    shutil.rmtree(old)
-    return n
-
-
 def feature_delta_stream(
     orders: DataFrame,
     delta_dir: str,
@@ -517,15 +330,14 @@ def feature_delta_stream(
     in the batch — (c_custkey, n_orders, cents_sum, last_order_us) —
     partitioned by batch id under dynamic overwrite, so a foreachBatch
     RETRY replaces its own partition instead of double-counting
-    (at-least-once execution, exactly-once storage: the gram-index sink
-    discipline applied to feature upkeep). A naive read-modify-write
+    (at-least-once execution, exactly-once storage). A naive read-modify-write
     merge would double-apply the batch on retry — partial aggregates
     partitioned by the batch id are the idempotent form.
 
     Read the current snapshot with :func:`read_feature_snapshot` (folds
     deltas); fold the accumulated per-batch partitions down with
-    :func:`compact_feature_deltas` on the compaction cadence — the same
-    base+delta maintenance loop as ``compact_gram_index``.
+    :func:`compact_feature_deltas` on the compaction cadence — the
+    standard base+delta table maintenance loop.
 
     All three features are associative merges (sum, sum, max), so ANY
     interleaving of arrivals into micro-batches converges to the batch
@@ -575,13 +387,17 @@ def read_feature_snapshot(spark: SparkSession, delta_dir: str) -> DataFrame:
 
 def compact_feature_deltas(spark: SparkSession, delta_dir: str, buckets: int = 8) -> int:
     """Fold the accumulated per-batch delta partitions into ``buckets``
-    files hash-clustered by customer key (one partial row per customer),
-    stage-and-swap like ``compact_gram_index`` — the delta table stays
-    small no matter how many micro-batches have run, and subsequent
-    batches append fresh ``__batch_id`` partitions beside the compacted
-    base. Returns the number of customer rows after folding. Same
-    single-maintainer contract as the gram index: run from the stream's
-    scheduler slot, never concurrently with a triggering batch."""
+    files hash-clustered by customer key (one partial row per customer)
+    — the delta table stays small no matter how many micro-batches have
+    run, and subsequent batches append fresh ``__batch_id`` partitions
+    beside the compacted base. Returns the number of customer rows after
+    folding.
+
+    Stage-and-swap via a temp dir + atomic rename per the lake's commit
+    discipline (a crash mid-compaction leaves the old table intact).
+    Single-maintainer contract: between the two renames the path briefly
+    does not exist, so run compaction from the stream's scheduler slot,
+    never concurrently with a triggering batch."""
     import os
     import shutil
 
@@ -595,117 +411,3 @@ def compact_feature_deltas(spark: SparkSession, delta_dir: str, buckets: int = 8
     os.rename(tmp, delta_dir)
     shutil.rmtree(old)
     return n
-
-
-def ivf_retrieval_stream(
-    probes: DataFrame,
-    index_path: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    k: int = 10,
-    nprobe: int = 1,
-    id_col: str = "vec_id",
-):
-    """Continuous retrieval against the at-rest IVF index: each
-    micro-batch of query vectors runs :func:`similarity.ivf_index_topk`
-    (statically partition-pruned to the batch's probed cells) and lands
-    its results under its own ``__batch_id`` partition with dynamic
-    overwrite — the same at-least-once-execution / exactly-once-storage
-    sink discipline as :func:`feature_delta_stream`, so a foreachBatch
-    retry replaces its own partition instead of duplicating results.
-
-    Per-probe top-k is independent across probes, so ANY interleaving of
-    probes into micro-batches yields exactly the batch answer over the
-    union — the stream==batch equivalence is by construction and pinned
-    by test. foreachBatch is the right seam here (not a transform): the
-    query needs the probed-cell collect + pruned index read per batch,
-    which a streaming plan cannot express.
-
-    The 100 TB shape: the index is the big side and never moves; each
-    micro-batch reads only its probed cells' files. Retrieval throughput
-    scales with batch cadence, not corpus size.
-    """
-    from retail_aws_etl_pipeline_spark.operators.similarity import ivf_index_topk
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        res = ivf_index_topk(batch_df, index_path, k, id_col=id_col, nprobe=nprobe)
-        (
-            res.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(out_dir)
-        )
-
-    return (
-        probes.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def make_bloom_batch_processor(text_col: str, delta_dir: str):
-    """The foreachBatch body of :func:`bloom_word_stream` (exposed for
-    verbatim-replay tests). Bloom words merge by bit_or, which is
-    idempotent, so a replayed batch could not corrupt the fold even
-    without storage-level exactly-once; the batch-partitioned dynamic
-    overwrite is kept anyway, the same sink discipline as
-    :func:`feature_delta_stream` (a retry replaces its own partition)."""
-    from pyspark.sql import functions as F
-
-    from retail_aws_etl_pipeline_spark.operators.dedup import bloom_build_words
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        words = bloom_build_words(
-            batch_df.filter(F.col(text_col).isNotNull()), text_col
-        )
-        (
-            words.withColumn("__batch_id", F.lit(batch_id))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(delta_dir)
-        )
-
-    return process
-
-
-def bloom_word_stream(
-    docs: DataFrame, text_col: str, delta_dir: str, checkpoint_dir: str
-):
-    """Incremental MEMBERSHIP-sketch maintenance under streaming ingest,
-    in the base+delta layout of :func:`feature_delta_stream`: each
-    micro-batch bit_or-folds ITS OWN rows into a <=
-    BLOOM_BITS/BLOOM_WORD_BITS-row word table appended as a ``__batch_id``
-    partition; the standing filter is :func:`read_bloom_snapshot`'s per-word
-    bit_or fold, answerable at any moment without a corpus rescan.
-    OR-idempotence (set union) makes any arrival interleaving and any retry
-    converge to the one-shot batch filter bit-identically — pinned by the
-    stream == batch test.
-
-    The 100 TB shape: the stream pays one scan per batch at arrival
-    time; every later "seen before?" gate reads 128 bytes."""
-    return (
-        docs.writeStream.foreachBatch(
-            make_bloom_batch_processor(text_col, delta_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_bloom_snapshot(spark: SparkSession, delta_dir: str) -> DataFrame:
-    """Current (word_idx, word) filter from the delta partitions: one
-    per-word bit_or fold — exactly the merge the batch build's
-    associative aggregate defines, so the snapshot IS
-    bloom(all rows so far)."""
-    from pyspark.sql import functions as F
-
-    return (
-        spark.read.parquet(delta_dir)
-        .groupBy("word_idx")
-        .agg(F.bit_or("word").cast("long").alias("word"))
-    )

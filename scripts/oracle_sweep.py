@@ -39,78 +39,13 @@ SF001_PINNED = {
 }
 
 
-def _staged_pairs():
-    """(name, fn, oracle) for STAGED ops (module-level oracle constants,
-    not yet in a registry) — swept with the same protocol so their
-    at-scale proof exists before registration."""
-    from retail_aws_etl_pipeline_spark.plans import extensions as E
-
-    # The r15 tranche (doc_perplexity_report, minhash_estimate_error,
-    # temperature_mixture_report, bloom_prefilter_stats,
-    # join_key_skew_report, hll_distinct_report) registered at r15 and
-    # moved to the registry sweep above. Classification: ALL SIX are
-    # corpus-generic — no fit-time literals in any oracle (the KN table,
-    # Bloom words, HLL registers and skew counts are re-derived from the
-    # swept corpus in SQL; HLL_LC_TABLE is a function of m alone, not of
-    # any corpus) — so none joins SF001_PINNED and none needs a refit
-    # script.
-    #
-    # The r16 tranche (hll_overlap_report, badwords_filter_report,
-    # ngram_diversity_report, template_affix_report,
-    # corpus_snapshot_delta, langid_confusion_report) registered at r16
-    # and moved to the registry sweep. Classification: ALL SIX are
-    # corpus-generic — the badwords blocklist and AFFIX_K are fixed
-    # design constants riding both engines' plans as literals (not
-    # fitted from any corpus), the overlap/delta parity strata are
-    # deterministic id arithmetic, and the confusion oracle shares
-    # doc_lang_id's corpus-independent scored CTE generator — so none
-    # joins SF001_PINNED and none needs a refit script.
-    return [
-        # staged r19-queue tranche (built r16): all corpus-generic —
-        # the entropy ladder is generated from pure integer arithmetic
-        # (a function of the ppm scale alone), the novelty/churn/
-        # k-anonymity/UniMax oracles re-derive every count from the
-        # swept corpus in SQL, and the streamed Bloom twin shares the
-        # registered batch oracle verbatim — so none joins SF001_PINNED
-        # and none needs a refit script.
-        ("char_entropy_report", E.char_entropy_report, E.CHAR_ENTROPY_ORACLE),
-        ("ngram_novelty_report", E.ngram_novelty_report, E.NGRAM_NOVELTY_ORACLE),
-        ("topk_churn_report", E.topk_churn_report, E.TOPK_CHURN_ORACLE),
-        ("k_anonymity_report", E.k_anonymity_report, E.K_ANONYMITY_ORACLE),
-        (
-            "unimax_allocation_report",
-            E.unimax_allocation_report,
-            E.UNIMAX_ORACLE,
-        ),
-        (
-            "streamed_bloom_filter_report",
-            E.streamed_bloom_filter_report,
-            E.STREAMED_BLOOM_ORACLE,
-        ),
-    ]
-
-
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     only = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
-    staged_only = only == {"staged"}
     spark = get_spark(app_name="oracle_sweep")
     spark.sparkContext.setLogLevel("ERROR")
 
     failed, skipped, n_ok = [], [], 0
-    if staged_only:
-        for name, fn, oracle in _staged_pairs():
-            t0 = time.perf_counter()
-            r = compare(fn(spark, sf_dir), oracle, sf_dir)
-            wall = time.perf_counter() - t0
-            if r["ok"]:
-                n_ok += 1
-                print(f"OK   {name}: {wall:.2f} s", flush=True)
-            else:
-                failed.append(name)
-                print(f"FAIL {name}: {r}", flush=True)
-        print(f"staged sweep @ {sf_dir}: {n_ok} OK, {len(failed)} failed")
-        sys.exit(1 if failed else 0)
     for name, spec in sorted(all_specs().items()):
         if only is not None and name not in only:
             continue

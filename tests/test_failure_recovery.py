@@ -751,107 +751,11 @@ def test_manifest_vacuum_reader_grace_contract(spark, tmp_path):
     assert t.read(spark).count() == 3  # live snapshot stays intact
 
 
-def test_near_dup_stream_killed_midbatch_recovers_exactly_once(spark, tmp_path):
-    """Hard-interrupt crash model for the streaming near-dup pipeline
-    (VERDICT r6 item #4): kill the query MID-micro-batch — twice, at the
-    two distinct crash points — and restart from the checkpoint each
-    time. The replayed batches plus the remaining waves must emit the
-    batch-oracle pair set each-exactly-once and leave a debris-free gram
-    index.
-
-    Crash A (batch 1): dies after the pairs sink committed but BEFORE
-    the index sink — the partial-commit window between the two writes.
-    Crash B (batch 2, after one successful restart): dies after BOTH
-    sinks committed but before the checkpoint commit log records the
-    batch — recovery must replay a fully-committed batch idempotently
-    (the own-ids anti-join + batch-partitioned dynamic overwrite).
-    """
-    import shutil
-
-    import pytest
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from retail_aws_etl_pipeline_spark.operators.dedup import jaccard_counts, shingles
-    from retail_aws_etl_pipeline_spark.session import load_tables
-    from retail_aws_etl_pipeline_spark.streaming.streams import (
-        make_near_dup_batch_processor,
-    )
-    from tests.conftest import SF_SMOKE
-
-    docs = load_tables(spark, SF_SMOKE, ["documents"])["documents"]
-    src = str(tmp_path / "waves")
-    for i in range(4):
-        docs.filter(F.col("doc_id") % 4 == i).coalesce(1).write.mode("append").parquet(src)
-
-    index_dir = str(tmp_path / "gram_index")
-    pairs_dir = str(tmp_path / "pairs")
-    ckpt = str(tmp_path / "ckpt")
-    real = make_near_dup_batch_processor(index_dir, pairs_dir)
-
-    def start(process):
-        return (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    def crash_a(batch_df, batch_id):
-        real(batch_df, batch_id)
-        if batch_id == 1:
-            # simulate dying between the two sink writes: the pairs
-            # partition for this batch is on disk, the index one is not
-            shutil.rmtree(os.path.join(index_dir, "__batch_id=1"))
-            raise RuntimeError("injected crash A: killed between sink writes")
-
-    with pytest.raises(StreamingQueryException, match="crash A"):
-        start(crash_a).awaitTermination()
-    # the partial-commit state really exists on disk
-    assert os.path.isdir(os.path.join(pairs_dir, "__batch_id=1"))
-    assert not os.path.isdir(os.path.join(index_dir, "__batch_id=1"))
-
-    def crash_b(batch_df, batch_id):
-        real(batch_df, batch_id)
-        if batch_id == 2:
-            raise RuntimeError("injected crash B: killed after sinks, before commit log")
-
-    with pytest.raises(StreamingQueryException, match="crash B"):
-        start(crash_b).awaitTermination()
-    # batch 2's sinks committed even though the checkpoint never did
-    assert os.path.isdir(os.path.join(index_dir, "__batch_id=2"))
-
-    # final resume with the production processor drains the backlog
-    start(real).awaitTermination()
-
-    pairs = spark.read.parquet(pairs_dir)
-    got = {(r["id_a"], r["id_b"], r["common"]) for r in pairs.collect()}
-    assert pairs.count() == len(got), "a pair was emitted more than once"
-    grams = shingles(docs).persist()
-    want = {
-        (r["id_a"], r["id_b"], r["common"])
-        for r in jaccard_counts(grams)
-        .filter(F.col("common") * 5 >= (F.col("n_a") + F.col("n_b") - F.col("common")))
-        .collect()
-    }
-    n_gram_rows = grams.count()
-    grams.unpersist()
-    assert got == want and want
-    # debris-free index: exactly the corpus shingle rows, no duplicates
-    # from any replay, every doc present exactly once per gram
-    idx = spark.read.parquet(index_dir)
-    assert idx.count() == n_gram_rows
-    assert idx.distinct().count() == n_gram_rows
-    assert idx.select("doc_id").distinct().count() == docs.count()
-
-
 def test_compaction_swap_recovers_from_old_debris(spark, tmp_path):
     """A compaction that crashed between its two renames leaves a dead
     `.old` directory; the next compaction must clear it and proceed
-    instead of failing its first rename forever (both the gram index and
-    the feature delta table use the same stage-and-swap)."""
+    instead of failing its first rename forever (the feature delta
+    table's stage-and-swap)."""
     from pyspark.sql import functions as F
 
     from retail_aws_etl_pipeline_spark.streaming.streams import (

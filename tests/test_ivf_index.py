@@ -143,48 +143,6 @@ def test_append_equals_rebuild(spark, index):
         shutil.rmtree(d2, ignore_errors=True)
 
 
-def test_retrieval_stream_matches_batch(spark, index):
-    """Two probe waves drained as separate micro-batches == one batch
-    query over all probes (per-probe independence), under the
-    __batch_id dynamic-overwrite idempotent sink."""
-    from retail_aws_etl_pipeline_spark.streaming.streams import ivf_retrieval_stream
-
-    emb, path, _ = index
-    probes = emb.filter(F.col("vec_id").isin(ANN_PROBE_IDS))
-    src = tempfile.mkdtemp(prefix="ivf_probe_src_")
-    out = tempfile.mkdtemp(prefix="ivf_stream_out_")
-    ckpt = tempfile.mkdtemp(prefix="ivf_stream_ckpt_")
-    try:
-        for i in range(2):
-            (
-                probes.filter(F.pmod(F.col("vec_id"), F.lit(2)) == i)
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(src)
-            )
-        stream = (
-            spark.readStream.schema(probes.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = ivf_retrieval_stream(stream, path, out, ckpt, k=ANN_K, nprobe=IVF_NPROBE)
-        q.awaitTermination()
-        res = spark.read.parquet(out)
-        assert res.select("__batch_id").distinct().count() >= 2
-        got = sorted(
-            (r["probe_id"], r["rank"], r["vec_id"]) for r in res.collect()
-        )
-        want = sorted(
-            (r["probe_id"], r["rank"], r["vec_id"])
-            for r in S.ivf_index_topk(probes, path, ANN_K, nprobe=IVF_NPROBE).collect()
-        )
-        assert got == want and len(got) > 0
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
 def test_indexed_query_reuses_standing_index(spark):
     """The registered query's index cache: two calls against the same
     corpus reuse ONE at-rest index (same dir, marker untouched) and

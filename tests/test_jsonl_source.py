@@ -7,8 +7,6 @@ from __future__ import annotations
 import gzip
 import json
 
-from pyspark.sql import functions as F
-
 from retail_aws_etl_pipeline_spark.sources.jsonl import read_jsonl_documents
 
 GOOD = [
@@ -111,87 +109,6 @@ def test_ingest_jsonl_corpus_partitioned_and_idempotent(spark, tmp_path):
     counts2 = ingest_jsonl_corpus(spark, str(f), dest, rej)
     assert counts2 == counts
     assert spark.read.parquet(dest).count() == 4
-
-
-def test_jsonl_stream_converges_to_batch(spark, tmp_path):
-    """AvailableNow drain of the streaming JSONL reader == the batch
-    reader on the same files, for BOTH the good frame and the rejects —
-    guaranteed structurally (shared parse), asserted end-to-end."""
-    import uuid
-
-    from retail_aws_etl_pipeline_spark.sources.jsonl import (
-        jsonl_documents_stream,
-        read_jsonl_documents,
-    )
-    from retail_aws_etl_pipeline_spark.streaming.streams import run_stream_to_memory
-
-    d = tmp_path / "drops"
-    d.mkdir()
-    _write(d / "a.jsonl", [json.dumps(x, ensure_ascii=False) for x in GOOD[:2]])
-    _write(
-        d / "b.jsonl",
-        [json.dumps(GOOD[2], ensure_ascii=False), '{"bad', '{"doc_id": 7}'],
-    )
-
-    b_good, b_rej = read_jsonl_documents(spark, str(d))
-    s_good, s_rej = jsonl_documents_stream(spark, str(d))
-    tag = uuid.uuid4().hex[:8]
-    got_good = run_stream_to_memory(s_good, f"jsonl_good_{tag}")
-    got_rej = run_stream_to_memory(s_rej, f"jsonl_rej_{tag}")
-
-    key = lambda rows: sorted(tuple(r) for r in rows)
-    assert key(got_good.collect()) == key(b_good.collect())
-    assert key(got_rej.collect()) == key(b_rej.collect())
-    assert got_good.count() == 3 and got_rej.count() == 2
-
-
-def test_jsonl_drops_feed_near_dup_stream(spark, tmp_path):
-    """End-to-end corpus arrival: JSONL drops → streaming ingest (shared
-    parse, corrupt lines audited out) → the standing near-dup gram-index
-    pipeline — streamed pairs equal the batch Jaccard >= 0.2 self-join
-    over exactly the GOOD documents."""
-    from pyspark.sql import functions as F
-
-    from retail_aws_etl_pipeline_spark.operators.dedup import jaccard_counts, shingles
-    from retail_aws_etl_pipeline_spark.session import load_tables
-    from retail_aws_etl_pipeline_spark.sources.jsonl import jsonl_documents_stream
-    from retail_aws_etl_pipeline_spark.streaming.streams import near_dup_stream
-
-    docs = load_tables(spark, "/root/testdata/sf0.001", ["documents"])["documents"]
-    rows = docs.select("doc_id", "text", "lang", "source", "n_chars").collect()
-    drops = tmp_path / "drops"
-    drops.mkdir()
-    for wave in range(3):
-        lines = [
-            json.dumps(r.asDict(), ensure_ascii=False)
-            for r in rows
-            if r["doc_id"] % 3 == wave
-        ]
-        lines.append('{"wave %d corrupt' % wave)  # audited out, not ingested
-        _write(drops / f"wave{wave}.jsonl", lines)
-
-    good, _rejects = jsonl_documents_stream(spark, str(drops))
-    q = near_dup_stream(
-        good.select("doc_id", "text"),
-        index_dir=str(tmp_path / "gram_index"),
-        pairs_dir=str(tmp_path / "pairs"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination()
-
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in spark.read.parquet(str(tmp_path / "pairs")).collect()
-    }
-    grams = shingles(docs).persist()
-    want = {
-        (r["id_a"], r["id_b"])
-        for r in jaccard_counts(grams)
-        .filter(F.col("common") * 5 >= (F.col("n_a") + F.col("n_b") - F.col("common")))
-        .collect()
-    }
-    grams.unpersist()
-    assert got == want and want
 
 
 def test_jsonl_untrusted_field_type_mismatch_is_not_a_reject(spark, tmp_path):
@@ -381,38 +298,3 @@ def test_ingest_jsonl_corpus_converges_over_crash_debris(spark, tmp_path):
     assert counts2 == counts
     out = spark.read.parquet(str(dest))
     assert out.count() == 3 and out.filter("lang = 'en'").count() == 2
-
-
-def test_jsonl_stream_batch_sizing_knob_preserves_results(spark, tmp_path):
-    """max_files_per_trigger sizes micro-batches (the production
-    amortization knob the K=10 smoke motivated) without changing WHAT is
-    computed: 3 drop files drain in 1 batch at mft=3 vs 3 batches at the
-    default, with identical good/reject results either way."""
-    import uuid
-
-    from retail_aws_etl_pipeline_spark.sources.jsonl import jsonl_documents_stream
-
-    d = tmp_path / "drops"
-    d.mkdir()
-    for i, doc in enumerate(GOOD):
-        _write(d / f"w{i}.jsonl", [json.dumps(doc, ensure_ascii=False), '{"bad%d' % i])
-
-    def drain(mft):
-        good, rej = jsonl_documents_stream(spark, str(d), max_files_per_trigger=mft)
-        tag = uuid.uuid4().hex[:8]
-        q = (
-            good.writeStream.format("memory")
-            .queryName(f"knob_{mft}_{tag}")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
-        rows = sorted(tuple(r) for r in spark.table(f"knob_{mft}_{tag}").collect())
-        return n_batches, rows
-
-    b1, rows1 = drain(1)
-    b3, rows3 = drain(3)
-    assert rows1 == rows3 and len(rows1) == 3
-    assert b1 == 3 and b3 == 1, (b1, b3)

@@ -152,36 +152,6 @@ def test_registered_pair_survives_adversarial_corpus(spark, adversarial_dir, nam
     assert r["ok"], (name, r)
 
 
-def test_staged_pairs_survive_adversarial_corpus(spark, adversarial_dir):
-    """The staged r19 documents-side pairs through the hostile corpus
-    (all corpus-generic): quote/backslash docs exercise the n-gram string
-    keys through both engines' literal paths, empty/whitespace docs the
-    short-doc guards, NULL lang/source the keyed-census exclusions, and
-    the 2,500-distinct-token doc the correlated-series n-gram oracles."""
-    from retail_aws_etl_pipeline_spark.plans import extensions as E
-
-    for fn, oracle in [
-        # r19-queue tranche (built r16), documents-side: the entropy
-        # ladder eats the empty/whitespace/CJK/300-char-token docs (the
-        # char histogram is where those bite), the novelty + churn
-        # censuses push the hostile token stream through both engines'
-        # gram literals and the sign-safe parity, the k-anonymity
-        # census groups the NULL lang/source rows as classes (the one
-        # census that KEEPS NULL QI values by design), UniMax
-        # water-fills the skewed hostile language histogram, and the
-        # streamed Bloom twin drains the hostile texts through
-        # per-batch word folds.
-        (E.char_entropy_report, E.CHAR_ENTROPY_ORACLE),
-        (E.ngram_novelty_report, E.NGRAM_NOVELTY_ORACLE),
-        (E.topk_churn_report, E.TOPK_CHURN_ORACLE),
-        (E.k_anonymity_report, E.K_ANONYMITY_ORACLE),
-        (E.unimax_allocation_report, E.UNIMAX_ORACLE),
-        (E.streamed_bloom_filter_report, E.STREAMED_BLOOM_ORACLE),
-    ]:
-        r = compare(fn(spark, adversarial_dir), oracle, adversarial_dir)
-        assert r["ok"], (fn.__name__, r)
-
-
 @pytest.fixture(scope="module")
 def adversarial_events_dir(tmp_path_factory):
     """Hostile events table: exact (user, ts) ties (tiebreak determinism),

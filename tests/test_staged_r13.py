@@ -345,7 +345,7 @@ def test_perceptron_matches_python_mirror(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
     feats = SMP.perceptron_features(df, F.col("lang") == "en")
-    got_ws = SMP.perceptron_fit(feats)
+    got_ws = SMP.perceptron_fit_trace(feats)[0]
     _, want_ws = _pctron_mirror(rows, SMP.PCTRON_ROUNDS)
     assert got_ws == want_ws
 
@@ -384,7 +384,7 @@ def test_perceptron_separable_corpus_converges(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
     feats = SMP.perceptron_features(df, F.col("lang") == "en")
-    ws = SMP.perceptron_fit(feats)
+    ws = SMP.perceptron_fit_trace(feats)[0]
     m = SMP._perceptron_margins(feats, ws[0], "doc_id").collect()
     assert all(r.margin > 0 for r in m), m
     # and the weights stop moving once nothing is misclassified.
@@ -594,7 +594,7 @@ def test_perceptron_mirror_fuzz(spark):
             triples, "doc_id long, text string, lang string"
         )
         feats = SMP.perceptron_features(df, F.col("lang") == "en")
-        got = SMP.perceptron_fit(feats)
+        got = SMP.perceptron_fit_trace(feats)[0]
         _, want = _pctron_mirror(triples, SMP.PCTRON_ROUNDS)
         assert got == want, (triples, got[-1][:8], want[-1][:8])
 

@@ -124,13 +124,6 @@ def test_byte_histogram_kernel(spark):
     assert hist == dict(expected)
 
 
-def test_decode_stub_raises(spark):
-    t = load_tables(spark, SF_SMOKE, ["documents"])
-    media = MM.media_from_documents(t["documents"].limit(2)).withColumn("kind", F.lit("image"))
-    with pytest.raises(Exception, match="NotImplementedError|PIL"):
-        MM.decode_images(media).collect()
-
-
 def test_bmp_roundtrip_exact():
     """encode→decode identity across widths that do and don't need row
     padding, plus rejection of non-BMP and top-down negative-height decode."""
@@ -734,46 +727,6 @@ def test_watermark_lateness_sweep(spark, tmp_path):
     assert kept[31] == 1000  # delay spans the data: nothing is late
 
 
-def test_span_dedup_stream_converges_to_batch(spark, tmp_path):
-    """Cross-batch span dedup: stream the documents table one file per
-    micro-batch; the retained span set must equal the batch form's
-    distinct-span set (keep-first semantics across batch boundaries), and
-    a span seen in batch 1 must not re-emit from batch 3."""
-    import pyspark.sql.functions as F
-
-    from retail_aws_etl_pipeline_spark.operators.dedup import token_chunks
-    from retail_aws_etl_pipeline_spark.session import load_tables
-    from retail_aws_etl_pipeline_spark.streaming.streams import (
-        run_stream_to_memory,
-        span_dedup_stream,
-    )
-    from tests.conftest import SF_SMOKE
-
-    docs = load_tables(spark, SF_SMOKE, ["documents"])["documents"]
-    src = str(tmp_path / "docs_stream")
-    # three slices -> three micro-batches with maxFilesPerTrigger=1; dup
-    # spans exist across slices (doc texts share the small vocabulary)
-    docs.filter("doc_id % 3 = 0").coalesce(1).write.parquet(src)
-    docs.filter("doc_id % 3 = 1").coalesce(1).write.mode("append").parquet(src)
-    docs.filter("doc_id % 3 = 2").coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    got = run_stream_to_memory(span_dedup_stream(stream), "span_dedup_conv")
-    got_spans = {r["chunk"] for r in got.select("chunk").collect()}
-    want_spans = {
-        r["chunk"] for r in token_chunks(docs).select("chunk").distinct().collect()
-    }
-    assert got_spans == want_spans
-    # keep-first: exactly one row per distinct span survived
-    assert got.count() == len(want_spans)
-    n_all = token_chunks(docs).count()
-    assert n_all > len(want_spans), "fixture must contain duplicate spans"
-
-
 def test_scan_side_text_ops_stream_equals_batch(spark, tmp_path):
     """The scan-side text family (quality features, PII scrub, lang
     scores) is pure row-at-a-time Column algebra, so the SAME operators
@@ -801,76 +754,6 @@ def test_scan_side_text_ops_stream_equals_batch(spark, tmp_path):
     a = sorted(map(tuple, batch.collect()))
     b = sorted(map(tuple, got.collect()))
     assert a == b and a
-
-
-def test_near_dup_stream_emits_each_pair_exactly_once(spark, tmp_path):
-    """Streamed incremental dedup == batch corpus self-join: three
-    arrival waves through near_dup_stream must emit exactly the batch
-    Jaccard ≥ 0.2 pair set, each pair once (later-arriving member's
-    batch), with the gram index accumulating the whole corpus."""
-    import pyspark.sql.functions as F
-
-    from retail_aws_etl_pipeline_spark.operators.dedup import jaccard_counts, shingles
-    from retail_aws_etl_pipeline_spark.session import load_tables
-    from retail_aws_etl_pipeline_spark.streaming.streams import near_dup_stream
-    from tests.conftest import SF_SMOKE
-
-    docs = load_tables(spark, SF_SMOKE, ["documents"])["documents"]
-    src = str(tmp_path / "waves")
-    for i in range(3):
-        docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode("append").parquet(src)
-
-    q = near_dup_stream(
-        spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", "1").parquet(src),
-        index_dir=str(tmp_path / "gram_index"),
-        pairs_dir=str(tmp_path / "pairs"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination()
-
-    got = {
-        (r["id_a"], r["id_b"], r["common"])
-        for r in spark.read.parquet(str(tmp_path / "pairs")).collect()
-    }
-    n_emitted = spark.read.parquet(str(tmp_path / "pairs")).count()
-    assert n_emitted == len(got), "a pair was emitted more than once"
-
-    grams = shingles(docs).persist()
-    want = {
-        (r["id_a"], r["id_b"], r["common"])
-        for r in jaccard_counts(grams)
-        .filter(F.col("common") * 5 >= (F.col("n_a") + F.col("n_b") - F.col("common")))
-        .collect()
-    }
-    grams.unpersist()
-    assert got == want and want
-    # the index accumulated every doc's grams
-    assert spark.read.parquet(str(tmp_path / "gram_index")).select(
-        "doc_id"
-    ).distinct().count() == docs.count()
-
-    # RETRY simulation: foreachBatch is at-least-once — re-process the
-    # LAST batch verbatim (its grams are already committed to the index,
-    # the worst-case crash point). The own-doc anti-join guard plus the
-    # batch-partitioned dynamic overwrite must leave both sinks
-    # byte-identical: same pair multiset, no self-pairs, no duplicates.
-    from retail_aws_etl_pipeline_spark.streaming.streams import (
-        make_near_dup_batch_processor,
-    )
-
-    last_batch = docs.filter(F.col("doc_id") % 3 == 2)
-    process = make_near_dup_batch_processor(
-        str(tmp_path / "gram_index"), str(tmp_path / "pairs")
-    )
-    process(last_batch, 2)
-    replay = spark.read.parquet(str(tmp_path / "pairs"))
-    assert replay.count() == len(got), "retry duplicated pairs"
-    assert {
-        (r["id_a"], r["id_b"], r["common"]) for r in replay.collect()
-    } == want
-    assert spark.read.parquet(str(tmp_path / "gram_index")).select(
-        "doc_id"
-    ).distinct().count() == docs.count()
 
 
 def test_stream_static_join_converges(spark, tmp_path):
@@ -966,50 +849,6 @@ def test_stream_stream_join_within_watermark(spark, tmp_path):
     got = run_stream_to_memory(joined, "stream_stream_conv")
     assert sorted((r["click_id"], r["buy_id"]) for r in got.collect()) == want
     assert want, "fixture must produce joined pairs"
-
-
-def test_gram_index_compaction_preserves_dedup(spark, tmp_path):
-    """Compacting the streaming gram index (batch partitions -> gram-
-    clustered files) must not change ONE emitted pair: run two waves,
-    compact, run a third wave against the compacted index, and compare
-    the full pair set against the batch self-join."""
-    import pyspark.sql.functions as F
-
-    from retail_aws_etl_pipeline_spark.operators.dedup import jaccard_counts, shingles
-    from retail_aws_etl_pipeline_spark.session import load_tables
-    from retail_aws_etl_pipeline_spark.streaming.streams import (
-        compact_gram_index,
-        make_near_dup_batch_processor,
-    )
-    from tests.conftest import SF_SMOKE
-
-    docs = load_tables(spark, SF_SMOKE, ["documents"])["documents"]
-    index_dir = str(tmp_path / "idx")
-    pairs_dir = str(tmp_path / "prs")
-    process = make_near_dup_batch_processor(index_dir, pairs_dir)
-    process(docs.filter("doc_id % 3 = 0"), 0)
-    process(docs.filter("doc_id % 3 = 1"), 1)
-
-    n = compact_gram_index(spark, index_dir, buckets=4)
-    assert n == spark.read.parquet(index_dir).count()
-    import glob
-
-    assert len(glob.glob(f"{index_dir}/*.parquet")) <= 4
-
-    process(docs.filter("doc_id % 3 = 2"), 2)
-    got = {
-        (r["id_a"], r["id_b"], r["common"])
-        for r in spark.read.parquet(pairs_dir).collect()
-    }
-    grams = shingles(docs).persist()
-    want = {
-        (r["id_a"], r["id_b"], r["common"])
-        for r in jaccard_counts(grams)
-        .filter(F.col("common") * 5 >= (F.col("n_a") + F.col("n_b") - F.col("common")))
-        .collect()
-    }
-    grams.unpersist()
-    assert got == want and want
 
 
 def test_probe_exif_both_endians_and_errors():

@@ -200,43 +200,6 @@ def test_iter_warc_records_hypothesis_roundtrip():
     check()
 
 
-def test_warc_stream_equals_batch(spark, tmp_path):
-    """Streaming shard arrival drains to exactly the batch parse (same
-    kernel by construction), one shard per micro-batch, with non-WARC
-    debris in the landing dir ignored by the glob."""
-    from retail_aws_etl_pipeline_spark.sources.warc import warc_records_stream
-
-    ids = spark.range(30).selectExpr("id AS doc_id")
-    land = tmp_path / "landing"
-    land.mkdir()
-    shards = synth_warc_shards(ids, "doc_id", n_shards=3).collect()
-    for r in shards:
-        (land / r.path.rsplit("/", 1)[-1]).write_bytes(bytes(r.content))
-    (land / "_debris.tmp").write_bytes(b"not a warc")
-
-    out = tmp_path / "out"
-    q = (
-        warc_records_stream(spark, str(land))
-        .writeStream.format("parquet")
-        .option("path", str(out))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.read.parquet(str(out))
-    want = parse_warc_records(synth_warc_shards(ids, "doc_id", n_shards=3))
-    cols = [c for c in want.columns if c != "path"]
-    assert sorted(map(tuple, got.select(*cols).collect())) == sorted(
-        map(tuple, want.select(*cols).collect())
-    )
-    # One shard per micro-batch (maxFilesPerTrigger=1, 3 shards).
-    import json as _json
-
-    offsets = sorted((tmp_path / "ckpt" / "offsets").iterdir())
-    assert len(offsets) >= 3
-
-
 def test_crawl_exact_dedup_stats_matches_oracle(spark):
     from retail_aws_etl_pipeline_spark.plans.extensions import (
         CRAWL_DEDUP_ORACLE,
