@@ -9,6 +9,8 @@ same normalized input — 8 bytes instead of a 32-char hex string, an order of
 magnitude cheaper to shuffle/compare at billions of rows (SURVEY.md §2.2
 P13 note). Collision probability at 10^10 rows is ~0.3% birthday bound for
 64-bit; pair with the md5 when absolute certainty is required.
+
+Both are built as SQL text (one py4j call) over the named columns.
 """
 
 from __future__ import annotations
@@ -16,19 +18,26 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from retail_aws_etl_pipeline_spark.functions.sqltext import sql_ident
 from retail_aws_etl_pipeline_spark.schema import ROW_HASH_COLUMNS
 
 
-def _normalized(columns: list[str] | None) -> list[Column]:
+def _normalized_sql(columns: list[str] | None) -> str:
     cols = columns if columns is not None else ROW_HASH_COLUMNS
-    return [F.coalesce(F.col(c).cast("string"), F.lit("")) for c in cols]
+    parts = [f"coalesce(CAST({sql_ident(c)} AS STRING), '')" for c in cols]
+    return f"concat_ws('||', {', '.join(parts)})"
+
+
+def business_row_hash_sql(columns: list[str] | None = None) -> str:
+    """:func:`business_row_hash` as Spark SQL text."""
+    return f"md5({_normalized_sql(columns)})"
 
 
 def business_row_hash(columns: list[str] | None = None) -> Column:
     """md5 hex over '||'-joined null-safe string casts (reference parity)."""
-    return F.md5(F.concat_ws("||", *_normalized(columns)))
+    return F.expr(business_row_hash_sql(columns))
 
 
 def business_row_hash64(columns: list[str] | None = None) -> Column:
     """xxhash64 over the same canonical string form (scale path)."""
-    return F.xxhash64(F.concat_ws("||", *_normalized(columns)))
+    return F.expr(f"xxhash64({_normalized_sql(columns)})")

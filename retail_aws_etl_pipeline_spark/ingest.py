@@ -15,13 +15,15 @@ library entry point with the same zones and semantics:
    metrics JSON (K5, replaces SNS publish with a returned/logged dict).
 4. archive the input under a lineage name (K6).
 
-Scale notes: the only driver round-trips are the O(1) head sample and the
-reader's ≤20-line dialect sniff. All row work of a file is one labeled
-lineage (read → ``raw_row`` fan-out shuffle → timestamp cascade → dedup
-window → cleaning), persisted once: the silver write fills the cache and
-fires the single class-count Observation, and the JSON and CSV reject
-sinks read the cache (the reference recomputed the full lineage 5×,
-SURVEY.md §4).
+Scale notes: the driver reads only O(1) heads of the file — the gate's
+64 KB sample and the reader's ≤20-line dialect sniff, both plain file reads
+that submit no Spark job — and builds each plan from a few SQL-text
+projections (a handful of py4j calls, not one per Column). All row work of
+a file is one labeled lineage (read → ``raw_row`` fan-out shuffle →
+timestamp cascade → dedup window → cleaning), persisted once: the silver
+write fills the cache and fires the single class-count Observation, and the
+JSON and CSV reject sinks read the cache (the reference recomputed the full
+lineage 5×, SURVEY.md §4).
 """
 
 from __future__ import annotations
@@ -67,6 +69,21 @@ def validate_file_head(path: str, max_bytes: int = 65536) -> list[str]:
     if missing:
         errors.append(f"missing_columns:{missing}")
     return errors
+
+
+def _reject_file(
+    path: str, lake: LakeLayout, source_file: str, run_id: str, file_errors: list[str], archive: bool
+) -> IngestResult:
+    """Quarantine a file that failed the head gate: an empty file goes to
+    ``rejected/system``, any other failure to ``rejected/structural``, each
+    with a ``_reason.json`` beside it."""
+    reject_dir = lake.rejected("structural" if "empty_file" not in file_errors else "system")
+    os.makedirs(reject_dir, exist_ok=True)
+    dst = move_file(path, reject_dir, lineage_name(source_file, run_id)) if archive else path
+    with open(os.path.join(reject_dir, f"{os.path.basename(dst)}_reason.json"), "w") as f:
+        json.dump({"file": source_file, "errors": file_errors}, f)
+    log.warning("file rejected %s: %s", source_file, file_errors)
+    return IngestResult("file_rejected", source_file, run_id, file_errors=file_errors)
 
 
 def purge_run_from_silver(spark: SparkSession, lake: LakeLayout, run_id: str) -> int:
@@ -149,17 +166,7 @@ def ingest_file(
     # -- 1. file-level gate -------------------------------------------------
     file_errors = validate_file_head(path)
     if file_errors:
-        reject_dir = lake.rejected("structural" if "empty_file" not in file_errors else "system")
-        os.makedirs(reject_dir, exist_ok=True)
-        dst = (
-            move_file(path, reject_dir, lineage_name(source_file, run_id))
-            if archive
-            else path
-        )
-        with open(os.path.join(reject_dir, f"{os.path.basename(dst)}_reason.json"), "w") as f:
-            json.dump({"file": source_file, "errors": file_errors}, f)
-        log.warning("file rejected %s: %s", source_file, file_errors)
-        return IngestResult("file_rejected", source_file, run_id, file_errors=file_errors)
+        return _reject_file(path, lake, source_file, run_id, file_errors, archive)
 
     # -- 2+3. parse + route + sinks; on ANY failure the input file is
     # quarantined to rejected/system with a reason file and the error
@@ -286,21 +293,8 @@ def ingest_batch(
             run_id = new_run_id()
             file_errors = validate_file_head(path)
             if file_errors:
-                reject_dir = lake.rejected(
-                    "structural" if "empty_file" not in file_errors else "system"
-                )
-                os.makedirs(reject_dir, exist_ok=True)
-                dst = (
-                    move_file(path, reject_dir, lineage_name(source_file, run_id))
-                    if archive
-                    else path
-                )
-                with open(
-                    os.path.join(reject_dir, f"{os.path.basename(dst)}_reason.json"), "w"
-                ) as f:
-                    json.dump({"file": source_file, "errors": file_errors}, f)
-                gate_results[path] = IngestResult(
-                    "file_rejected", source_file, run_id, file_errors=file_errors
+                gate_results[path] = _reject_file(
+                    path, lake, source_file, run_id, file_errors, archive
                 )
                 continue
             extracted, _meta = read_flexible_csv(spark, path)

@@ -37,35 +37,58 @@ import re
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from retail_aws_etl_pipeline_spark.functions.hashing import business_row_hash
-from retail_aws_etl_pipeline_spark.functions.numeric import clean_currency, clean_quantity
+from retail_aws_etl_pipeline_spark.functions.hashing import business_row_hash_sql
+from retail_aws_etl_pipeline_spark.functions.numeric import clean_currency_sql, clean_quantity_sql
+from retail_aws_etl_pipeline_spark.functions.sqltext import sql_lit
 from retail_aws_etl_pipeline_spark.lake import LakeLayout
+from retail_aws_etl_pipeline_spark.schema import GOLD_SCHEMA, REVENUE_TOLERANCE, SILVER_SCHEMA
 
 DATE_PARTITION_RE = re.compile(r"date=(\d{4}-\d{2}-\d{2})$")
 
-#: Columns the gold job defensively expects from silver
-#: (incremental_auto_compaction.py:188-202).
-EXPECTED_SILVER_COLUMNS = [
-    "transaction_id",
-    "store_id",
-    "timestamp_raw",
-    "item_id",
-    "item_category",
-    "quantity",
-    "unit_price",
-    "revenue",
-    "payment_method",
-    "customer_id",
-    "raw_row",
-    "timestamp_parsed",
-    "timestamp",
-    "ingest_run_id",
-    "source_file",
-    "ingest_ts",
+#: The dedup clock: silver's ``ingest_ts``, or now where it is missing.
+_INGEST_TS_F = "coalesce(try_cast(ingest_ts AS TIMESTAMP), current_timestamp())"
+
+#: Keep-latest rank (W1): latest ``ingest_ts`` first, ``row_hash`` as the
+#: deterministic tiebreaker.
+_KEEP_LATEST = (
+    "row_number() OVER (PARTITION BY `date`, transaction_id "
+    "ORDER BY ingest_ts_f DESC, row_hash DESC) AS rn"
+)
+
+#: Pre- AND post-dedup audit stats in ONE pass: rn==1 marks survivors.
+_AUDIT_AGGS = [
+    "count(1) AS total_rows_in_source_partition",
+    "sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS rows_after_dedup",
+    "sum(CASE WHEN `timestamp` IS NULL THEN 1 ELSE 0 END) AS null_timestamp",
+    "sum(CASE WHEN store_id IS NULL THEN 1 ELSE 0 END) AS null_store",
+    "sum(CASE WHEN abs(revenue - quantity * unit_price) > "
+    f"{sql_lit(REVENUE_TOLERANCE)} THEN 1 ELSE 0 END) AS dq_balance_issues",
 ]
+
+
+def _gold_prep(df: DataFrame) -> DataFrame:
+    """Silver-shaped rows → gold-shaped rows plus the dedup clock
+    ``ingest_ts_f``: the numerics re-cleaned defensively, then the identity
+    hash over the CLEANED business columns
+    (incremental_auto_compaction.py:205-212)."""
+    return df.withColumns(
+        {
+            "quantity": F.expr(clean_quantity_sql("quantity", "long")),
+            "unit_price": F.expr(clean_currency_sql("unit_price")),
+            "revenue": F.expr(clean_currency_sql("revenue")),
+        }
+    ).withColumns(
+        {"row_hash": F.expr(business_row_hash_sql()), "ingest_ts_f": F.expr(_INGEST_TS_F)}
+    )
+
+
+def _in_dates(dates: list[str]) -> str:
+    """``date IN (...)`` over partition values (each matched
+    :data:`DATE_PARTITION_RE`)."""
+    return f"`date` IN ({', '.join(sql_lit(d) for d in dates)})"
 
 
 def list_date_partitions(path: str) -> list[str]:
@@ -105,7 +128,6 @@ def compact_pending(
     process_all: bool = False,
     max_partitions: int = 10,
     write_audit: bool = True,
-    merge_schema: bool = False,
     commit_protocol: str = "direct",
     chunk_size: int | None = None,
 ) -> dict:
@@ -165,8 +187,7 @@ def compact_pending(
         for at in range(0, len(work), chunk_size):
             results.extend(
                 _compact_dates(
-                    spark, lake, work[at : at + chunk_size], run_ts,
-                    write_audit, merge_schema, manifest_table,
+                    spark, lake, work[at : at + chunk_size], run_ts, write_audit, manifest_table
                 )
             )
             n_chunks += 1
@@ -181,9 +202,7 @@ def compact_pending(
             _write_summary(lake, summary)
         return summary
 
-    results = _compact_dates(
-        spark, lake, work, run_ts, write_audit, merge_schema, manifest_table
-    )
+    results = _compact_dates(spark, lake, work, run_ts, write_audit, manifest_table)
     summary = {
         "job_name": "gold_compaction",
         "run_ts_utc": run_ts,
@@ -201,7 +220,6 @@ def _compact_dates(
     work: list[str],
     run_ts: str,
     write_audit: bool,
-    merge_schema: bool,
     manifest_table,
 ) -> list[dict]:
     """One chunk: read+clean+window+write+audit for exactly ``work`` dates."""
@@ -210,81 +228,44 @@ def _compact_dates(
     silver_table = ManifestedTable(lake.processed, partition_col="date")
     if silver_table.exists():
         # manifested silver: the snapshot IS the listing
-        silver = silver_table.read(spark).filter(F.col("date").isin(work))
+        silver = silver_table.read(spark)
     else:
         # One listing of the table root + partition-pruned filter — NOT one
         # read per date directory (500 explicit paths = 500 listings + plan
-        # bloat). mergeSchema stays opt-in: the padding loop below covers
-        # drift, and merging footers across every partition is a
-        # driver-side tax.
-        reader = spark.read.option("basePath", lake.processed)
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        silver = reader.parquet(lake.processed).filter(F.col("date").isin(work))
+        # bloat).
+        silver = _read_table(spark, lake.processed, SILVER_SCHEMA, work[0])
+    silver = silver.filter(_in_dates(work))
 
-    # Defensive padding for schema drift across ingest runs (P15).
-    for c in EXPECTED_SILVER_COLUMNS:
-        if c not in silver.columns:
-            silver = silver.withColumn(c, F.lit(None).cast("string"))
-
-    prepared = (
-        silver.withColumn("quantity", clean_quantity("quantity", "long"))
-        .withColumn("unit_price", clean_currency("unit_price"))
-        .withColumn("revenue", clean_currency("revenue"))
-        .withColumn("row_hash", business_row_hash())
-        .withColumn(
-            "ingest_ts_f",
-            F.coalesce(F.col("ingest_ts").try_cast("timestamp"), F.current_timestamp()),
-        )
-    )
+    # Schema drift (P15): an inferred read can lack columns; pad them as NULL.
+    have = set(silver.columns)
+    missing = [c for c in SILVER_SCHEMA.fieldNames() if c not in have]
+    if missing:
+        silver = silver.withColumns({c: F.lit(None).cast("string") for c in missing})
 
     # One shuffle serves both the dedup window and the stats; the windowed
     # frame is cached so the audit aggregation and the gold write each run
     # the read+clean+window lineage exactly once (the reference re-ran
     # filter().count() chains per partition).
-    w = W.partitionBy("date", "transaction_id").orderBy(
-        F.desc("ingest_ts_f"), F.desc("row_hash")
-    )
     windowed = (
-        prepared.repartition(
-            spark.sparkContext.defaultParallelism, F.col("date"), F.col("transaction_id")
-        )
-        .withColumn("rn", F.row_number().over(w))
+        _gold_prep(silver)
+        .repartition(spark.sparkContext.defaultParallelism, "date", "transaction_id")
+        .selectExpr("*", _KEEP_LATEST)
         .persist()
     )
 
-    # Pre- AND post-dedup audit stats in ONE pass: rn==1 marks survivors.
-    stats_rows = (
-        windowed.groupBy("date")
-        .agg(
-            F.count(F.lit(1)).alias("total_rows_in_source_partition"),
-            F.sum(F.when(F.col("rn") == 1, 1).otherwise(0)).alias("rows_after_dedup"),
-            F.sum(F.when(F.col("timestamp").isNull(), 1).otherwise(0)).alias("null_timestamp"),
-            F.sum(F.when(F.col("store_id").isNull(), 1).otherwise(0)).alias("null_store"),
-            F.sum(
-                F.when(
-                    F.abs(
-                        F.col("revenue") - (F.col("quantity") * F.col("unit_price"))
-                    )
-                    > 0.01,
-                    1,
-                ).otherwise(0)
-            ).alias("dq_balance_issues"),
-        )
-        .collect()
-    )
+    stats_rows = windowed.groupBy("date").agg(*[F.expr(e) for e in _AUDIT_AGGS]).collect()
     pre_stats = stats_rows
     post_stats = {r["date"]: r["rows_after_dedup"] for r in stats_rows}
 
-    deduped = windowed.filter(F.col("rn") == 1).drop("rn", "ingest_ts_f")
+    deduped = windowed.filter("rn = 1").drop("rn", "ingest_ts_f")
 
     # second small shuffle post-dedup: each date lands whole in one task
     # (→ one file per date), clustered by transaction_id for scan
     # locality. Explicit N so AQE can't funnel every date's directory
     # creation through a single task (see ingest.py).
-    out = deduped.repartition(
-        spark.sparkContext.defaultParallelism, F.col("date")
-    ).sortWithinPartitions("date", "transaction_id")
+    out = deduped.repartition(spark.sparkContext.defaultParallelism, "date").sortWithinPartitions(
+        "date", "transaction_id"
+    )
     if manifest_table is not None:
         manifest_table.overwrite_partitions(out)
     else:
@@ -350,16 +331,60 @@ def read_silver(spark: SparkSession, lake: LakeLayout) -> DataFrame:
     return spark.read.parquet(lake.processed)
 
 
+#: Parquet physical types Spark writes for the lake's column types.
+_PARQUET_KINDS = {
+    "string": "is_string",
+    "int": "is_int32",
+    "bigint": "is_int64",
+    "double": "is_float64",
+    "timestamp": "is_timestamp",
+    "date": "is_date32",
+}
+
+
+def _footer_conforms(partition_dir: str, schema: T.StructType) -> bool:
+    """Whether the first parquet file under ``partition_dir`` holds only
+    columns of ``schema``, each in the physical type Spark writes for it
+    (read on the driver: one footer, no Spark job)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        name = min(n for n in os.listdir(partition_dir) if n.endswith(".parquet"))
+        fields = pq.read_schema(os.path.join(partition_dir, name))
+    except (OSError, ValueError, pa.ArrowException):  # no file, or not parquet
+        return False
+    kinds = {f.name: _PARQUET_KINDS.get(f.dataType.simpleString()) for f in schema.fields}
+    return all(kinds.get(f.name) and getattr(pa.types, kinds[f.name])(f.type) for f in fields)
+
+
+def _read_table(
+    spark: SparkSession, root: str, schema: T.StructType, sample_date: str | None
+) -> DataFrame:
+    """A direct-layout lake table. When a file of the ``sample_date``
+    partition conforms to ``schema`` (the layer's declared schema, which
+    this package's writers produce) the read declares it: no
+    footer-inference job, and a column missing from a file reads as a typed
+    NULL. Otherwise — a table written by hand or by another tool — Spark
+    infers the schema, which also samples one footer and assumes the other
+    files agree."""
+    reader = spark.read.option("basePath", root)
+    if sample_date is not None and _footer_conforms(os.path.join(root, f"date={sample_date}"), schema):
+        reader = reader.schema(schema)
+    return reader.parquet(root)
+
+
 def read_gold(spark: SparkSession, lake: LakeLayout) -> DataFrame:
     """Gold as a DataFrame, whichever commit protocol produced it: a
     manifested table is read through its snapshot (never by listing), a
-    direct-layout table by the parquet directory."""
+    direct-layout table by the parquet directory (see :func:`_read_table`)."""
     from retail_aws_etl_pipeline_spark.lake_manifest import ManifestedTable
 
     table = ManifestedTable(lake.gold, partition_col="date")
     if table.exists():
         return table.read(spark)
-    return spark.read.parquet(lake.gold)
+    dates = list_date_partitions(lake.gold)
+    return _read_table(spark, lake.gold, GOLD_SCHEMA, dates[0] if dates else None)
 
 
 def register_gold_view(spark: SparkSession, lake: LakeLayout, name: str = "fact_sales") -> DataFrame:
@@ -381,40 +406,20 @@ def upsert_gold(spark: SparkSession, lake: LakeLayout, batch_df: DataFrame) -> N
     dynamically overwrite just those partitions. Re-delivered batches are
     absorbed by the dedup — the sink is idempotent.
     """
-    prepared = (
-        batch_df.withColumn("quantity", clean_quantity("quantity", "long"))
-        .withColumn("unit_price", clean_currency("unit_price"))
-        .withColumn("revenue", clean_currency("revenue"))
-        .withColumn("row_hash", business_row_hash())
-        .withColumn(
-            "ingest_ts_f",
-            F.coalesce(F.col("ingest_ts").try_cast("timestamp"), F.current_timestamp()),
-        )
-    )
+    prepared = _gold_prep(batch_df)
     touched = [str(r["date"]) for r in prepared.select("date").distinct().collect()]
     existing_dates = [d for d in touched if d in set(list_date_partitions(lake.gold))]
     if existing_dates:
         existing = (
-            spark.read.option("basePath", lake.gold)
-            .parquet(lake.gold)
-            .filter(F.col("date").isin(existing_dates))
-            .withColumn(
-                "ingest_ts_f",
-                F.coalesce(F.col("ingest_ts").try_cast("timestamp"), F.current_timestamp()),
-            )
+            _read_table(spark, lake.gold, GOLD_SCHEMA, existing_dates[0])
+            .filter(_in_dates(existing_dates))
+            .withColumn("ingest_ts_f", F.expr(_INGEST_TS_F))
         )
         prepared = prepared.unionByName(existing, allowMissingColumns=True)
 
-    w = W.partitionBy("date", "transaction_id").orderBy(
-        F.desc("ingest_ts_f"), F.desc("row_hash")
-    )
-    deduped = (
-        prepared.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn", "ingest_ts_f")
-    )
+    deduped = prepared.selectExpr("*", _KEEP_LATEST).filter("rn = 1").drop("rn", "ingest_ts_f")
     (
-        deduped.repartition(spark.sparkContext.defaultParallelism, F.col("date"))
+        deduped.repartition(spark.sparkContext.defaultParallelism, "date")
         .sortWithinPartitions("date", "transaction_id")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

@@ -47,11 +47,15 @@ from typing import Callable
 
 from py4j.protocol import Py4JJavaError
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from retail_aws_etl_pipeline_spark.functions.numeric import clean_currency, clean_quantity
-from retail_aws_etl_pipeline_spark.functions.timestamps import REFERENCE_PATTERNS, parse_timestamp
+from retail_aws_etl_pipeline_spark.functions.numeric import clean_currency_sql, clean_quantity_sql
+from retail_aws_etl_pipeline_spark.functions.sqltext import sql_ident, sql_lit
+from retail_aws_etl_pipeline_spark.functions.timestamps import (
+    REFERENCE_PATTERNS,
+    parse_timestamp_sql,
+)
 from retail_aws_etl_pipeline_spark.schema import (
     REJECT_COLUMNS,
     REJECT_REASON_BUSINESS,
@@ -65,7 +69,24 @@ from retail_aws_etl_pipeline_spark.schema import (
 #: Columns cleaned for the good/business path; early rejects keep the raw
 #: strings, so the labeled frame carries both (the cleaned value under
 #: ``_clean_<name>``).
-_NUMERIC = {"quantity": clean_quantity, "unit_price": clean_currency, "revenue": clean_currency}
+_NUMERIC = {
+    "quantity": clean_quantity_sql,
+    "unit_price": clean_currency_sql,
+    "revenue": clean_currency_sql,
+}
+
+_STRUCTURAL, _TIMESTAMP, _BUSINESS = (
+    sql_lit(r) for r in (REJECT_REASON_STRUCTURAL, REJECT_REASON_TIMESTAMP, REJECT_REASON_BUSINESS)
+)
+#: A required column NULL after positional projection.
+_STRUCT_NULL = " OR ".join(
+    f"{sql_ident('timestamp_raw' if c == 'timestamp' else c)} IS NULL" for c in REQUIRED_COLUMNS
+)
+_EARLY = f"reject_reason IN ({_STRUCTURAL}, {_TIMESTAMP})"
+_IS_BUSINESS = f"reject_reason = {_BUSINESS}"
+#: One window spec for both the survivor pick and the copy count, so the
+#: plan holds one Window operator over the ``raw_row`` clustering.
+_BY_LINE = "PARTITION BY raw_row ORDER BY raw_row"
 
 
 @dataclass
@@ -91,14 +112,6 @@ class QualitySplit:
         if not self.counts and self._resolve is not None:
             self.counts = self._resolve()
         return self.counts
-
-
-def _required_null_cond():
-    cond = F.lit(False)
-    for c in REQUIRED_COLUMNS:
-        name = "timestamp_raw" if c == "timestamp" else c
-        cond = cond | F.col(name).isNull()
-    return cond
 
 
 def _is_pruned_observation(exc: Exception) -> bool:
@@ -131,90 +144,88 @@ def split_quality(
     ingest_ts_col = ingest_ts if ingest_ts is not None else F.current_timestamp()
     n_parts = extracted.sparkSession.sparkContext.defaultParallelism
 
-    struct_cond = _required_null_cond()
-    reason = F.col("reject_reason")
-    early = reason.isin(REJECT_REASON_STRUCTURAL, REJECT_REASON_TIMESTAMP)
-
+    # The projections are SQL text with engine constants only (see
+    # functions.sqltext); the per-file values — run id, source file, clock —
+    # enter as Columns.
     # -- fan-out, structural + timestamp reason, survivor dedup -------------
     # row_number needs an order; the rows of one raw_row partition are
     # identical, so any of them may be the one kept.
-    by_line = Window.partitionBy("raw_row").orderBy("raw_row")
+    cascade = parse_timestamp_sql("timestamp_raw", patterns)
     labeled = (
         extracted.repartition(n_parts, "raw_row")
-        .withColumn(
-            "timestamp_parsed",
-            F.when(~struct_cond, parse_timestamp("timestamp_raw", patterns)),
+        .selectExpr("*", f"CASE WHEN NOT ({_STRUCT_NULL}) THEN {cascade} END AS timestamp_parsed")
+        .selectExpr(
+            "*",
+            f"CASE WHEN {_STRUCT_NULL} THEN {_STRUCTURAL} "
+            f"WHEN timestamp_parsed IS NULL THEN {_TIMESTAMP} END AS reject_reason",
+            f"row_number() OVER ({_BY_LINE}) AS _rn",
+            f"count(1) OVER ({_BY_LINE} ROWS BETWEEN UNBOUNDED PRECEDING "
+            "AND UNBOUNDED FOLLOWING) AS _copies",
         )
-        .withColumn(
-            "reject_reason",
-            F.when(struct_cond, F.lit(REJECT_REASON_STRUCTURAL)).when(
-                F.col("timestamp_parsed").isNull(), F.lit(REJECT_REASON_TIMESTAMP)
-            ),
-        )
-        .withColumn("_rn", F.row_number().over(by_line))
-        .withColumn(
-            "_copies",
-            F.count(F.lit(1)).over(
-                by_line.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-            ),
-        )
-        .filter(reason.isNotNull() | (F.col("_rn") == 1))
+        .filter("reject_reason IS NOT NULL OR _rn = 1")
     )
 
     # -- numeric cleaning + metadata (glue_job_raw_to_processed.py:279-298) --
-    for name, clean in _NUMERIC.items():
-        labeled = labeled.withColumn(f"_clean_{name}", clean(name))
-    labeled = (
-        labeled.withColumn("timestamp", F.col("timestamp_parsed"))
-        .withColumn("ingest_run_id", F.lit(ingest_run_id))
-        .withColumn("source_file", F.lit(source_file))
-        .withColumn("ingest_ts", ingest_ts_col)
-        .withColumn("date", F.to_date(F.col("timestamp")))
+    labeled = labeled.withColumns(
+        {
+            **{f"_clean_{name}": F.expr(clean(name)) for name, clean in _NUMERIC.items()},
+            "timestamp": F.col("timestamp_parsed"),
+            "ingest_run_id": F.lit(ingest_run_id),
+            "source_file": F.lit(source_file),
+            "ingest_ts": ingest_ts_col,
+            "date": F.expr("to_date(timestamp_parsed)"),
+        }
     )
 
     # -- business DQ (glue_job_raw_to_processed.py:304-310 + null-numeric
     # deviation documented above) -------------------------------------------
-    q, up, rev = (F.col(f"_clean_{n}") for n in ("quantity", "unit_price", "revenue"))
-    dq_cond = (
-        q.isNull() | up.isNull() | rev.isNull() | (F.abs(rev - q * up) > REVENUE_TOLERANCE)
+    q, up, rev = (f"_clean_{n}" for n in ("quantity", "unit_price", "revenue"))
+    dq = (
+        f"{q} IS NULL OR {up} IS NULL OR {rev} IS NULL "
+        f"OR abs({rev} - {q} * {up}) > {sql_lit(REVENUE_TOLERANCE)}"
     )
     labeled = labeled.withColumn(
         "reject_reason",
-        F.when(early, reason).when(dq_cond, F.lit(REJECT_REASON_BUSINESS)),
+        F.expr(f"CASE WHEN {_EARLY} THEN reject_reason WHEN {dq} THEN {_BUSINESS} END"),
     )
 
     # Every class count in one Observation on the persisted frame: it fires
     # once, while the first action fills the cache. A kept survivor stands
     # for its ``_copies`` identical input lines; an early reject for itself.
     count_exprs = [
-        F.sum(F.when(early, 1).otherwise(F.col("_copies"))).alias("total"),
-        F.count(F.lit(1)).alias("kept"),
-        *[
-            F.sum(F.when(reason == F.lit(r), 1).otherwise(0)).alias(alias)
-            for alias, r in (
-                ("structural", REJECT_REASON_STRUCTURAL),
-                ("invalid_timestamp", REJECT_REASON_TIMESTAMP),
-                ("business", REJECT_REASON_BUSINESS),
-            )
-        ],
+        F.expr(e)
+        for e in (
+            f"sum(CASE WHEN {_EARLY} THEN 1 ELSE _copies END) AS total",
+            "count(1) AS kept",
+            *[
+                f"sum(CASE WHEN reject_reason = {r} THEN 1 ELSE 0 END) AS {alias}"
+                for alias, r in (
+                    ("structural", _STRUCTURAL),
+                    ("invalid_timestamp", _TIMESTAMP),
+                    ("business", _BUSINESS),
+                )
+            ],
+        )
     ]
     obs = Observation(f"{obs_prefix}quality_counts")
     labeled = labeled.observe(obs, *count_exprs).persist(StorageLevel.MEMORY_AND_DISK)
 
-    good = labeled.filter(reason.isNull()).select(
+    good = labeled.filter("reject_reason IS NULL").selectExpr(
         *[
-            F.col(f"_clean_{f.name}").alias(f.name) if f.name in _NUMERIC else F.col(f.name)
+            f"_clean_{f.name} AS {f.name}" if f.name in _NUMERIC else sql_ident(f.name)
             for f in SILVER_SCHEMA.fields
         ]
     )
-    business = reason == F.lit(REJECT_REASON_BUSINESS)
-    reject_cols = {
-        c: F.when(business, F.col(f"_clean_{c}").cast("string")).otherwise(F.col(c))
-        for c in _NUMERIC
-    }
-    reject_cols["raw_row"] = F.when(~business, F.col("raw_row"))
-    rejects = labeled.filter(reason.isNotNull()).select(
-        *[reject_cols.get(c, F.col(c)).alias(c) for c in REJECT_COLUMNS]
+
+    def reject_col(c: str) -> str:
+        if c in _NUMERIC:
+            return f"CASE WHEN {_IS_BUSINESS} THEN CAST(_clean_{c} AS STRING) ELSE {c} END AS {c}"
+        if c == "raw_row":
+            return f"CASE WHEN NOT ({_IS_BUSINESS}) THEN raw_row END AS raw_row"
+        return sql_ident(c)
+
+    rejects = labeled.filter("reject_reason IS NOT NULL").selectExpr(
+        *[reject_col(c) for c in REJECT_COLUMNS]
     )
 
     def _resolve() -> dict:

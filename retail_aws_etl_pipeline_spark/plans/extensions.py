@@ -5064,40 +5064,8 @@ def dsir_selected_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _gopher_m_cte(base: str, m: str) -> str:
-    """The Gopher metric CTE pair over ``documents``, with caller-chosen
-    CTE names — ONE shared fragment (the ADVICE r13 _hll_e_raw_sql
-    discipline) so :data:`GOPHER_QUALITY_ORACLE` and the r17-staged
-    agreement oracle can never drift on the rule metrics."""
-    return f"""{base} AS (
-        SELECT doc_id, text,
-               string_split(text, ' ') AS toks,
-               string_split(text, chr(10)) AS lines
-        FROM documents
-    ),
-    {m} AS (
-        SELECT doc_id,
-               len(toks) AS n_words,
-               list_sum(list_transform(toks, x -> length(x))) AS sum_len,
-               length(text) - length(replace(text, '#', '')) AS n_hash,
-               (length(text) - length(replace(text, '...', ''))) // 3 AS n_ell,
-               len(lines) AS n_lines,
-               len(list_filter(lines,
-                   l -> starts_with(l, '- ') OR starts_with(l, '•'))) AS n_bullet,
-               len(list_filter(lines,
-                   l -> ends_with(l, '...') OR ends_with(l, '…'))) AS n_ell_lines,
-               len(list_filter(toks,
-                   x -> regexp_matches(x, '[A-Za-z]'))) AS n_alpha,
-               {" + ".join(
-                   f"(CASE WHEN list_contains(toks, '{w}') THEN 1 ELSE 0 END)"
-                   for w in TX.GOPHER_STOPWORDS
-               )} AS n_stop_kinds
-        FROM {base}
-    )"""
-
-
 #: Per-rule SQL over the metric CTE's columns — shared verbatim by the
-#: flag SELECT and the composite (and, r17, the agreement oracle).
+#: flag SELECT and the composite.
 _GOPHER_FLAG_SQL = {
     "word_count_ok": f"(n_words >= {TX.GOPHER_MIN_WORDS}"
     f" AND n_words <= {TX.GOPHER_MAX_WORDS})",
@@ -5124,7 +5092,31 @@ _GOPHER_FLAG_SELECT = (",\n           ").join(
 )
 
 GOPHER_QUALITY_ORACLE = f"""
-    WITH {_gopher_m_cte("base", "m")}
+    WITH base AS (
+        SELECT doc_id, text,
+               string_split(text, ' ') AS toks,
+               string_split(text, chr(10)) AS lines
+        FROM documents
+    ),
+    m AS (
+        SELECT doc_id,
+               len(toks) AS n_words,
+               list_sum(list_transform(toks, x -> length(x))) AS sum_len,
+               length(text) - length(replace(text, '#', '')) AS n_hash,
+               (length(text) - length(replace(text, '...', ''))) // 3 AS n_ell,
+               len(lines) AS n_lines,
+               len(list_filter(lines,
+                   l -> starts_with(l, '- ') OR starts_with(l, '•'))) AS n_bullet,
+               len(list_filter(lines,
+                   l -> ends_with(l, '...') OR ends_with(l, '…'))) AS n_ell_lines,
+               len(list_filter(toks,
+                   x -> regexp_matches(x, '[A-Za-z]'))) AS n_alpha,
+               {" + ".join(
+                   f"(CASE WHEN list_contains(toks, '{w}') THEN 1 ELSE 0 END)"
+                   for w in TX.GOPHER_STOPWORDS
+               )} AS n_stop_kinds
+        FROM base
+    )
     SELECT doc_id,
            CAST(n_words AS BIGINT) AS n_words,
            {_GOPHER_FLAG_SELECT},
@@ -6307,41 +6299,6 @@ def duplicated_span_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.duplicated_span_stats(docs).orderBy("doc_id")
 
 
-def _c4_page_cte(base: str, b: str) -> str:
-    """The C4 line-retention + page-metric CTE pair over ``documents``,
-    with caller-chosen CTE names — ONE shared fragment (the
-    _hll_e_raw_sql discipline) so :data:`C4_CLEAN_ORACLE` and the
-    r17-staged agreement oracle can never drift on the line lambda or
-    the page metrics."""
-    term = " OR ".join(f"ends_with(l, '{e}')" for e in TX.C4_TERMINALS)
-    keep = (
-        f"l -> ({term}) AND len(string_split(l, ' ')) >= {TX.C4_MIN_LINE_WORDS}"
-        " AND NOT contains(lower(l), 'javascript')"
-    )
-    return f"""{base} AS (
-        SELECT doc_id,
-               string_split(text, chr(10)) AS lines,
-               list_filter(string_split(text, chr(10)), {keep}) AS kept,
-               contains(lower(text), 'lorem ipsum') AS has_lorem,
-               contains(text, chr(123)) AS has_brace
-        FROM documents
-    ),
-    {b} AS (
-        SELECT doc_id,
-               CAST(len(lines) AS BIGINT) AS n_lines,
-               CAST(len(kept) AS BIGINT) AS n_kept_lines,
-               -- DuckDB array_to_string([]) is NULL (Spark: '')
-               COALESCE(array_to_string(kept, chr(10)), '') AS clean_text,
-               CAST(length(COALESCE(array_to_string(kept, chr(10)), ''))
-                    - length(translate(
-                          COALESCE(array_to_string(kept, chr(10)), ''),
-                          '.!?', ''))
-                    AS BIGINT) AS n_sentences,
-               has_lorem, has_brace
-        FROM {base}
-    )"""
-
-
 #: The C4 page gate over the page-metric CTE's columns — shared verbatim.
 _C4_PAGE_KEPT_SQL = (
     "(NOT has_lorem AND NOT has_brace"
@@ -6355,8 +6312,34 @@ def _c4_oracle() -> str:
     characters of the kept-line join; page gates recomputed from raw.
     Built from the shared fragments above (r15 factoring; semantics
     unchanged)."""
+    term = " OR ".join(f"ends_with(l, '{e}')" for e in TX.C4_TERMINALS)
+    keep = (
+        f"l -> ({term}) AND len(string_split(l, ' ')) >= {TX.C4_MIN_LINE_WORDS}"
+        " AND NOT contains(lower(l), 'javascript')"
+    )
     return f"""
-    WITH {_c4_page_cte("c4", "c4b")}
+    WITH c4 AS (
+        SELECT doc_id,
+               string_split(text, chr(10)) AS lines,
+               list_filter(string_split(text, chr(10)), {keep}) AS kept,
+               contains(lower(text), 'lorem ipsum') AS has_lorem,
+               contains(text, chr(123)) AS has_brace
+        FROM documents
+    ),
+    c4b AS (
+        SELECT doc_id,
+               CAST(len(lines) AS BIGINT) AS n_lines,
+               CAST(len(kept) AS BIGINT) AS n_kept_lines,
+               -- DuckDB array_to_string([]) is NULL (Spark: '')
+               COALESCE(array_to_string(kept, chr(10)), '') AS clean_text,
+               CAST(length(COALESCE(array_to_string(kept, chr(10)), ''))
+                    - length(translate(
+                          COALESCE(array_to_string(kept, chr(10)), ''),
+                          '.!?', ''))
+                    AS BIGINT) AS n_sentences,
+               has_lorem, has_brace
+        FROM c4
+    )
     SELECT doc_id, n_lines, n_kept_lines, n_sentences, has_lorem, has_brace,
            clean_text,
            {_C4_PAGE_KEPT_SQL} AS page_kept

@@ -132,6 +132,19 @@ SILVER_SCHEMA = T.StructType(
     ]
 )
 
+#: Gold layer (fact_sales): silver's columns with the gold-side cleaning
+#: (``quantity`` widened to bigint) plus the identity ``row_hash``
+#: (incremental_auto_compaction.py:205-212); ``date`` is the partition
+#: column. Read with this schema, gold needs no footer-inference job.
+GOLD_SCHEMA = T.StructType(
+    [
+        T.StructField(f.name, T.LongType()) if f.name == "quantity" else f
+        for f in SILVER_SCHEMA.fields
+        if f.name != "date"
+    ]
+    + [T.StructField("row_hash", T.StringType()), T.StructField("date", T.DateType())]
+)
+
 #: Fixed 13-column reject schema, in order
 #: (glue_job_raw_to_processed.py:316-337, docs/rejects.md:9-22).
 REJECT_COLUMNS = [

@@ -4,7 +4,9 @@ Local test profile: ``local[N]`` single JVM. The same configs are the ones
 we'd set cluster-side at scale: AQE on (runtime coalesce/skew handling),
 dynamic partition overwrite (idempotent per-partition gold rewrites —
 reference intent at scripts/incremental_auto_compaction.py:253-257), UTC
-session timezone (oracle comparability), Arrow for any Pandas-UDF exchange.
+session timezone (oracle comparability), Arrow for any Pandas-UDF exchange,
+and no DataFrame call-site capture (each PySpark Column/DataFrame call
+otherwise pays ~15 py4j round trips for it; see :func:`get_spark`).
 """
 
 from __future__ import annotations
@@ -64,6 +66,14 @@ def get_spark(
         # on object stores use the cloud committers for the same reason)
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.ui.enabled", "false")
+        # No call-site capture: with debugging on, every PySpark Column and
+        # DataFrame call walks the Python stack and sets/clears the JVM's
+        # PySparkCurrentOrigin (~15 py4j round trips per call, most of a
+        # small file's plan-building time). Error messages lose the user
+        # call site only. PySpark caches this flag per PROCESS at the first
+        # Column call made under an active session, so a session created
+        # without it earlier in the process keeps capture on.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     for k, v in (extra_conf or {}).items():

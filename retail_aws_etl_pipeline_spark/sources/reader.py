@@ -2,12 +2,15 @@
 
 Re-expresses the reference's runtime-discovered schema ingestion
 (glue_job_raw_to_processed.py:99-217) as a reusable source. The two-phase
-"sniff then plan" design is kept: a ≤20-line driver sample determines the
-delimiter and header, then ONE lazy Spark plan handles the whole file —
-the only driver round-trips are O(1) regardless of file size.
+"sniff then plan" design is kept: a ≤20-line sample determines the
+delimiter and header, then ONE lazy Spark plan handles the whole file. The
+sample is a plain driver-side head read of the file (the same kind of read
+as the file gate's ``sniff_text``), split, scrubbed and filtered exactly as
+the Spark plan does it — building the plan submits no Spark job, and the
+read is O(1) regardless of file size.
 
 Differences from the reference (documented intent, SURVEY.md §7.4.3):
-- the delimiter is regex-escaped before ``F.split`` (the reference passes
+- the delimiter is regex-escaped before ``split`` (the reference passes
   ``|`` raw, which as a regex splits every character);
 - duplicate header names: first occurrence wins (deterministic; the
   reference's dict comprehension silently kept the last).
@@ -21,6 +24,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from retail_aws_etl_pipeline_spark.functions.sqltext import sql_ident, sql_lit
 from retail_aws_etl_pipeline_spark.schema import (
     CANONICAL_COLUMNS,
     build_index_map,
@@ -30,6 +34,42 @@ from retail_aws_etl_pipeline_spark.sources.sniff import sniff_delimiter
 
 #: BOM / zero-width / nbsp scrub (glue_job_raw_to_processed.py:101-104).
 INVISIBLE_CHARS_PATTERN = "[\\uFEFF\\u200B\\u00A0]"
+
+#: The text source's line terminators (Hadoop LineReader: LF, CR, CRLF).
+_LINE_BREAK = re.compile(rb"\r\n|\r|\n")
+_HEAD_CHUNK = 65536
+#: Hadoop glob metacharacters: ``path`` names one file, never a pattern.
+_GLOB_CHARS = re.compile(r"([\\*?\[\]{}])")
+
+
+def _head_lines(path: str, n: int) -> list[str]:
+    """The first ``n`` lines ``spark.read.text(path)`` would yield after the
+    reader's scrub and blank filter, read on the driver: Spark's line
+    terminators, the same invisible-character scrub, and Spark's ``trim``
+    (which strips spaces only) for the blank rule. Reads 64 KB at a time
+    until it has ``n`` lines or reaches EOF; only complete lines (or the
+    file's last line) are decoded."""
+    scrub = re.compile(INVISIBLE_CHARS_PATTERN)
+    lines: list[str] = []
+    buf = b""
+    with open(path, "rb") as f:
+        while len(lines) < n:
+            chunk = f.read(_HEAD_CHUNK)
+            buf += chunk
+            if chunk and not _LINE_BREAK.search(chunk):
+                continue
+            parts = _LINE_BREAK.split(buf)
+            # a line cut by the chunk end waits for the next chunk; a CR
+            # cut from its LF leaves only a blank line behind, which the
+            # blank rule drops
+            buf = parts.pop() if chunk else b""
+            for raw in parts:
+                line = scrub.sub("", raw.decode("utf-8", errors="replace"))
+                if line.strip(" "):
+                    lines.append(line)
+            if not chunk:
+                break
+    return lines[:n]
 
 
 @dataclass(frozen=True)
@@ -50,19 +90,13 @@ def read_flexible_csv(
     are ignored (docs/schema_mapping.md:23). Rows with too few tokens get
     NULLs in the overflow positions (out-of-range array access), which the
     structural validator downstream turns into rejects.
-    """
-    raw = spark.read.text(path)
-    scrub = F.regexp_replace("value", INVISIBLE_CHARS_PATTERN, "")
 
-    # The dialect sniff only needs the first lines — scrub them on the
-    # driver-side limit path (cheap, 20 rows).
-    sample = [
-        r["value"]
-        for r in raw.withColumn("value", scrub)
-        .filter(F.trim(F.col("value")) != "")
-        .limit(sample_lines)
-        .collect()
-    ]
+    ``path`` names one local, uncompressed UTF-8 file (the file gate's
+    contract), never a directory or a glob pattern.
+    """
+    # The dialect sniff only needs the first lines: read them on the driver
+    # (no Spark job), as the plan below splits, scrubs and filters them.
+    sample = _head_lines(path, sample_lines)
     delimiter = sniff_delimiter("\n".join(sample))
 
     header_line = sample[0] if sample else ""
@@ -81,25 +115,31 @@ def read_flexible_csv(
     # (operators.validate.split_quality), which the heavy row work — the
     # timestamp cascade and currency cleaning — runs after; a round-robin
     # exchange here would be a second shuffle of every line.
+    #
+    # SQL text with engine constants only (the delimiter is one of
+    # sniff.CANDIDATE_DELIMITERS); the header line is file data and enters
+    # as a literal Column.
     data = (
-        raw.withColumn("value", scrub)
-        .filter(F.trim(F.col("value")) != "")
+        spark.read.text(_GLOB_CHARS.sub(r"\\\1", path))
+        .selectExpr(f"regexp_replace(value, {sql_lit(INVISIBLE_CHARS_PATTERN)}, '') AS value")
+        .filter("trim(value) != ''")
         .filter(F.col("value") != F.lit(header_line))
     )
-    tokens = F.split(F.col("value"), re.escape(delimiter))
+    tokens = f"split(value, {sql_lit(re.escape(delimiter))})"
 
-    def extract(name: str):
+    def extract(name: str) -> str:
         idx = index_map.get(name)
         if idx is None:
-            return F.lit(None).cast("string")
-        # F.get (not getItem): out-of-range → NULL. ANSI mode makes getItem
-        # throw on short rows; NULL-on-shortfall is the semantic we want —
-        # it's what routes token-count-mismatch rows to structural rejects.
-        return F.get(tokens, idx)
+            return "CAST(NULL AS STRING)"
+        # get (not [] / getItem): out-of-range → NULL. ANSI mode makes
+        # getItem throw on short rows; NULL-on-shortfall is the semantic we
+        # want — it's what routes token-count-mismatch rows to structural
+        # rejects.
+        return f"get({tokens}, {idx})"
 
     projections = [
-        extract(c).alias("timestamp_raw" if c == "timestamp" else c)
+        f"{extract(c)} AS {sql_ident('timestamp_raw' if c == 'timestamp' else c)}"
         for c in CANONICAL_COLUMNS
     ]
-    extracted = data.select(*projections, F.col("value").alias("raw_row"))
+    extracted = data.selectExpr(*projections, "value AS raw_row")
     return extracted, meta

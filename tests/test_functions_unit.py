@@ -9,7 +9,9 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from retail_aws_etl_pipeline_spark.functions.hashing import business_row_hash
 from retail_aws_etl_pipeline_spark.functions.numeric import clean_currency, clean_quantity
+from retail_aws_etl_pipeline_spark.functions.sqltext import sql_lit
 from retail_aws_etl_pipeline_spark.functions.timestamps import (
     EXTENDED_PATTERNS,
     REFERENCE_PATTERNS,
@@ -77,6 +79,41 @@ def test_sniff_never_raises(text):
     assert sniff_delimiter(text) in {",", ";", "|", "\t"}
 
 
+#: Raw file heads the driver-side sniff must split, scrub and filter exactly
+#: as Spark's text source and the reader's filters do.
+_CHUNK = 65536
+HEAD_CASES = {
+    "crlf_bom": "\ufeffh1,h2\r\na,b\r\n\r\nc,d\r\n".encode(),
+    "cr_only": b"h1;h2\ra;b\r\rc;d",
+    "blank_then_header": (" \n" * 30 + "\u200b\n\u00a0 \nh|x\n" + "r|1\n" * 25).encode(),
+    "tab_is_not_blank": b"\t\nh,x\na,b\n",
+    "long_line": ("x" * 70_000 + "\nh,y\n" + "a,b\n" * 30).encode(),
+    "crlf_across_chunk": b"h,x\n" + b"y" * (_CHUNK - 5) + b"\r\n" + b"a,b\n" * 25,
+    "no_trailing_newline": b"h,x\na,b",
+    "invalid_utf8": b"h,x\na\xff\xfeb,c\xe2\x82\nd,e\n",
+    "empty": b"",
+}
+
+
+@pytest.mark.parametrize("name", sorted(HEAD_CASES))
+def test_head_lines_match_the_spark_text_reader(spark, tmp_path, name):
+    """``_head_lines`` yields what the reader's Spark-side scrub and blank
+    filter yield for the same file, limited to 20 lines."""
+    from retail_aws_etl_pipeline_spark.sources.reader import INVISIBLE_CHARS_PATTERN, _head_lines
+
+    path = tmp_path / f"{name}.csv"
+    path.write_bytes(HEAD_CASES[name])
+    want = [
+        r["value"]
+        for r in spark.read.text(str(path))
+        .withColumn("value", F.regexp_replace("value", INVISIBLE_CHARS_PATTERN, ""))
+        .filter(F.trim(F.col("value")) != "")
+        .limit(20)
+        .collect()
+    ]
+    assert _head_lines(str(path), 20) == want
+
+
 # --- timestamp cascade (P8) -----------------------------------------------
 
 TS_CASES = [
@@ -135,6 +172,62 @@ def test_cascade_never_raises(spark, text):
     # any input either parses or nulls — never throws (docs/timestamp_parsing.md:3-5)
     got = _parse_with(spark, [text], EXTENDED_PATTERNS)
     assert len(got) == 1
+
+
+#: Strings that probe the SQL-text cascade's escaping and its regex gates:
+#: every format of both pattern sets, impossible dates, empty, quote and
+#: backslash characters, a trailing newline (``$`` matches before it),
+#: non-ASCII digits and AM/PM forms.
+ADVERSARIAL_TS = [
+    *[c[0] for c in TS_CASES],
+    "2025-06-12T05:03:38", "07-12-24 20:23", "09/03/2025 06:28AM", "10/18/2025 01:55PM",
+    "03/04/2025", "25/12/2024", "25/12/2024 14:30", "25/12/2024 14:30:25",
+    "2024-02-30", "2024-13-01 00:00", "00000000", "99999999 999999", "13/13/2024",
+    "'", "''", "\\", "\\'", "2024-10-16'", "'2024-10-16'", "2024-10-16\n",
+    "2024-10-16\\", "２０２４-10-16", " 2024-10-16", "2024-10-16 ", "AM", "PM", None,
+]
+
+
+@pytest.mark.parametrize("patterns", [REFERENCE_PATTERNS, EXTENDED_PATTERNS], ids=["ref", "ext"])
+def test_sql_text_cascade_matches_column_cascade(spark, patterns):
+    """A column name builds the cascade as SQL text, a Column builds it
+    from Column calls: both give the same value on every string."""
+    df = spark.createDataFrame([(v,) for v in ADVERSARIAL_TS], "ts_raw string")
+    rows = df.select(
+        "ts_raw",
+        parse_timestamp("ts_raw", patterns).alias("sql"),
+        parse_timestamp(F.col("ts_raw"), patterns).alias("col"),
+    ).collect()
+    assert [(r["ts_raw"], r["sql"]) for r in rows] == [(r["ts_raw"], r["col"]) for r in rows]
+    assert sum(r["sql"] is not None for r in rows) >= 10  # the gates do admit rows
+
+
+def test_sql_text_cleaners_and_hash_match_column_forms(spark):
+    """The SQL-text cleaners equal their Column forms, and the SQL-text
+    row hash equals the reference's md5-over-concat_ws Column formula."""
+    values = ["$1,413.15", "(5.00)", "N/A", "", "-", "--", "12 pcs", "1.0E-5", "'", "\\",
+              "(1)(2)", "₹12.50", None]
+    df = spark.createDataFrame([(v, v) for v in values], "a string, b string")
+    got = df.select(
+        clean_currency("a").alias("c_sql"), clean_currency(F.col("a")).alias("c_col"),
+        clean_quantity("a", "long").alias("q_sql"),
+        clean_quantity(F.col("a"), "long").alias("q_col"),
+        business_row_hash(["a", "b"]).alias("h_sql"),
+        F.md5(
+            F.concat_ws("||", *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in "ab"])
+        ).alias("h_col"),
+    ).collect()
+    for r in got:
+        assert (r["c_sql"], r["q_sql"], r["h_sql"]) == (r["c_col"], r["q_col"], r["h_col"]), r
+
+
+def test_sql_lit_round_trips_through_the_parser(spark):
+    """Every string the escaping helper emits parses back to itself."""
+    values = ["'", "\\", "\\'", "'\\", "a'b\\c", "\\u0041", "日本", "%_", "\n", "--", "/*"]
+    row = spark.range(1).select(
+        *[F.expr(sql_lit(v)).alias(f"v{i}") for i, v in enumerate(values)]
+    ).first()
+    assert list(row) == values
 
 
 # --- currency / quantity cleaning (P9, P10) --------------------------------

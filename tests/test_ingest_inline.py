@@ -168,3 +168,94 @@ def test_count_fallback_matches_only_a_pruned_observation(spark):
     with pytest.raises(Py4JJavaError) as err:
         jvm.org.apache.spark.sql.api.python.PythonSQLUtils.toPyRow(jvm.org.apache.spark.sql.Row.empty())
     assert _is_pruned_observation(err.value)
+
+
+def test_ingest_file_name_and_pattern_with_sql_metacharacters(spark, tmp_path):
+    """A file name with a quote, a backslash, a ``;`` and non-ASCII
+    characters, and a caller pattern with quotes in both its regex and its
+    format: the name reaches silver as data (never as SQL text or a path
+    glob) and the counts are exact."""
+    from retail_aws_etl_pipeline_spark.functions.timestamps import REFERENCE_PATTERNS
+
+    name = "o'brien\\;café_日本.csv"
+    quoted = "T9;S01;'2024-10-19';I9;Home;1;2.00;2.00;Card;C9"
+    path = tmp_path / name
+    with open(path, "w", encoding="utf-8") as f:
+        f.write("﻿" + HEADER + "\n" + "\n".join(LINES + [quoted]) + "\n")
+    patterns = REFERENCE_PATTERNS + [(r"^'\d{4}-\d{2}-\d{2}'$", "''yyyy-MM-dd''")]
+    lake = LakeLayout(str(tmp_path / "lake"))
+    r = ingest_file(spark, str(path), lake, timestamp_patterns=patterns, archive=False)
+    assert (r.status, r.source_file) == ("ok", name)
+    assert r.counts == {**COUNTS, "data_rows": 12, "good_rows": 4}
+    silver = spark.read.parquet(lake.processed)
+    assert {row["source_file"] for row in silver.select("source_file").collect()} == {name}
+    got = silver.filter("transaction_id = 'T9'").select(F.col("date").cast("string")).collect()
+    assert [row[0] for row in got] == ["2024-10-19"]
+
+
+def test_silver_and_gold_have_the_declared_schemas(spark, tmp_path):
+    """Ingest writes exactly SILVER_SCHEMA and compaction exactly
+    GOLD_SCHEMA, as footer inference sees the files — the schemas the
+    compaction and gold readers declare instead of inferring."""
+    from retail_aws_etl_pipeline_spark.operators.compact import compact_pending
+    from retail_aws_etl_pipeline_spark.schema import GOLD_SCHEMA, SILVER_SCHEMA
+
+    lake = LakeLayout(str(tmp_path / "lake"))
+    ingest_file(spark, _write(tmp_path / "sales_inline.csv"), lake, archive=False)
+    compact_pending(spark, lake)
+    assert spark.read.parquet(lake.processed).schema == SILVER_SCHEMA
+    assert spark.read.parquet(lake.gold).schema == GOLD_SCHEMA
+
+
+def test_compact_reads_a_column_missing_from_a_partition_as_null(spark, tmp_path):
+    """A silver partition written without ``customer_id`` compacts to NULL
+    ``customer_id`` (schema drift); the partitions that have the column
+    keep their values."""
+    from retail_aws_etl_pipeline_spark.operators.compact import compact_pending, read_gold
+
+    lake = LakeLayout(str(tmp_path / "lake"))
+    ingest_file(spark, _write(tmp_path / "sales_inline.csv"), lake, archive=False)
+    (
+        spark.read.parquet(lake.processed)
+        .filter("date = '2024-10-16'")
+        .drop("customer_id")
+        .withColumn("date", F.lit("2024-10-20").cast("date"))
+        .write.mode("append")
+        .partitionBy("date")
+        .parquet(lake.processed)
+    )
+    summary = compact_pending(spark, lake)
+    assert summary["processed_partitions_count"] == 3
+    got = sorted(
+        (str(r["date"]), r["transaction_id"], r["customer_id"])
+        for r in read_gold(spark, lake).collect()
+    )
+    assert got == [
+        ("2024-10-16", "T1", "C1"),
+        ("2024-10-16", "T2", "C2"),
+        ("2024-10-18", "T7", "C7"),
+        ("2024-10-20", "T1", None),
+        ("2024-10-20", "T2", None),
+    ]
+
+
+def test_type_drifted_tables_are_read_with_inferred_schemas(spark, tmp_path):
+    """Silver written by another tool (here with a string ``ingest_ts``)
+    does not conform to SILVER_SCHEMA: compaction and ``read_gold`` fall
+    back to the inferred schema instead of failing the read."""
+    from retail_aws_etl_pipeline_spark.operators.compact import compact_pending, read_gold
+
+    lake = LakeLayout(str(tmp_path / "lake"))
+    spark.createDataFrame(
+        [("T1", "S1", "2025-01-01 10:00:00", "2025-01-01"),
+         ("T1", "S1", "2025-01-01 11:00:00", "2025-01-01"),
+         ("T2", "S1", "2025-01-02 10:00:00", "2025-01-02")],
+        ["transaction_id", "store_id", "ingest_ts", "date"],
+    ).write.partitionBy("date").parquet(lake.processed)
+    summary = compact_pending(spark, lake)
+    assert [r["rows_after_dedup"] for r in summary["results"]] == [1, 1]
+    gold = read_gold(spark, lake)
+    assert dict(gold.dtypes)["ingest_ts"] == "string"
+    assert sorted((r["transaction_id"], r["ingest_ts"]) for r in gold.collect()) == [
+        ("T1", "2025-01-01 11:00:00"), ("T2", "2025-01-02 10:00:00")
+    ]

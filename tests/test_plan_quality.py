@@ -562,3 +562,90 @@ def test_quality_split_reads_one_persisted_lineage(spark, tmp_path):
     finally:
         for df in split.cached:
             df.unpersist()
+
+
+def _sales_csv(path, n_rows: int, seed: int) -> str:
+    """A dirty ``;``-delimited sales file of ``n_rows`` lines over three
+    days: mixed timestamp formats, unparseable timestamps, short rows,
+    dirty currency and repeated lines."""
+    import random
+
+    rng = random.Random(seed)
+    lines = ["transaction_id;store_id;timestamp;item_id;quantity;unit_price;revenue;customer_id"]
+    for i in range(n_rows):
+        day = 16 + i % 3
+        ts = rng.choice([f"2024-10-{day} 1{i % 10}:05:00", f"10/{day}/2024", "bad-ts"])
+        q, p = rng.randint(1, 5), rng.randint(100, 999) / 100
+        line = f"T{seed}_{i};S{i % 7};{ts};I{i % 50};{q};${p:,.2f};{q * p:.2f};C{i % 90}"
+        lines.append(line if i % 97 else f"T{i};S1")
+        if i % 211 == 0:
+            lines.append(line)
+    with open(path, "w", encoding="utf-8") as f:
+        f.write("\n".join(lines) + "\n")
+    return str(path)
+
+
+def _count_send_commands(monkeypatch, fn):
+    """(fn's result, py4j commands the calling thread sends while fn runs).
+    py4j's finalizer thread sends the deferred frees of dead JavaObjects
+    whenever it wakes; those are not ``fn``'s plan building and are not
+    counted."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    me = threading.get_ident()
+    sent = [0]
+    orig = ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent[0] += threading.get_ident() == me
+        return orig(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    try:
+        out = fn()
+    finally:
+        monkeypatch.setattr(ClientServerConnection, "send_command", orig)
+    return out, sent[0]
+
+
+def test_lake_path_py4j_round_trips_are_bounded(spark, tmp_path, monkeypatch):
+    """Building the lake path's plans costs a few hundred py4j round trips,
+    not thousands: per 4k-row ``ingest_file`` ≤450 and per
+    ``compact_pending`` ≤250 (warm; one of each runs first). Guards the
+    call-site capture switch (``session.get_spark``), the SQL-text
+    projections and the schema-declared reads."""
+    from retail_aws_etl_pipeline_spark.ingest import ingest_file
+    from retail_aws_etl_pipeline_spark.lake import LakeLayout
+    from retail_aws_etl_pipeline_spark.operators.compact import compact_pending
+
+    counts = {}
+    for i in range(2):
+        lake = LakeLayout(str(tmp_path / f"lake{i}"))
+        path = _sales_csv(tmp_path / f"sales_{i}.csv", 4_000, seed=i)
+        r, counts["ingest"] = _count_send_commands(
+            monkeypatch, lambda: ingest_file(spark, path, lake, archive=False)
+        )
+        assert r.status == "ok" and r.counts["good_rows"] > 2_000, r
+        s, counts["compact"] = _count_send_commands(
+            monkeypatch, lambda: compact_pending(spark, lake)
+        )
+        assert s["processed_partitions_count"] == 3, s
+    assert counts["ingest"] <= 450, counts
+    assert counts["compact"] <= 250, counts
+
+
+def test_read_flexible_csv_submits_no_spark_job(spark, tmp_path):
+    """The dialect sniff reads the file head on the driver: building the
+    extracted frame submits no Spark job (the first action does)."""
+    from retail_aws_etl_pipeline_spark.sources.reader import read_flexible_csv
+
+    path = _sales_csv(tmp_path / "sales.csv", 200, seed=3)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    extracted, meta = read_flexible_csv(spark, path)
+    assert set(tracker.getJobIdsForGroup()) == before
+    assert meta.delimiter == ";" and meta.missing_required == []
+    assert extracted.count() == 201  # 200 lines + one repeat; header dropped
+    assert set(tracker.getJobIdsForGroup()) != before  # the tracker does see jobs
