@@ -10,7 +10,8 @@ magnitude cheaper to shuffle/compare at billions of rows (SURVEY.md §2.2
 P13 note). Collision probability at 10^10 rows is ~0.3% birthday bound for
 64-bit; pair with the md5 when absolute certainty is required.
 
-Both are built as SQL text (one py4j call) over the named columns.
+``business_row_hash_sql`` is the md5 form as Spark SQL text, which the
+lake path parses in one py4j call.
 """
 
 from __future__ import annotations
@@ -22,22 +23,23 @@ from retail_aws_etl_pipeline_spark.functions.sqltext import sql_ident
 from retail_aws_etl_pipeline_spark.schema import ROW_HASH_COLUMNS
 
 
-def _normalized_sql(columns: list[str] | None) -> str:
+def _normalized(columns: list[str] | None) -> list[Column]:
     cols = columns if columns is not None else ROW_HASH_COLUMNS
-    parts = [f"coalesce(CAST({sql_ident(c)} AS STRING), '')" for c in cols]
-    return f"concat_ws('||', {', '.join(parts)})"
-
-
-def business_row_hash_sql(columns: list[str] | None = None) -> str:
-    """:func:`business_row_hash` as Spark SQL text."""
-    return f"md5({_normalized_sql(columns)})"
+    return [F.coalesce(F.col(c).cast("string"), F.lit("")) for c in cols]
 
 
 def business_row_hash(columns: list[str] | None = None) -> Column:
     """md5 hex over '||'-joined null-safe string casts (reference parity)."""
-    return F.expr(business_row_hash_sql(columns))
+    return F.md5(F.concat_ws("||", *_normalized(columns)))
 
 
 def business_row_hash64(columns: list[str] | None = None) -> Column:
     """xxhash64 over the same canonical string form (scale path)."""
-    return F.expr(f"xxhash64({_normalized_sql(columns)})")
+    return F.xxhash64(F.concat_ws("||", *_normalized(columns)))
+
+
+def business_row_hash_sql(columns: list[str] | None = None) -> str:
+    """:func:`business_row_hash` as Spark SQL text."""
+    cols = columns if columns is not None else ROW_HASH_COLUMNS
+    parts = [f"coalesce(CAST({sql_ident(c)} AS STRING), '')" for c in cols]
+    return f"md5(concat_ws('||', {', '.join(parts)}))"

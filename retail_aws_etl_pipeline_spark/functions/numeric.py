@@ -10,9 +10,8 @@ incremental_auto_compaction.py:205-207):
 - ``clean_quantity``: keep only ``[0-9-]``, cast int (gold re-casts long).
 
 Pure Catalyst expressions — three regexp_replace + a cast, whole-stage
-codegen, no UDF. Given a column NAME, each cleaner is SQL text parsed once
-by the JVM (one py4j call); a Column input builds the same expression from
-Column calls.
+codegen, no UDF. The ``*_sql`` forms are the same expressions as Spark SQL
+text over a named column, which the lake path parses in one py4j call.
 """
 
 from __future__ import annotations
@@ -29,6 +28,10 @@ _CURRENCY_STEPS = [(r"[^0-9()\.-]", ""), (r"[(]", "-"), (r"[)]", "")]
 _QUANTITY_PATTERN = "[^0-9-]"
 
 
+def _as_col(source: Column | str) -> Column:
+    return F.col(source) if isinstance(source, str) else source
+
+
 def _type_name(target_type: str) -> str:
     if not re.fullmatch(r"[a-z]+", target_type):
         raise ValueError(f"not a simple type name: {target_type!r}")
@@ -36,21 +39,18 @@ def _type_name(target_type: str) -> str:
 
 
 def clean_currency(source: Column | str) -> Column:
+    c = _as_col(source).cast("string")
+    for pattern, repl in _CURRENCY_STEPS:
+        c = F.regexp_replace(c, pattern, repl)
     # try_cast: malformed ('' / '-' / '--') → NULL. Spark 4 ANSI mode makes
     # plain cast THROW on these; the reference ran non-ANSI Spark where cast
     # nulled silently — try_cast restores that semantic explicitly.
-    if isinstance(source, str):
-        return F.expr(clean_currency_sql(source))
-    c = source.cast("string")
-    for pattern, repl in _CURRENCY_STEPS:
-        c = F.regexp_replace(c, pattern, repl)
     return c.try_cast("double")
 
 
 def clean_quantity(source: Column | str, target_type: str = "int") -> Column:
-    if isinstance(source, str):
-        return F.expr(clean_quantity_sql(source, target_type))
-    return F.regexp_replace(source.cast("string"), _QUANTITY_PATTERN, "").try_cast(target_type)
+    c = _as_col(source)
+    return F.regexp_replace(c.cast("string"), _QUANTITY_PATTERN, "").try_cast(target_type)
 
 
 def clean_currency_sql(name: str) -> str:

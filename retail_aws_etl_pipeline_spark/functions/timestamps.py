@@ -16,11 +16,11 @@ Semantics (kept identical to the reference):
 We additionally use ``try_to_timestamp`` (Spark ≥ 3.4) underneath the regex
 gate — belt and braces against ANSI-mode parse errors.
 
-Given a column NAME, the cascade is built as SQL text and parsed once by the
-JVM (``coalesce(CASE WHEN c RLIKE p THEN try_to_timestamp(c, f) END, …)``):
-one py4j call instead of ~4 per pattern. A Column input builds the same
-expression from Column calls; ``tests/test_functions_unit.py`` holds the two
-equal on adversarial strings for both pattern sets.
+:func:`parse_timestamp_sql` is the same cascade as SQL text over a named
+column (``coalesce(CASE WHEN c RLIKE p THEN try_to_timestamp(c, f) END, …)``),
+which the lake path parses in one py4j call instead of ~4 Column calls per
+pattern; ``tests/test_functions_unit.py`` holds the two equal on adversarial
+strings for both pattern sets.
 
 ``REFERENCE_PATTERNS`` is the reference's exact 11-pattern behavior (the
 parity default). ``EXTENDED_PATTERNS`` adds the doc-promised ``dd/MM``
@@ -73,11 +73,9 @@ def parse_timestamp(
     patterns: list[tuple[str, str]] | None = None,
 ) -> Column:
     """Build the cascade as one Column; NULL if no pattern parses."""
+    c = F.col(source) if isinstance(source, str) else source
     if patterns is None:
         patterns = REFERENCE_PATTERNS
-    if isinstance(source, str):
-        return F.expr(parse_timestamp_sql(source, patterns))
-    c = source
     parsed: Column = F.lit(None).cast("timestamp")
     for pattern, fmt in patterns:
         parsed = F.coalesce(

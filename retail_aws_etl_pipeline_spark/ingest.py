@@ -15,15 +15,14 @@ library entry point with the same zones and semantics:
    metrics JSON (K5, replaces SNS publish with a returned/logged dict).
 4. archive the input under a lineage name (K6).
 
-Scale notes: the driver reads only O(1) heads of the file — the gate's
-64 KB sample and the reader's ≤20-line dialect sniff, both plain file reads
-that submit no Spark job — and builds each plan from a few SQL-text
-projections (a handful of py4j calls, not one per Column). All row work of
-a file is one labeled lineage (read → ``raw_row`` fan-out shuffle →
-timestamp cascade → dedup window → cleaning), persisted once: the silver
-write fills the cache and fires the single class-count Observation, and the
-JSON and CSV reject sinks read the cache (the reference recomputed the full
-lineage 5×, SURVEY.md §4).
+Scale notes: the driver reads only an O(1) head of the file — the gate's
+64 KB sample, from which the reader also takes its ≤20-line dialect sniff,
+so no Spark job runs before the plan exists — and builds each plan from a
+few SQL-text projections (a handful of py4j calls, not one per Column). All row work of a file is one labeled lineage (read → ``raw_row``
+fan-out shuffle → timestamp cascade → dedup window → cleaning), persisted
+once: the silver write fills the cache and fires the single class-count
+Observation, and the JSON and CSV reject sinks read the cache (the
+reference recomputed the full lineage 5×, SURVEY.md §4).
 """
 
 from __future__ import annotations

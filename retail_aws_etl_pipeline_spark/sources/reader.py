@@ -4,10 +4,10 @@ Re-expresses the reference's runtime-discovered schema ingestion
 (glue_job_raw_to_processed.py:99-217) as a reusable source. The two-phase
 "sniff then plan" design is kept: a ≤20-line sample determines the
 delimiter and header, then ONE lazy Spark plan handles the whole file. The
-sample is a plain driver-side head read of the file (the same kind of read
-as the file gate's ``sniff_text``), split, scrubbed and filtered exactly as
-the Spark plan does it — building the plan submits no Spark job, and the
-read is O(1) regardless of file size.
+sample comes from the file gate's driver-side head read (``sniff_text``),
+split, scrubbed and filtered exactly as the Spark plan does it: building
+the plan submits no Spark job, and the read is O(1) regardless of file
+size.
 
 Differences from the reference (documented intent, SURVEY.md §7.4.3):
 - the delimiter is regex-escaped before ``split`` (the reference passes
@@ -18,6 +18,7 @@ Differences from the reference (documented intent, SURVEY.md §7.4.3):
 
 from __future__ import annotations
 
+import os
 import re
 from dataclasses import dataclass
 
@@ -30,46 +31,36 @@ from retail_aws_etl_pipeline_spark.schema import (
     build_index_map,
     missing_required,
 )
-from retail_aws_etl_pipeline_spark.sources.sniff import sniff_delimiter
+from retail_aws_etl_pipeline_spark.sources.sniff import sniff_delimiter, sniff_text
 
 #: BOM / zero-width / nbsp scrub (glue_job_raw_to_processed.py:101-104).
 INVISIBLE_CHARS_PATTERN = "[\\uFEFF\\u200B\\u00A0]"
 
 #: The text source's line terminators (Hadoop LineReader: LF, CR, CRLF).
-_LINE_BREAK = re.compile(rb"\r\n|\r|\n")
-_HEAD_CHUNK = 65536
+_LINE_BREAK = re.compile(r"\r\n|\r|\n")
+_HEAD_BYTES = 65536
 #: Hadoop glob metacharacters: ``path`` names one file, never a pattern.
 _GLOB_CHARS = re.compile(r"([\\*?\[\]{}])")
 
 
 def _head_lines(path: str, n: int) -> list[str]:
     """The first ``n`` lines ``spark.read.text(path)`` would yield after the
-    reader's scrub and blank filter, read on the driver: Spark's line
-    terminators, the same invisible-character scrub, and Spark's ``trim``
-    (which strips spaces only) for the blank rule. Reads 64 KB at a time
-    until it has ``n`` lines or reaches EOF; only complete lines (or the
-    file's last line) are decoded."""
-    scrub = re.compile(INVISIBLE_CHARS_PATTERN)
-    lines: list[str] = []
-    buf = b""
-    with open(path, "rb") as f:
-        while len(lines) < n:
-            chunk = f.read(_HEAD_CHUNK)
-            buf += chunk
-            if chunk and not _LINE_BREAK.search(chunk):
-                continue
-            parts = _LINE_BREAK.split(buf)
-            # a line cut by the chunk end waits for the next chunk; a CR
-            # cut from its LF leaves only a blank line behind, which the
-            # blank rule drops
-            buf = parts.pop() if chunk else b""
-            for raw in parts:
-                line = scrub.sub("", raw.decode("utf-8", errors="replace"))
-                if line.strip(" "):
-                    lines.append(line)
-            if not chunk:
-                break
-    return lines[:n]
+    reader's scrub and blank filter, taken from the file gate's head read
+    (:func:`sniff_text`): Spark's line terminators, the same
+    invisible-character scrub, and Spark's ``trim`` (which strips spaces
+    only) for the blank rule. The head doubles from 64 KB only while it
+    holds fewer than ``n`` such lines and the file goes on."""
+    size = os.path.getsize(path)
+    max_bytes = _HEAD_BYTES
+    while True:
+        parts = _LINE_BREAK.split(sniff_text(path, max_bytes))
+        if max_bytes < size:
+            parts.pop()  # the line the head cuts
+        scrubbed = (re.sub(INVISIBLE_CHARS_PATTERN, "", p) for p in parts)
+        lines = [ln for ln in scrubbed if ln.strip(" ")]
+        if len(lines) >= n or max_bytes >= size:
+            return lines[:n]
+        max_bytes *= 2
 
 
 @dataclass(frozen=True)
@@ -92,10 +83,13 @@ def read_flexible_csv(
     structural validator downstream turns into rejects.
 
     ``path`` names one local, uncompressed UTF-8 file (the file gate's
-    contract), never a directory or a glob pattern.
+    contract), never a directory or a glob pattern: its glob
+    metacharacters are escaped, so a name with ``\\``, ``[`` or ``*``
+    reads as itself.
     """
-    # The dialect sniff only needs the first lines: read them on the driver
-    # (no Spark job), as the plan below splits, scrubs and filters them.
+    # The dialect sniff only needs the first lines: take them from the
+    # gate's head read (no Spark job), as the plan below splits, scrubs and
+    # filters them.
     sample = _head_lines(path, sample_lines)
     delimiter = sniff_delimiter("\n".join(sample))
 

@@ -89,11 +89,9 @@ def main(argv=None) -> int:
     ap.add_argument("--workloads", default="lake_daily")
     ap.add_argument("--seconds", type=int, default=10)
     ap.add_argument("--trace", type=int, default=0)
-    ap.add_argument("--json", help="also write every run and the summary here")
     args = ap.parse_args(argv)
 
     better = directions(args.change)
-    report = {}
     for workload in args.workloads.split(","):
         runs = []
         for i in range(args.pairs):
@@ -107,7 +105,6 @@ def main(argv=None) -> int:
             print(f"{workload} pair {i + 1}/{args.pairs} seed {seed}"
                   + (f"  FAILED OPS: {bad}" if bad else ""), file=sys.stderr, flush=True)
         rows = summarize(runs, better)
-        report[workload] = {"runs": runs, "summary": rows}
         print(f"\n== {workload}: {args.pairs} pairs, seeds {args.seed}..{args.seed + args.pairs - 1}, "
               f"--seconds {args.seconds} --trace {args.trace}")
         print(f"{'metric':<28} {'parent med':>11} {'q1':>9} {'q3':>9} {'iqr':>8} "
@@ -120,9 +117,6 @@ def main(argv=None) -> int:
         for r in rows:
             print(f"  {r['metric']}: parent {[round(x, 4) for x in r['parent_runs']]}")
             print(f"  {' ' * len(r['metric'])}  change {[round(x, 4) for x in r['change_runs']]}")
-    if args.json:
-        with open(args.json, "w") as f:
-            json.dump(report, f, indent=1)
     return 0
 
 

@@ -9,13 +9,22 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from retail_aws_etl_pipeline_spark.functions.hashing import business_row_hash
-from retail_aws_etl_pipeline_spark.functions.numeric import clean_currency, clean_quantity
+from retail_aws_etl_pipeline_spark.functions.hashing import (
+    business_row_hash,
+    business_row_hash_sql,
+)
+from retail_aws_etl_pipeline_spark.functions.numeric import (
+    clean_currency,
+    clean_currency_sql,
+    clean_quantity,
+    clean_quantity_sql,
+)
 from retail_aws_etl_pipeline_spark.functions.sqltext import sql_lit
 from retail_aws_etl_pipeline_spark.functions.timestamps import (
     EXTENDED_PATTERNS,
     REFERENCE_PATTERNS,
     parse_timestamp,
+    parse_timestamp_sql,
 )
 from retail_aws_etl_pipeline_spark.schema import build_index_map, normalize_header_token
 from retail_aws_etl_pipeline_spark.sources.sniff import sniff_delimiter
@@ -80,7 +89,8 @@ def test_sniff_never_raises(text):
 
 
 #: Raw file heads the driver-side sniff must split, scrub and filter exactly
-#: as Spark's text source and the reader's filters do.
+#: as Spark's text source and the reader's filters do; the head read starts
+#: at 64 KB and doubles.
 _CHUNK = 65536
 HEAD_CASES = {
     "crlf_bom": "\ufeffh1,h2\r\na,b\r\n\r\nc,d\r\n".encode(),
@@ -89,6 +99,8 @@ HEAD_CASES = {
     "tab_is_not_blank": b"\t\nh,x\na,b\n",
     "long_line": ("x" * 70_000 + "\nh,y\n" + "a,b\n" * 30).encode(),
     "crlf_across_chunk": b"h,x\n" + b"y" * (_CHUNK - 5) + b"\r\n" + b"a,b\n" * 25,
+    "utf8_across_chunk": b"h,xy\n" + "é".encode() * (_CHUNK // 2) + b"\n" + b"a,b\n" * 25,
+    "blank_first_chunk": b" \n" * (_CHUNK // 2 + 10) + b"h,x\n" + b"a,b\n" * 25,
     "no_trailing_newline": b"h,x\na,b",
     "invalid_utf8": b"h,x\na\xff\xfeb,c\xe2\x82\nd,e\n",
     "empty": b"",
@@ -190,12 +202,12 @@ ADVERSARIAL_TS = [
 
 @pytest.mark.parametrize("patterns", [REFERENCE_PATTERNS, EXTENDED_PATTERNS], ids=["ref", "ext"])
 def test_sql_text_cascade_matches_column_cascade(spark, patterns):
-    """A column name builds the cascade as SQL text, a Column builds it
-    from Column calls: both give the same value on every string."""
+    """The SQL-text cascade the lake path parses and the Column cascade
+    give the same value on every string."""
     df = spark.createDataFrame([(v,) for v in ADVERSARIAL_TS], "ts_raw string")
     rows = df.select(
         "ts_raw",
-        parse_timestamp("ts_raw", patterns).alias("sql"),
+        F.expr(parse_timestamp_sql("ts_raw", patterns)).alias("sql"),
         parse_timestamp(F.col("ts_raw"), patterns).alias("col"),
     ).collect()
     assert [(r["ts_raw"], r["sql"]) for r in rows] == [(r["ts_raw"], r["col"]) for r in rows]
@@ -203,19 +215,16 @@ def test_sql_text_cascade_matches_column_cascade(spark, patterns):
 
 
 def test_sql_text_cleaners_and_hash_match_column_forms(spark):
-    """The SQL-text cleaners equal their Column forms, and the SQL-text
-    row hash equals the reference's md5-over-concat_ws Column formula."""
+    """The SQL-text cleaners and row hash equal their Column forms."""
     values = ["$1,413.15", "(5.00)", "N/A", "", "-", "--", "12 pcs", "1.0E-5", "'", "\\",
               "(1)(2)", "₹12.50", None]
     df = spark.createDataFrame([(v, v) for v in values], "a string, b string")
     got = df.select(
-        clean_currency("a").alias("c_sql"), clean_currency(F.col("a")).alias("c_col"),
-        clean_quantity("a", "long").alias("q_sql"),
-        clean_quantity(F.col("a"), "long").alias("q_col"),
-        business_row_hash(["a", "b"]).alias("h_sql"),
-        F.md5(
-            F.concat_ws("||", *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in "ab"])
-        ).alias("h_col"),
+        F.expr(clean_currency_sql("a")).alias("c_sql"), clean_currency("a").alias("c_col"),
+        F.expr(clean_quantity_sql("a", "long")).alias("q_sql"),
+        clean_quantity("a", "long").alias("q_col"),
+        F.expr(business_row_hash_sql(["a", "b"])).alias("h_sql"),
+        business_row_hash(["a", "b"]).alias("h_col"),
     ).collect()
     for r in got:
         assert (r["c_sql"], r["q_sql"], r["h_sql"]) == (r["c_col"], r["q_col"], r["h_col"]), r
