@@ -168,6 +168,7 @@ def main() -> None:
             "start_1m_5m_15m": [round(x, 2) for x in load_start],
             "end_1m_5m_15m": [round(x, 2) for x in os.getloadavg()],
             "cpus": os.cpu_count(),
+            "width": spark.sparkContext.defaultParallelism,
             "calib_sec": calib_sec,
         },
     }
@@ -211,77 +212,6 @@ def main() -> None:
         with open(detail_path, "w") as fh:
             json.dump(detail, fh, indent=1, sort_keys=True)
             fh.write("\n")
-        # Per-round archive (VERDICT r5 #3, protocol fixed per VERDICT r7
-        # #2): BENCH_DETAIL.json is overwritten every run, so cross-round
-        # per-query diffs need a numbered copy. Infer the in-flight round
-        # as max(existing BENCH_r*.json) + 1 (the driver writes
-        # BENCH_r0N.json AFTER this bench run).
-        #
-        # PROTOCOL (r8): BENCH_DETAIL_r0N.json is ALWAYS the same single
-        # run whose headline went to stdout — so the driver's BENCH_r0N
-        # and the archived detail describe one coherent measurement, and
-        # round-over-round totals compare like for like. The r7 archive
-        # mixed protocols (merged per-query mins across runs vs one final
-        # run, 160.2s vs 228.5s for the same code) which made the round
-        # comparison ambiguous. Cross-run best-observation merging still
-        # has a job — separating "the query got slower" from "the host
-        # was loaded" — but it now lives in a separate, explicitly
-        # labeled sidecar (BENCH_BEST_r0N.json) that nothing treats as a
-        # run.
-        import re as _re
-
-        # Only FULL runs archive: a BENCH_QUERIES-filtered smoke run would
-        # otherwise clobber the round's archive with its subset
-        # (this happened once — restored from git in r6).
-        if not names:
-            rounds = [
-                int(m.group(1))
-                for f in os.listdir(repo_dir)
-                if (m := _re.fullmatch(r"BENCH_r(\d+)\.json", f))
-            ]
-            round_no = max(rounds, default=0) + 1
-            arch_path = os.path.join(repo_dir, f"BENCH_DETAIL_r{round_no:02d}.json")
-            archived = dict(detail)
-            archived["protocol"] = (
-                "single run; per query min of "
-                f"{repeats} back-to-back repeats in that run"
-            )
-            with open(arch_path, "w") as fh:
-                json.dump(archived, fh, indent=1, sort_keys=True)
-                fh.write("\n")
-            best_path = os.path.join(repo_dir, f"BENCH_BEST_r{round_no:02d}.json")
-            best = dict(detail)
-            # A merged-minima table has no single host-load context.
-            best.pop("host_load", None)
-            best["protocol"] = (
-                "merged per-query minima across every full run this round — "
-                "a per-query best-observation table for load-spike triage, "
-                "NOT a run; totals here are not comparable to BENCH_r*.json"
-            )
-            try:
-                with open(best_path) as fh:
-                    prev = json.load(fh)
-                if prev.get("sf") == detail.get("sf"):
-                    pq, nq = prev.get("queries", {}), detail["queries"]
-                    # merge over CURRENT-run keys only: a full run covers
-                    # every live registry entry, so keys only the old
-                    # file has are queries since removed — carrying them
-                    # forward would overstate the total.
-                    best["queries"] = {
-                        k: round(min(pq.get(k, v), v), 4) for k, v in nq.items()
-                    }
-                    best["value"] = round(sum(best["queries"].values()), 4)
-                    if "pipeline" in prev and "pipeline" in best:
-                        pp, np_ = prev["pipeline"], dict(best["pipeline"])
-                        for key in ("ingest_rows_per_sec", "compact_rows_per_sec"):
-                            if key in pp and key in np_:
-                                np_[key] = max(pp[key], np_[key])
-                        best["pipeline"] = np_
-            except (OSError, ValueError):
-                pass
-            with open(best_path, "w") as fh:
-                json.dump(best, fh, indent=1, sort_keys=True)
-                fh.write("\n")
     except OSError as exc:
         sidecar_err = f"{type(exc).__name__}: {exc}"[:200]
 

@@ -36,7 +36,7 @@ from pyspark.sql import SparkSession
 
 from retail_aws_etl_pipeline_spark.lake import LakeLayout, lineage_name, move_file, new_run_id
 from retail_aws_etl_pipeline_spark.operators.validate import QualitySplit, split_quality
-from retail_aws_etl_pipeline_spark.schema import build_index_map, missing_required
+from retail_aws_etl_pipeline_spark.schema import SILVER_SCHEMA, build_index_map, missing_required
 from retail_aws_etl_pipeline_spark.sources.reader import read_flexible_csv
 from retail_aws_etl_pipeline_spark.sources.sniff import sniff_delimiter, sniff_text
 
@@ -104,10 +104,12 @@ def purge_run_from_silver(spark: SparkSession, lake: LakeLayout, run_id: str) ->
 
     from pyspark.sql import functions as F
 
-    try:
-        silver = spark.read.parquet(lake.processed)
-    except Exception:
-        return 0  # silver does not exist yet → nothing committed
+    from retail_aws_etl_pipeline_spark.operators.compact import _read_table, list_date_partitions
+
+    present = list_date_partitions(lake.processed)
+    if not present:
+        return 0  # no silver partition yet → nothing committed
+    silver = _read_table(spark, lake.processed, SILVER_SCHEMA, present[0])
     if "ingest_run_id" not in silver.columns:
         return 0
     debris = silver.filter(F.col("ingest_run_id") == run_id)

@@ -79,26 +79,16 @@ def assign_clusters(qdf: DataFrame, centroids: list[tuple[int, list[int]]]) -> D
 
 def _update_centroids(assigned: DataFrame, dim: int) -> list[tuple[int, list[int]]]:
     """Lloyd update: per-cluster elementwise floor(sum/count), k-row collect."""
-    return _update_with_inertia(assigned, dim)[0]
-
-
-def _update_with_inertia(
-    assigned: DataFrame, dim: int
-) -> tuple[list[tuple[int, list[int]]], int]:
-    """Lloyd update + the assignment's inertia (Σ squared dist, int64) in
-    the SAME k-row aggregate — convergence loops pay one job per
-    iteration, not two."""
     sums = [F.sum(F.col("qvec")[i]).alias(f"s{i}") for i in range(dim)]
     rows = (
         assigned.groupBy("cluster_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("dist").alias("w"), *sums)
+        .agg(F.count(F.lit(1)).alias("n"), *sums)
         .collect()  # k rows — bounded by construction (see module doc)
     )
-    cents = sorted(
+    return sorted(
         (r["cluster_id"], [math.floor(r[f"s{i}"] / r["n"]) for i in range(dim)])
         for r in rows
     )
-    return cents, sum(r["w"] for r in rows)
 
 
 def init_centroids(qdf: DataFrame, k: int) -> list[tuple[int, list[int]]]:
@@ -152,81 +142,26 @@ def kmeans_assign(
     Returns (vec_id, cluster_id, dist) after the final assignment pass.
     """
     base = with_quantized(df, col).select("vec_id", "qvec")
-    qdf = base
-    if updates > 0 or init == "farthest":
+    cached = updates > 0 or init == "farthest"
+    if cached:
         # Seeding/update passes re-scan the quantized base; persist once.
-        qdf = qdf.persist()
+        base.persist()
     if init == "farthest":
-        cents = init_centroids_farthest(qdf, k)
+        cents = init_centroids_farthest(base, k)
     else:
-        cents = init_centroids(qdf, k)
+        cents = init_centroids(base, k)
     dim = len(cents[0][1])
     for _ in range(updates):
-        cents = _update_centroids(assign_clusters(qdf, cents), dim)
+        cents = _update_centroids(assign_clusters(base, cents), dim)
     # Every pass above is driver-materialized (centroids are Python
     # lists), so the cache is done once the loop ends: build the returned
     # assignment from the UNPERSISTED base (one cheap scan-side
     # re-quantization when the caller executes) and free the blocks now
-    # rather than leaking them across a long-lived session.
-    if qdf is not base:
-        qdf.unpersist()
+    # rather than leaking them across a long-lived session. (persist()
+    # returns the same object, so the release must not hinge on identity.)
+    if cached:
+        base.unpersist()
     return assign_clusters(base, cents).select("vec_id", "cluster_id", "dist")
-
-
-def kmeans_converged(
-    df: DataFrame,
-    k: int = KMEANS_K,
-    max_updates: int = 25,
-    col: str = "embedding",
-    init: str = "min_ids",
-) -> tuple[DataFrame, dict]:
-    """Lloyd's to FIXPOINT: iterate assign→update until the integer
-    centroid set repeats exactly, or ``max_updates``.
-
-    The many-iteration regime the unrolled SQL oracles can't reach
-    (each extra round multiplies the oracle's CTE depth): correctness
-    here is gated locally against a pure-Python mirror of the identical
-    integer schedule (tests/test_clustering.py), the same split the
-    approx-sketch kernels use. Convergence is EXACT — centroids are
-    floor-divided int64 vectors, so "unchanged" is integer equality, no
-    epsilon; Lloyd's over a finite point set with deterministic
-    tie-breaks must reach a centroid fixpoint (the floor perturbation
-    can in principle cycle, which is what ``max_updates`` bounds).
-
-    Per-iteration cost is CONSTANT and scale-safe: one scan-side
-    assignment (centroid literal inlined, whole-stage codegen, no
-    join/shuffle) + one k-row aggregate that also carries the
-    assignment's inertia, so the convergence trace costs no extra jobs.
-    The driver holds k·d int64s per round — the same driver-sync
-    MLlib's Lloyd performs. Lineage never grows: every assignment
-    starts from the persisted quantized base, not the previous round's
-    frame.
-
-    Returns (final assignment (vec_id, cluster_id, dist), info) with
-    info = {iterations, converged, inertia: [int per update pass]}.
-    """
-    base = with_quantized(df, col).select("vec_id", "qvec")
-    qdf = base.persist()
-    if init == "farthest":
-        cents = init_centroids_farthest(qdf, k)
-    else:
-        cents = init_centroids(qdf, k)
-    dim = len(cents[0][1])
-    inertia: list[int] = []
-    converged = False
-    rounds = 0
-    for rounds in range(1, max_updates + 1):
-        new_cents, w = _update_with_inertia(assign_clusters(qdf, cents), dim)
-        inertia.append(w)
-        if new_cents == cents:
-            converged = True
-            break
-        cents = new_cents
-    # Loop is driver-materialized; release the cache and return an
-    # assignment over the unpersisted base (no leaked blocks).
-    qdf.unpersist()
-    final = assign_clusters(base, cents).select("vec_id", "cluster_id", "dist")
-    return final, {"iterations": rounds, "converged": converged, "inertia": inertia}
 
 
 SEMDEDUP_MIN_COSINE = 0.35
@@ -281,63 +216,3 @@ def semantic_dedup_retained(
         .orderBy("vec_id")
     )
 
-
-def kmeans_minibatch(
-    df: DataFrame,
-    k: int = KMEANS_K,
-    updates: int = 8,
-    sample_mod: int = 4,
-    col: str = "embedding",
-    init: str = "min_ids",
-) -> tuple[DataFrame, dict]:
-    """Mini-batch Lloyd's on deterministic systematic slices.
-
-    Update pass t computes centroid means from the slice
-    ``vec_id % sample_mod == t % sample_mod`` only — 1/sample_mod of the
-    corpus per round, with the residue rotating so every vector
-    participates every ``sample_mod`` rounds — which presupposes
-    ``updates >= sample_mod``; fewer rounds than slices would leave some
-    residues unvisited, so that misuse raises ``ValueError``. Centers that attract no
-    slice members keep their position for that round (they are NOT
-    dropped, unlike the full-batch contract — a thin slice must not
-    destroy centers). No RNG anywhere: the slice is a function of the
-    id, so the whole trajectory is engine- and run-reproducible and a
-    pure-Python mirror pins it exactly (the same determinism-over-
-    sampling trade ivf_centroids makes; classic Sculley mini-batch uses
-    random draws + per-center learning rates).
-
-    The point at corpus scale: per-round cost drops by sample_mod while
-    early-round inertia progress is nearly identical to full-batch
-    (measured in SCALING.md) — the right knob when the assignment scan,
-    not the k-row update, dominates. Returns (assignment, info) like
-    :func:`kmeans_converged`, inertia trace measured on the SLICE.
-    """
-    if updates < sample_mod:
-        # Fewer update rounds than residue slices means slices
-        # t=updates..sample_mod-1 never influence any centroid — the
-        # docstring's every-vector-participates contract would silently
-        # not hold. Make the misuse loud (ADVICE r7).
-        raise ValueError(
-            f"kmeans_minibatch: updates={updates} < sample_mod={sample_mod} "
-            "leaves id-residue slices unvisited; every vector participates "
-            "only when updates >= sample_mod"
-        )
-    base = with_quantized(df, col).select("vec_id", "qvec")
-    qdf = base.persist()
-    if init == "farthest":
-        cents = init_centroids_farthest(qdf, k)
-    else:
-        cents = init_centroids(qdf, k)
-    dim = len(cents[0][1])
-    inertia: list[int] = []
-    for t in range(updates):
-        batch = qdf.filter(F.pmod(F.col("vec_id"), F.lit(sample_mod)) == t % sample_mod)
-        new_cents, w = _update_with_inertia(assign_clusters(batch, cents), dim)
-        inertia.append(w)
-        got = dict(new_cents)
-        cents = sorted((cid, got.get(cid, cv)) for cid, cv in cents)
-    # Loop is driver-materialized; release the cache and return an
-    # assignment over the unpersisted base (no leaked blocks).
-    qdf.unpersist()
-    final = assign_clusters(base, cents).select("vec_id", "cluster_id", "dist")
-    return final, {"iterations": updates, "inertia": inertia}

@@ -322,13 +322,14 @@ def silver_partitions(lake: LakeLayout) -> list[str]:
 
 def read_silver(spark: SparkSession, lake: LakeLayout) -> DataFrame:
     """Silver as a DataFrame: manifested snapshot if present, else the
-    parquet directory."""
+    parquet directory (see :func:`_read_table`)."""
     from retail_aws_etl_pipeline_spark.lake_manifest import ManifestedTable
 
     table = ManifestedTable(lake.processed, partition_col="date")
     if table.exists():
         return table.read(spark)
-    return spark.read.parquet(lake.processed)
+    dates = list_date_partitions(lake.processed)
+    return _read_table(spark, lake.processed, SILVER_SCHEMA, dates[0] if dates else None)
 
 
 #: Parquet physical types Spark writes for the lake's column types.

@@ -27,7 +27,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from retail_aws_etl_pipeline_spark.operators.caching import retaining
 
 #: MinHash parameters: k = NUM_HASHES signatures, banded r=ROWS_PER_BAND.
 NUM_HASHES = 6
@@ -778,12 +777,10 @@ def pagerank_scaled(
     # enough to amortize it; ReusedExchange already de-duplicates the
     # shallow case's repeated plan fragments.
     msg = sym.join(deg, "src")
-    extra_caches = ()
     if iterations > 2:
         # already hash(src)-partitioned: sym's cached layout flows through
         # the deg join, so the deep-run cache needs no re-exchange
         msg = msg.persist()
-        extra_caches = (msg,)
     ranks = nodes.select(F.col(id_col).alias("node")).withColumn(
         "rank", F.lit(PR_SCALE).cast("long")
     )
@@ -808,12 +805,9 @@ def pagerank_scaled(
                 ).alias("rank"),
             )
         )
-    out = ranks.select(F.col("node").alias(id_col), F.col("rank").alias("rank_scaled"))
     # The returned plan references the message table once per iteration
-    # (and it references `sym`), so every persisted frame must outlive
-    # this call — lifecycle is caller-owned via
-    # caching.release_caches(result) after the terminal action.
-    return retaining(out, sym, *extra_caches)
+    # (and it references `sym`), so no persisted frame is unpersisted here.
+    return ranks.select(F.col("node").alias(id_col), F.col("rank").alias("rank_scaled"))
 
 
 def triangle_census(edges: DataFrame) -> DataFrame:
@@ -890,8 +884,8 @@ def triangle_census(edges: DataFrame) -> DataFrame:
         )
     )
     # All three caches feed multiple branches of the returned one-row
-    # plan; caller releases via caching.release_caches(result).
-    return retaining(out, e, deg, oriented)
+    # plan, so none is unpersisted here.
+    return out
 
 
 def kcore_peel(
@@ -1688,11 +1682,9 @@ def minhash_estimate_pairs(gram_df: DataFrame, id_col: str = "doc_id") -> DataFr
     estimate itself adds no exchange beyond the candidate join.
 
     PERSIST CONTRACT (ADVICE r16): the candidate-pair frame is persisted
-    unconditionally (it feeds four consumers) and tagged on the RETURNED
-    frame via ``caching.retaining`` — callers must release it with
-    ``caching.release_caches(result)`` after their terminal action. A
-    caller that drops the tag (derived frames don't inherit it) leaks
-    the executor storage blocks until ``spark.catalog.clearCache()``.
+    unconditionally (it feeds four consumers) and the returned plan still
+    reads it, so its executor storage blocks stay until the caller's
+    ``spark.catalog.clearCache()``.
     """
     sig = per_doc_signatures(gram_df, id_col=id_col)
     bands = F.explode(
@@ -1720,7 +1712,7 @@ def minhash_estimate_pairs(gram_df: DataFrame, id_col: str = "doc_id") -> DataFr
     # aggregation. Persisting just this pair-scale frame measured 6.2 →
     # 4.0 s at sf0.1 (persisting the wide signature frame as well LOSES —
     # materializing k+1 columns per doc costs more than the re-aggregation
-    # saves: 5.2 s). Tagged via retaining for caller-owned release.
+    # saves: 5.2 s).
     cand = candidate_pairs(band_df, id_col=id_col).persist()
     a_sig = sig.select(
         F.col(id_col).alias("id_a"),
@@ -1752,15 +1744,11 @@ def minhash_estimate_pairs(gram_df: DataFrame, id_col: str = "doc_id") -> DataFr
         "id_b",
         F.expr("common * 1000000L div (n_a + n_b - common)").alias("exact_ppm"),
     )
-    from retail_aws_etl_pipeline_spark.operators.caching import retaining
 
-    return retaining(
-        est.join(exact, ["id_a", "id_b"]).select(
-            "id_a",
-            "id_b",
-            "est_ppm",
-            "exact_ppm",
-            F.expr("abs(est_ppm - exact_ppm)").alias("abs_err_ppm"),
-        ),
-        cand,
+    return est.join(exact, ["id_a", "id_b"]).select(
+        "id_a",
+        "id_b",
+        "est_ppm",
+        "exact_ppm",
+        F.expr("abs(est_ppm - exact_ppm)").alias("abs_err_ppm"),
     )

@@ -6,9 +6,7 @@ metadata struct, processed by Arrow-batched ``mapInPandas`` kernels.
 REAL pure-numpy codecs (no media libraries required): uncompressed 24-bit
 BMP (encode + header-parsing decode, row padding and bottom-up row order
 handled), PNG (stdlib zlib deflate/inflate + per-scanline unfiltering of
-all five filter types, 8-bit RGB/RGBA), PCM16 WAV (RIFF chunk walk),
-nearest-neighbor BMP resize, and frame sampling over a concatenated-BMP
-"video" container (frames split by each BMP header's file-size field).
+all five filter types, 8-bit RGB/RGBA) and PCM16 WAV (RIFF chunk walk).
 Compressed formats (JPEG, WebP, AVIF, MP4, FLAC, MP3, Ogg) are probed
 from their headers for dimensions and stream parameters, never decoded:
 pixel or frame decode would need PIL / cv2, which the package does not
@@ -147,14 +145,6 @@ def decode_bmp(buf: bytes):
     if not top_down:
         rows = rows[::-1]
     return rows.reshape(h, w, 3)
-
-
-def bmp_file_size(buf: bytes, at: int = 0) -> int:
-    """The file-size field of the BMP starting at ``at`` — lets a reader
-    walk a stream of concatenated BMPs without decoding them."""
-    if buf[at : at + 2] != b"BM":
-        raise ValueError(f"no BM magic at offset {at}")
-    return int.from_bytes(buf[at + 2 : at + 6], "little")
 
 
 def _paeth_predictor(a, b, c):
@@ -418,61 +408,6 @@ def decode_png_stats(media: DataFrame) -> DataFrame:
     return media.filter(F.col("kind") == "png").select("media_id", "payload").mapInPandas(
         kernel,
         schema="media_id long, width int, height int, n_units int, byte_sum long, c0_sum long",
-    )
-
-
-def resize_bmp(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Nearest-neighbor resize of BMP image payloads → re-encoded BMP
-    payloads of the target size. Pure numpy index sampling — the real
-    resize kernel for the one format this container can decode."""
-    import numpy as np
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                px = decode_bmp(bytes(payload))
-                h, w = px.shape[0], px.shape[1]
-                ri = (np.arange(height) * h) // height
-                ci = (np.arange(width) * w) // width
-                rows.append((int(mid), encode_bmp(px[ri][:, ci])))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return media.filter(F.col("kind") == "image").select("media_id", "payload").mapInPandas(
-        kernel, schema="media_id long, payload binary"
-    )
-
-
-def sample_bmp_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
-    """Split a concatenated-BMP video payload into frames by walking each
-    BMP header's file-size field; keep every ``every_n``-th frame."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                buf, at, idx = bytes(payload), 0, 0
-                while at < len(buf):
-                    size = bmp_file_size(buf, at)
-                    # The size field is payload-controlled: a declared
-                    # size below the 14-byte file header (0 in the wild)
-                    # would stop `at` advancing — the WARC
-                    # negative-Content-Length infinite-loop class — and
-                    # one past the buffer would silently truncate the
-                    # frame. Reject both as the documented ValueError.
-                    if size < 14 or at + size > len(buf):
-                        raise ValueError(
-                            f"BMP frame at {at} declares {size} bytes, "
-                            f"{len(buf) - at} available"
-                        )
-                    if idx % every_n == 0:
-                        rows.append((int(mid), idx, buf[at : at + size]))
-                    at += size
-                    idx += 1
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "payload"])
-
-    return media.filter(F.col("kind") == "video").select("media_id", "payload").mapInPandas(
-        kernel, schema="media_id long, frame_idx int, payload binary"
     )
 
 

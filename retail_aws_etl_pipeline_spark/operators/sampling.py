@@ -220,9 +220,7 @@ def token_budget_select(
     # executions can draw different boundaries and the offsets stop
     # describing the window's partitions (shard_assignment hit exactly
     # this at sf0.1: 767/5000 rows wrong; this twin passed on
-    # coincidental exchange reuse). Caller-owned lifecycle (retaining).
-    from retail_aws_etl_pipeline_spark.operators.caching import retaining
-
+    # coincidental exchange reuse).
     ranged = (
         base.repartitionByRange(partitions, *sort_cols)
         .withColumn("__pid", F.spark_partition_id())
@@ -247,7 +245,7 @@ def token_budget_select(
         .filter(F.col("cum_tokens") * budget_den <= F.col("__t") * budget_num)
         .select(id_col, "n_tokens", "quality", "cum_tokens")
     )
-    return retaining(out, ranged)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -426,10 +424,7 @@ def shard_assignment(
     # triangular offsets no longer describe the window's partitions
     # (found REAL at sf0.1 by the 10x oracle sweep: 767/5000 docs
     # mis-sharded; sf0.01 passed on coincidental exchange reuse). Once
-    # materialized, __pid is a stored column. Caller-owned lifecycle via
-    # retaining().
-    from retail_aws_etl_pipeline_spark.operators.caching import retaining
-
+    # materialized, __pid is a stored column.
     ranged = (
         base.repartitionByRange(partitions, *sort_cols)
         .withColumn("__pid", F.spark_partition_id())
@@ -458,7 +453,7 @@ def shard_assignment(
         )
         .select(id_col, "lang", "source", "n_toks", "shard_id")
     )
-    return retaining(out, ranged)
+    return out
 
 
 # ---------------------------------------------------------------------------

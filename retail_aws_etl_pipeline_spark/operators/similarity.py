@@ -26,8 +26,6 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from retail_aws_etl_pipeline_spark.operators.caching import retaining
-
 
 def stack_padded(vals, dtype="int64", min_width: int = 0):
     """Stack possibly-RAGGED vectors into a matrix, zero-padding each row
@@ -565,26 +563,6 @@ def ivf_index_centroids(spark, path: str) -> list[list[int]]:
     return [[int(x) for x in r["centroid"]] for r in rows]
 
 
-def ivf_index_append(df: DataFrame, path: str, id_col: str = "vec_id") -> None:
-    """Incremental index upkeep: assign new vectors against the index's
-    PERSISTED centroids (read from the sidecar — the quantizer is fixed at
-    build time, the standard IVF contract; distribution drift is handled
-    by a rebuild, not by mutating cells) and append them to their cell
-    partitions. Because assignment is a deterministic function of
-    (vector, centroids), an index built once and appended to is
-    bit-identical to an index built from the union — pinned by test.
-    Appends only touch the new rows' cell directories; queries keep
-    pruning the same way."""
-    spark = df.sparkSession
-    cents = ivf_index_centroids(spark, path)
-    base = (
-        with_quantized(df)
-        .withColumn("cell", assign_centroid("qvec", cents))
-        .select(id_col, "qvec", "qnorm", "cell")
-    )
-    base.write.mode("append").partitionBy("cell").parquet(path)
-
-
 def ivf_index_topk(
     probes: DataFrame,
     index_path: str,
@@ -782,11 +760,8 @@ def margin_mutual_pairs(
         .select("id_a", "id_b", "a_qnorm", "b_qnorm", "dot_q", "cosine")
         .persist()
     )
-    # `scored` feeds four window/join branches of the returned plan;
-    # cache lifecycle is caller-owned (caching.release_caches(result)).
-    return retaining(
-        _margin_select(scored, margin_num, margin_den, sq_scale), scored
-    )
+    # `scored` feeds four window/join branches of the returned plan.
+    return _margin_select(scored, margin_num, margin_den, sq_scale)
 
 
 def margin_mutual_pairs_ivf(
@@ -846,9 +821,7 @@ def margin_mutual_pairs_ivf(
         .select("id_a", "id_b", "a_qnorm", "b_qnorm", "dot_q", "cosine")
         .persist()
     )
-    return retaining(
-        _margin_select(scored, margin_num, margin_den, sq_scale), scored
-    )
+    return _margin_select(scored, margin_num, margin_den, sq_scale)
 
 
 def _margin_select(

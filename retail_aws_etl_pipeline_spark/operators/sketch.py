@@ -169,66 +169,23 @@ def hll_distinct(df: DataFrame, key: Column) -> DataFrame:
     return hll_estimate(hll_registers(df, key))
 
 
-def hll_merge(regs_a: DataFrame, regs_b: DataFrame) -> DataFrame:
-    """Union two register tables: elementwise per-bucket MAX — the
-    property that makes HLL the DISTRIBUTED sketch. sketch(A) merged
-    with sketch(B) equals sketch(A ∪ B) BIT-IDENTICALLY (max is
-    associative/commutative/idempotent), so shards, partitions, days or
-    whole corpora can be sketched independently and combined later with
-    a <= m-row union — no rescan of either side. Pinned by
-    tests/test_staged_r15.py::test_hll_merge_equals_sketch_of_union."""
-    return (
-        regs_a.unionByName(regs_b)
-        .groupBy("bucket")
-        .agg(F.max("register").cast("long").alias("register"))
-    )
-
-
-def hll_overlap(
-    df_a: DataFrame, df_b: DataFrame, key_a: Column, key_b: Column
-) -> DataFrame:
-    """Sketch-algebra overlap estimate between two keyed sets: one row
-    (est_a, est_b, est_union, est_overlap) where est_union comes from
-    :func:`hll_merge` (exact register union — no rescan of either side)
-    and est_overlap = est_a + est_b - est_union (inclusion–exclusion).
+def hll_overlap_split(df: DataFrame, key: Column, is_a: Column) -> DataFrame:
+    """Sketch-algebra overlap estimate between the two halves of ONE frame
+    split by the boolean ``is_a`` (rows where it is NULL belong to
+    neither half): one row (est_a, est_b, est_union, est_overlap) with
+    est_overlap = est_a + est_b - est_union (inclusion–exclusion).
 
     The overlap estimate is SIGNED and noisy when the true intersection
     is small relative to the sketch error (it can go negative — three
     estimates' errors stack); the consuming report pairs it with the
-    exact intersection so the audit shows exactly where the cheap
-    algebra is trustworthy. The 100 TB shape is the point: snapshots /
-    days / sources sketched once (<= m rows each at rest) answer any
-    pairwise overlap question later WITHOUT a join over either corpus.
-    """
-    ra, rb = hll_registers(df_a, key_a), hll_registers(df_b, key_b)
-    ea = hll_estimate(ra).select(F.col("hll_estimate").alias("est_a"))
-    eb = hll_estimate(rb).select(F.col("hll_estimate").alias("est_b"))
-    eu = hll_estimate(hll_merge(ra, rb)).select(
-        F.col("hll_estimate").alias("est_union")
-    )
-    return (
-        ea.crossJoin(F.broadcast(eb))
-        .crossJoin(F.broadcast(eu))
-        .withColumn("est_overlap", F.expr("est_a + est_b - est_union"))
-    )
-
-
-def hll_overlap_split(df: DataFrame, key: Column, is_a: Column) -> DataFrame:
-    """Fused :func:`hll_overlap` for the common case where A and B are two
-    disjoint predicate halves of ONE frame (r16 optimization): the same
-    one-row (est_a, est_b, est_union, est_overlap), bit-identical to
-
-        hll_overlap(df.filter(is_a), df.filter(~is_a), key, key)
-
-    for any boolean ``is_a`` (rows where it is NULL belong to neither
-    half — exactly what the two filters do), but from a SINGLE scan and
-    a SINGLE <= m-row exchange instead of two scans + two register
-    exchanges + three separate estimate chains: one groupBy(bucket)
-    computes both halves' registers side by side (per-bucket conditional
-    MAX), the union register is their per-bucket GREATEST (the
-    :func:`hll_merge` MAX, registers are >= 1 so COALESCE 0 is neutral),
-    and all three estimates are the single-pass :func:`hll_estimate`
-    algebra as column expressions over one 1-row aggregate — no joins.
+    exact intersection. Plan shape (r16): a SINGLE scan and a SINGLE
+    <= m-row exchange — one groupBy(bucket) computes both halves'
+    registers side by side (per-bucket conditional MAX), the union
+    register is their per-bucket GREATEST (register union is elementwise
+    MAX, which makes sketch(A) ⊔ sketch(B) == sketch(A ∪ B); registers
+    are >= 1 so COALESCE 0 is neutral), and all three estimates are the
+    single-pass :func:`hll_estimate` algebra as column expressions over
+    one 1-row aggregate — no joins.
     """
     m = HLL_BUCKETS
     # is_a IS NULL rows belong to neither half (both filters drop them);

@@ -1,77 +1,21 @@
-"""Skew-mitigation utilities.
+"""Skew diagnostics.
 
 AQE (``spark.sql.adaptive.skewJoin.enabled``, on by default in
-``session.get_spark``) already splits skewed sort-merge join partitions at
-runtime. These helpers cover the aggregation case AQE does not: a groupBy
-whose key distribution is pathological (one key ≫ everything else) puts the
-whole hot key in one reducer regardless of AQE.
-
-``salted_aggregate`` runs two phases: phase 1 aggregates by (key, salt) —
-spreading the hot key over ``n_salts`` reducers — phase 2 merges partials
-by key. Works for any aggregate with an associative partial form.
+``session.get_spark``) splits skewed sort-merge join partitions at
+runtime, but a groupBy whose key distribution is pathological (one key
+≫ everything else) still puts the whole hot key in one reducer.
+``key_skew_census`` measures that per key family before the job runs.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-#: (partial aggregate over input rows, merge aggregate over the partial
-#: column — receives the partial column, returns the merged aggregate)
-SaltedAgg = tuple[Column, Callable[[Column], Column], str]
-
-
-def default_salt(df: DataFrame, n_salts: int) -> Column:
-    """Deterministic uniform salt: xxhash64 of the whole row mod n."""
-    return F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_salts))
-
-
-def salted_aggregate(
-    df: DataFrame,
-    keys: list[str],
-    aggs: list[SaltedAgg],
-    n_salts: int = 32,
-    salt: Column | None = None,
-) -> DataFrame:
-    """Two-phase (salted) aggregation, exactly equal to the direct groupBy
-    for associative aggregates.
-
-    Example — skew-proof revenue sum + row count by store::
-
-        salted_aggregate(
-            df, ["store_id"],
-            [(F.sum("revenue"), lambda p: F.sum(p), "total_revenue"),
-             (F.count(F.lit(1)), lambda p: F.sum(p), "n_rows")],
-        )
-    """
-    salt_col = salt if salt is not None else default_salt(df, n_salts)
-    partials = [expr.alias(f"__p{i}") for i, (expr, _, _) in enumerate(aggs)]
-    phase1 = df.withColumn("__salt", salt_col).groupBy(*keys, "__salt").agg(*partials)
-    merged = [merge(F.col(f"__p{i}")).alias(name) for i, (_, merge, name) in enumerate(aggs)]
-    return phase1.groupBy(*keys).agg(*merged)
-
-
-def salted_sum(
-    df: DataFrame,
-    keys: list[str],
-    value: str,
-    out: str,
-    n_salts: int = 32,
-    salt: Column | None = None,
-) -> DataFrame:
-    """The common case: skew-proof SUM by key. Exact for int/decimal
-    (order-free); for doubles it is a valid summation order like any
-    shuffle."""
-    return salted_aggregate(
-        df, keys, [(F.sum(value), lambda p: F.sum(p), out)], n_salts=n_salts, salt=salt
-    )
 
 
 def key_skew_census(df: DataFrame, key_cols: list[str]) -> DataFrame:
     """Join/shuffle-key skew diagnostic: per key family, the heavy-hitter
-    census a shuffle planner (or a human sizing ``n_salts`` /
+    census a shuffle planner (or a human sizing a salt count /
     ``spark.sql.shuffle.partitions``) acts on BEFORE the 100 TB job runs.
 
     For each key column: total rows, distinct keys, the hottest key and

@@ -999,8 +999,7 @@ def kn_bigram_table(df: DataFrame, text_col: str = "text") -> DataFrame:
     ).select("p.tok_a", "p.tok_b")
     # The count frame feeds four consumers (marginals, continuation
     # counts, count-of-counts, the final join); persist it so the
-    # corpus-scale pair exchange runs once. Caller-owned lifecycle:
-    # the returned frame is tagged via retaining().
+    # corpus-scale pair exchange runs once.
     bg = pairs.groupBy("tok_a", "tok_b").agg(
         F.count(F.lit(1)).cast("long").alias("c")
     )
@@ -1021,9 +1020,7 @@ def kn_bigram_table(df: DataFrame, text_col: str = "text") -> DataFrame:
             f"ELSE n1 * {KN_SCALE} div (n1 + 2 * n2) END"
         ).cast("long"),
     )
-    from retail_aws_etl_pipeline_spark.operators.caching import retaining
-
-    result = (
+    return (
         bg.join(pre, "tok_a")
         .join(lft, "tok_b")
         .crossJoin(F.broadcast(glob.select("n_bigram_types", "d_ppm")))
@@ -1047,7 +1044,6 @@ def kn_bigram_table(df: DataFrame, text_col: str = "text") -> DataFrame:
             "d_ppm", "p1_ppm", "lambda_ppm", "pcont_ppm", "p_kn_ppm",
         )
     )
-    return retaining(result, bg)
 
 
 # ---------------------------------------------------------------------------
@@ -1406,10 +1402,6 @@ def kn_doc_scores(
         "llq",
         F.expr(floor_log2_sq_sql("greatest(p_kn_ppm, 1L)")).cast("long"),
     )
-    from retail_aws_etl_pipeline_spark.operators.caching import (
-        retained_caches,
-        retaining,
-    )
 
     out = (
         scored.groupBy(id_col)
@@ -1419,4 +1411,4 @@ def kn_doc_scores(
         )
         .withColumn("mean_llq_ppm", F.expr("ll_q * 1000000L div n_pairs"))
     )
-    return retaining(out, *retained_caches(table))
+    return out

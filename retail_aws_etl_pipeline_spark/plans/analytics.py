@@ -1431,8 +1431,6 @@ def event_value_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inside the MAD median). Persist the already-reduced histograms —
     # min(rows, distinct quantized values) per type, the same bounded
     # frame the windows rely on (r16; 28 → 12 static exchanges).
-    from retail_aws_etl_pipeline_spark.operators.caching import retaining
-
     hist = (
         q.groupBy("event_type", "qv").agg(F.count(F.lit(1)).alias("cnt")).persist()
     )
@@ -1449,7 +1447,7 @@ def event_value_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     mad = _grouped_lower_median(dev, "ad").select(
         "event_type", F.col("med").alias("mad_q")
     )
-    return retaining(
+    return (
         hist.join(med, "event_type")
         .join(mad, "event_type")
         .groupBy("event_type", "n", "med_q", "mad_q")
@@ -1476,9 +1474,7 @@ def event_value_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("mad_q") / 1000000.0).alias("mad_value"),
             "n_outliers",
         )
-        .orderBy("event_type"),
-        hist,
-        dev,
+        .orderBy("event_type")
     )
 
 
@@ -1724,16 +1720,9 @@ def _distributed_ntile(df: DataFrame, sort_cols: list, n_buckets: int, out_col: 
         END
         """
     ).cast("long")
-    from retail_aws_etl_pipeline_spark.operators.caching import (
-        retained_caches,
-        retaining,
-    )
 
-    return retaining(
-        ranked.withColumn(out_col, bucket).drop(
-            "__pid", "__lrn", "__offset", "__n", "__rn"
-        ),
-        *retained_caches(ranked),
+    return ranked.withColumn(out_col, bucket).drop(
+        "__pid", "__lrn", "__offset", "__n", "__rn"
     )
 
 
@@ -1754,8 +1743,7 @@ def _distributed_rank(
     with a name, the rank lands in ``out_col`` (1-based, long) and the
     working columns are dropped. ``sort_cols`` must end in a unique
     tiebreaker. The ranged frame is persisted (both branches consume it;
-    RangePartitioner samples at execution time) and tagged via
-    ``retaining`` for caller-owned release."""
+    RangePartitioner samples at execution time)."""
     if partitions is None:
         partitions = int(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
@@ -1796,13 +1784,12 @@ def _distributed_rank(
         .crossJoin(F.broadcast(total))
         .withColumn("__rn", (F.col("__offset") + F.col("__lrn")).cast("long"))
     )
-    from retail_aws_etl_pipeline_spark.operators.caching import retaining
 
     if out_col is not None:
         ranked = ranked.withColumn(out_col, F.col("__rn")).drop(
             "__pid", "__lrn", "__offset", "__n", "__rn"
         )
-    return retaining(ranked, ranged)
+    return ranked
 
 
 @register(
@@ -1968,7 +1955,6 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(F.when(F.col("metric") == 3, F.col("q"))).alias("m_q"),
         )
     )
-    from retail_aws_etl_pipeline_spark.operators.caching import retaining
 
     scored = rfm.join(scores, "c_custkey")
     out = (
@@ -1979,9 +1965,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("r_q", "f_q", "m_q")
     )
-    # tag the RETURNED frame (derived frames don't inherit tags — the
-    # caching-module contract) so callers can release both caches
-    return retaining(out, rfm, ranged)
+    return out
 
 
 #: Benford expected first-digit frequencies, ppm: round(log10(1+1/d)*1e6).

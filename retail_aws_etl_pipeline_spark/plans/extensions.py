@@ -4064,9 +4064,8 @@ JSONL_DROPFIELD_MOD = 89
     "guarantees, proven on every row here) — then deterministic wire "
     "faults are injected by id (truncated line -> malformed JSON; text "
     "field dropped -> required-field reject), and the lines run through "
-    "classify_jsonl_lines — the ONE-PASS parse+audit kernel that "
-    "parse_jsonl_lines (batch AND streaming ingest) is two filtered "
-    "views of. Output: per-lang good-doc counts with recomputed char "
+    "classify_jsonl_lines — the package's ONE-PASS JSONL parse+audit "
+    "kernel. Output: per-lang good-doc counts with recomputed char "
     "totals, plus reject-class counts, from a SINGLE keyed aggregate "
     "over the classified frame — the good/reject union-of-aggregates "
     "form measured 3 FileScans of the source (one per audit branch), "
@@ -4206,12 +4205,7 @@ def padding_waste(base: DataFrame, sort_cols: list, n_batches: int) -> DataFrame
     pads its sequences to the batch max, so slots = sum over batches of
     max*count and waste = slots - tokens. The global order costs one
     range exchange via the shared _distributed_ntile (never a global
-    window); the per-batch reduce is an ordinary two-level aggregate.
-    Returned frame carries the ntile cache tags (caching.retaining)."""
-    from retail_aws_etl_pipeline_spark.operators.caching import (
-        retained_caches,
-        retaining,
-    )
+    window); the per-batch reduce is an ordinary two-level aggregate."""
     from retail_aws_etl_pipeline_spark.plans.analytics import _distributed_ntile
 
     nt = _distributed_ntile(base, sort_cols, n_batches, "b")
@@ -4224,7 +4218,7 @@ def padding_waste(base: DataFrame, sort_cols: list, n_batches: int) -> DataFrame
         F.sum(F.expr("mx * c")).cast("long").alias("slots"),
         F.sum(F.expr("mx * c - t")).cast("long").alias("waste"),
     )
-    return retaining(agg, *retained_caches(nt))
+    return agg
 
 
 @register_extra(
@@ -4260,10 +4254,6 @@ def length_bucket_padding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     operation is the rank's range exchange — the same audited
     _distributed_ntile plan every quantile scorer uses; aggregates are
     64 rows."""
-    from retail_aws_etl_pipeline_spark.operators.caching import (
-        retained_caches,
-        retaining,
-    )
 
     t = load_tables(spark, sf_dir, ["documents"])
     base = t["documents"].select(
@@ -4313,7 +4303,7 @@ def length_bucket_padding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("savings_ppm"),
         )
     )
-    return retaining(out, *retained_caches(a), *retained_caches(s))
+    return out
 
 
 #: Oracle for :func:`corpus_shuffle_batches` (STAGED — see above).
@@ -4387,10 +4377,6 @@ def corpus_shuffle_batches(
     keyed sub-aggregates (batch,source)/(batch,lang) rather than one
     multi-distinct aggregate, so nothing plans an Expand blowup at
     scale."""
-    from retail_aws_etl_pipeline_spark.operators.caching import (
-        retained_caches,
-        retaining,
-    )
     from retail_aws_etl_pipeline_spark.plans.analytics import _distributed_ntile
 
     t = load_tables(spark, sf_dir, ["documents"])
@@ -4449,7 +4435,7 @@ def corpus_shuffle_batches(
         )
         .orderBy("batch_id")
     )
-    return retaining(out, *retained_caches(nt))
+    return out
 
 
 #: Oracle for :func:`tokenizer_fertility_by_lang` (STAGED — see above).
@@ -4603,10 +4589,6 @@ def quality_by_length_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-language split is quality_top_half_per_lang. QUALITY_SCALE keeps
     the sums within int64 to ~9.2e12 docs; the mean's operands are
     sum(quality) <= n_docs * 10^6 — same envelope."""
-    from retail_aws_etl_pipeline_spark.operators.caching import (
-        retained_caches,
-        retaining,
-    )
     from retail_aws_etl_pipeline_spark.plans.analytics import _distributed_ntile
 
     t = load_tables(spark, sf_dir, ["documents"])
@@ -4637,7 +4619,7 @@ def quality_by_length_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("length_decile")
     )
-    return retaining(out, *retained_caches(nt))
+    return out
 
 
 #: Oracle for :func:`webp_dims_probe`: the synthetic corpus's id-formula
@@ -6478,7 +6460,6 @@ def dedup_retained_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     D.quality_survivors, no window, no rank join-back. Same banded
     near-dup graph as the retained-corpus query; only selection differs.
     """
-    from retail_aws_etl_pipeline_spark.operators.caching import retaining
     from retail_aws_etl_pipeline_spark.operators.sampling import QUALITY_SCALE
 
     t = load_tables(spark, sf_dir, ["documents"])
@@ -6506,7 +6487,7 @@ def dedup_retained_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("label", "doc_id", "quality", "cluster_size", "lang", "source")
         .orderBy("label")
     )
-    return retaining(out, grams)
+    return out
 
 
 #: Top-N bigrams emitted by ngram_lm_report (count-desc, lexicographic
@@ -6601,15 +6582,10 @@ def ngram_lm_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the count-of-counts row broadcasts. Distinct from collocation_pairs
     (lift ranking for phrase mining) — this computes the smoothing
     machinery an LM needs."""
-    from retail_aws_etl_pipeline_spark.operators.caching import (
-        retained_caches,
-        retaining,
-    )
 
     t = load_tables(spark, sf_dir, ["documents"])
     tab = TX.kn_bigram_table(t["documents"])
-    out = tab.orderBy(F.desc("c"), "tok_a", "tok_b").limit(KN_TOP_N)
-    return retaining(out, *retained_caches(tab))
+    return tab.orderBy(F.desc("c"), "tok_a", "tok_b").limit(KN_TOP_N)
 
 
 def _shard_manifest_oracle() -> str:
@@ -6716,10 +6692,6 @@ def training_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("shard_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_sources"))
     )
-    from retail_aws_etl_pipeline_spark.operators.caching import (
-        retained_caches,
-        retaining,
-    )
 
     # LEFT joins + 0-coalesce: a shard whose langs/sources are ALL NULL
     # has no keyed sub-aggregate row, and COUNT(DISTINCT) over all-NULL
@@ -6737,7 +6709,7 @@ def training_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("shard_id")
     )
-    return retaining(out, asg, *retained_caches(asg))
+    return out
 
 
 def _perceptron_oracle() -> str:
@@ -7004,7 +6976,6 @@ def unigram_lm_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     bpe_train_merges_report (merge-based) + this (likelihood-based) +
     bpe_encode_report / tokenizer_fertility_by_lang (application/audit).
     """
-    from retail_aws_etl_pipeline_spark.operators.caching import retaining
 
     t = load_tables(spark, sf_dir, ["documents"])
     words = TX.unigram_word_freqs(t["documents"]).persist()
@@ -7021,7 +6992,7 @@ def unigram_lm_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("n_tokens"), "piece")
         .limit(UNI_TOP_N)
     )
-    return retaining(out, words)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -7130,10 +7101,6 @@ def doc_perplexity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash gate. Scale: the model build is ONE corpus-wide exchange;
     scoring is a vocab-scale join + per-doc fold; the tercile is the shared
     _distributed_ntile (one range exchange, no global window)."""
-    from retail_aws_etl_pipeline_spark.operators.caching import (
-        retained_caches,
-        retaining,
-    )
     from retail_aws_etl_pipeline_spark.plans.analytics import _distributed_ntile
 
     t = load_tables(spark, sf_dir, ["documents"])
@@ -7144,7 +7111,7 @@ def doc_perplexity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = nt.select(
         "doc_id", "n_pairs", "ll_q", "mean_llq_ppm", "ppl_bucket"
     ).orderBy("doc_id")
-    return retaining(out, *retained_caches(scores), *retained_caches(nt))
+    return out
 
 
 #: Oracle for :func:`minhash_estimate_error`. Shares the
@@ -7205,18 +7172,10 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE gram exchange feeds both legs via the fused per_doc_signatures pass;
     the exact leg is the posting-list join restricted to candidate docs
     (never all-pairs)."""
-    from retail_aws_etl_pipeline_spark.operators.caching import (
-        retained_caches,
-        retaining,
-    )
 
     t = load_tables(spark, sf_dir, ["documents"])
     grams = D.shingles(t["documents"].repartition("doc_id"), spread=False).persist()
-    pairs = D.minhash_estimate_pairs(grams)
-    out = pairs.orderBy("id_a", "id_b")
-    # carry the kernel's candidate-frame tag across the orderBy (derived
-    # frames don't inherit tags — the caching-module contract)
-    return retaining(out, grams, *retained_caches(pairs))
+    return D.minhash_estimate_pairs(grams).orderBy("id_a", "id_b")
 
 
 def _temperature_oracle() -> str:
@@ -7417,9 +7376,8 @@ def join_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct keys, the hottest key (deterministic single-buffer argmax,
     ties to smallest key), max and floor-average per-key fan-out, and
     the skew ratio in ppm: the census that tells an operator BEFORE the
-    100 TB run whether a groupBy/join key needs salting
-    (operators/skew.py::salted_aggregate) or can lean on AQE skew-join
-    splitting (joins only — a hot groupBy reducer gets no AQE help).
+    100 TB run whether a groupBy/join key needs a two-phase salted
+    aggregate or can lean on AQE skew-join splitting (joins only — a hot groupBy reducer gets no AQE help).
     The histogram surface keeps two registered carriers per the drafted
     r15 pairing (customer_spend_deciles, sketch_accuracy_stats). Scale:
     one partial-aggregated count per family over the same scan;
@@ -7735,8 +7693,8 @@ def hll_overlap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     of each audited table, next to the exact intersection. The 100 TB
     claim this registers: snapshots/days/sources sketched ONCE (<= 256
     rows each at rest) answer any pairwise overlap question later with
-    NO join over either corpus — est_union comes from hll_merge, never
-    a rescan. The small-overlap documents target deliberately sits in
+    NO join over either corpus — est_union comes from the per-bucket
+    register MAX, never a rescan. The small-overlap documents target deliberately sits in
     the noisy regime (three stacked estimator errors; est_overlap is
     SIGNED and can go negative) so the audit shows exactly where the
     cheap algebra is trustworthy — the err_abs column against the exact

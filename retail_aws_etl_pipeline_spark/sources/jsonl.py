@@ -1,4 +1,4 @@
-"""JSON-lines document ingest — the LLM-corpus interchange format.
+"""JSON-lines document parsing — the LLM-corpus interchange format.
 
 Training-data pipelines exchange document corpora as (optionally
 gzip/zstd-compressed) JSONL: one JSON object per line, schema known in
@@ -26,14 +26,14 @@ split, audit) for that format:
   shape of the reference ingest), each tagged with a reason and
   carrying the ORIGINAL line.
 
-Returns (good, rejects): ``good`` matches the documents table contract
+Usable lines match the documents table contract
 (doc_id/text/lang/source/n_chars, with n_chars recomputed — the wire
-value is untrusted metadata), ``rejects`` is (raw, reason).
+value is untrusted metadata); rejects keep the raw line and a reason.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -68,9 +68,9 @@ def classify_jsonl_lines(
     raw line, and ``reject_reason`` (NULL for usable lines,
     'malformed_json' / 'missing_required_field' otherwise). Consumers
     that need both the good corpus AND the reject audit in one job
-    aggregate THIS frame directly — filtering the two-frame
-    :func:`parse_jsonl_lines` view into separate actions re-scans the
-    source once per branch, which a 100 TB ingest must not do."""
+    aggregate THIS frame directly — filtering it into a good view and a
+    reject view consumed by separate actions re-scans the source once
+    per branch, which a 100 TB ingest must not do."""
     if "_corrupt_record" not in schema.fieldNames():
         schema = schema.add("_corrupt_record", T.StringType())
     parsed = text_df.select(
@@ -100,120 +100,3 @@ def classify_jsonl_lines(
         .alias("reject_reason"),
     )
 
-
-def parse_jsonl_lines(
-    text_df: DataFrame, schema: T.StructType = DOCUMENTS_JSONL_SCHEMA
-) -> tuple[DataFrame, DataFrame]:
-    """Shared parse over a text frame (``value`` column) — batch AND
-    streaming take this exact code path, so stream==batch convergence
-    holds by construction, not by parallel implementations. The (good,
-    rejects) pair is two filtered views of ONE
-    :func:`classify_jsonl_lines` plan; consuming both in separate
-    actions scans the source twice — single-job consumers should
-    aggregate the classified frame instead."""
-    cls = classify_jsonl_lines(text_df, schema)
-    good = cls.filter(F.col("reject_reason").isNull()).select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )
-    rejects = cls.filter(F.col("reject_reason").isNotNull()).select(
-        F.col("raw"), F.col("reject_reason").alias("reason")
-    )
-    return good, rejects
-
-
-def read_jsonl_documents(
-    spark: SparkSession, path: str, schema: T.StructType = DOCUMENTS_JSONL_SCHEMA
-) -> tuple[DataFrame, DataFrame]:
-    """One-pass batch JSONL read with corrupt-line + required-field audit."""
-    return parse_jsonl_lines(spark.read.text(path), schema)
-
-
-def ingest_jsonl_corpus(
-    spark: SparkSession,
-    src_path: str,
-    dest_dir: str,
-    rejects_dir: str | None = None,
-    schema: T.StructType = DOCUMENTS_JSONL_SCHEMA,
-    audit_dir: str | None = None,
-) -> dict:
-    """JSONL corpus → lang-partitioned parquet + JSONL reject sink.
-
-    The batch corpus-ingest step a training-data pipeline runs before the
-    dedup/quality operators: read (:func:`read_jsonl_documents`), write
-    the good frame partitioned by ``lang`` (the partition key every
-    downstream mixture/rebalancing operator filters on — partition
-    pruning for free), spill rejects as JSONL for triage.
-
-    Idempotent by construction: partition-overwrite is DYNAMIC, so
-    re-ingesting the same source replaces exactly the languages it
-    carries and leaves other corpora's partitions alone. Counts ride the
-    writes as ``observe()`` metrics — zero extra aggregation jobs (the
-    ingest.py discipline). NULL lang buckets under ``lang=__unknown`` so
-    the partition column never drops rows. The rejects sink is a FULL
-    overwrite of ``rejects_dir`` (rejects are per-run triage, not a
-    ledger) — give each source its own rejects dir, or point it at a
-    dated path, when aggregating across ingests.
-
-    Measured: 50k docs (~300 chars each, 16 files) ingest in ~0.9 s warm
-    on local[32] — ~54k docs/s end-to-end including the partitioned
-    write (SCALING.md).
-
-    Scan accounting: the good write and the reject write are two ACTIONS,
-    so the text source is scanned once per sink (the parse itself is
-    single-pass per scan — no inference pass ever). Rejects are typically
-    a sub-percent slice, so the second scan costs ~1x the source read; on
-    a one-shot 100 TB ingest where even that matters, write the
-    :func:`classify_jsonl_lines` frame once (partitioned by
-    ``reject_reason IS NULL``) and derive both sinks from the parquet —
-    one text scan, one extra columnar read. Aggregation-only consumers
-    never pay any of this: they aggregate the classified frame directly
-    (see ``jsonl_corpus_stats``, plan-gated at exactly one FileScan).
-
-    Returns {"good": n, "rejects": n}.
-    """
-    from pyspark.sql import Observation
-
-    good, rejects = read_jsonl_documents(spark, src_path, schema)
-
-    obs_good = Observation("jsonl_good")
-    (
-        good.withColumn("lang", F.coalesce(F.col("lang"), F.lit("__unknown")))
-        .observe(obs_good, F.count(F.lit(1)).alias("n"))
-        .write.mode("overwrite")
-        # per-write, NOT session conf: a session-global mutation would
-        # silently turn every later static overwrite dynamic (ADVICE r7)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("lang")
-        .parquet(dest_dir)
-    )
-    n_rejects = 0
-    if rejects_dir is not None:
-        obs_rej = Observation("jsonl_rejects")
-        (
-            rejects.observe(obs_rej, F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite")
-            .json(rejects_dir)
-        )
-        n_rejects = obs_rej.get["n"]
-    counts = {"good": obs_good.get["n"], "rejects": n_rejects}
-    if audit_dir is not None:
-        # K5 discipline (operators/compact.py audit puts): one driver-side
-        # JSON metrics document per ingest, keyed by source, for the
-        # operational dashboard / triage trail the reference keeps.
-        import datetime as _dt
-        import json as _json
-        import os as _os
-
-        _os.makedirs(audit_dir, exist_ok=True)
-        safe = src_path.rstrip("/").split("/")[-1].replace(".", "_")
-        metrics = {
-            "source": src_path,
-            "dest": dest_dir,
-            "good_rows": counts["good"],
-            "reject_rows": counts["rejects"],
-            "processed_at_utc": _dt.datetime.now(_dt.timezone.utc).isoformat(),
-            "status": "SUCCESS",
-        }
-        with open(_os.path.join(audit_dir, f"jsonl_ingest_{safe}.json"), "w") as f:
-            _json.dump(metrics, f, indent=2)
-    return counts

@@ -203,107 +203,3 @@ def test_kmeans_all_identical_vectors(spark):
     kept = C.semantic_dedup_retained(df, k=3, updates=1)
     assert [r["vec_id"] for r in kept.collect()] == [0]
 
-
-def _py_kmeans_converged(vecs: dict[int, list[int]], k: int, max_updates: int):
-    """Mirror of kmeans_converged: iterate to exact centroid fixpoint,
-    returning (final_assignment, iterations, converged, inertia trace)."""
-    init_ids = sorted(vecs)[:k]
-    cents = sorted((cid, list(vecs[vid])) for cid, vid in enumerate(init_ids))
-
-    def assign(cents):
-        out = {}
-        for vid, q in vecs.items():
-            best = min(
-                (sum((a - b) * (a - b) for a, b in zip(q, cv)), cid)
-                for cid, cv in cents
-            )
-            out[vid] = (best[1], best[0])
-        return out
-
-    inertia, converged, rounds = [], False, 0
-    for rounds in range(1, max_updates + 1):
-        a = assign(cents)
-        inertia.append(sum(d for _, d in a.values()))
-        new = sorted(
-            (
-                cid,
-                [
-                    math.floor(sum(col) / len(members))
-                    for col in zip(*members)
-                ],
-            )
-            for cid in {cid for cid, _ in a.values()}
-            for members in [[vecs[vid] for vid, (c, _) in a.items() if c == cid]]
-        )
-        if new == cents:
-            converged = True
-            break
-        cents = new
-    return assign(cents), rounds, converged, inertia
-
-
-def test_kmeans_converged_matches_python_mirror(spark):
-    """Fixpoint Lloyd (the many-iteration regime no SQL unroll reaches)
-    equals the pure-Python mirror: same final assignment, same iteration
-    count, same convergence flag, same full integer inertia trace."""
-    # 20 deterministic pseudo-random points in 5 dims, k=4: enough mass
-    # for several genuine centroid moves before the fixpoint.
-    raw = {
-        i: [(((i * 7 + d * 13) % 29) / 29.0) for d in range(5)] for i in range(20)
-    }
-    df = _emb_df(spark, [(i, v) for i, v in raw.items()])
-    final, info = C.kmeans_converged(df, k=4, max_updates=30)
-    got = {r["vec_id"]: (r["cluster_id"], r["dist"]) for r in final.collect()}
-    want, rounds, converged, inertia = _py_kmeans_converged(
-        {i: _quant(v) for i, v in raw.items()}, k=4, max_updates=30
-    )
-    assert got == want
-    assert info["converged"] is True and converged is True
-    assert info["iterations"] == rounds
-    assert info["inertia"] == inertia
-    # sanity: the run actually iterated (fixpoint not at the seed)
-    assert rounds >= 2
-
-
-def test_kmeans_minibatch_matches_python_mirror(spark):
-    """Systematic-slice mini-batch Lloyd equals a pure-Python mirror of
-    the identical schedule (rotating residue slices, keep-position for
-    sliceless centers), and touches every vector across sample_mod
-    rounds."""
-    raw = {
-        i: [(((i * 11 + d * 7) % 31) / 31.0) for d in range(4)] for i in range(24)
-    }
-    df = _emb_df(spark, [(i, v) for i, v in raw.items()])
-    final, info = C.kmeans_minibatch(df, k=3, updates=6, sample_mod=3)
-    got = {r["vec_id"]: (r["cluster_id"], r["dist"]) for r in final.collect()}
-
-    vecs = {i: _quant(v) for i, v in raw.items()}
-    init_ids = sorted(vecs)[:3]
-    cents = sorted((cid, list(vecs[vid])) for cid, vid in enumerate(init_ids))
-
-    def assign(cents, ids):
-        out = {}
-        for vid in ids:
-            q = vecs[vid]
-            best = min(
-                (sum((a - b) * (a - b) for a, b in zip(q, cv)), cid)
-                for cid, cv in cents
-            )
-            out[vid] = (best[1], best[0])
-        return out
-
-    inertia = []
-    for t in range(6):
-        ids = [v for v in vecs if v % 3 == t % 3]
-        a = assign(cents, ids)
-        inertia.append(sum(d for _, d in a.values()))
-        new = {}
-        for cid in {cid for cid, _ in a.values()}:
-            members = [vecs[vid] for vid, (c, _) in a.items() if c == cid]
-            new[cid] = [
-                math.floor(sum(col) / len(members)) for col in zip(*members)
-            ]
-        cents = sorted((cid, new.get(cid, cv)) for cid, cv in cents)
-    want = assign(cents, list(vecs))
-    assert got == want
-    assert info["inertia"] == inertia

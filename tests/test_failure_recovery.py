@@ -218,6 +218,40 @@ def test_purge_deletes_now_empty_partitions(spark, tmp_path):
     assert date_dirs == []
 
 
+def test_purge_raises_on_corrupt_silver(spark, tmp_path):
+    """A silver that cannot be read is a real failure, not "nothing to
+    purge": purge_run_from_silver raises (into ingest_file's "silver purge
+    ... also failed" log) instead of reporting 0 rows purged."""
+    import pytest
+
+    from retail_aws_etl_pipeline_spark.ingest import purge_run_from_silver
+
+    lake = LakeLayout(str(tmp_path / "lake"))
+    csv = tmp_path / "ok.csv"
+    _write_csv(csv, range(6))
+    ingest_file(
+        spark, str(csv), lake,
+        ingest_run_id="run_ok",
+        ingest_ts=F.lit("2025-07-20 00:00:00").cast("timestamp"),
+        archive=False, write_reject_csv=False,
+    )
+    parts = [
+        os.path.join(root, name)
+        for root, _, names in os.walk(lake.processed)
+        for name in names
+        if name.startswith("part-")
+    ]
+    assert parts
+    for path in parts:
+        with open(path, "wb") as f:
+            f.write(b"not a parquet file")
+        crc = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+    with pytest.raises(Exception):
+        purge_run_from_silver(spark, lake, "run_failed")
+
+
 # ---------------------------------------------------------------------------
 # Manifest commit protocol (object-store-safe silver/gold writes, ROADMAP #3)
 # ---------------------------------------------------------------------------

@@ -114,35 +114,6 @@ def test_indexed_oracle_driver_scale(spark):
     assert r["ok"], r
 
 
-def test_append_equals_rebuild(spark, index):
-    """ivf_index_append against the persisted centroids must produce an
-    index bit-identical (as a rowset) to building from the union — the
-    fixed-quantizer contract."""
-    emb, path, cents = index
-    lo = emb.filter(F.col("vec_id") % 2 == 0)
-    hi = emb.filter(F.col("vec_id") % 2 == 1)
-    d2 = tempfile.mkdtemp(prefix="ivf_append_")
-    try:
-        S.ivf_index_write(lo, d2, centroids=cents)
-        S.ivf_index_append(hi, d2)
-        got = sorted(
-            (r["vec_id"], r["cell"], r["qnorm"])
-            for r in spark.read.parquet(d2).collect()
-        )
-        want = sorted(
-            (r["vec_id"], r["cell"], r["qnorm"])
-            for r in spark.read.parquet(path).collect()
-        )
-        assert got == want
-        # and the appended index answers queries identically
-        probes = emb.filter(F.col("vec_id").isin(ANN_PROBE_IDS))
-        a = sorted(map(tuple, S.ivf_index_topk(probes, d2, ANN_K, nprobe=IVF_NPROBE).collect()))
-        b = sorted(map(tuple, S.ivf_index_topk(probes, path, ANN_K, nprobe=IVF_NPROBE).collect()))
-        assert a == b
-    finally:
-        shutil.rmtree(d2, ignore_errors=True)
-
-
 def test_indexed_query_reuses_standing_index(spark):
     """The registered query's index cache: two calls against the same
     corpus reuse ONE at-rest index (same dir, marker untouched) and

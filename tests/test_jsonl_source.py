@@ -1,13 +1,16 @@
-"""JSONL document-ingest source: explicit-schema single-pass read with
-corrupt-line and required-field audits, gzip transparency, and unicode
-round-trip."""
+"""JSONL document parsing (``classify_jsonl_lines``, the kernel the
+registered ``jsonl_corpus_stats`` runs): explicit-schema single-pass read
+with corrupt-line and required-field audits, gzip transparency, and
+unicode round-trip."""
 
 from __future__ import annotations
 
 import gzip
 import json
 
-from retail_aws_etl_pipeline_spark.sources.jsonl import read_jsonl_documents
+from pyspark.sql import functions as F
+
+from retail_aws_etl_pipeline_spark.sources.jsonl import classify_jsonl_lines
 
 GOOD = [
     {"doc_id": 1, "text": "hello world", "lang": "en", "source": "s1", "n_chars": 11},
@@ -20,6 +23,15 @@ def _write(path, lines):
     path.write_text("\n".join(lines) + "\n", encoding="utf-8")
 
 
+def _read(spark, path):
+    """(good, rejects) views of the classified lines of a JSONL file."""
+    cls = classify_jsonl_lines(spark.read.text(str(path)))
+    good = cls.filter(F.col("reject_reason").isNull()).select(
+        "doc_id", "text", "lang", "source", "n_chars"
+    )
+    return good, cls.filter(F.col("reject_reason").isNotNull())
+
+
 def test_jsonl_good_corrupt_and_missing_split(spark, tmp_path):
     lines = [json.dumps(d, ensure_ascii=False) for d in GOOD]
     lines.insert(1, '{"doc_id": 4, "text": "broken')          # malformed JSON
@@ -28,14 +40,14 @@ def test_jsonl_good_corrupt_and_missing_split(spark, tmp_path):
     f = tmp_path / "docs.jsonl"
     _write(f, lines)
 
-    good, rejects = read_jsonl_documents(spark, str(f))
+    good, rejects = _read(spark, f)
     got = {r["doc_id"]: r.asDict() for r in good.collect()}
     assert set(got) == {1, 2, 3}
     # n_chars is recomputed from text, not trusted from the wire
     assert got[2]["n_chars"] == len("第二个文档")
     assert got[3]["n_chars"] == 0
 
-    rej = [(r["reason"], r["raw"]) for r in rejects.collect()]
+    rej = [(r["reject_reason"], r["raw"]) for r in rejects.collect()]
     reasons = sorted(reason for reason, _ in rej)
     assert reasons == [
         "malformed_json",
@@ -51,7 +63,7 @@ def test_jsonl_gzip_transparent(spark, tmp_path):
     payload = "\n".join(json.dumps(d, ensure_ascii=False) for d in GOOD) + "\n"
     with gzip.open(f, "wt", encoding="utf-8") as fh:
         fh.write(payload)
-    good, rejects = read_jsonl_documents(spark, str(f))
+    good, rejects = _read(spark, f)
     assert good.count() == 3
     assert rejects.count() == 0
 
@@ -63,7 +75,7 @@ def test_jsonl_read_is_single_pass_with_explicit_schema(spark, tmp_path):
     _write(f, [json.dumps(d) for d in GOOD])
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None) or [])
-    good, _ = read_jsonl_documents(spark, str(f))
+    good, _ = _read(spark, f)
     after = len(tracker.getJobIdsForGroup(None) or [])
     assert after == before, "schema inference ran an eager job"
     assert [f.name for f in good.schema.fields] == [
@@ -76,39 +88,10 @@ def test_jsonl_matches_documents_contract(spark, tmp_path):
     documents table (same names and physical types)."""
     f = tmp_path / "docs.jsonl"
     _write(f, [json.dumps(d) for d in GOOD])
-    good, _ = read_jsonl_documents(spark, str(f))
+    good, _ = _read(spark, f)
     parquet = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     merged = parquet.select(*good.columns).unionByName(good)
     assert merged.count() == parquet.count() + 3
-
-
-def test_ingest_jsonl_corpus_partitioned_and_idempotent(spark, tmp_path):
-    """lang-partitioned parquet + JSONL rejects; NULL lang bucketed; a
-    re-ingest of the same source converges (dynamic partition overwrite,
-    not append-duplication); counts ride the writes."""
-    lines = [json.dumps(d, ensure_ascii=False) for d in GOOD]
-    lines.append('{"doc_id": 9, "text": "no lang"}')     # NULL lang
-    lines.append('{"doc_id": 10, "text": "broken')       # malformed
-    f = tmp_path / "corpus.jsonl"
-    _write(f, lines)
-    dest = str(tmp_path / "corpus_parquet")
-    rej = str(tmp_path / "corpus_rejects")
-
-    from retail_aws_etl_pipeline_spark.sources.jsonl import ingest_jsonl_corpus
-
-    counts = ingest_jsonl_corpus(spark, str(f), dest, rej)
-    assert counts == {"good": 4, "rejects": 1}
-
-    out = spark.read.parquet(dest)
-    assert out.count() == 4
-    langs = {r["lang"] for r in out.select("lang").distinct().collect()}
-    assert langs == {"en", "zh", "__unknown"}
-    assert {r["reason"] for r in spark.read.json(rej).collect()} == {"malformed_json"}
-
-    # re-ingest: same counts, same rows — no duplication
-    counts2 = ingest_jsonl_corpus(spark, str(f), dest, rej)
-    assert counts2 == counts
-    assert spark.read.parquet(dest).count() == 4
 
 
 def test_jsonl_untrusted_field_type_mismatch_is_not_a_reject(spark, tmp_path):
@@ -126,52 +109,10 @@ def test_jsonl_untrusted_field_type_mismatch_is_not_a_reject(spark, tmp_path):
     ]
     f = tmp_path / "docs.jsonl"
     _write(f, lines)
-    good, rejects = read_jsonl_documents(spark, str(f))
+    good, rejects = _read(spark, f)
     got = {r["doc_id"]: r["n_chars"] for r in good.collect()}
     assert got == {1: 2, 2: 3}  # recomputed from text, wire value ignored
-    assert [r["reason"] for r in rejects.collect()] == ["malformed_json"]
-
-
-def test_ingest_jsonl_corpus_does_not_mutate_session_overwrite_mode(spark, tmp_path):
-    """The dynamic partition overwrite must ride the WRITE, not the session:
-    a later static overwrite in the same session must stay static
-    (ADVICE r7)."""
-    from retail_aws_etl_pipeline_spark.sources.jsonl import ingest_jsonl_corpus
-
-    f = tmp_path / "corpus.jsonl"
-    _write(f, [json.dumps(d, ensure_ascii=False) for d in GOOD])
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "static")
-        ingest_jsonl_corpus(spark, str(f), str(tmp_path / "dest"))
-        assert spark.conf.get(key) == "static"
-        assert spark.read.parquet(str(tmp_path / "dest")).count() == 3
-    finally:
-        spark.conf.set(key, prev)
-
-
-def test_ingest_jsonl_corpus_writes_audit(spark, tmp_path):
-    """The optional audit put mirrors the compaction metrics discipline:
-    one JSON document per ingest keyed by source, with the counts."""
-    lines = [json.dumps(d, ensure_ascii=False) for d in GOOD] + ['{"nope']
-    f = tmp_path / "corpus.jsonl"
-    _write(f, lines)
-
-    from retail_aws_etl_pipeline_spark.sources.jsonl import ingest_jsonl_corpus
-
-    audit = tmp_path / "audit"
-    ingest_jsonl_corpus(
-        spark,
-        str(f),
-        str(tmp_path / "dest"),
-        str(tmp_path / "rej"),
-        audit_dir=str(audit),
-    )
-    [doc] = list(audit.glob("jsonl_ingest_*.json"))
-    metrics = json.loads(doc.read_text())
-    assert metrics["good_rows"] == 3 and metrics["reject_rows"] == 1
-    assert metrics["status"] == "SUCCESS" and metrics["source"] == str(f)
+    assert [r["reject_reason"] for r in rejects.collect()] == ["malformed_json"]
 
 
 from hypothesis import HealthCheck, given, settings
@@ -218,8 +159,6 @@ def test_classify_jsonl_lines_matches_python_reference(spark, tmp_path_factory, 
     and n_chars recomputed. Pins the PERMISSIVE from_json semantics the
     audit classes depend on (wrong-typed doc_id corrupts; wrong-typed
     untrusted fields don't; string fields accept any JSON value as text)."""
-    from retail_aws_etl_pipeline_spark.sources.jsonl import classify_jsonl_lines
-
     lines = [json.dumps(d, ensure_ascii=False) for d in docs] + list(breakers)
 
     def ref(line):
@@ -260,41 +199,3 @@ def test_classify_jsonl_lines_matches_python_reference(spark, tmp_path_factory, 
             if text is not None:
                 assert r["text"] == text and r["n_chars"] == len(text)
 
-
-def test_ingest_jsonl_corpus_converges_over_crash_debris(spark, tmp_path):
-    """A crashed previous ingest leaves committer debris (_temporary dirs,
-    orphan part files in a lang partition); a re-ingest of the same source
-    must converge to exactly the source's rows — dynamic partition
-    overwrite replaces the partitions the source carries, and the reader
-    must see no phantom rows."""
-    import os
-
-    from retail_aws_etl_pipeline_spark.sources.jsonl import ingest_jsonl_corpus
-
-    f = tmp_path / "corpus.jsonl"
-    _write(f, [json.dumps(d, ensure_ascii=False) for d in GOOD])
-    dest = tmp_path / "dest"
-
-    counts = ingest_jsonl_corpus(spark, str(f), str(dest))
-    assert counts["good"] == 3
-
-    # simulate a crashed writer: stray committer dir + orphan file in a
-    # partition the source WILL rewrite
-    os.makedirs(dest / "_temporary" / "0", exist_ok=True)
-    (dest / "_temporary" / "0" / "junk").write_bytes(b"x")
-    en_dir = next(p for p in dest.iterdir() if p.name == "lang=en")
-    orphan = en_dir / "part-99999-orphan.snappy.parquet"
-    # a real parquet file with the right schema, as a crashed task would leave
-    spark.read.parquet(str(dest)).filter("lang = 'en'").limit(1).drop("lang").write.mode(
-        "overwrite"
-    ).parquet(str(tmp_path / "one"))
-    import shutil as _sh
-
-    src_part = next(p for p in (tmp_path / "one").iterdir() if p.name.endswith(".parquet"))
-    _sh.copy(src_part, orphan)
-    assert spark.read.parquet(str(dest)).filter("lang = 'en'").count() > 2  # phantom visible
-
-    counts2 = ingest_jsonl_corpus(spark, str(f), str(dest))
-    assert counts2 == counts
-    out = spark.read.parquet(str(dest))
-    assert out.count() == 3 and out.filter("lang = 'en'").count() == 2

@@ -649,3 +649,22 @@ def test_read_flexible_csv_submits_no_spark_job(spark, tmp_path):
     assert meta.delimiter == ";" and meta.missing_required == []
     assert extracted.count() == 201  # 200 lines + one repeat; header dropped
     assert set(tracker.getJobIdsForGroup()) != before  # the tracker does see jobs
+
+
+def test_read_silver_submits_no_spark_job(spark, tmp_path):
+    """A direct-layout silver written by ``ingest_file`` conforms to
+    SILVER_SCHEMA, so ``read_silver`` declares it: building the frame
+    submits no footer-inference job (the first action does)."""
+    from retail_aws_etl_pipeline_spark.ingest import ingest_file
+    from retail_aws_etl_pipeline_spark.lake import LakeLayout
+    from retail_aws_etl_pipeline_spark.operators.compact import read_silver
+
+    lake = LakeLayout(str(tmp_path / "lake"))
+    path = _sales_csv(tmp_path / "sales.csv", 200, seed=3)
+    result = ingest_file(spark, path, lake, archive=False, write_reject_csv=False)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    silver = read_silver(spark, lake)
+    assert set(tracker.getJobIdsForGroup()) == before
+    assert silver.count() == result.counts["good_rows"] > 0
+    assert set(tracker.getJobIdsForGroup()) != before  # the tracker does see jobs

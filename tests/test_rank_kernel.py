@@ -10,7 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from retail_aws_etl_pipeline_spark.operators.caching import release_caches
 from retail_aws_etl_pipeline_spark.plans.analytics import _distributed_rank
 
 
@@ -32,7 +31,6 @@ def test_lrn_matches_row_number(spark):
     want = df.withColumn("rnk", F.row_number().over(w).cast("long"))
     assert got.select("id", "rnk").exceptAll(want.select("id", "rnk")).isEmpty()
     assert want.select("id", "rnk").exceptAll(got.select("id", "rnk")).isEmpty()
-    release_caches(got)
 
 
 def test_internal_lrn_dense_per_partition(spark):
@@ -56,4 +54,3 @@ def test_internal_lrn_dense_per_partition(spark):
         )
     )
     assert chk.isEmpty(), chk.collect()
-    release_caches(raw)

@@ -7,9 +7,9 @@ sorted (name, oracle) pairs. A deliberate change to a registered name or
 oracle string updates SURFACE_SHA256 in the same commit.
 
 The census at the end pins the other side of that contract: every
-top-level definition in plans/ and streaming/ must be reachable from code
-that runs outside the test suite, so code only tests exercise is deleted
-or allowlisted with its reason. ``python -m tests.test_registry_surface``
+top-level definition in the package must be reachable from code that runs
+outside the test suite, so code only tests exercise is deleted or
+allowlisted with its reason. ``python -m tests.test_registry_surface``
 prints the package-wide unreachable set.
 
 The window order (``queries()``) is not pinned here: it is re-derived
@@ -63,10 +63,40 @@ _PUBLIC_API = ("ingest", "lake", "lake_manifest", "operators.compact", "plans.vi
 #: Out-of-package files read as roots: everything they reference runs.
 _ROOT_FILES = ("__spark_entry__.py", "bench.py")
 
-#: Unreachable on purpose, with the reason.
+#: Unreachable on purpose, with the reason: each is the reference a test
+#: compares a registered op's kernel against, or a maintenance half.
 _ALLOWED_UNREACHABLE = {
-    # maintenance half of streamed_customer_features' standing delta state
-    f"{_PKG_NAME}.streaming.streams.compact_feature_deltas",
+    f"{_PKG_NAME}.{name}"
+    for name in (
+        # cdc_chunk_dedup: the fixed-window chunker content-defined chunks
+        # are proven shift-robust against
+        "operators.dedup.CHUNK_W",
+        "operators.dedup.token_chunks",
+        # edit_distance_near_pairs_lsh: the exact edit-distance pair sets
+        # the LSH candidate path is checked against
+        "operators.dedup._bucket_blocked_edit_pairs",
+        "operators.dedup.edit_distance_pairs",
+        # doc_containment_pairs_prefix: the brute-force containment pairs
+        # the prefix filter must reproduce
+        "operators.dedup.containment_pairs",
+        # webp_dims_probe / avif_dims_probe: header builders for the other
+        # formats probe_image_dims parses
+        "operators.multimodal._gif_header_bytes",
+        "operators.multimodal._jpeg_header_bytes",
+        "operators.multimodal._tiff_header_bytes",
+        # png_decode_stats: the round-trip reference for encode_bmp, the
+        # BMP encoder of synth_media (its payload source)
+        "operators.multimodal.decode_bmp",
+        # ann_topk_ivf_indexed: the in-memory IVF search the at-rest index
+        # must match
+        "operators.similarity.ivf_topk",
+        # bitext_margin_pairs_ivf: the brute-force margin pairs the IVF
+        # candidate path is checked against
+        "operators.similarity.margin_mutual_pairs",
+        # streamed_customer_features: maintenance half of its standing
+        # delta state
+        "streaming.streams.compact_feature_deltas",
+    )
 }
 
 _REGISTER_DECORATORS = {"register", "register_extra"}
@@ -221,17 +251,13 @@ def _census() -> set[str]:
     }
 
 
-def test_plans_and_streaming_have_no_unreachable_defs():
-    """No top-level definition in plans/ or streaming/ is kept alive only by
-    tests. Roots: the registered specs, module-level statements, the
-    pipeline API's public names, the package ``__init__`` exports,
+def test_package_has_no_unreachable_defs():
+    """No top-level definition in the package is kept alive only by tests.
+    Roots: the registered specs, module-level statements, the pipeline
+    API's public names, the package ``__init__`` exports,
     ``__spark_entry__.py``, ``bench.py`` and the perfbench modules. Delete
     what this flags, or allowlist it with the reason it stays."""
-    scoped = {
-        n for n in _census()
-        if n.startswith((f"{_PKG_NAME}.plans.", f"{_PKG_NAME}.streaming."))
-    }
-    assert scoped == _ALLOWED_UNREACHABLE
+    assert _census() == _ALLOWED_UNREACHABLE
 
 
 if __name__ == "__main__":

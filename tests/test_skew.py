@@ -1,46 +1,8 @@
-"""Salted aggregation equals direct aggregation (on a skewed input)."""
+"""AQE skew-join splitting fires on a skewed shuffle join."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-from retail_aws_etl_pipeline_spark.operators.skew import salted_aggregate, salted_sum
-
-
-def test_salted_sum_matches_direct(spark):
-    # heavily skewed key: 90% of rows share one key
-    df = spark.range(20_000).select(
-        F.when(F.col("id") % 10 < 9, F.lit("hot")).otherwise(F.concat(F.lit("k"), F.col("id") % 7)).alias("k"),
-        (F.col("id") % 1000).alias("v"),
-    )
-    direct = {(r["k"]): r["s"] for r in df.groupBy("k").agg(F.sum("v").alias("s")).collect()}
-    salted = {(r["k"]): r["s"] for r in salted_sum(df, ["k"], "v", "s").collect()}
-    assert direct == salted
-
-
-def test_salted_multi_agg(spark):
-    df = spark.range(5_000).select(
-        (F.col("id") % 3).alias("k"), F.col("id").alias("v")
-    )
-    got = {
-        r["k"]: (r["total"], r["n"], r["mx"])
-        for r in salted_aggregate(
-            df,
-            ["k"],
-            [
-                (F.sum("v"), lambda p: F.sum(p), "total"),
-                (F.count(F.lit(1)), lambda p: F.sum(p), "n"),
-                (F.max("v"), lambda p: F.max(p), "mx"),
-            ],
-        ).collect()
-    }
-    want = {
-        r["k"]: (r["total"], r["n"], r["mx"])
-        for r in df.groupBy("k")
-        .agg(F.sum("v").alias("total"), F.count(F.lit(1)).alias("n"), F.max("v").alias("mx"))
-        .collect()
-    }
-    assert got == want
 
 
 def test_aqe_splits_skewed_join_partition(spark):

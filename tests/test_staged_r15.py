@@ -401,41 +401,6 @@ def test_hll_build_is_a_bounded_aggregate(spark):
     assert "Window" not in plan and "Python" not in plan, plan[:2000]
 
 
-def test_hll_merge_equals_sketch_of_union(spark):
-    """sketch(A) ⊔ sketch(B) == sketch(A ∪ B) bit-identically — the
-    mergeability property that makes the sketch distributable: shards
-    sketched independently combine with a <= m-row union, no rescan.
-    Also holds for overlapping inputs (max is idempotent)."""
-    from retail_aws_etl_pipeline_spark.operators import sketch as SK
-
-    a = spark.createDataFrame([(f"a{i}",) for i in range(700)], ["k"])
-    b = spark.createDataFrame(
-        [(f"b{i}",) for i in range(500)] + [(f"a{i}",) for i in range(100)],
-        ["k"],
-    )
-    merged = {
-        (r.bucket, r.register)
-        for r in SK.hll_merge(
-            SK.hll_registers(a, F.col("k")), SK.hll_registers(b, F.col("k"))
-        ).collect()
-    }
-    union = {
-        (r.bucket, r.register)
-        for r in SK.hll_registers(a.unionByName(b).distinct(), F.col("k")).collect()
-    }
-    assert merged == union and merged
-    # and therefore the estimates agree exactly
-    est_m = SK.hll_estimate(
-        SK.hll_merge(
-            SK.hll_registers(a, F.col("k")), SK.hll_registers(b, F.col("k"))
-        )
-    ).collect()[0]["hll_estimate"]
-    est_u = SK.hll_estimate(
-        SK.hll_registers(a.unionByName(b), F.col("k"))
-    ).collect()[0]["hll_estimate"]
-    assert est_m == est_u
-
-
 def test_hll_overlap_algebra_and_envelope(spark):
     """Inclusion-exclusion identity holds structurally; the two
     large-overlap targets land within 20% of the exact intersection;
@@ -459,23 +424,24 @@ def test_hll_overlap_algebra_and_envelope(spark):
 
 
 def test_hll_overlap_on_planted_sets(spark):
-    """Constructed halves sharing exactly 60 of 300/240 keys: the exact
-    leg reports 60; the estimate lands within the stacked envelope; a
-    fully-disjoint pair reports exact 0 with a near-zero estimate."""
+    """Constructed halves of one frame sharing exactly 60 of 300/240 keys:
+    the estimate lands within the stacked envelope of 60; a
+    fully-disjoint pair reports a near-zero estimate."""
     from retail_aws_etl_pipeline_spark.operators import sketch as SK
 
-    a = spark.createDataFrame(
-        [(f"s{i}",) for i in range(60)] + [(f"a{i}",) for i in range(240)], ["k"]
+    def overlap(keys_a, keys_b):
+        df = spark.createDataFrame(
+            [(k, True) for k in keys_a] + [(k, False) for k in keys_b], ["k", "is_a"]
+        )
+        return SK.hll_overlap_split(df, F.col("k"), F.col("is_a")).collect()[0]
+
+    r = overlap(
+        [f"s{i}" for i in range(60)] + [f"a{i}" for i in range(240)],
+        [f"s{i}" for i in range(60)] + [f"b{i}" for i in range(180)],
     )
-    b = spark.createDataFrame(
-        [(f"s{i}",) for i in range(60)] + [(f"b{i}",) for i in range(180)], ["k"]
-    )
-    r = SK.hll_overlap(a, b, F.col("k"), F.col("k")).collect()[0]
     assert r["est_overlap"] == r["est_a"] + r["est_b"] - r["est_union"]
     assert abs(r["est_overlap"] - 60) <= 0.3 * 540  # stacked-error band
-    d1 = spark.createDataFrame([(f"x{i}",) for i in range(200)], ["k"])
-    d2 = spark.createDataFrame([(f"y{i}",) for i in range(200)], ["k"])
-    r0 = SK.hll_overlap(d1, d2, F.col("k"), F.col("k")).collect()[0]
+    r0 = overlap([f"x{i}" for i in range(200)], [f"y{i}" for i in range(200)])
     assert abs(r0["est_overlap"]) <= 0.3 * 400
 
 
