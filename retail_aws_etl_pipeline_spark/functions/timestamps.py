@@ -1,4 +1,4 @@
-"""Regex-gated multi-format timestamp parsing as a single Column expression.
+"""Regex-gated multi-format timestamp parsing as a single SQL expression.
 
 Re-expresses the reference's cascade (glue_job_raw_to_processed.py:242-268,
 docs/timestamp_parsing.md) as a configurable pattern registry producing ONE
@@ -16,11 +16,10 @@ Semantics (kept identical to the reference):
 We additionally use ``try_to_timestamp`` (Spark ≥ 3.4) underneath the regex
 gate — belt and braces against ANSI-mode parse errors.
 
-:func:`parse_timestamp_sql` is the same cascade as SQL text over a named
+:func:`parse_timestamp_sql` writes the cascade as SQL text over a named
 column (``coalesce(CASE WHEN c RLIKE p THEN try_to_timestamp(c, f) END, …)``),
-which the lake path parses in one py4j call instead of ~4 Column calls per
-pattern; ``tests/test_functions_unit.py`` holds the two equal on adversarial
-strings for both pattern sets.
+which ``F.expr``/``selectExpr`` parse in one py4j call instead of ~4 Column
+calls per pattern.
 
 ``REFERENCE_PATTERNS`` is the reference's exact 11-pattern behavior (the
 parity default). ``EXTENDED_PATTERNS`` adds the doc-promised ``dd/MM``
@@ -31,9 +30,6 @@ precedence, so ``MM/dd`` still wins over ``dd/MM`` on ambiguous strings and
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from retail_aws_etl_pipeline_spark.functions.sqltext import sql_ident, sql_lit
 
@@ -66,23 +62,6 @@ EXTENDED_PATTERNS: list[tuple[str, str]] = REFERENCE_PATTERNS + [
     (r"^\d{2}/\d{2}/\d{4} \d{1,2}:\d{2}(AM|PM)$", "MM/dd/yyyy hh:mma"),
     (r"^\d{2}/\d{2}/\d{4} \d{1,2}:\d{2}(AM|PM)$", "dd/MM/yyyy hh:mma"),
 ]
-
-
-def parse_timestamp(
-    source: Column | str,
-    patterns: list[tuple[str, str]] | None = None,
-) -> Column:
-    """Build the cascade as one Column; NULL if no pattern parses."""
-    c = F.col(source) if isinstance(source, str) else source
-    if patterns is None:
-        patterns = REFERENCE_PATTERNS
-    parsed: Column = F.lit(None).cast("timestamp")
-    for pattern, fmt in patterns:
-        parsed = F.coalesce(
-            parsed,
-            F.when(c.rlike(pattern), F.try_to_timestamp(c, F.lit(fmt))),
-        )
-    return parsed
 
 
 def parse_timestamp_sql(name: str, patterns: list[tuple[str, str]]) -> str:

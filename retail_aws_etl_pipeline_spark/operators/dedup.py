@@ -155,7 +155,7 @@ def jaccard_counts(
     — the skew/blowup guard at scale.
 
     ``hash_grams=True`` is the 100 TB scale variant (the xxhash64
-    discipline of functions.hashing.business_row_hash64): the join key
+    discipline for wide join keys): the join key
     becomes ``xxhash64(gram)`` — a fixed 8 bytes through the widest
     exchange in the whole dedup family instead of the ~25-byte average
     gram string. Measured 1.19× wall at K=10 and 1.45× at K=100 on the

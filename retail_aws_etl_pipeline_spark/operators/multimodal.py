@@ -1,21 +1,22 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Image/audio/video content is carried as a ``binary`` column plus a typed
-metadata struct, processed by Arrow-batched ``mapInPandas`` kernels.
+metadata struct, processed row by row inside one Arrow-batched
+``mapInPandas`` loop, :func:`map_rows`.
 
-REAL pure-numpy codecs (no media libraries required): uncompressed 24-bit
-BMP (encode + header-parsing decode, row padding and bottom-up row order
-handled), PNG (stdlib zlib deflate/inflate + per-scanline unfiltering of
-all five filter types, 8-bit RGB/RGBA) and PCM16 WAV (RIFF chunk walk).
-Compressed formats (JPEG, WebP, AVIF, MP4, FLAC, MP3, Ogg) are probed
+REAL pure-numpy codecs (no media libraries required): PNG (stdlib zlib
+deflate/inflate + per-scanline unfiltering of all five filter types, 8-bit
+RGB/RGBA) and a PCM16 WAV encoder; WAV headers are probed by a RIFF chunk
+walk. Compressed formats (JPEG, WebP, AVIF, MP4, FLAC, MP3, Ogg) are probed
 from their headers for dimensions and stream parameters, never decoded:
 pixel or frame decode would need PIL / cv2, which the package does not
 depend on.
 
 At 100 TB: payloads dominate row size — the operators project only
 (id, payload) so Parquet column pruning keeps metadata-only queries from
-touching bytes; kernels stream per Arrow batch (no per-row Python), and
-`repartition(n)` on id spreads decode CPU, the real bottleneck, evenly.
+touching bytes; kernels stream per Arrow batch (one Python call per row,
+never a driver collect), and `repartition(n)` on id spreads decode CPU,
+the real bottleneck, evenly.
 """
 
 from __future__ import annotations
@@ -64,87 +65,57 @@ def media_from_documents(docs: DataFrame) -> DataFrame:
     )
 
 
-def byte_histogram(media: DataFrame) -> DataFrame:
-    """(media_id, byte, n) histogram of payload bytes via mapInPandas.
-
-    The reference kernel proving the binary plumbing: numpy bincount per
-    Arrow batch, exploded to one row per present byte value.
-    """
-    import numpy as np
+def map_rows(frame: DataFrame, cols: list[str], fn, schema) -> DataFrame:
+    """``frame``'s ``cols`` through ``fn`` row by row, in one Arrow-batched
+    ``mapInPandas`` pass: ``fn(*values)`` returns that row's output tuples
+    in ``schema`` field order — none, one or many, so one-to-many maps
+    fit. Kernels run executor-side; driver code never touches payload
+    bytes."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if pdf.empty:
-                continue
-            out_id, out_byte, out_n = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                arr = np.frombuffer(payload, dtype=np.uint8)
-                counts = np.bincount(arr, minlength=256)
-                present = np.nonzero(counts)[0]
-                out_id.extend([mid] * len(present))
-                out_byte.extend(present.tolist())
-                out_n.extend(counts[present].tolist())
-            yield pd.DataFrame({"media_id": out_id, "byte": out_byte, "n": out_n})
+            # Unlabelled columns: Spark assigns them to the schema by position.
+            yield pd.DataFrame(
+                [out for values in zip(*(pdf[c] for c in cols)) for out in fn(*values)]
+            )
 
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, schema="media_id long, byte int, n long"
+    return frame.select(*cols).mapInPandas(kernel, schema=schema)
+
+
+def _probe(media: DataFrame, fn, schema: str) -> DataFrame:
+    """(media_id, *fn(payload)) for every media row."""
+    return map_rows(
+        media,
+        ["media_id", "payload"],
+        lambda mid, payload: [(int(mid), *fn(bytes(payload)))],
+        schema,
     )
 
 
-# ---------------------------------------------------------------------------
-# Pure-numpy codecs: uncompressed 24-bit BMP and PCM16 WAV.
-# These run INSIDE mapInPandas kernels (executor-side, Arrow-batched) —
-# driver code never touches payload bytes.
-# ---------------------------------------------------------------------------
+def _synth(ids: DataFrame, id_col: str, media_of) -> DataFrame:
+    """(id) → MEDIA_SCHEMA rows; ``media_of(id)`` gives (kind, payload, meta)."""
+    return map_rows(ids, [id_col], lambda mid: [(int(mid), *media_of(int(mid)))], MEDIA_SCHEMA)
 
 
-def encode_bmp(pixels) -> bytes:
-    """H×W×3 uint8 array (logical top-down rows, file channel order) → BMP.
+def byte_histogram(media: DataFrame) -> DataFrame:
+    """(media_id, byte, n) histogram of payload bytes.
 
-    Writes the standard layout: BITMAPFILEHEADER + BITMAPINFOHEADER,
-    24 bpp, uncompressed, rows bottom-up, each row padded to 4 bytes.
+    The reference kernel proving the binary plumbing: numpy bincount per
+    payload, exploded to one row per present byte value.
     """
-    import struct
-
     import numpy as np
 
-    pixels = np.asarray(pixels, dtype=np.uint8)
-    h, w, c = pixels.shape
-    if c != 3:
-        raise ValueError(f"encode_bmp wants H×W×3, got {pixels.shape}")
-    stride = (w * 3 + 3) // 4 * 4
-    img_size = stride * h
-    header = struct.pack("<2sIHHI", b"BM", 54 + img_size, 0, 0, 54) + struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, img_size, 2835, 2835, 0, 0
-    )
-    rows = np.zeros((h, stride), dtype=np.uint8)
-    rows[:, : w * 3] = pixels[::-1].reshape(h, w * 3)  # bottom-up
-    return header + rows.tobytes()
+    def counts(mid, payload):
+        n = np.bincount(np.frombuffer(payload, dtype=np.uint8), minlength=256)
+        present = np.nonzero(n)[0]
+        return zip([mid] * len(present), present.tolist(), n[present].tolist())
+
+    return map_rows(media, ["media_id", "payload"], counts, "media_id long, byte int, n long")
 
 
-def decode_bmp(buf: bytes):
-    """BMP bytes → H×W×3 uint8 (logical top-down). A genuine header parse:
-    pixel-array offset, signed height (negative = top-down), bpp and
-    compression checks, stride unpadding, row-order flip."""
-    import numpy as np
-
-    if buf[:2] != b"BM":
-        raise ValueError("not a BMP: missing BM magic")
-    offset = int.from_bytes(buf[10:14], "little")
-    w = int.from_bytes(buf[18:22], "little", signed=True)
-    h = int.from_bytes(buf[22:26], "little", signed=True)
-    bpp = int.from_bytes(buf[28:30], "little")
-    compression = int.from_bytes(buf[30:34], "little")
-    if bpp != 24 or compression != 0:
-        raise ValueError(f"only uncompressed 24-bit BMP supported (bpp={bpp}, comp={compression})")
-    top_down = h < 0
-    h = abs(h)
-    stride = (w * 3 + 3) // 4 * 4
-    rows = np.frombuffer(buf, dtype=np.uint8, count=stride * h, offset=offset).reshape(h, stride)
-    rows = rows[:, : w * 3]
-    if not top_down:
-        rows = rows[::-1]
-    return rows.reshape(h, w, 3)
+# ---------------------------------------------------------------------------
+# Pure-numpy codecs: PNG and the PCM16 WAV encoder.
+# ---------------------------------------------------------------------------
 
 
 def _paeth_predictor(a, b, c):
@@ -324,65 +295,27 @@ def encode_wav(samples, sample_rate: int = 16000, n_channels: int = 1) -> bytes:
 # id, so a SQL oracle can verify decoded features without seeing bytes.
 # ---------------------------------------------------------------------------
 
-BMP_W, BMP_H = 6, 4  # 6*3=18 bytes/row → stride 20: padding is exercised
-WAV_N, WAV_RATE = 64, 16000
-VIDEO_FRAMES = 8
 PNG_W, PNG_H = 8, 5  # H=5 → encoder's row%5 filter cycle hits all 5 filters
 
 
-def _bmp_bytes_for(mid: int, frame: int = 0):
-    """Logical pixel byte i = (mid*31 + frame*97 + i) % 256."""
-    import numpy as np
-
-    i = np.arange(BMP_H * BMP_W * 3, dtype=np.int64)
-    return ((mid * 31 + frame * 97 + i) % 256).astype(np.uint8).reshape(BMP_H, BMP_W, 3)
-
-
 def _png_pixels_for(mid: int):
-    """Logical pixel byte i = (mid*17 + i*5) % 256 (distinct from BMP's)."""
+    """Logical pixel byte i = (mid*17 + i*5) % 256."""
     import numpy as np
 
     i = np.arange(PNG_H * PNG_W * 3, dtype=np.int64)
     return ((mid * 17 + i * 5) % 256).astype(np.uint8).reshape(PNG_H, PNG_W, 3)
 
 
-def _wav_samples_for(mid: int):
-    """Sample i = ((mid*7 + i*13) % 65536) - 32768."""
-    import numpy as np
-
-    i = np.arange(WAV_N, dtype=np.int64)
-    return (((mid * 7 + i * 13) % 65536) - 32768).astype(np.int16)
-
-
-def synth_media(ids: DataFrame, id_col: str, kind: str) -> DataFrame:
-    """(id) → MEDIA_SCHEMA rows with a real encoded payload of ``kind``
-    (image = BMP, audio = WAV, video = VIDEO_FRAMES concatenated BMPs)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                if kind == "image":
-                    payload = encode_bmp(_bmp_bytes_for(mid))
-                    meta = ("bmp", BMP_W, BMP_H, None, None)
-                elif kind == "png":
-                    payload = encode_png(_png_pixels_for(mid))
-                    meta = ("png", PNG_W, PNG_H, None, None)
-                elif kind == "audio":
-                    payload = encode_wav(_wav_samples_for(mid), WAV_RATE)
-                    meta = ("wav", None, None, WAV_RATE, None)
-                elif kind == "video":
-                    payload = b"".join(
-                        encode_bmp(_bmp_bytes_for(mid, f)) for f in range(VIDEO_FRAMES)
-                    )
-                    meta = ("bmps", BMP_W, BMP_H, None, VIDEO_FRAMES)
-                else:
-                    raise ValueError(f"unknown kind {kind!r}")
-                rows.append((mid, kind, payload, meta))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
-
-    return ids.select(id_col).mapInPandas(kernel, schema=MEDIA_SCHEMA)
+def synth_png_media(ids: DataFrame, id_col: str) -> DataFrame:
+    """(id) → MEDIA_SCHEMA rows with a real PNG payload of
+    :func:`_png_pixels_for` (kind 'png', dims in meta)."""
+    return _synth(
+        ids,
+        id_col,
+        lambda mid: (
+            "png", encode_png(_png_pixels_for(mid)), ("png", PNG_W, PNG_H, None, None)
+        ),
+    )
 
 
 def decode_png_stats(media: DataFrame) -> DataFrame:
@@ -391,23 +324,15 @@ def decode_png_stats(media: DataFrame) -> DataFrame:
     payload, features over the logical pixel bytes."""
     import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                px = decode_png(bytes(payload))
-                flat = px.reshape(-1).astype(np.int64)
-                rows.append(
-                    (int(mid), px.shape[1], px.shape[0], flat.size,
-                     int(flat.sum()), int(flat[0::3].sum()))
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "n_units", "byte_sum", "c0_sum"]
-            )
+    def stats(payload: bytes):
+        px = decode_png(payload)
+        flat = px.reshape(-1).astype(np.int64)
+        return (px.shape[1], px.shape[0], flat.size, int(flat.sum()), int(flat[0::3].sum()))
 
-    return media.filter(F.col("kind") == "png").select("media_id", "payload").mapInPandas(
-        kernel,
-        schema="media_id long, width int, height int, n_units int, byte_sum long, c0_sum long",
+    return _probe(
+        media.filter(F.col("kind") == "png"),
+        stats,
+        "media_id long, width int, height int, n_units int, byte_sum long, c0_sum long",
     )
 
 
@@ -693,18 +618,15 @@ def synth_avif_media(ids: DataFrame, id_col: str) -> DataFrame:
     """(id) → MEDIA_SCHEMA rows cycling the avif/heic brands by ``id % 2``
     with per-id dims (``_probe_dims_for`` — the shared formula); meta dims
     stay NULL, so the probe must read them from the payload."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                w, h = _probe_dims_for(mid)
-                payload = _avif_header_bytes(w, h, (b"avif", b"heic")[mid % 2])
-                rows.append((mid, "image", payload, (None, None, None, None, None)))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
-
-    return ids.select(id_col).mapInPandas(kernel, schema=MEDIA_SCHEMA)
+    return _synth(
+        ids,
+        id_col,
+        lambda mid: (
+            "image",
+            _avif_header_bytes(*_probe_dims_for(mid), (b"avif", b"heic")[mid % 2]),
+            (None, None, None, None, None),
+        ),
+    )
 
 
 def synth_webp_media(ids: DataFrame, id_col: str) -> DataFrame:
@@ -714,18 +636,15 @@ def synth_webp_media(ids: DataFrame, id_col: str) -> DataFrame:
     the SAME formula as the jpeg/png/gif corpus, so one oracle covers
     both probes). meta dims stay NULL: the only place the dimensions
     exist is inside the payload bytes."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                w, h = _probe_dims_for(mid)
-                payload = _webp_header_bytes(w, h, ("vp8", "vp8l", "vp8x")[mid % 3])
-                rows.append((mid, "image", payload, ("webp", None, None, None, None)))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
-
-    return ids.select(id_col).mapInPandas(kernel, schema=MEDIA_SCHEMA)
+    return _synth(
+        ids,
+        id_col,
+        lambda mid: (
+            "image",
+            _webp_header_bytes(*_probe_dims_for(mid), ("vp8", "vp8l", "vp8x")[mid % 3]),
+            ("webp", None, None, None, None),
+        ),
+    )
 
 
 # --- audio metadata probe (WAV fmt chunk / FLAC STREAMINFO / MP3 frame) ---
@@ -884,21 +803,15 @@ def synth_ogg_media(ids: DataFrame, id_col: str) -> DataFrame:
     SAME stream-parameter formulas as the wav/flac corpus (sample rate
     ``8000 + (id%100)*80``, channels ``1 + id%2``) living only in the
     payload bytes."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                payload = _ogg_header_bytes(
-                    ("opus", "vorbis")[mid % 2],
-                    8000 + (mid % 100) * 80,
-                    1 + mid % 2,
-                )
-                rows.append((mid, "audio", payload, (None, None, None, None, None)))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
-
-    return ids.select(id_col).mapInPandas(kernel, schema=MEDIA_SCHEMA)
+    return _synth(
+        ids,
+        id_col,
+        lambda mid: (
+            "audio",
+            _ogg_header_bytes(("opus", "vorbis")[mid % 2], 8000 + (mid % 100) * 80, 1 + mid % 2),
+            (None, None, None, None, None),
+        ),
+    )
 
 
 def synth_audio_meta_media(ids: DataFrame, id_col: str) -> DataFrame:
@@ -910,43 +823,25 @@ def synth_audio_meta_media(ids: DataFrame, id_col: str) -> DataFrame:
     ID3v2 prefix so the tag-skip path is exercised)."""
     import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                ch = 1 + mid % 2
-                fmt = ("wav", "flac", "mp3")[mid % 3]
-                if fmt == "wav":
-                    payload = encode_wav(
-                        np.zeros(4, dtype=np.int16), 8000 + (mid % 100) * 80, ch
-                    )
-                elif fmt == "flac":
-                    payload = _flac_header_bytes(8000 + (mid % 100) * 80, ch)
-                else:
-                    payload = _mp3_header_bytes((mid // 3) % 3, ch, (mid // 3) % 2 == 1)
-                rows.append((mid, "audio", payload, (fmt, None, None, None, None)))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
+    def media_of(mid: int):
+        ch = 1 + mid % 2
+        fmt = ("wav", "flac", "mp3")[mid % 3]
+        if fmt == "wav":
+            payload = encode_wav(np.zeros(4, dtype=np.int16), 8000 + (mid % 100) * 80, ch)
+        elif fmt == "flac":
+            payload = _flac_header_bytes(8000 + (mid % 100) * 80, ch)
+        else:
+            payload = _mp3_header_bytes((mid // 3) % 3, ch, (mid // 3) % 2 == 1)
+        return ("audio", payload, (fmt, None, None, None, None))
 
-    return ids.select(id_col).mapInPandas(kernel, schema=MEDIA_SCHEMA)
+    return _synth(ids, id_col, media_of)
 
 
 def probe_audio(media: DataFrame) -> DataFrame:
     """(media_id, format, sample_rate, n_channels) via
     :func:`probe_audio_meta` over payload headers."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                fmt, sr, ch = probe_audio_meta(bytes(payload))
-                rows.append((int(mid), fmt, sr, ch))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "format", "sample_rate", "n_channels"]
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, schema="media_id long, format string, sample_rate int, n_channels int"
+    return _probe(
+        media, probe_audio_meta, "media_id long, format string, sample_rate int, n_channels int"
     )
 
 
@@ -1051,38 +946,24 @@ def synth_video_meta_media(ids: DataFrame, id_col: str) -> DataFrame:
     are per-id formulas living only in the payload (meta stays NULL):
     timescale 600 (classic QuickTime), duration units
     ``600 + (id*7) % 36000``, dims ``320 + id%1280`` × ``180 + id%720``."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                payload = _mp4_header_bytes(
-                    600, 600 + (mid * 7) % 36000, 320 + mid % 1280, 180 + mid % 720
-                )
-                rows.append((mid, "video", payload, ("mp4", None, None, None, None)))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
-
-    return ids.select(id_col).mapInPandas(kernel, schema=MEDIA_SCHEMA)
+    return _synth(
+        ids,
+        id_col,
+        lambda mid: (
+            "video",
+            _mp4_header_bytes(600, 600 + (mid * 7) % 36000, 320 + mid % 1280, 180 + mid % 720),
+            ("mp4", None, None, None, None),
+        ),
+    )
 
 
 def probe_video(media: DataFrame) -> DataFrame:
     """(media_id, format, duration_ms, width, height) via
     :func:`probe_video_meta` over payload box structure."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                fmt, dur, w, h = probe_video_meta(bytes(payload))
-                rows.append((int(mid), fmt, dur, w, h))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "format", "duration_ms", "width", "height"]
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        kernel,
-        schema="media_id long, format string, duration_ms long, width int, height int",
+    return _probe(
+        media,
+        probe_video_meta,
+        "media_id long, format string, duration_ms long, width int, height int",
     )
 
 
@@ -1090,18 +971,7 @@ def probe_dims(media: DataFrame) -> DataFrame:
     """(media_id, format, width, height) via :func:`probe_image_dims` over
     payload headers — an Arrow-batched kernel that reads O(64) bytes per
     row no matter the payload size."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                fmt, w, h = probe_image_dims(bytes(payload))
-                rows.append((int(mid), fmt, w, h))
-            yield pd.DataFrame(rows, columns=["media_id", "format", "width", "height"])
-
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, schema="media_id long, format string, width int, height int"
-    )
+    return _probe(media, probe_image_dims, "media_id long, format string, width int, height int")
 
 
 # --- EXIF orientation probe (JPEG APP1 → TIFF IFD0 walk, both endians) ---
@@ -1141,15 +1011,9 @@ def synth_exif_media(ids: DataFrame, id_col: str) -> DataFrame:
         exif = b"Exif\x00\x00" + tiff + ifd
         return b"\xff\xd8" + b"\xff\xe1" + struct.pack(">H", len(exif) + 2) + exif + b"\xff\xd9"
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (int(mid), "image", _payload(int(mid)), ("jpeg", None, None, None, None))
-                for mid in pdf[id_col]
-            ]
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
-
-    return ids.select(id_col).mapInPandas(kernel, schema=MEDIA_SCHEMA)
+    return _synth(
+        ids, id_col, lambda mid: ("image", _payload(mid), ("jpeg", None, None, None, None))
+    )
 
 
 def probe_exif(buf: bytes) -> tuple[str | None, int | None, int | None, int | None]:
@@ -1228,18 +1092,8 @@ def probe_exif(buf: bytes) -> tuple[str | None, int | None, int | None, int | No
 def probe_exif_meta(media: DataFrame) -> DataFrame:
     """(media_id, byte_order, orientation, width, height) via
     :func:`probe_exif` — Arrow-batched, O(header) bytes per row."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                order, orient, w, h = probe_exif(bytes(payload))
-                rows.append((int(mid), order, orient, w, h))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "byte_order", "orientation", "width", "height"]
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        kernel,
-        schema="media_id long, byte_order string, orientation int, width int, height int",
+    return _probe(
+        media,
+        probe_exif,
+        "media_id long, byte_order string, orientation int, width int, height int",
     )

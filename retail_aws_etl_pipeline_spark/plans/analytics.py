@@ -16,11 +16,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from retail_aws_etl_pipeline_spark.functions.numeric import clean_currency
+from retail_aws_etl_pipeline_spark.functions.numeric import clean_currency_sql
 from retail_aws_etl_pipeline_spark.functions.timestamps import (
     EXTENDED_PATTERNS,
     REFERENCE_PATTERNS,
-    parse_timestamp,
+    parse_timestamp_sql,
 )
 from retail_aws_etl_pipeline_spark.plans.queries import (
     DEC,
@@ -280,7 +280,8 @@ def currency_clean_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     dirty = F.concat(F.lit("$"), F.format_number(F.col("event_id") * 13, 0), F.lit(".25"))
     return (
         t["events"]
-        .select("event_id", clean_currency(dirty).alias("cleaned"))
+        .select("event_id", dirty.alias("dirty"))
+        .selectExpr("event_id", f"{clean_currency_sql('dirty')} AS cleaned")
         .orderBy("event_id")
     )
 
@@ -308,9 +309,9 @@ def timestamp_parse_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id") % 3 == 0, F.date_format("ts", "MM/dd/yyyy HH:mm")
     ).otherwise(F.date_format("ts", "yyyy-MM-dd"))
     out = ev.select(
-        "event_id",
-        F.date_format("ts", "MM/dd/yyyy HH:mm").alias("raw"),
-        parse_timestamp(raw).alias("parsed"),
+        "event_id", F.date_format("ts", "MM/dd/yyyy HH:mm").alias("raw"), raw.alias("raw_in")
+    ).select(
+        "event_id", "raw", F.expr(parse_timestamp_sql("raw_in", REFERENCE_PATTERNS)).alias("parsed")
     )
     return out.orderBy("event_id")
 
@@ -417,8 +418,8 @@ def timestamp_parse_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.date_format("ts", "dd-MM-yy HH:mm"))
     )
     base = t["events"].select("ts", fmt_id.alias("fmt_id"), raw.alias("raw"))
-    ref = parse_timestamp(F.col("raw"), REFERENCE_PATTERNS)
-    ext = parse_timestamp(F.col("raw"), EXTENDED_PATTERNS)
+    ref = F.expr(parse_timestamp_sql("raw", REFERENCE_PATTERNS))
+    ext = F.expr(parse_timestamp_sql("raw", EXTENDED_PATTERNS))
     expected = F.when(
         F.col("fmt_id") == 0, F.date_trunc("second", F.col("ts"))
     ).otherwise(F.date_trunc("minute", F.col("ts")))

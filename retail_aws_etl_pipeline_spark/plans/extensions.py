@@ -446,7 +446,7 @@ def png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_parts=PY_KERNEL_MAX_PARTS,
         keys=["doc_id"],
     )
-    return MM.decode_png_stats(MM.synth_media(ids, "doc_id", "png")).orderBy("media_id")
+    return MM.decode_png_stats(MM.synth_png_media(ids, "doc_id")).orderBy("media_id")
 
 
 @register_extra(

@@ -31,11 +31,12 @@ task — the same contract any WARC reader has.
 from __future__ import annotations
 
 import gzip
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from retail_aws_etl_pipeline_spark.operators.multimodal import map_rows
 
 #: Parsed-record schema (body column appended when include_body=True).
 WARC_RECORD_SCHEMA = (
@@ -146,32 +147,25 @@ def parse_warc_records(shards: DataFrame, include_body: bool = False) -> DataFra
         ", block binary, payload binary" if include_body else ""
     )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in schema.split(", ")]
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                for rec in iter_warc_records(bytes(content)):
-                    row = [
-                        path,
-                        rec["record_idx"],
-                        rec["record_id"],
-                        rec["warc_type"],
-                        rec["target_uri"],
-                        rec["content_type"],
-                        rec["content_length"],
-                        rec["http_status"],
-                        rec["payload_length"],
-                    ]
-                    if include_body:
-                        block = rec["block"]
-                        row.append(block)
-                        pl = rec["payload_length"]
-                        row.append(block[len(block) - pl :] if pl is not None else block)
-                    rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
+    def records(path, content):
+        for rec in iter_warc_records(bytes(content)):
+            row = (
+                path,
+                rec["record_idx"],
+                rec["record_id"],
+                rec["warc_type"],
+                rec["target_uri"],
+                rec["content_type"],
+                rec["content_length"],
+                rec["http_status"],
+                rec["payload_length"],
+            )
+            if include_body:
+                block, pl = rec["block"], rec["payload_length"]
+                row += (block, block[len(block) - pl :] if pl is not None else block)
+            yield row
 
-    return shards.select("path", "content").mapInPandas(kernel, schema=schema)
+    return map_rows(shards, ["path", "content"], records, schema)
 
 
 # --- synthetic proof corpus (id-formula discipline, never touching disk) ---

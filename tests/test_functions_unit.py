@@ -9,21 +9,17 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from retail_aws_etl_pipeline_spark.functions.hashing import (
-    business_row_hash,
-    business_row_hash_sql,
-)
+from retail_aws_etl_pipeline_spark.functions.hashing import business_row_hash_sql
 from retail_aws_etl_pipeline_spark.functions.numeric import (
-    clean_currency,
+    _CURRENCY_STEPS,
+    _QUANTITY_PATTERN,
     clean_currency_sql,
-    clean_quantity,
     clean_quantity_sql,
 )
 from retail_aws_etl_pipeline_spark.functions.sqltext import sql_lit
 from retail_aws_etl_pipeline_spark.functions.timestamps import (
     EXTENDED_PATTERNS,
     REFERENCE_PATTERNS,
-    parse_timestamp,
     parse_timestamp_sql,
 )
 from retail_aws_etl_pipeline_spark.schema import build_index_map, normalize_header_token
@@ -152,7 +148,7 @@ def _parse_with(spark, values, patterns):
     df = spark.createDataFrame([(v,) for v in values], ["ts_raw"])
     return [
         r["parsed"]
-        for r in df.select(parse_timestamp("ts_raw", patterns).alias("parsed")).collect()
+        for r in df.select(F.expr(parse_timestamp_sql("ts_raw", patterns)).alias("parsed")).collect()
     ]
 
 
@@ -186,10 +182,10 @@ def test_cascade_never_raises(spark, text):
     assert len(got) == 1
 
 
-#: Strings that probe the SQL-text cascade's escaping and its regex gates:
-#: every format of both pattern sets, impossible dates, empty, quote and
-#: backslash characters, a trailing newline (``$`` matches before it),
-#: non-ASCII digits and AM/PM forms.
+#: Strings that probe the cascade's regex gates: every format of both
+#: pattern sets, impossible dates, empty, quote and backslash characters, a
+#: trailing newline (``$`` matches before it), non-ASCII digits and AM/PM
+#: forms.
 ADVERSARIAL_TS = [
     *[c[0] for c in TS_CASES],
     "2025-06-12T05:03:38", "07-12-24 20:23", "09/03/2025 06:28AM", "10/18/2025 01:55PM",
@@ -201,38 +197,33 @@ ADVERSARIAL_TS = [
 
 
 @pytest.mark.parametrize("patterns", [REFERENCE_PATTERNS, EXTENDED_PATTERNS], ids=["ref", "ext"])
-def test_sql_text_cascade_matches_column_cascade(spark, patterns):
-    """The SQL-text cascade the lake path parses and the Column cascade
-    give the same value on every string."""
-    df = spark.createDataFrame([(v,) for v in ADVERSARIAL_TS], "ts_raw string")
-    rows = df.select(
-        "ts_raw",
-        F.expr(parse_timestamp_sql("ts_raw", patterns)).alias("sql"),
-        parse_timestamp(F.col("ts_raw"), patterns).alias("col"),
-    ).collect()
-    assert [(r["ts_raw"], r["sql"]) for r in rows] == [(r["ts_raw"], r["col"]) for r in rows]
-    assert sum(r["sql"] is not None for r in rows) >= 10  # the gates do admit rows
+def test_cascade_on_adversarial_strings(spark, patterns):
+    """Every adversarial string parses or nulls without raising, and the
+    regex gates do admit rows."""
+    got = _parse_with(spark, ADVERSARIAL_TS, patterns)
+    assert len(got) == len(ADVERSARIAL_TS)
+    assert sum(v is not None for v in got) >= 10
 
 
-def test_sql_text_cleaners_and_hash_match_column_forms(spark):
-    """The SQL-text cleaners and row hash equal their Column forms."""
-    values = ["$1,413.15", "(5.00)", "N/A", "", "-", "--", "12 pcs", "1.0E-5", "'", "\\",
-              "(1)(2)", "₹12.50", None]
-    df = spark.createDataFrame([(v, v) for v in values], "a string, b string")
-    got = df.select(
-        F.expr(clean_currency_sql("a")).alias("c_sql"), clean_currency("a").alias("c_col"),
-        F.expr(clean_quantity_sql("a", "long")).alias("q_sql"),
-        clean_quantity("a", "long").alias("q_col"),
-        F.expr(business_row_hash_sql(["a", "b"])).alias("h_sql"),
-        business_row_hash(["a", "b"]).alias("h_col"),
-    ).collect()
-    for r in got:
-        assert (r["c_sql"], r["q_sql"], r["h_sql"]) == (r["c_col"], r["q_col"], r["h_col"]), r
+def test_row_hash_is_md5_of_joined_strings(spark):
+    """The row hash is md5 hex of the '||'-joined strings, NULL as ''."""
+    import hashlib
+
+    rows = [("$1,413.15", "(5.00)"), ("'", "\\"), (None, "N/A"), ("", None), (None, None),
+            ("a||b", "日本")]
+    df = spark.createDataFrame(rows, "a string, b string")
+    got = [r["h"] for r in df.select(F.expr(business_row_hash_sql(["a", "b"])).alias("h")).collect()]
+    want = [hashlib.md5(f"{a or ''}||{b or ''}".encode()).hexdigest() for a, b in rows]
+    assert got == want
 
 
 def test_sql_lit_round_trips_through_the_parser(spark):
-    """Every string the escaping helper emits parses back to itself."""
+    """Every string the escaping helper emits parses back to itself,
+    including every regex and format the cleaners and both timestamp
+    pattern sets splice into SQL text."""
     values = ["'", "\\", "\\'", "'\\", "a'b\\c", "\\u0041", "日本", "%_", "\n", "--", "/*"]
+    values += [v for pair in REFERENCE_PATTERNS + EXTENDED_PATTERNS + _CURRENCY_STEPS for v in pair]
+    values.append(_QUANTITY_PATTERN)
     row = spark.range(1).select(
         *[F.expr(sql_lit(v)).alias(f"v{i}") for i, v in enumerate(values)]
     ).first()
@@ -252,15 +243,26 @@ def test_clean_currency_and_quantity(spark):
         ("12.5", 12.5),
         ("USD 99.99", 99.99),
         (None, None),
+        ("-", None),
+        ("--", None),
+        ("1.0E-5", None),
+        ("(1)(2)", None),
+        ("'", None),
+        ("\\", None),
+        ("₹12.50", 12.5),
     ]
     df = spark.createDataFrame([(v,) for v, _ in cases], ["x"])
-    got = [r["c"] for r in df.select(clean_currency("x").alias("c")).collect()]
+    got = [r["c"] for r in df.select(F.expr(clean_currency_sql("x")).alias("c")).collect()]
     assert got == [w for _, w in cases]
 
-    qcases = [("3", 3), ("12 pcs", 12), ("N/A", None), ("", None), ("-2", -2)]
+    qcases = [("3", 3), ("12 pcs", 12), ("N/A", None), ("", None), ("-2", -2), ("-", None),
+              ("$1,413.15", 141315), ("1.0E-5", None), (None, None)]
     dfq = spark.createDataFrame([(v,) for v, _ in qcases], ["x"])
-    gotq = [r["c"] for r in dfq.select(clean_quantity("x").alias("c")).collect()]
+    gotq = [r["c"] for r in dfq.select(F.expr(clean_quantity_sql("x")).alias("c")).collect()]
     assert gotq == [w for _, w in qcases]
+    long_q = dfq.select(F.expr(clean_quantity_sql("x", "long")).alias("c"))
+    assert long_q.schema["c"].dataType.typeName() == "long"
+    assert [r["c"] for r in long_q.collect()] == gotq
 
 
 @given(st.floats(min_value=-1e6, max_value=1e6, allow_nan=False).map(lambda f: round(f, 2)))
@@ -269,7 +271,7 @@ def test_currency_roundtrip(spark, value):
     # formatting a 2dp number with $ and thousands separators round-trips
     formatted = "${:,.2f}".format(value) if value >= 0 else "(${:,.2f})".format(-value)
     df = spark.createDataFrame([(formatted,)], ["x"])
-    got = df.select(clean_currency("x").alias("c")).collect()[0]["c"]
+    got = df.select(F.expr(clean_currency_sql("x")).alias("c")).collect()[0]["c"]
     assert got == pytest.approx(value, abs=1e-9)
 
 

@@ -19,7 +19,7 @@ def test_png_header_walk_matches_full_decode_dims(spark):
         .select("doc_id")
         .limit(50)
     )
-    media = MM.synth_media(ids, "doc_id", "png").persist()
+    media = MM.synth_png_media(ids, "doc_id").persist()
     try:
         probed = {
             r.media_id: (r.format, r.width, r.height)

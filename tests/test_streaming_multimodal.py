@@ -124,27 +124,45 @@ def test_byte_histogram_kernel(spark):
     assert hist == dict(expected)
 
 
-def test_bmp_roundtrip_exact():
-    """encode→decode identity across widths that do and don't need row
-    padding, plus rejection of non-BMP and top-down negative-height decode."""
-    import numpy as np
-    import pytest as _pt
+def test_map_rows_one_to_many_and_empty_batches(spark):
+    """``fn`` may return no rows, one or many per input row; a partition
+    whose rows all map to nothing yields an empty batch."""
+    ids = spark.range(0, 5, 1, numPartitions=5)  # partition 0 holds id 0 alone
+    got = MM.map_rows(ids, ["id"], lambda i: [(int(i), k) for k in range(int(i))], "id long, k int")
+    assert got.schema.simpleString() == "struct<id:bigint,k:int>"
+    assert sorted(map(tuple, got.collect())) == [(i, k) for i in range(5) for k in range(i)]
 
-    rng = np.random.default_rng(7)
-    for w, h in [(6, 4), (4, 4), (5, 3), (1, 1), (7, 2)]:
-        px = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-        buf = MM.encode_bmp(px)
-        assert int.from_bytes(buf[2:6], "little") == len(buf)  # file-size field
-        out = MM.decode_bmp(buf)
-        assert out.shape == (h, w, 3)
-        assert (out == px).all()
-    with _pt.raises(ValueError, match="BM magic"):
-        MM.decode_bmp(b"JUNKJUNKJUNKJUNK")
-    # top-down variant (negative height) decodes without the row flip
-    px = rng.integers(0, 256, size=(2, 4, 3), dtype=np.uint8)
-    buf = bytearray(MM.encode_bmp(px[::-1]))  # stored rows == logical rows
-    buf[22:26] = (-2).to_bytes(4, "little", signed=True)
-    assert (MM.decode_bmp(bytes(buf)) == px).all()
+
+def _map_in_pandas_sites() -> list[str]:
+    """``module.function`` of every ``.mapInPandas(`` call in the package,
+    once per call."""
+    import ast
+    from pathlib import Path
+
+    sites: list[str] = []
+
+    def visit(node: ast.AST, scope: tuple[str, ...]) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            scope = scope + (node.name,)
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "mapInPandas"
+        ):
+            sites.append(".".join(scope))
+        for child in ast.iter_child_nodes(node):
+            visit(child, scope)
+
+    for path in sorted(Path(MM.__file__).parents[1].rglob("*.py")):
+        visit(ast.parse(path.read_text(), str(path)), (path.stem,))
+    return sites
+
+
+def test_map_in_pandas_only_through_map_rows():
+    """Every Arrow-batched row kernel in the package runs through
+    ``multimodal.map_rows``: a new hand-written ``mapInPandas`` loop fails
+    here; pass a per-row function to ``map_rows`` instead."""
+    assert _map_in_pandas_sites() == ["multimodal.map_rows"]
 
 
 def test_png_roundtrip_all_filters():
@@ -184,12 +202,12 @@ def test_png_roundtrip_all_filters():
 
 
 def test_png_decode_kernel(spark):
-    """synth_media('png') payloads through decode_png_stats: features match
+    """synth_png_media payloads through decode_png_stats: features match
     the closed-form pixel formula for every id."""
     ids = spark.range(0, 40).withColumnRenamed("id", "doc_id")
     got = {
         r["media_id"]: r
-        for r in MM.decode_png_stats(MM.synth_media(ids, "doc_id", "png")).collect()
+        for r in MM.decode_png_stats(MM.synth_png_media(ids, "doc_id")).collect()
     }
     n = MM.PNG_H * MM.PNG_W * 3
     for mid in range(40):
