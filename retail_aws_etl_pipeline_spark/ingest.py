@@ -10,7 +10,8 @@ library entry point with the same zones and semantics:
    Unlike the reference Lambda (SURVEY.md §1.4 inconsistency), the header
    check uses the SAME normalization + synonym pass as row-level parsing.
 2. row-level quality routing via ``operators.validate.split_quality``.
-3. sinks: silver parquet partitioned by ``date`` (append, K1); rejects as
+3. sinks: silver partitioned by ``date`` (an append under the lake's
+   commit protocol, K1); rejects as
    JSON-lines (machine, K3) + single coalesced CSV (analyst, K4); summary
    metrics JSON (K5, replaces SNS publish with a returned/logged dict).
 4. archive the input under a lineage name (K6).
@@ -31,12 +32,13 @@ import json
 import logging
 import os
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from retail_aws_etl_pipeline_spark.lake import LakeLayout, lineage_name, move_file, new_run_id
 from retail_aws_etl_pipeline_spark.operators.validate import QualitySplit, split_quality
-from retail_aws_etl_pipeline_spark.schema import SILVER_SCHEMA, build_index_map, missing_required
+from retail_aws_etl_pipeline_spark.schema import build_index_map, missing_required
 from retail_aws_etl_pipeline_spark.sources.reader import read_flexible_csv
 from retail_aws_etl_pipeline_spark.sources.sniff import sniff_delimiter, sniff_text
 
@@ -85,56 +87,39 @@ def _reject_file(
     return IngestResult("file_rejected", source_file, run_id, file_errors=file_errors)
 
 
-def purge_run_from_silver(spark: SparkSession, lake: LakeLayout, run_id: str) -> int:
-    """Remove any task-committed rows of ``run_id`` from silver.
-
-    The session's committer (fileoutputcommitter v2) makes task output
-    visible at TASK commit, so a silver append that fails mid-job can leave
-    some of its rows behind. When the source file is then quarantined
-    (never retried), those rows would flow into gold as real transactions
-    from a file the lake says was rejected. This rewrites exactly the date
-    partitions containing the failed run's rows (dynamic partition
-    overwrite), deleting empty partitions outright; rows of other runs in
-    those partitions are preserved. Returns the number of rows purged.
-
-    Failure-path only — the scan to locate debris costs one silver read,
-    paid exclusively when an ingest job has already crashed.
-    """
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from retail_aws_etl_pipeline_spark.operators.compact import _read_table, list_date_partitions
-
-    present = list_date_partitions(lake.processed)
-    if not present:
-        return 0  # no silver partition yet → nothing committed
-    silver = _read_table(spark, lake.processed, SILVER_SCHEMA, present[0])
-    if "ingest_run_id" not in silver.columns:
-        return 0
-    debris = silver.filter(F.col("ingest_run_id") == run_id)
-    dates = [r["date"] for r in debris.select("date").distinct().collect()]
-    if not dates:
-        return 0
-    n_debris = debris.count()
-    keep = silver.filter(F.col("date").isin(dates)).filter(
-        F.col("ingest_run_id") != run_id
-    )
-    # dynamic overwrite only rewrites partitions PRESENT in the new data —
-    # dates whose every row came from the failed run must be deleted by path
-    keep_dates = {r["date"] for r in keep.select("date").distinct().collect()}
-    if keep_dates:
+def _write_sinks(
+    spark: SparkSession, lake: LakeLayout, splits: list[QualitySplit], write_reject_csv: bool
+) -> None:
+    """The sinks of one or more routed files: their good rows as ONE silver
+    append through the lake's commit protocol, then their rejects as
+    JSON lines (machine, K3) and one coalesced CSV (analyst, K4)."""
+    # repartition by the partition key first: otherwise every task holds
+    # rows of every date and a D-date file writes T×D small files
+    # (observed 32×550 on the bench); this way each date lands in one
+    # task → one file per date. The partition COUNT is explicit: with a
+    # bare repartition("date") AQE coalesces the small shuffle to a
+    # single task, which then creates every date directory serially
+    # (~16 ms each — measured 9 s for 550 dates); pinning N keeps the
+    # directory/file creation spread across the cluster.
+    #
+    # The silver write goes FIRST: it is the action that fills each
+    # labeled frame's cache and fires its count Observation, so the
+    # class counts (and the reject-write decision below) cost zero extra
+    # jobs and both reject sinks read the cache.
+    good = reduce(DataFrame.unionByName, [s.good for s in splits])
+    lake.silver_table.append(good.repartition(spark.sparkContext.defaultParallelism, "date"))
+    rejects = [s.rejects for s in splits if s.resolve_counts()["reject_rows"] > 0]
+    if not rejects:
+        return
+    rej = reduce(DataFrame.unionByName, rejects)
+    rej.write.mode("append").json(lake.rejected("data_quality/json"))
+    if write_reject_csv:
         (
-            keep.repartition(spark.sparkContext.defaultParallelism, "date")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("date")
-            .parquet(lake.processed)
+            rej.coalesce(1)
+            .write.mode("append")
+            .option("header", True)
+            .csv(lake.rejected("data_quality/csv"))
         )
-    for d in set(dates) - keep_dates:
-        shutil.rmtree(os.path.join(lake.processed, f"date={d}"), ignore_errors=True)
-    log.warning("purged %d partial rows of failed run %s from silver", n_debris, run_id)
-    return n_debris
 
 
 def ingest_file(
@@ -146,21 +131,14 @@ def ingest_file(
     ingest_ts=None,
     archive: bool = True,
     write_reject_csv: bool = True,
-    commit_protocol: str = "direct",
 ) -> IngestResult:
-    """Ingest one raw delimited file into the lake's silver zone.
+    """Ingest one raw delimited file into the lake's silver zone, under the
+    lake's commit protocol (``lake.commit``).
 
-    ``commit_protocol="manifest"`` routes the silver append through
-    :class:`~retail_aws_etl_pipeline_spark.lake_manifest.ManifestedTable`:
-    a crashed write publishes NOTHING (readers stay at the pre-write
-    snapshot) so the direct path's post-crash purge becomes a vacuum of
-    never-published staging files. Use the same protocol for compaction
-    (``compact_pending(commit_protocol="manifest")``) — readers of a
-    manifested zone must go through its snapshot, and the streaming file
-    source (streams.py) requires the direct layout.
+    A failure after the gate quarantines the file to ``rejected/system``
+    and undoes its silver append (:meth:`~retail_aws_etl_pipeline_spark.lake.LakeTable.undo_append`)
+    before the error propagates.
     """
-    if commit_protocol not in ("direct", "manifest"):
-        raise ValueError(f"commit_protocol must be direct|manifest, got {commit_protocol!r}")
     run_id = ingest_run_id or new_run_id()
     source_file = os.path.basename(path)
 
@@ -172,11 +150,9 @@ def ingest_file(
     # -- 2+3. parse + route + sinks; on ANY failure the input file is
     # quarantined to rejected/system with a reason file and the error
     # re-raised — the reference's K7 intent (glue_job_raw_to_processed.py:
-    # 421-443) with a working rollback: the session committer (v2) makes
-    # task output visible at task commit, so a failed job CAN leave
-    # partial rows in silver; since a quarantined file is never retried,
-    # those rows are purged by run id before the error propagates
-    # (purge_run_from_silver).
+    # 421-443) with a working rollback: since a quarantined file is never
+    # retried, whatever its silver append left behind is undone before the
+    # error propagates (LakeTable.undo_append).
     split: QualitySplit | None = None
     try:
         extracted, meta = read_flexible_csv(spark, path)
@@ -187,35 +163,7 @@ def ingest_file(
             timestamp_patterns=timestamp_patterns,
             ingest_ts=ingest_ts,
         )
-        # repartition by the partition key first: otherwise every task holds
-        # rows of every date and a D-date file writes T×D small files
-        # (observed 32×550 on the bench); this way each date lands in one
-        # task → one file per date. The partition COUNT is explicit: with a
-        # bare repartition("date") AQE coalesces the small shuffle to a
-        # single task, which then creates every date directory serially
-        # (~16 ms each — measured 9 s for 550 dates); pinning N keeps the
-        # directory/file creation spread across the cluster.
-        #
-        # The silver write goes FIRST: it is the action that fills the
-        # labeled frame's cache and fires its count Observation, so the
-        # class counts (and the reject-write decision below) cost zero extra
-        # jobs and both reject sinks read the cache.
-        good_out = split.good.repartition(spark.sparkContext.defaultParallelism, "date")
-        if commit_protocol == "manifest":
-            from retail_aws_etl_pipeline_spark.lake_manifest import ManifestedTable
-
-            ManifestedTable(lake.processed, partition_col="date").append(good_out)
-        else:
-            good_out.write.mode("append").partitionBy("date").parquet(lake.processed)
-        if split.resolve_counts()["reject_rows"] > 0:
-            split.rejects.write.mode("append").json(lake.rejected("data_quality/json"))
-            if write_reject_csv:
-                (
-                    split.rejects.coalesce(1)
-                    .write.mode("append")
-                    .option("header", True)
-                    .csv(lake.rejected("data_quality/csv"))
-                )
+        _write_sinks(spark, lake, [split], write_reject_csv)
     except Exception as exc:
         reject_dir = lake.rejected("system")
         os.makedirs(reject_dir, exist_ok=True)
@@ -225,22 +173,7 @@ def ingest_file(
         with open(os.path.join(reject_dir, f"{dst_name}_reason.json"), "w") as f:
             json.dump({"file": source_file, "error": str(exc)[:2000]}, f)
         try:
-            if commit_protocol == "manifest":
-                # nothing was published — reclaim the crashed commit's
-                # debris: gc_manifests drops an unpointered version file if
-                # the crash hit between claim and pointer flip, then vacuum
-                # reclaims the now-unreferenced staging files (single-
-                # writer, so no in-flight peer commit can be swept)
-                from retail_aws_etl_pipeline_spark.lake_manifest import ManifestedTable
-
-                mt = ManifestedTable(lake.processed, partition_col="date")
-                mt.gc_manifests(keep_versions=None)  # debris only, keep history
-                # explicit 0: ingest is the table's single writer, so the
-                # young debris dir is provably our own crashed commit —
-                # the conservative default window would strand it for an hour
-                mt.vacuum(min_age_seconds=0)
-            else:
-                purge_run_from_silver(spark, lake, run_id)
+            lake.silver_table.undo_append(spark, run_id)
         except Exception as purge_exc:  # keep the original error primary
             log.error("silver purge after failed ingest also failed: %s", purge_exc)
         log.error("ingest failed, file quarantined to rejected/system: %s", exc)
@@ -316,27 +249,7 @@ def ingest_batch(
             )
 
         if entries:
-            good_all = entries[0][3].good
-            for _, _, _, s in entries[1:]:
-                good_all = good_all.unionByName(s.good)
-            good_all.repartition(
-                spark.sparkContext.defaultParallelism, "date"
-            ).write.mode("append").partitionBy("date").parquet(lake.processed)
-            reject_frames = [
-                s.rejects for _, _, _, s in entries if s.resolve_counts()["reject_rows"] > 0
-            ]
-            if reject_frames:
-                rej = reject_frames[0]
-                for r in reject_frames[1:]:
-                    rej = rej.unionByName(r)
-                rej.write.mode("append").json(lake.rejected("data_quality/json"))
-                if write_reject_csv:
-                    (
-                        rej.coalesce(1)
-                        .write.mode("append")
-                        .option("header", True)
-                        .csv(lake.rejected("data_quality/csv"))
-                    )
+            _write_sinks(spark, lake, [s for _, _, _, s in entries], write_reject_csv)
     finally:
         for _, _, _, s in entries:
             for df in s.cached or []:

@@ -1,31 +1,67 @@
-"""Zoned lake layout + file lifecycle on any Hadoop-compatible filesystem.
+"""Zoned lake layout, its commit protocol, and file lifecycle on any
+Hadoop-compatible filesystem.
 
 Replaces the reference's S3 zone conventions and boto3 copy+delete moves
 (docs/s3_layout.md, lambda_validator.py:98-101, glue_job_raw_to_processed.py:64-88,
 398-407) with a filesystem-agnostic layout object and atomic renames.
 
-Atomicity fix for the reference's broken K7 rollback
-(glue_job_raw_to_processed.py:421-443, SURVEY.md §2.1): writes stage into a
-temp directory next to the target and promote via rename, so a failed
-ingest never leaves partial partitions behind. On local/HDFS rename is
-atomic; on object stores a manifest-commit protocol would replace this —
-the staging seam is where it plugs in.
+The commit protocol of the date-partitioned silver and gold zones is a
+deployment setting of the lake, ``LakeLayout(root, commit=...)``, chosen by
+the storage:
+
+- ``"direct"`` (default): hive ``date=`` directories written through
+  Spark's file committer. Rename is atomic on local FS/HDFS, but the
+  session's committer (fileoutputcommitter v2) publishes task output at
+  TASK commit, so a silver append that fails mid-job can leave some rows
+  behind; the undo of a failed append purges them by run id.
+- ``"manifest"``: :class:`~retail_aws_etl_pipeline_spark.lake_manifest.ManifestedTable`,
+  for object stores where rename is copy + delete. Visibility is one
+  atomic pointer update, so a failed append publishes nothing and its
+  undo reclaims the unpublished files.
+
+:class:`LakeTable` is the only code that knows the protocol: every silver
+and gold listing, read, write and rollback goes through it. This is the
+reference's K7 rollback intent (glue_job_raw_to_processed.py:421-443) kept
+on both storages: a zone whose directory holds the other protocol's
+layout raises instead of acknowledging rows no reader can see.
 """
 
 from __future__ import annotations
 
+import logging
 import os
+import re
 import shutil
 import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from retail_aws_etl_pipeline_spark.functions.sqltext import sql_lit
+from retail_aws_etl_pipeline_spark.lake_manifest import MANIFEST_DIR, ManifestedTable
+from retail_aws_etl_pipeline_spark.schema import GOLD_SCHEMA, SILVER_SCHEMA
+
+log = logging.getLogger(__name__)
+
+DATE_PARTITION_RE = re.compile(r"date=(\d{4}-\d{2}-\d{2})$")
+
+COMMIT_PROTOCOLS = ("direct", "manifest")
+
 
 @dataclass(frozen=True)
 class LakeLayout:
-    """Directory layout mirroring docs/s3_layout.md:3-49."""
+    """Directory layout mirroring docs/s3_layout.md:3-49, and the commit
+    protocol (``"direct"`` or ``"manifest"``) of its silver and gold zones."""
 
     root: str
+    commit: str = "direct"
+
+    def __post_init__(self) -> None:
+        if self.commit not in COMMIT_PROTOCOLS:
+            raise ValueError(f"commit must be direct|manifest, got {self.commit!r}")
 
     @property
     def raw(self) -> str:
@@ -54,11 +90,196 @@ class LakeLayout:
     def archive(self, zone: str) -> str:
         return os.path.join(self.root, "archive", zone)
 
+    @property
+    def silver_table(self) -> LakeTable:
+        return LakeTable(self.processed, SILVER_SCHEMA, self.commit)
 
-def lineage_name(source_file: str, ingest_run_id: str, now: datetime | None = None) -> str:
+    @property
+    def gold_table(self) -> LakeTable:
+        return LakeTable(self.gold, GOLD_SCHEMA, self.commit)
+
+
+def list_date_partitions(path: str) -> list[str]:
+    """Sorted date partition values under a hive-layout directory (S6, fixed:
+    the reference's double-escaped regex never matched)."""
+    if not os.path.isdir(path):
+        return []
+    out = []
+    for name in os.listdir(path):
+        m = DATE_PARTITION_RE.search(name)
+        if m and os.path.isdir(os.path.join(path, name)):
+            out.append(m.group(1))
+    return sorted(out)
+
+
+def _in_dates(dates: list[str]) -> str:
+    """``date IN (...)`` over partition values (each matched
+    :data:`DATE_PARTITION_RE`)."""
+    return f"`date` IN ({', '.join(sql_lit(d) for d in dates)})"
+
+
+#: Parquet physical types Spark writes for the lake's column types.
+_PARQUET_KINDS = {
+    "string": "is_string",
+    "int": "is_int32",
+    "bigint": "is_int64",
+    "double": "is_float64",
+    "timestamp": "is_timestamp",
+    "date": "is_date32",
+}
+
+
+def _footer_conforms(partition_dir: str, schema: T.StructType) -> bool:
+    """Whether the first parquet file under ``partition_dir`` holds only
+    columns of ``schema``, each in the physical type Spark writes for it
+    (read on the driver: one footer, no Spark job)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        name = min(n for n in os.listdir(partition_dir) if n.endswith(".parquet"))
+        fields = pq.read_schema(os.path.join(partition_dir, name))
+    except (OSError, ValueError, pa.ArrowException):  # no file, or not parquet
+        return False
+    kinds = {f.name: _PARQUET_KINDS.get(f.dataType.simpleString()) for f in schema.fields}
+    return all(kinds.get(f.name) and getattr(pa.types, kinds[f.name])(f.type) for f in fields)
+
+
+@dataclass(frozen=True)
+class LakeTable:
+    """One date-partitioned zone (silver or gold) under the lake's commit
+    protocol; ``schema`` is the layer's declared schema, which this
+    package's writers produce.
+
+    Every operation first checks that ``root`` holds no layout of the other
+    protocol (``date=`` directories in a manifest zone, ``_manifests/`` in a
+    direct one) and raises ``ValueError`` if it does."""
+
+    root: str
+    schema: T.StructType
+    commit: str
+
+    def _manifest(self) -> ManifestedTable | None:
+        """The zone's manifest table, or None under the direct protocol."""
+        names = os.listdir(self.root) if os.path.isdir(self.root) else []
+        if self.commit == "manifest":
+            stray = sorted(n for n in names if DATE_PARTITION_RE.search(n))
+            if stray:
+                raise ValueError(
+                    f"{self.root} holds direct-layout partitions {stray[:3]}; "
+                    "this lake commits through the manifest"
+                )
+            return ManifestedTable(self.root, partition_col="date")
+        if MANIFEST_DIR in names:
+            raise ValueError(
+                f"{self.root} holds a manifested table; this lake commits direct"
+            )
+        return None
+
+    def partitions(self) -> list[str]:
+        """Sorted date partitions: the manifest's snapshot, or the listing."""
+        table = self._manifest()
+        return table.partitions() if table else list_date_partitions(self.root)
+
+    def read(self, spark: SparkSession, dates: list[str] | None = None) -> DataFrame:
+        """The zone as a DataFrame, only ``dates`` when given (a
+        partition-pruned filter over one read of the root, not one read per
+        partition). When a file of the sampled partition (``dates[0]``, else
+        the first) conforms to ``schema`` the read declares it: no
+        footer-inference job, and a column missing from a file reads as a
+        typed NULL. Otherwise — a table written by hand or by another tool —
+        Spark infers the schema, which also samples one footer and assumes
+        the other files agree."""
+        table = self._manifest()
+        if table is None:
+            sample = dates[0] if dates else next(iter(list_date_partitions(self.root)), None)
+            sample_dir = sample and os.path.join(self.root, f"date={sample}")
+        else:
+            files = sorted(
+                (f["partition"], f["path"])
+                for f in table.snapshot()["files"]
+                if not dates or f["partition"] == dates[0]
+            )
+            sample_dir = files and os.path.dirname(os.path.join(self.root, files[0][1]))
+        schema = self.schema if sample_dir and _footer_conforms(sample_dir, self.schema) else None
+        if table is not None:
+            df = table.read(spark, schema=schema)
+        else:
+            reader = spark.read.option("basePath", self.root)
+            df = (reader.schema(schema) if schema else reader).parquet(self.root)
+        return df.filter(_in_dates(dates)) if dates else df
+
+    def append(self, df: DataFrame) -> None:
+        table = self._manifest()
+        if table:
+            table.append(df)
+        else:
+            df.write.mode("append").partitionBy("date").parquet(self.root)
+
+    def overwrite_partitions(self, df: DataFrame) -> None:
+        """Replace the partitions ``df`` holds; every other partition keeps
+        its files. Dynamic per write, not via the session conf: a static
+        overwrite would drop every partition outside ``df``."""
+        table = self._manifest()
+        if table:
+            table.overwrite_partitions(df)
+        else:
+            (
+                df.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("date")
+                .parquet(self.root)
+            )
+
+    def undo_append(self, spark: SparkSession, run_id: str) -> int:
+        """Undo a failed append of the rows tagged ``ingest_run_id ==
+        run_id``; returns the number of rows removed.
+
+        Manifest: the failed commit published nothing. ``gc_manifests``
+        drops an unpointered version file if the crash hit between claim
+        and pointer flip, then ``vacuum`` reclaims the now-unreferenced
+        staging files. ``min_age_seconds=0`` because ingest is the table's
+        single writer, so the young debris dir is provably its own crashed
+        commit; the conservative default window would strand it for an hour.
+
+        Direct: task-committed rows of the run are visible, and a
+        quarantined file is never retried, so they would flow into gold as
+        transactions of a file the lake says was rejected. This rewrites
+        exactly the date partitions holding the run's rows (dynamic
+        partition overwrite) and deletes partitions it leaves empty; rows of
+        other runs are kept. The scan costs one silver read, paid only after
+        an append has already failed."""
+        table = self._manifest()
+        if table:
+            table.gc_manifests(keep_versions=None)  # debris only, keep history
+            table.vacuum(min_age_seconds=0)
+            return 0
+        if not list_date_partitions(self.root):
+            return 0  # no partition yet → nothing committed
+        rows = self.read(spark)
+        if "ingest_run_id" not in rows.columns:
+            return 0
+        debris = rows.filter(F.col("ingest_run_id") == run_id)
+        dates = [r["date"] for r in debris.select("date").distinct().collect()]
+        if not dates:
+            return 0
+        n_debris = debris.count()
+        keep = rows.filter(F.col("date").isin(dates)).filter(F.col("ingest_run_id") != run_id)
+        # dynamic overwrite only rewrites partitions PRESENT in the new data —
+        # dates whose every row came from the failed run must be deleted by path
+        keep_dates = {r["date"] for r in keep.select("date").distinct().collect()}
+        if keep_dates:
+            self.overwrite_partitions(keep.repartition(spark.sparkContext.defaultParallelism, "date"))
+        for d in set(dates) - keep_dates:
+            shutil.rmtree(os.path.join(self.root, f"date={d}"), ignore_errors=True)
+        log.warning("purged %d partial rows of failed run %s from %s", n_debris, run_id, self.root)
+        return n_debris
+
+
+def lineage_name(source_file: str, ingest_run_id: str) -> str:
     """``<file>_<YYYYMMDDTHHMMSS>_<ingest_run_id>`` archive naming
     (glue_job_raw_to_processed.py:398-400, README.md:74)."""
-    ts = (now or datetime.now(timezone.utc)).strftime("%Y%m%dT%H%M%S")
+    ts = datetime.now(timezone.utc).strftime("%Y%m%dT%H%M%S")
     return f"{source_file}_{ts}_{ingest_run_id}"
 
 
@@ -72,33 +293,3 @@ def move_file(src: str, dst_dir: str, dst_name: str | None = None) -> str:
 
 def new_run_id() -> str:
     return uuid.uuid4().hex[:12]
-
-
-class StagedWrite:
-    """Stage-then-rename commit for a directory write.
-
-    Usage::
-
-        with StagedWrite(final_dir) as stage:
-            df.write.parquet(stage.path)   # or any directory-producing write
-        # on clean exit the staged dir is promoted to final_dir atomically;
-        # on exception it is removed and final_dir is untouched.
-    """
-
-    def __init__(self, final_dir: str):
-        self.final = final_dir
-        parent = os.path.dirname(final_dir.rstrip("/")) or "."
-        os.makedirs(parent, exist_ok=True)
-        self.path = os.path.join(parent, f".staging-{os.path.basename(final_dir)}-{uuid.uuid4().hex[:8]}")
-
-    def __enter__(self) -> "StagedWrite":
-        return self
-
-    def __exit__(self, exc_type, exc, tb) -> bool:
-        if exc_type is not None:
-            shutil.rmtree(self.path, ignore_errors=True)
-            return False
-        if os.path.exists(self.final):
-            shutil.rmtree(self.final)
-        os.replace(self.path, self.final)
-        return False

@@ -1,11 +1,14 @@
 """Object-store-safe table commits: manifest protocol for silver/gold.
 
-The rename-based commit in :mod:`retail_aws_etl_pipeline_spark.lake` is
+The direct commit (Spark's file committer into ``date=`` directories) is
 atomic on local FS/HDFS but NOT on object stores — S3 "rename" is copy +
 delete, and the classic file-output committers can expose partial output
-(reference intent K7, glue_job_raw_to_processed.py:421-443; ROADMAP #3).
-This module implements the standard open-table answer (the same core
-protocol as Delta/Iceberg commit logs, re-expressed minimally):
+(reference intent K7, glue_job_raw_to_processed.py:421-443). A lake built
+as ``LakeLayout(root, commit="manifest")`` commits its silver and gold
+zones through this module instead; :class:`retail_aws_etl_pipeline_spark.lake.LakeTable`
+is the only caller. This module implements the standard open-table answer
+(the same core protocol as Delta/Iceberg commit logs, re-expressed
+minimally):
 
 - **Data files are immutable and written to a unique, unpublished
   directory** ``data/<commit_id>/`` — a crashed write leaves garbage in a
@@ -62,6 +65,7 @@ from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MANIFEST_DIR = "_manifests"
 LATEST = "LATEST"
@@ -136,7 +140,12 @@ class ManifestedTable:
 
     # -- reads -------------------------------------------------------------
 
-    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
+    def read(
+        self,
+        spark: SparkSession,
+        version: int | None = None,
+        schema: StructType | None = None,
+    ) -> DataFrame:
         """A snapshot as a DataFrame — the live one by default, or a
         retained historical ``version`` (time travel; see
         :meth:`gc_manifests` for what is retained). A time-travel read is
@@ -144,6 +153,9 @@ class ManifestedTable:
         immutable and a version's file list never changes after publish —
         only :meth:`vacuum`/:meth:`gc_manifests` retention bounds how far
         back reads can go.
+
+        A ``schema`` is declared on every commit group's read, so no group
+        pays a footer-inference job; without one Spark infers per group.
 
         Files are grouped by commit directory so each group keeps its own
         ``basePath`` (partition column recovery); groups are unioned by
@@ -160,7 +172,8 @@ class ManifestedTable:
         out = None
         for cid, files in sorted(by_commit.items()):
             base = os.path.join(self.root, "data", cid)
-            df = spark.read.option("basePath", base).parquet(*sorted(files))
+            reader = spark.read.option("basePath", base)
+            df = (reader.schema(schema) if schema else reader).parquet(*sorted(files))
             out = df if out is None else out.unionByName(df, allowMissingColumns=True)
         return out
 

@@ -2,9 +2,10 @@
 
 Re-expresses scripts/incremental_auto_compaction.py Spark-first:
 
-- Partition discovery via filesystem listing with a CORRECT date regex —
-  the reference's ``r"date=(\\d{4}-...)"`` double-escapes ``\\d`` inside a
-  raw string and never matches, so its discovery always returned [] and the
+- Partition discovery via filesystem listing with a CORRECT date regex
+  (``lake.list_date_partitions``) — the reference's
+  ``r"date=(\\d{4}-...)"`` double-escapes ``\\d`` inside a raw string and
+  never matches, so its discovery always returned [] and the
   job no-opped (SURVEY.md §2.1 S6). The documented intent
   (docs/gold_job.md:18-19) is implemented.
 - Incremental work selection = processed − gold partition set difference
@@ -15,7 +16,8 @@ Re-expresses scripts/incremental_auto_compaction.py Spark-first:
   the reference's all-null gold date quirk, SURVEY.md §1.5), filter
   ``date IN pending`` (partition-pruned scan), and write with dynamic
   partition overwrite — idempotent per-partition replacement (K2) without
-  hand-built paths.
+  hand-built paths. Listing, read and write go through ``lake.LakeTable``,
+  which applies the lake's commit protocol.
 - Keep-latest dedup (W1): ``row_number`` over ``(date, transaction_id)``
   ordered by ``ingest_ts`` DESC with ``row_hash`` DESC as a deterministic
   tiebreaker (the reference's tie order was arbitrary — SURVEY.md §2.5).
@@ -33,20 +35,18 @@ from __future__ import annotations
 
 import json
 import os
-import re
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from retail_aws_etl_pipeline_spark.functions.hashing import business_row_hash_sql
 from retail_aws_etl_pipeline_spark.functions.numeric import clean_currency_sql, clean_quantity_sql
 from retail_aws_etl_pipeline_spark.functions.sqltext import sql_lit
-from retail_aws_etl_pipeline_spark.lake import LakeLayout
-from retail_aws_etl_pipeline_spark.schema import GOLD_SCHEMA, REVENUE_TOLERANCE, SILVER_SCHEMA
-
-DATE_PARTITION_RE = re.compile(r"date=(\d{4}-\d{2}-\d{2})$")
+# list_date_partitions is re-exported: it was defined here before the lake's
+# commit protocol moved behind lake.LakeTable, and callers import it from here
+from retail_aws_etl_pipeline_spark.lake import LakeLayout, list_date_partitions  # noqa: F401
+from retail_aws_etl_pipeline_spark.schema import REVENUE_TOLERANCE, SILVER_SCHEMA
 
 #: The dedup clock: silver's ``ingest_ts``, or now where it is missing.
 _INGEST_TS_F = "coalesce(try_cast(ingest_ts AS TIMESTAMP), current_timestamp())"
@@ -85,24 +85,6 @@ def _gold_prep(df: DataFrame) -> DataFrame:
     )
 
 
-def _in_dates(dates: list[str]) -> str:
-    """``date IN (...)`` over partition values (each matched
-    :data:`DATE_PARTITION_RE`)."""
-    return f"`date` IN ({', '.join(sql_lit(d) for d in dates)})"
-
-
-def list_date_partitions(path: str) -> list[str]:
-    """Sorted date partition values under a hive-layout directory (S6, fixed)."""
-    if not os.path.isdir(path):
-        return []
-    out = []
-    for name in os.listdir(path):
-        m = DATE_PARTITION_RE.search(name)
-        if m and os.path.isdir(os.path.join(path, name)):
-            out.append(m.group(1))
-    return sorted(out)
-
-
 def select_work(
     processed_dates: list[str],
     gold_dates: list[str],
@@ -128,18 +110,14 @@ def compact_pending(
     process_all: bool = False,
     max_partitions: int = 10,
     write_audit: bool = True,
-    commit_protocol: str = "direct",
     chunk_size: int | None = None,
 ) -> dict:
-    """Compact all pending silver partitions into gold.
-
-    ``commit_protocol``: ``"direct"`` (default) writes gold via dynamic
-    partition overwrite — atomic enough on local FS/HDFS where rename is
-    atomic; ``"manifest"`` commits through
-    :class:`~retail_aws_etl_pipeline_spark.lake_manifest.ManifestedTable` —
-    the object-store-safe path where a crash at ANY point leaves gold
-    readable at the pre-write snapshot (visibility is one atomic pointer
-    update, never a directory state).
+    """Compact all pending silver partitions into gold, under the lake's
+    commit protocol (``lake.commit``): a dynamic partition overwrite of the
+    ``date=`` directories, or one
+    :class:`~retail_aws_etl_pipeline_spark.lake_manifest.ManifestedTable`
+    commit per chunk, where a crash at ANY point leaves gold readable at
+    the pre-write snapshot.
 
     ``chunk_size``: ``None`` (default) compacts the whole work list in ONE
     Spark plan — right for the daily cadence (tens of pending dates).
@@ -153,65 +131,39 @@ def compact_pending(
     skips finished dates). Measured on local[32] (SCALING.md, backlog
     section): the ONE-plan path holds at a 1000-date backlog (13 s) and
     each chunk adds ~2-3 s of fixed plan/job overhead — chunking is a
-    recovery-granularity knob, not a throughput one.
+    recovery-granularity knob, not a throughput one. The summary carries
+    ``"chunks"`` only when there was more than one.
     """
-    manifest_table = None
-    if commit_protocol == "manifest":
-        from retail_aws_etl_pipeline_spark.lake_manifest import ManifestedTable
-
-        manifest_table = ManifestedTable(lake.gold, partition_col="date")
-    elif commit_protocol != "direct":
-        raise ValueError(f"commit_protocol must be direct|manifest, got {commit_protocol!r}")
-
-    processed_dates = silver_partitions(lake)
-    gold_dates = (
-        manifest_table.partitions() if manifest_table else list_date_partitions(lake.gold)
+    work = select_work(
+        silver_partitions(lake), lake.gold_table.partitions(), force_dates, process_all, max_partitions
     )
-    work = select_work(processed_dates, gold_dates, force_dates, process_all, max_partitions)
     run_ts = datetime.now(timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ")
-
-    if not work:
-        summary = {
-            "job_name": "gold_compaction",
-            "run_ts_utc": run_ts,
-            "processed_partitions_count": 0,
-            "results": [],
-        }
-        if write_audit:
-            _write_summary(lake, summary)
-        return summary
-
-    if chunk_size is not None and chunk_size < len(work):
-        results = []
-        n_chunks = 0
-        for at in range(0, len(work), chunk_size):
-            results.extend(
-                _compact_dates(
-                    spark, lake, work[at : at + chunk_size], run_ts, write_audit, manifest_table
-                )
-            )
-            n_chunks += 1
-        summary = {
-            "job_name": "gold_compaction",
-            "run_ts_utc": run_ts,
-            "processed_partitions_count": len(results),
-            "chunks": n_chunks,
-            "results": results,
-        }
-        if write_audit:
-            _write_summary(lake, summary)
-        return summary
-
-    results = _compact_dates(spark, lake, work, run_ts, write_audit, manifest_table)
+    step = chunk_size or max(len(work), 1)
+    chunks = [work[at : at + step] for at in range(0, len(work), step)]
+    results = [m for chunk in chunks for m in _compact_dates(spark, lake, chunk, run_ts, write_audit)]
     summary = {
         "job_name": "gold_compaction",
         "run_ts_utc": run_ts,
         "processed_partitions_count": len(results),
-        "results": results,
     }
+    if len(chunks) > 1:
+        summary["chunks"] = len(chunks)
+    summary["results"] = results
     if write_audit:
         _write_summary(lake, summary)
     return summary
+
+
+def _write_gold(spark: SparkSession, lake: LakeLayout, deduped: DataFrame) -> None:
+    """Overwrite the gold partitions ``deduped`` holds: each date lands
+    whole in one task (→ one file per date), clustered by transaction_id
+    for scan locality. Explicit N so AQE can't funnel every date's
+    directory creation through a single task (see ingest.py)."""
+    lake.gold_table.overwrite_partitions(
+        deduped.repartition(spark.sparkContext.defaultParallelism, "date").sortWithinPartitions(
+            "date", "transaction_id"
+        )
+    )
 
 
 def _compact_dates(
@@ -220,21 +172,9 @@ def _compact_dates(
     work: list[str],
     run_ts: str,
     write_audit: bool,
-    manifest_table,
 ) -> list[dict]:
     """One chunk: read+clean+window+write+audit for exactly ``work`` dates."""
-    from retail_aws_etl_pipeline_spark.lake_manifest import ManifestedTable
-
-    silver_table = ManifestedTable(lake.processed, partition_col="date")
-    if silver_table.exists():
-        # manifested silver: the snapshot IS the listing
-        silver = silver_table.read(spark)
-    else:
-        # One listing of the table root + partition-pruned filter — NOT one
-        # read per date directory (500 explicit paths = 500 listings + plan
-        # bloat).
-        silver = _read_table(spark, lake.processed, SILVER_SCHEMA, work[0])
-    silver = silver.filter(_in_dates(work))
+    silver = lake.silver_table.read(spark, work)
 
     # Schema drift (P15): an inferred read can lack columns; pad them as NULL.
     have = set(silver.columns)
@@ -257,26 +197,7 @@ def _compact_dates(
     pre_stats = stats_rows
     post_stats = {r["date"]: r["rows_after_dedup"] for r in stats_rows}
 
-    deduped = windowed.filter("rn = 1").drop("rn", "ingest_ts_f")
-
-    # second small shuffle post-dedup: each date lands whole in one task
-    # (→ one file per date), clustered by transaction_id for scan
-    # locality. Explicit N so AQE can't funnel every date's directory
-    # creation through a single task (see ingest.py).
-    out = deduped.repartition(spark.sparkContext.defaultParallelism, "date").sortWithinPartitions(
-        "date", "transaction_id"
-    )
-    if manifest_table is not None:
-        manifest_table.overwrite_partitions(out)
-    else:
-        # dynamic per write, not via the session conf: a static overwrite
-        # would drop every gold partition outside ``work``
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("date")
-            .parquet(lake.gold)
-        )
+    _write_gold(spark, lake, windowed.filter("rn = 1").drop("rn", "ingest_ts_f"))
     windowed.unpersist()
 
     results = []
@@ -311,81 +232,18 @@ def _write_summary(lake: LakeLayout, summary: dict) -> None:
 
 
 def silver_partitions(lake: LakeLayout) -> list[str]:
-    """Silver date partitions, whichever commit protocol wrote them."""
-    from retail_aws_etl_pipeline_spark.lake_manifest import ManifestedTable
-
-    table = ManifestedTable(lake.processed, partition_col="date")
-    if table.exists():
-        return table.partitions()
-    return list_date_partitions(lake.processed)
+    """Silver date partitions, under the lake's commit protocol."""
+    return lake.silver_table.partitions()
 
 
 def read_silver(spark: SparkSession, lake: LakeLayout) -> DataFrame:
-    """Silver as a DataFrame: manifested snapshot if present, else the
-    parquet directory (see :func:`_read_table`)."""
-    from retail_aws_etl_pipeline_spark.lake_manifest import ManifestedTable
-
-    table = ManifestedTable(lake.processed, partition_col="date")
-    if table.exists():
-        return table.read(spark)
-    dates = list_date_partitions(lake.processed)
-    return _read_table(spark, lake.processed, SILVER_SCHEMA, dates[0] if dates else None)
-
-
-#: Parquet physical types Spark writes for the lake's column types.
-_PARQUET_KINDS = {
-    "string": "is_string",
-    "int": "is_int32",
-    "bigint": "is_int64",
-    "double": "is_float64",
-    "timestamp": "is_timestamp",
-    "date": "is_date32",
-}
-
-
-def _footer_conforms(partition_dir: str, schema: T.StructType) -> bool:
-    """Whether the first parquet file under ``partition_dir`` holds only
-    columns of ``schema``, each in the physical type Spark writes for it
-    (read on the driver: one footer, no Spark job)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    try:
-        name = min(n for n in os.listdir(partition_dir) if n.endswith(".parquet"))
-        fields = pq.read_schema(os.path.join(partition_dir, name))
-    except (OSError, ValueError, pa.ArrowException):  # no file, or not parquet
-        return False
-    kinds = {f.name: _PARQUET_KINDS.get(f.dataType.simpleString()) for f in schema.fields}
-    return all(kinds.get(f.name) and getattr(pa.types, kinds[f.name])(f.type) for f in fields)
-
-
-def _read_table(
-    spark: SparkSession, root: str, schema: T.StructType, sample_date: str | None
-) -> DataFrame:
-    """A direct-layout lake table. When a file of the ``sample_date``
-    partition conforms to ``schema`` (the layer's declared schema, which
-    this package's writers produce) the read declares it: no
-    footer-inference job, and a column missing from a file reads as a typed
-    NULL. Otherwise — a table written by hand or by another tool — Spark
-    infers the schema, which also samples one footer and assumes the other
-    files agree."""
-    reader = spark.read.option("basePath", root)
-    if sample_date is not None and _footer_conforms(os.path.join(root, f"date={sample_date}"), schema):
-        reader = reader.schema(schema)
-    return reader.parquet(root)
+    """Silver as a DataFrame (see :meth:`~retail_aws_etl_pipeline_spark.lake.LakeTable.read`)."""
+    return lake.silver_table.read(spark)
 
 
 def read_gold(spark: SparkSession, lake: LakeLayout) -> DataFrame:
-    """Gold as a DataFrame, whichever commit protocol produced it: a
-    manifested table is read through its snapshot (never by listing), a
-    direct-layout table by the parquet directory (see :func:`_read_table`)."""
-    from retail_aws_etl_pipeline_spark.lake_manifest import ManifestedTable
-
-    table = ManifestedTable(lake.gold, partition_col="date")
-    if table.exists():
-        return table.read(spark)
-    dates = list_date_partitions(lake.gold)
-    return _read_table(spark, lake.gold, GOLD_SCHEMA, dates[0] if dates else None)
+    """Gold as a DataFrame (see :meth:`~retail_aws_etl_pipeline_spark.lake.LakeTable.read`)."""
+    return lake.gold_table.read(spark)
 
 
 def register_gold_view(spark: SparkSession, lake: LakeLayout, name: str = "fact_sales") -> DataFrame:
@@ -409,21 +267,13 @@ def upsert_gold(spark: SparkSession, lake: LakeLayout, batch_df: DataFrame) -> N
     """
     prepared = _gold_prep(batch_df)
     touched = [str(r["date"]) for r in prepared.select("date").distinct().collect()]
-    existing_dates = [d for d in touched if d in set(list_date_partitions(lake.gold))]
+    gold_dates = set(lake.gold_table.partitions())
+    existing_dates = [d for d in touched if d in gold_dates]
     if existing_dates:
-        existing = (
-            _read_table(spark, lake.gold, GOLD_SCHEMA, existing_dates[0])
-            .filter(_in_dates(existing_dates))
-            .withColumn("ingest_ts_f", F.expr(_INGEST_TS_F))
+        existing = lake.gold_table.read(spark, existing_dates).withColumn(
+            "ingest_ts_f", F.expr(_INGEST_TS_F)
         )
         prepared = prepared.unionByName(existing, allowMissingColumns=True)
 
     deduped = prepared.selectExpr("*", _KEEP_LATEST).filter("rn = 1").drop("rn", "ingest_ts_f")
-    (
-        deduped.repartition(spark.sparkContext.defaultParallelism, "date")
-        .sortWithinPartitions("date", "transaction_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("date")
-        .parquet(lake.gold)
-    )
+    _write_gold(spark, lake, deduped)

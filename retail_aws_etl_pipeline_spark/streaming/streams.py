@@ -245,6 +245,14 @@ def run_stream_to_memory(df: DataFrame, name: str, output_mode: str = "append") 
     return df.sparkSession.sql(f"SELECT * FROM {name}")
 
 
+def _require_direct_silver(lake) -> None:
+    """The streaming file source discovers new silver files by listing
+    directories; a manifest lake's rows are its snapshot, which no listing
+    sees (unpublished and superseded files lie in the same directories)."""
+    if lake.commit == "manifest":
+        raise ValueError("the silver file stream needs a direct-commit lake; use compact_pending")
+
+
 def run_pipeline_available_now(
     spark: SparkSession,
     incoming_dir: str,
@@ -264,9 +272,12 @@ def run_pipeline_available_now(
     rows collapse in the keep-latest merge.
 
     Returns the list of per-file ``IngestResult``s from the ingest stage.
+    Raises ``ValueError`` before ingesting anything on a manifest lake (see
+    :func:`gold_upsert_stream`).
     """
     from retail_aws_etl_pipeline_spark.ingest import ingest_pending
 
+    _require_direct_silver(lake)
     results = ingest_pending(spark, incoming_dir, lake, **ingest_kwargs)
     q = gold_upsert_stream(spark, lake, checkpoint_dir)
     q.awaitTermination()
@@ -297,14 +308,14 @@ def gold_upsert_stream(
     keyed keep-latest, so ANY interleaving of waves into micro-batches
     converges to the same gold (soak-tested across rates in
     ``tests/test_streaming_multimodal.py::test_gold_upsert_stream_soak``).
+
+    Raises ``ValueError`` before starting a query on a lake built with
+    ``commit="manifest"``: drive its gold with ``compact_pending``.
     """
     from retail_aws_etl_pipeline_spark.operators.compact import upsert_gold
     from retail_aws_etl_pipeline_spark.schema import SILVER_SCHEMA
 
-    # NOTE: the streaming file source discovers work by DIRECTORY listing —
-    # it requires the direct silver layout. A lake ingesting with
-    # commit_protocol="manifest" should drive gold via compact_pending
-    # (manifest) instead of this stream.
+    _require_direct_silver(lake)
     reader = spark.readStream.schema(SILVER_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

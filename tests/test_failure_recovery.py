@@ -14,6 +14,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from retail_aws_etl_pipeline_spark.ingest import ingest_file, ingest_pending
@@ -200,8 +201,6 @@ def test_quarantined_run_leaves_no_partial_silver_rows(spark, tmp_path):
 def test_purge_deletes_now_empty_partitions(spark, tmp_path):
     """Dates populated ONLY by the failed run must disappear from silver
     entirely (dynamic overwrite can't rewrite a partition to empty)."""
-    from retail_aws_etl_pipeline_spark.ingest import purge_run_from_silver
-
     lake = LakeLayout(str(tmp_path / "lake"))
     csv = tmp_path / "solo.csv"
     _write_csv(csv, range(6))
@@ -212,7 +211,7 @@ def test_purge_deletes_now_empty_partitions(spark, tmp_path):
         archive=False, write_reject_csv=False,
     )
     assert spark.read.parquet(lake.processed).count() == 6
-    purged = purge_run_from_silver(spark, lake, "run_solo")
+    purged = lake.silver_table.undo_append(spark, "run_solo")
     assert purged == 6
     date_dirs = [d for d in os.listdir(lake.processed) if d.startswith("date=")]
     assert date_dirs == []
@@ -220,11 +219,9 @@ def test_purge_deletes_now_empty_partitions(spark, tmp_path):
 
 def test_purge_raises_on_corrupt_silver(spark, tmp_path):
     """A silver that cannot be read is a real failure, not "nothing to
-    purge": purge_run_from_silver raises (into ingest_file's "silver purge
-    ... also failed" log) instead of reporting 0 rows purged."""
+    purge": the direct undo of a failed append raises (into ingest_file's
+    "silver purge ... also failed" log) instead of reporting 0 rows purged."""
     import pytest
-
-    from retail_aws_etl_pipeline_spark.ingest import purge_run_from_silver
 
     lake = LakeLayout(str(tmp_path / "lake"))
     csv = tmp_path / "ok.csv"
@@ -249,7 +246,7 @@ def test_purge_raises_on_corrupt_silver(spark, tmp_path):
         if os.path.exists(crc):
             os.remove(crc)
     with pytest.raises(Exception):
-        purge_run_from_silver(spark, lake, "run_failed")
+        lake.silver_table.undo_append(spark, "run_failed")
 
 
 # ---------------------------------------------------------------------------
@@ -332,7 +329,7 @@ def test_manifest_overwrite_partitions_semantics(spark, tmp_path):
 
 
 def test_manifest_silver_ingest_end_to_end(spark, tmp_path):
-    """commit_protocol='manifest' through the WHOLE pipeline: reference CSV
+    """A manifest-commit lake through the WHOLE pipeline: reference CSV
     → manifested silver (same class counts as the direct path) → manifested
     gold; views serve both zones from snapshots."""
     import shutil
@@ -344,16 +341,13 @@ def test_manifest_silver_ingest_end_to_end(spark, tmp_path):
     src = "/root/reference/sample_csv_files/sales_2024-10-16.csv"
     f = tmp_path / "sales.csv"
     shutil.copy(src, f)
-    lake = LakeLayout(str(tmp_path / "lake"))
+    lake = LakeLayout(str(tmp_path / "lake"), commit="manifest")
     direct_lake = LakeLayout(str(tmp_path / "lake_direct"))
 
     f2 = tmp_path / "sales_direct.csv"
     shutil.copy(src, f2)
     direct = ingest_file(spark, str(f2), direct_lake, archive=False, write_reject_csv=False)
-    result = ingest_file(
-        spark, str(f), lake, archive=False, write_reject_csv=False,
-        commit_protocol="manifest",
-    )
+    result = ingest_file(spark, str(f), lake, archive=False, write_reject_csv=False)
     assert result.status == "ok"
     assert result.counts == direct.counts  # identical routing, different commit
 
@@ -363,9 +357,7 @@ def test_manifest_silver_ingest_end_to_end(spark, tmp_path):
     # no hive dirs at the root: data lives under data/<commit>/
     assert not [d for d in os.listdir(lake.processed) if d.startswith("date=")]
 
-    summary = compact_pending(
-        spark, lake, max_partitions=1000, write_audit=False, commit_protocol="manifest"
-    )
+    summary = compact_pending(spark, lake, max_partitions=1000, write_audit=False)
     assert summary["processed_partitions_count"] > 0
     gold = read_gold(spark, lake)
     assert gold.groupBy("date", "transaction_id").count().filter("count>1").count() == 0
@@ -382,13 +374,10 @@ def test_manifest_ingest_crash_publishes_nothing(spark, tmp_path):
 
     from retail_aws_etl_pipeline_spark import lake_manifest as LM
 
-    lake = LakeLayout(str(tmp_path / "lake"))
+    lake = LakeLayout(str(tmp_path / "lake"), commit="manifest")
     f1 = tmp_path / "day1.csv"
     _write_csv(f1, range(10))
-    ingest_file(
-        spark, str(f1), lake, archive=False, write_reject_csv=False,
-        commit_protocol="manifest",
-    )
+    ingest_file(spark, str(f1), lake, archive=False, write_reject_csv=False)
     t = LM.ManifestedTable(lake.processed)
     v1 = t.snapshot()["version"]
 
@@ -402,10 +391,7 @@ def test_manifest_ingest_crash_publishes_nothing(spark, tmp_path):
     LM.ManifestedTable._publish = die
     try:
         with pytest.raises(OSError):
-            ingest_file(
-                spark, str(f2), lake, archive=False, write_reject_csv=False,
-                commit_protocol="manifest",
-            )
+            ingest_file(spark, str(f2), lake, archive=False, write_reject_csv=False)
     finally:
         LM.ManifestedTable._publish = orig
 
@@ -572,12 +558,12 @@ def test_compact_backlog_chunking(spark, tmp_path):
 
 
 def test_compact_pending_manifest_protocol_end_to_end(spark, tmp_path):
-    """compact_pending(commit_protocol='manifest'): incremental selection
+    """compact_pending on a manifest-commit lake: incremental selection
     reads partitions from the manifest, redelivery converges, and gold is
     snapshot-readable through read_gold."""
-    from retail_aws_etl_pipeline_spark.operators.compact import read_gold
+    from retail_aws_etl_pipeline_spark.operators.compact import read_gold, silver_partitions
 
-    lake = LakeLayout(str(tmp_path / "lake"))
+    lake = LakeLayout(str(tmp_path / "lake"), commit="manifest")
     incoming = tmp_path / "incoming"
     incoming.mkdir()
     _write_csv(incoming / "day1.csv", range(10))
@@ -586,16 +572,12 @@ def test_compact_pending_manifest_protocol_end_to_end(spark, tmp_path):
         ingest_ts=F.lit("2025-07-20 00:00:00").cast("timestamp"),
         write_reject_csv=False,
     )
-    summary = compact_pending(
-        spark, lake, max_partitions=100, write_audit=False, commit_protocol="manifest"
-    )
+    summary = compact_pending(spark, lake, max_partitions=100, write_audit=False)
     assert summary["processed_partitions_count"] == 3  # 3 distinct dates
     assert read_gold(spark, lake).count() == 10
 
     # incremental: nothing pending → no work, snapshot unchanged
-    again = compact_pending(
-        spark, lake, max_partitions=100, write_audit=False, commit_protocol="manifest"
-    )
+    again = compact_pending(spark, lake, max_partitions=100, write_audit=False)
     assert again["processed_partitions_count"] == 0
 
     # late redelivery: forced recompaction converges to exactly-once
@@ -605,15 +587,163 @@ def test_compact_pending_manifest_protocol_end_to_end(spark, tmp_path):
         ingest_ts=F.lit("2025-07-22 00:00:00").cast("timestamp"),
         write_reject_csv=False,
     )
-    dates = [
-        d.split("=", 1)[1] for d in os.listdir(lake.processed) if d.startswith("date=")
-    ]
-    compact_pending(
-        spark, lake, force_dates=dates, write_audit=False, commit_protocol="manifest"
-    )
+    compact_pending(spark, lake, force_dates=silver_partitions(lake), write_audit=False)
     gold = read_gold(spark, lake)
     assert gold.count() == 10
     assert gold.select("transaction_id").distinct().count() == 10
+
+
+@pytest.mark.parametrize("commit", ["direct", "manifest"])
+def test_pipeline_on_generated_csvs_under_either_commit(spark, tmp_path, commit):
+    """The whole lake pipeline on generated CSVs — ``ingest_file``, then
+    ``ingest_pending(batch_size=2)``, ``compact_pending`` and the views —
+    gives the same per-file counts and the same silver and gold rows under
+    either commit protocol (the in-repo twin of
+    ``test_manifest_silver_ingest_end_to_end``)."""
+    from retail_aws_etl_pipeline_spark.operators.compact import read_gold, read_silver
+    from retail_aws_etl_pipeline_spark.plans.views import register_lake_views
+    from tests.test_ingest_inline import COUNTS, SILVER, _write
+
+    lake = LakeLayout(str(tmp_path / "lake"), commit=commit)
+    inline = ingest_file(spark, _write(tmp_path / "sales_inline.csv"), lake, archive=False)
+    assert inline.counts == COUNTS
+
+    incoming = tmp_path / "incoming"
+    incoming.mkdir()
+    days = {"day1.csv": range(0, 12), "day2.csv": range(6, 18), "day3.csv": range(18, 24)}
+    for name, ids in days.items():
+        _write_csv(incoming / name, ids)
+    results = ingest_pending(spark, str(incoming), lake, batch_size=2)
+    assert [(r.source_file, r.counts["good_rows"], r.counts["reject_rows"]) for r in results] == [
+        (name, len(ids), 0) for name, ids in days.items()
+    ]
+
+    def gen(i):  # the business columns _rows writes for id i
+        return (f"T{i:04d}", f"S{i % 3}", f"ITEM{i}", 2, 5.0, 10.0, f"2025-07-{10 + i % 3:02d}")
+
+    cols = ["transaction_id", "store_id", "item_id", "quantity", "unit_price", "revenue"]
+    inline_rows = [(r[0], r[1], r[3], r[5], r[6], r[7], r[12]) for r in SILVER]
+    want_silver = sorted(
+        [("sales_inline.csv",) + r for r in inline_rows]
+        + [(name,) + gen(i) for name, ids in days.items() for i in ids]
+    )
+    silver = read_silver(spark, lake)
+    got_silver = sorted(
+        tuple(r) for r in silver.select("source_file", *cols, F.col("date").cast("string")).collect()
+    )
+    assert got_silver == want_silver
+
+    summary = compact_pending(spark, lake, write_audit=False)
+    assert summary["processed_partitions_count"] == 5  # 2 inline dates + 3 generated
+    want_gold = sorted(set(inline_rows) | {gen(i) for i in range(24)})
+    gold = read_gold(spark, lake)
+    assert sorted(tuple(r) for r in gold.select(*cols, F.col("date").cast("string")).collect()) == want_gold
+
+    register_lake_views(spark, lake)
+    assert spark.sql("SELECT COUNT(*) c FROM silver_sales").collect()[0]["c"] == len(want_silver)
+    assert spark.sql("SELECT COUNT(*) c FROM fact_sales").collect()[0]["c"] == len(want_gold)
+
+
+def test_mixed_layouts_on_one_lake_root_raise(spark, tmp_path):
+    """A lake whose zones hold the other protocol's layout raises instead
+    of acknowledging rows no reader of the first layout sees: manifest
+    silver and gold refuse direct ingest, batched ingest, compaction and
+    upsert, and direct silver refuses a manifest ingest."""
+    from retail_aws_etl_pipeline_spark.ingest import ingest_batch
+    from retail_aws_etl_pipeline_spark.operators.compact import read_gold, read_silver, upsert_gold
+
+    with pytest.raises(ValueError, match="direct.manifest"):
+        LakeLayout(str(tmp_path / "lake"), commit="s3")
+    files = []
+    for n in range(4):
+        files.append(str(tmp_path / f"day{n}.csv"))
+        _write_csv(files[-1], range(10 * n, 10 * n + 10))
+    kw = dict(archive=False, write_reject_csv=False)
+
+    manifest = LakeLayout(str(tmp_path / "lake"), commit="manifest")
+    direct = LakeLayout(manifest.root)
+    assert ingest_file(spark, files[0], manifest, **kw).status == "ok"
+    with pytest.raises(ValueError, match="manifested table"):
+        ingest_file(spark, files[1], direct, **kw)
+    with pytest.raises(ValueError, match="manifested table"):
+        ingest_batch(spark, [files[2]], direct, **kw)
+    compact_pending(spark, manifest, write_audit=False)
+    with pytest.raises(ValueError, match="manifested table"):
+        compact_pending(spark, direct, write_audit=False)
+    with pytest.raises(ValueError, match="manifested table"):
+        upsert_gold(spark, direct, read_silver(spark, manifest))
+    assert read_silver(spark, manifest).count() == 10
+    assert read_gold(spark, manifest).count() == 10
+    for zone in (manifest.processed, manifest.gold):
+        assert not [d for d in os.listdir(zone) if d.startswith("date=")]
+
+    other = LakeLayout(str(tmp_path / "other"))
+    assert ingest_file(spark, files[3], other, **kw).status == "ok"
+    with pytest.raises(ValueError, match="direct-layout partitions"):
+        ingest_file(spark, files[1], LakeLayout(other.root, commit="manifest"), **kw)
+    assert read_silver(spark, other).count() == 10
+    assert not os.path.exists(os.path.join(other.processed, "_manifests"))
+
+
+def test_gold_stream_refuses_a_manifest_lake(spark, tmp_path):
+    """The silver file stream lists directories, which a manifest snapshot
+    is not: both streaming gold entry points raise before ingesting a file
+    or starting a query."""
+    from retail_aws_etl_pipeline_spark.streaming.streams import (
+        gold_upsert_stream,
+        run_pipeline_available_now,
+    )
+
+    lake = LakeLayout(str(tmp_path / "lake"), commit="manifest")
+    incoming = tmp_path / "incoming"
+    incoming.mkdir()
+    _write_csv(incoming / "day1.csv", range(10))
+    ck = str(tmp_path / "ck")
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="direct-commit lake"):
+        gold_upsert_stream(spark, lake, ck)
+    with pytest.raises(ValueError, match="direct-commit lake"):
+        run_pipeline_available_now(spark, str(incoming), lake, ck)
+    assert os.listdir(incoming) == ["day1.csv"]
+    assert not os.path.exists(lake.root) and not os.path.exists(ck)
+    assert len(spark.streams.active) == active
+
+
+def _manifest_sites() -> set[str]:
+    """Package modules (dotted, package-relative) that import
+    ``lake_manifest`` or construct a ``ManifestedTable``, apart from
+    ``lake_manifest`` itself."""
+    import ast
+    from pathlib import Path
+
+    import retail_aws_etl_pipeline_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    sites: set[str] = set()
+    for path in sorted(root.rglob("*.py")):
+        module = ".".join(path.relative_to(root).with_suffix("").parts)
+        if module == "lake_manifest":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            imported = (
+                [a.name for a in node.names] if isinstance(node, ast.Import) else
+                [node.module or "", *(a.name for a in node.names)]
+                if isinstance(node, ast.ImportFrom) else []
+            )
+            called = (
+                getattr(node.func, "id", None) or getattr(node.func, "attr", None)
+                if isinstance(node, ast.Call) else None
+            )
+            if any(n.split(".")[-1] == "lake_manifest" for n in imported) or called == "ManifestedTable":
+                sites.add(module)
+    return sites
+
+
+def test_manifest_is_known_only_to_the_lake_module():
+    """Only ``lake.py`` (``LakeTable``) imports ``lake_manifest`` or builds a
+    ``ManifestedTable``: every other module reads and writes silver and
+    gold through the lake, so the commit protocol is chosen in one place."""
+    assert _manifest_sites() == {"lake"}
 
 
 def test_manifest_gc_retention_and_debris(spark, tmp_path):

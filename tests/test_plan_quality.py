@@ -8,6 +8,7 @@ pushdown (WindowGroupLimit), and whole-stage codegen coverage.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from retail_aws_etl_pipeline_spark.plans import all_specs
@@ -651,15 +652,16 @@ def test_read_flexible_csv_submits_no_spark_job(spark, tmp_path):
     assert set(tracker.getJobIdsForGroup()) != before  # the tracker does see jobs
 
 
-def test_read_silver_submits_no_spark_job(spark, tmp_path):
-    """A direct-layout silver written by ``ingest_file`` conforms to
-    SILVER_SCHEMA, so ``read_silver`` declares it: building the frame
-    submits no footer-inference job (the first action does)."""
+@pytest.mark.parametrize("commit", ["direct", "manifest"])
+def test_read_silver_submits_no_spark_job(spark, tmp_path, commit):
+    """A silver written by ``ingest_file`` conforms to SILVER_SCHEMA under
+    either commit protocol, so ``read_silver`` declares it: building the
+    frame submits no footer-inference job (the first action does)."""
     from retail_aws_etl_pipeline_spark.ingest import ingest_file
     from retail_aws_etl_pipeline_spark.lake import LakeLayout
     from retail_aws_etl_pipeline_spark.operators.compact import read_silver
 
-    lake = LakeLayout(str(tmp_path / "lake"))
+    lake = LakeLayout(str(tmp_path / "lake"), commit=commit)
     path = _sales_csv(tmp_path / "sales.csv", 200, seed=3)
     result = ingest_file(spark, path, lake, archive=False, write_reject_csv=False)
     tracker = spark.sparkContext.statusTracker()
