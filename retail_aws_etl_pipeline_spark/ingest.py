@@ -1,29 +1,34 @@
-"""One-file ingestion: raw CSV → silver Parquet + quarantined rejects.
+"""Raw CSV → silver Parquet + quarantined rejects, one file or a batch.
 
 Collapses the reference's Lambda→Glue two-process flow
 (lambda_validator.py:117-177 + glue_job_raw_to_processed.py) into one
-library entry point with the same zones and semantics:
+ingest routine with the same zones and semantics; :func:`ingest_file` is a
+batch of one and :func:`ingest_batch` a batch of N:
 
-1. file-level validation on a 64 KB head sample: empty file → system
-   reject; undetectable delimiter or header missing required columns →
-   structural reject with a ``_reason.json`` (lambda_validator.py:140-161).
-   Unlike the reference Lambda (SURVEY.md §1.4 inconsistency), the header
-   check uses the SAME normalization + synonym pass as row-level parsing.
+1. file-level gate: empty 64 KB head → system reject; a header missing
+   required columns → structural reject, each with a ``_reason.json``
+   (lambda_validator.py:140-161). Unlike the reference (SURVEY.md §1.4,
+   the Lambda and Glue sniffs disagree), the gate judges the header the
+   reader will map: both take it from ``sources.reader.sniff_header``.
 2. row-level quality routing via ``operators.validate.split_quality``.
-3. sinks: silver partitioned by ``date`` (an append under the lake's
-   commit protocol, K1); rejects as
-   JSON-lines (machine, K3) + single coalesced CSV (analyst, K4); summary
-   metrics JSON (K5, replaces SNS publish with a returned/logged dict).
-4. archive the input under a lineage name (K6).
+3. sinks: silver partitioned by ``date`` (ONE append under the lake's
+   commit protocol for the whole call, K1); rejects as JSON-lines
+   (machine, K3) + single coalesced CSV (analyst, K4); summary metrics
+   (K5, replaces SNS publish with a returned/logged dict).
+4. archive each input under a lineage name (K6).
 
-Scale notes: the driver reads only an O(1) head of the file — the gate's
-64 KB sample, from which the reader also takes its ≤20-line dialect sniff,
-so no Spark job runs before the plan exists — and builds each plan from a
-few SQL-text projections (a handful of py4j calls, not one per Column). All row work of a file is one labeled lineage (read → ``raw_row``
-fan-out shuffle → timestamp cascade → dedup window → cleaning), persisted
-once: the silver write fills the cache and fires the single class-count
-Observation, and the JSON and CSV reject sinks read the cache (the
-reference recomputed the full lineage 5×, SURVEY.md §4).
+A failure after the gate quarantines every file of the call that passed
+it to ``rejected/system`` and undoes their silver rows before the error
+propagates (K7).
+
+Scale notes: the driver reads only an O(1) head of each file (no Spark
+job runs before the plan exists) and builds each plan from a few SQL-text
+projections (a handful of py4j calls, not one per Column). All row work
+of a file is one labeled lineage (read → ``raw_row`` fan-out shuffle →
+timestamp cascade → dedup window → cleaning), persisted once: the silver
+write fills the cache and fires the single class-count Observation, and
+the JSON and CSV reject sinks read the cache (the reference recomputed the
+full lineage 5×, SURVEY.md §4).
 """
 
 from __future__ import annotations
@@ -38,9 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from retail_aws_etl_pipeline_spark.lake import LakeLayout, lineage_name, move_file, new_run_id
 from retail_aws_etl_pipeline_spark.operators.validate import QualitySplit, split_quality
-from retail_aws_etl_pipeline_spark.schema import build_index_map, missing_required
-from retail_aws_etl_pipeline_spark.sources.reader import read_flexible_csv
-from retail_aws_etl_pipeline_spark.sources.sniff import sniff_delimiter, sniff_text
+from retail_aws_etl_pipeline_spark.sources.reader import read_flexible_csv, sniff_header
+from retail_aws_etl_pipeline_spark.sources.sniff import sniff_text
 
 log = logging.getLogger(__name__)
 
@@ -52,39 +56,31 @@ class IngestResult:
     ingest_run_id: str
     counts: dict = field(default_factory=dict)
     file_errors: list[str] = field(default_factory=list)
-    silver_path: str | None = None
 
 
-def validate_file_head(path: str, max_bytes: int = 65536) -> list[str]:
-    """File-level structural checks on a head sample; [] means pass."""
-    sample = sniff_text(path, max_bytes)
-    if not sample.strip():
+def validate_file_head(path: str) -> list[str]:
+    """File-level checks; [] means pass. ``empty_file`` when the 64 KB head
+    holds no non-whitespace character, else ``missing_columns:[...]`` when
+    the reader's header (:func:`~retail_aws_etl_pipeline_spark.sources.reader.sniff_header`)
+    lacks a required column."""
+    if not sniff_text(path).strip():
         return ["empty_file"]
-    delimiter = sniff_delimiter(sample)
-    header_line = next(
-        (ln for ln in sample.splitlines() if ln.strip()), ""
-    ).lstrip("﻿")
-    index_map = build_index_map(header_line.split(delimiter))
-    missing = missing_required(index_map)
-    errors: list[str] = []
-    if missing:
-        errors.append(f"missing_columns:{missing}")
-    return errors
+    missing = sniff_header(path).missing_required
+    return [f"missing_columns:{missing}"] if missing else []
 
 
-def _reject_file(
-    path: str, lake: LakeLayout, source_file: str, run_id: str, file_errors: list[str], archive: bool
-) -> IngestResult:
-    """Quarantine a file that failed the head gate: an empty file goes to
-    ``rejected/system``, any other failure to ``rejected/structural``, each
-    with a ``_reason.json`` beside it."""
-    reject_dir = lake.rejected("structural" if "empty_file" not in file_errors else "system")
+def _quarantine(
+    path: str, lake: LakeLayout, kind: str, result: IngestResult, reason: dict, archive: bool
+) -> None:
+    """Move a file to ``rejected/<kind>`` (when ``archive``) under its
+    lineage name, with a ``_reason.json`` beside it."""
+    reject_dir = lake.rejected(kind)
     os.makedirs(reject_dir, exist_ok=True)
-    dst = move_file(path, reject_dir, lineage_name(source_file, run_id)) if archive else path
-    with open(os.path.join(reject_dir, f"{os.path.basename(dst)}_reason.json"), "w") as f:
-        json.dump({"file": source_file, "errors": file_errors}, f)
-    log.warning("file rejected %s: %s", source_file, file_errors)
-    return IngestResult("file_rejected", source_file, run_id, file_errors=file_errors)
+    name = lineage_name(result.source_file, result.ingest_run_id)
+    if archive and os.path.exists(path):
+        move_file(path, reject_dir, name)
+    with open(os.path.join(reject_dir, f"{name}_reason.json"), "w") as f:
+        json.dump({"file": result.source_file, **reason}, f)
 
 
 def _write_sinks(
@@ -122,6 +118,76 @@ def _write_sinks(
         )
 
 
+def _ingest(
+    spark: SparkSession,
+    lake: LakeLayout,
+    files: list[tuple[str, str]],
+    timestamp_patterns: list[tuple[str, str]] | None,
+    ingest_ts,
+    archive: bool,
+    write_reject_csv: bool,
+) -> list[IngestResult]:
+    """Ingest ``(path, run_id)`` pairs: per file gate → read → route, then
+    one set of sinks for every routed file, then archive. Results keep the
+    input order."""
+    # A lake holding the other commit protocol's layout is a configuration
+    # error, not a bad file: raise before any input moves.
+    lake.silver_table.check_layout()
+    results: list[IngestResult] = []
+    passed: list[tuple[str, IngestResult]] = []  # the files past the gate
+    splits: list[QualitySplit] = []
+    try:
+        for path, run_id in files:
+            result = IngestResult("ok", os.path.basename(path), run_id)
+            results.append(result)
+            result.file_errors = validate_file_head(path)
+            if result.file_errors:
+                result.status = "file_rejected"
+                kind = "system" if "empty_file" in result.file_errors else "structural"
+                _quarantine(path, lake, kind, result, {"errors": result.file_errors}, archive)
+                log.warning("file rejected %s: %s", result.source_file, result.file_errors)
+                continue
+            passed.append((path, result))
+            extracted, _meta = read_flexible_csv(spark, path)
+            splits.append(
+                split_quality(
+                    extracted,
+                    ingest_run_id=run_id,
+                    source_file=result.source_file,
+                    timestamp_patterns=timestamp_patterns,
+                    ingest_ts=ingest_ts,
+                )
+            )
+        if splits:
+            _write_sinks(spark, lake, splits, write_reject_csv)
+    except Exception as exc:
+        # The reference's K7 intent (glue_job_raw_to_processed.py:421-443)
+        # with a working rollback: every file past the gate is quarantined
+        # and never retried, so whatever the silver append left of their
+        # runs is undone before the error propagates.
+        for path, result in passed:
+            _quarantine(path, lake, "system", result, {"error": str(exc)[:2000]}, archive)
+        if passed:
+            try:
+                lake.silver_table.undo_append(spark, [r.ingest_run_id for _, r in passed])
+            except Exception as purge_exc:  # keep the original error primary
+                log.error("silver purge after failed ingest also failed: %s", purge_exc)
+        log.error("ingest failed, %d file(s) quarantined to rejected/system: %s", len(passed), exc)
+        raise
+    finally:
+        for split in splits:
+            for df in split.cached or []:
+                df.unpersist()
+
+    for (path, result), split in zip(passed, splits):
+        if archive:
+            name = lineage_name(result.source_file, result.ingest_run_id)
+            move_file(path, lake.archive("validated"), name)
+        result.counts = dict(split.resolve_counts())
+        log.info("DATA QUALITY REPORT %s: %s", result.source_file, result.counts)
+    return results
+
+
 def ingest_file(
     spark: SparkSession,
     path: str,
@@ -133,65 +199,16 @@ def ingest_file(
     write_reject_csv: bool = True,
 ) -> IngestResult:
     """Ingest one raw delimited file into the lake's silver zone, under the
-    lake's commit protocol (``lake.commit``).
+    lake's commit protocol (``lake.commit``): a batch of one.
 
     A failure after the gate quarantines the file to ``rejected/system``
     and undoes its silver append (:meth:`~retail_aws_etl_pipeline_spark.lake.LakeTable.undo_append`)
     before the error propagates.
     """
-    run_id = ingest_run_id or new_run_id()
-    source_file = os.path.basename(path)
-
-    # -- 1. file-level gate -------------------------------------------------
-    file_errors = validate_file_head(path)
-    if file_errors:
-        return _reject_file(path, lake, source_file, run_id, file_errors, archive)
-
-    # -- 2+3. parse + route + sinks; on ANY failure the input file is
-    # quarantined to rejected/system with a reason file and the error
-    # re-raised — the reference's K7 intent (glue_job_raw_to_processed.py:
-    # 421-443) with a working rollback: since a quarantined file is never
-    # retried, whatever its silver append left behind is undone before the
-    # error propagates (LakeTable.undo_append).
-    split: QualitySplit | None = None
-    try:
-        extracted, meta = read_flexible_csv(spark, path)
-        split = split_quality(
-            extracted,
-            ingest_run_id=run_id,
-            source_file=source_file,
-            timestamp_patterns=timestamp_patterns,
-            ingest_ts=ingest_ts,
-        )
-        _write_sinks(spark, lake, [split], write_reject_csv)
-    except Exception as exc:
-        reject_dir = lake.rejected("system")
-        os.makedirs(reject_dir, exist_ok=True)
-        dst_name = lineage_name(source_file, run_id)
-        if archive and os.path.exists(path):
-            move_file(path, reject_dir, dst_name)
-        with open(os.path.join(reject_dir, f"{dst_name}_reason.json"), "w") as f:
-            json.dump({"file": source_file, "error": str(exc)[:2000]}, f)
-        try:
-            lake.silver_table.undo_append(spark, run_id)
-        except Exception as purge_exc:  # keep the original error primary
-            log.error("silver purge after failed ingest also failed: %s", purge_exc)
-        log.error("ingest failed, file quarantined to rejected/system: %s", exc)
-        raise
-    finally:
-        if split is not None and split.cached:
-            for df in split.cached:
-                df.unpersist()
-
-    # -- 4. archive + summary ----------------------------------------------
-    if archive:
-        move_file(path, lake.archive("validated"), lineage_name(source_file, run_id))
-
-    summary = dict(split.counts)
-    log.info("DATA QUALITY REPORT %s: %s", source_file, summary)
-    return IngestResult(
-        "ok", source_file, run_id, counts=summary, silver_path=lake.processed
-    )
+    return _ingest(
+        spark, lake, [(path, ingest_run_id or new_run_id())],
+        timestamp_patterns, ingest_ts, archive, write_reject_csv,
+    )[0]
 
 
 def ingest_batch(
@@ -207,73 +224,27 @@ def ingest_batch(
 
     Per-file semantics are preserved — each file keeps its own sniffed
     projection, run id, within-file exact-line dedup, and per-file class
-    counts (namespaced Observations) — but the cluster executes a single
-    write job over the union, so many small files no longer serialize into
-    per-file job barriers (the reference's one-Glue-run-per-file shape).
-    This also sidesteps the committer hazard of CONCURRENT appends to one
-    parquet root (parallel ``ingest_file`` calls share ``_temporary``):
-    one job, one committer, full parallelism across files.
+    counts (one Observation per run id) — but the cluster executes a
+    single write job over the union, so many small files no longer
+    serialize into per-file job barriers (the reference's
+    one-Glue-run-per-file shape). This also sidesteps the committer hazard
+    of CONCURRENT appends to one parquet root (parallel ``ingest_file``
+    calls share ``_temporary``): one job, one committer, full parallelism
+    across files.
 
-    Failure anywhere in the batch leaves the inputs in place and nothing
-    ledgered: rerun is at-least-once, and replayed rows collapse in gold's
-    keep-latest dedup. Files failing the head gate are quarantined
-    individually and do not poison the batch.
+    Files failing the head gate are quarantined individually and do not
+    poison the batch. A failure after the gate fails the whole batch, as
+    in :func:`ingest_file`: every file that passed the gate moves to
+    ``rejected/system`` with a reason file, their silver rows are undone
+    in one pass, and the error is re-raised. This replaces the earlier
+    policy for batches (inputs left in place, partial silver rows kept,
+    the batch retried whole by the next run): one bad file now
+    quarantines every file of its batch.
     """
-    gate_results: dict[str, IngestResult] = {}
-    entries: list[tuple[str, str, str, QualitySplit]] = []
-    try:
-        for i, path in enumerate(paths):
-            source_file = os.path.basename(path)
-            run_id = new_run_id()
-            file_errors = validate_file_head(path)
-            if file_errors:
-                gate_results[path] = _reject_file(
-                    path, lake, source_file, run_id, file_errors, archive
-                )
-                continue
-            extracted, _meta = read_flexible_csv(spark, path)
-            entries.append(
-                (
-                    path,
-                    source_file,
-                    run_id,
-                    split_quality(
-                        extracted,
-                        ingest_run_id=run_id,
-                        source_file=source_file,
-                        timestamp_patterns=timestamp_patterns,
-                        ingest_ts=ingest_ts,
-                        obs_prefix=f"b{i}_",
-                    ),
-                )
-            )
-
-        if entries:
-            _write_sinks(spark, lake, [s for _, _, _, s in entries], write_reject_csv)
-    finally:
-        for _, _, _, s in entries:
-            for df in s.cached or []:
-                df.unpersist()
-
-    results: list[IngestResult] = []
-    by_path = {p: (sf, rid, s) for p, sf, rid, s in entries}
-    for path in paths:
-        if path in gate_results:
-            results.append(gate_results[path])
-            continue
-        source_file, run_id, split = by_path[path]
-        if archive:
-            move_file(path, lake.archive("validated"), lineage_name(source_file, run_id))
-        results.append(
-            IngestResult(
-                "ok",
-                source_file,
-                run_id,
-                counts=dict(split.resolve_counts()),
-                silver_path=lake.processed,
-            )
-        )
-    return results
+    return _ingest(
+        spark, lake, [(p, new_run_id()) for p in paths],
+        timestamp_patterns, ingest_ts, archive, write_reject_csv,
+    )
 
 
 def ingest_pending(
@@ -295,10 +266,11 @@ def ingest_pending(
     the unfinished work (idempotent: silver appends are per-run-id, gold
     compaction dedups by key).
 
-    ``batch_size`` > 1 runs :func:`ingest_batch` over chunks of pending
-    files — one unioned plan and one silver write per chunk (the scale
-    path for backlogs of many small files); the chunk is ledgered as a
-    unit after it succeeds. The default preserves the reference's
+    Files go through :func:`ingest_batch` in chunks of ``batch_size`` —
+    one unioned plan and one silver write per chunk (the scale path for
+    backlogs of many small files); a chunk is ledgered after it succeeds.
+    A failed chunk raises with its files quarantined, so nothing of it is
+    ledgered or retried. The default of 1 keeps the reference's
     file-at-a-time granularity.
     """
     ledger_path = ledger_path or os.path.join(lake.root, "ingest_ledger.jsonl")
@@ -306,35 +278,20 @@ def ingest_pending(
     if os.path.exists(ledger_path):
         with open(ledger_path) as f:
             seen = {json.loads(line)["file"] for line in f if line.strip()}
-
-    def ledger(name: str, result: IngestResult) -> None:
-        os.makedirs(os.path.dirname(ledger_path), exist_ok=True)
-        with open(ledger_path, "a") as f:
-            f.write(
-                json.dumps(
-                    {"file": name, "run_id": result.ingest_run_id, "status": result.status}
-                )
-                + "\n"
-            )
-
     pending = [
         name
         for name in sorted(os.listdir(incoming_dir))
         if name not in seen and os.path.isfile(os.path.join(incoming_dir, name))
     ]
     results: list[IngestResult] = []
-    if batch_size > 1:
-        for i in range(0, len(pending), batch_size):
-            chunk = pending[i : i + batch_size]
-            batch = ingest_batch(
-                spark, [os.path.join(incoming_dir, n) for n in chunk], lake, **ingest_kwargs
-            )
-            results.extend(batch)
-            for name, result in zip(chunk, batch):
-                ledger(name, result)
-    else:
-        for name in pending:
-            result = ingest_file(spark, os.path.join(incoming_dir, name), lake, **ingest_kwargs)
-            results.append(result)
-            ledger(name, result)
+    for i in range(0, len(pending), batch_size):
+        chunk = pending[i : i + batch_size]
+        paths = [os.path.join(incoming_dir, n) for n in chunk]
+        batch = ingest_batch(spark, paths, lake, **ingest_kwargs)
+        results.extend(batch)
+        os.makedirs(os.path.dirname(ledger_path), exist_ok=True)
+        with open(ledger_path, "a") as f:
+            for name, r in zip(chunk, batch):
+                line = {"file": name, "run_id": r.ingest_run_id, "status": r.status}
+                f.write(json.dumps(line) + "\n")
     return results

@@ -13,11 +13,16 @@ the storage:
   Spark's file committer. Rename is atomic on local FS/HDFS, but the
   session's committer (fileoutputcommitter v2) publishes task output at
   TASK commit, so a silver append that fails mid-job can leave some rows
-  behind; the undo of a failed append purges them by run id.
+  behind.
 - ``"manifest"``: :class:`~retail_aws_etl_pipeline_spark.lake_manifest.ManifestedTable`,
   for object stores where rename is copy + delete. Visibility is one
-  atomic pointer update, so a failed append publishes nothing and its
-  undo reclaims the unpublished files.
+  atomic pointer update, so an append that fails mid-job publishes
+  nothing.
+
+Under either protocol an append can succeed and the ingest still fail in
+a later sink; :meth:`LakeTable.undo_append` then removes the failed
+runs' rows by run id with one algorithm (rewrite the touched dates, drop
+the emptied ones).
 
 :class:`LakeTable` is the only code that knows the protocol: every silver
 and gold listing, read, write and rollback goes through it. This is the
@@ -176,6 +181,10 @@ class LakeTable:
             )
         return None
 
+    def check_layout(self) -> None:
+        """Raise ``ValueError`` if the zone holds the other protocol's layout."""
+        self._manifest()
+
     def partitions(self) -> list[str]:
         """Sorted date partitions: the manifest's snapshot, or the listing."""
         table = self._manifest()
@@ -231,48 +240,55 @@ class LakeTable:
                 .parquet(self.root)
             )
 
-    def undo_append(self, spark: SparkSession, run_id: str) -> int:
-        """Undo a failed append of the rows tagged ``ingest_run_id ==
-        run_id``; returns the number of rows removed.
+    def undo_append(self, spark: SparkSession, run_ids: list[str]) -> int:
+        """Undo a failed append of the rows tagged ``ingest_run_id`` in
+        ``run_ids``; returns the number of rows removed.
 
-        Manifest: the failed commit published nothing. ``gc_manifests``
-        drops an unpointered version file if the crash hit between claim
-        and pointer flip, then ``vacuum`` reclaims the now-unreferenced
-        staging files. ``min_age_seconds=0`` because ingest is the table's
-        single writer, so the young debris dir is provably its own crashed
-        commit; the conservative default window would strand it for an hour.
+        Some or all of those rows may be readable (a direct append
+        publishes at TASK commit; a manifest append publishes before the
+        ingest's later sinks run), and a quarantined file is never retried,
+        so they would flow into gold as rows of a rejected file. One
+        algorithm serves both protocols: rewrite the dates holding the
+        runs' rows without them (:meth:`overwrite_partitions`) and drop the
+        dates left empty (direct: delete the directory; manifest: a commit
+        without their files). The scan is one read of the zone, paid only
+        after an append has already failed.
 
-        Direct: task-committed rows of the run are visible, and a
-        quarantined file is never retried, so they would flow into gold as
-        transactions of a file the lake says was rejected. This rewrites
-        exactly the date partitions holding the run's rows (dynamic
-        partition overwrite) and deletes partitions it leaves empty; rows of
-        other runs are kept. The scan costs one silver read, paid only after
-        an append has already failed."""
+        Manifest first reclaims unpublished debris: ``gc_manifests`` drops
+        an unpointered version file if the crash hit between claim and
+        pointer flip, then ``vacuum`` deletes the now-unreferenced staging
+        files. ``min_age_seconds=0`` because ingest is the table's single
+        writer, so the young debris dir is provably its own crashed commit;
+        the conservative default window would strand it for an hour."""
         table = self._manifest()
         if table:
             table.gc_manifests(keep_versions=None)  # debris only, keep history
             table.vacuum(min_age_seconds=0)
-            return 0
-        if not list_date_partitions(self.root):
-            return 0  # no partition yet → nothing committed
+        if not self.partitions():
+            return 0  # nothing committed
         rows = self.read(spark)
         if "ingest_run_id" not in rows.columns:
             return 0
-        debris = rows.filter(F.col("ingest_run_id") == run_id)
+        of_runs = F.col("ingest_run_id").isin(run_ids)
+        debris = rows.filter(of_runs)
         dates = [r["date"] for r in debris.select("date").distinct().collect()]
         if not dates:
             return 0
         n_debris = debris.count()
-        keep = rows.filter(F.col("date").isin(dates)).filter(F.col("ingest_run_id") != run_id)
-        # dynamic overwrite only rewrites partitions PRESENT in the new data —
-        # dates whose every row came from the failed run must be deleted by path
+        keep = rows.filter(F.col("date").isin(dates)).filter(~of_runs)
+        # an overwrite only rewrites partitions PRESENT in the new data —
+        # dates whose every row came from the failed runs are dropped
         keep_dates = {r["date"] for r in keep.select("date").distinct().collect()}
         if keep_dates:
-            self.overwrite_partitions(keep.repartition(spark.sparkContext.defaultParallelism, "date"))
-        for d in set(dates) - keep_dates:
-            shutil.rmtree(os.path.join(self.root, f"date={d}"), ignore_errors=True)
-        log.warning("purged %d partial rows of failed run %s from %s", n_debris, run_id, self.root)
+            n_parts = spark.sparkContext.defaultParallelism
+            self.overwrite_partitions(keep.repartition(n_parts, "date"))
+        empty = {str(d) for d in dates} - {str(d) for d in keep_dates}
+        if table:
+            table.drop_partitions(empty)
+        else:
+            for d in empty:
+                shutil.rmtree(os.path.join(self.root, f"date={d}"), ignore_errors=True)
+        log.warning("purged %d partial rows of failed runs %s from %s", n_debris, run_ids, self.root)
         return n_debris
 
 

@@ -271,6 +271,11 @@ class ManifestedTable:
             + entries
         )
 
+    def drop_partitions(self, values: set[str]) -> int:
+        """Commit a snapshot without the files of the partitions ``values``
+        (their data stays on disk for the retained history)."""
+        return self._commit(lambda snap: [f for f in snap["files"] if f["partition"] not in values])
+
     # -- maintenance -------------------------------------------------------
 
     def rewrite(self, spark: SparkSession) -> int:

@@ -130,15 +130,14 @@ def split_quality(
     source_file: str,
     timestamp_patterns: list[tuple[str, str]] | None = None,
     ingest_ts=None,
-    obs_prefix: str = "",
 ) -> QualitySplit:
     """Route one extracted frame into silver-good rows + tagged rejects.
 
     ``ingest_ts`` is an injectable Column (default ``current_timestamp()``)
     so tests and oracle comparisons can pin a deterministic clock
-    (SURVEY.md §7.4.4). ``obs_prefix`` namespaces the Observation node —
-    required when several splits union into one plan (batched ingest):
-    observation names must be unique within a query execution.
+    (SURVEY.md §7.4.4). The Observation is named after ``ingest_run_id``:
+    observation names must be unique within a query execution, and the
+    splits that batched ingest unions into one plan have distinct run ids.
     """
     patterns = timestamp_patterns if timestamp_patterns is not None else REFERENCE_PATTERNS
     ingest_ts_col = ingest_ts if ingest_ts is not None else F.current_timestamp()
@@ -207,7 +206,7 @@ def split_quality(
             ],
         )
     ]
-    obs = Observation(f"{obs_prefix}quality_counts")
+    obs = Observation(f"quality_counts_{ingest_run_id}")
     labeled = labeled.observe(obs, *count_exprs).persist(StorageLevel.MEMORY_AND_DISK)
 
     good = labeled.filter("reject_reason IS NULL").selectExpr(

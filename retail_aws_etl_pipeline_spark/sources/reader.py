@@ -3,11 +3,16 @@
 Re-expresses the reference's runtime-discovered schema ingestion
 (glue_job_raw_to_processed.py:99-217) as a reusable source. The two-phase
 "sniff then plan" design is kept: a ≤20-line sample determines the
-delimiter and header, then ONE lazy Spark plan handles the whole file. The
-sample comes from the file gate's driver-side head read (``sniff_text``),
-split, scrubbed and filtered exactly as the Spark plan does it: building
-the plan submits no Spark job, and the read is O(1) regardless of file
-size.
+delimiter and header, then ONE lazy Spark plan handles the whole file.
+The sample is read on the driver (``sniff_text``) and split, scrubbed and
+filtered exactly as the Spark plan does it: building the plan submits no
+Spark job, and the read is O(1) regardless of file size.
+
+:func:`sniff_header` is the ONE header decision of the ingest path: the
+file gate (``ingest.validate_file_head``) judges the header this reader
+will map, so it rejects exactly the files whose required columns the
+reader cannot find (the reference's Lambda and Glue sniffs disagree,
+SURVEY.md §1.4).
 
 Differences from the reference (documented intent, SURVEY.md §7.4.3):
 - the delimiter is regex-escaped before ``split`` (the reference passes
@@ -45,7 +50,7 @@ _GLOB_CHARS = re.compile(r"([\\*?\[\]{}])")
 
 def _head_lines(path: str, n: int) -> list[str]:
     """The first ``n`` lines ``spark.read.text(path)`` would yield after the
-    reader's scrub and blank filter, taken from the file gate's head read
+    reader's scrub and blank filter, taken from a driver-side head read
     (:func:`sniff_text`): Spark's line terminators, the same
     invisible-character scrub, and Spark's ``trim`` (which strips spaces
     only) for the blank rule. The head doubles from 64 KB only while it
@@ -71,9 +76,18 @@ class FlexibleCsvMeta:
     missing_required: list[str]
 
 
-def read_flexible_csv(
-    spark: SparkSession, path: str, sample_lines: int = 20
-) -> tuple[DataFrame, FlexibleCsvMeta]:
+def sniff_header(path: str) -> FlexibleCsvMeta:
+    """The header decision for one file: its first lines as the reader's
+    Spark plan sees them (:func:`_head_lines`) → delimiter → index map of
+    the first line. No Spark job."""
+    sample = _head_lines(path, 20)  # the reference's Glue job sniffs 20 lines
+    delimiter = sniff_delimiter("\n".join(sample))
+    header_line = sample[0] if sample else ""
+    index_map = build_index_map(header_line.split(delimiter))
+    return FlexibleCsvMeta(delimiter, header_line, index_map, missing_required(index_map))
+
+
+def read_flexible_csv(spark: SparkSession, path: str) -> tuple[DataFrame, FlexibleCsvMeta]:
     """Read a delimited file with unknown dialect/header into the canonical
     10-column string frame + ``raw_row`` lineage column.
 
@@ -87,20 +101,7 @@ def read_flexible_csv(
     metacharacters are escaped, so a name with ``\\``, ``[`` or ``*``
     reads as itself.
     """
-    # The dialect sniff only needs the first lines: take them from the
-    # gate's head read (no Spark job), as the plan below splits, scrubs and
-    # filters them.
-    sample = _head_lines(path, sample_lines)
-    delimiter = sniff_delimiter("\n".join(sample))
-
-    header_line = sample[0] if sample else ""
-    index_map = build_index_map(header_line.split(delimiter))
-    meta = FlexibleCsvMeta(
-        delimiter=delimiter,
-        header_line=header_line,
-        index_map=index_map,
-        missing_required=missing_required(index_map),
-    )
+    meta = sniff_header(path)
 
     # A single raw file arrives as ONE input split (well under
     # files.maxPartitionBytes), so the scrub, the blank/header filters and
@@ -117,12 +118,12 @@ def read_flexible_csv(
         spark.read.text(_GLOB_CHARS.sub(r"\\\1", path))
         .selectExpr(f"regexp_replace(value, {sql_lit(INVISIBLE_CHARS_PATTERN)}, '') AS value")
         .filter("trim(value) != ''")
-        .filter(F.col("value") != F.lit(header_line))
+        .filter(F.col("value") != F.lit(meta.header_line))
     )
-    tokens = f"split(value, {sql_lit(re.escape(delimiter))})"
+    tokens = f"split(value, {sql_lit(re.escape(meta.delimiter))})"
 
     def extract(name: str) -> str:
-        idx = index_map.get(name)
+        idx = meta.index_map.get(name)
         if idx is None:
             return "CAST(NULL AS STRING)"
         # get (not [] / getItem): out-of-range → NULL. ANSI mode makes

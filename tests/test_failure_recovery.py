@@ -148,16 +148,17 @@ def _write_csv_with_rejects(path, good_ids, n_bad=2):
             f.write(f"TBAD{i:02d},S0,2025-07-10 10:00:00,ITEMX{i},2,5.00,99.99\n")
 
 
-def test_quarantined_run_leaves_no_partial_silver_rows(spark, tmp_path):
-    """ADVICE r1: committer v2 commits task output at TASK commit, so a job
-    that fails after the silver append leaves that run's rows behind while
-    the source file goes to rejected/system and is never retried. The
-    quarantine path must purge the run's rows so a rejected file
-    contributes ZERO silver rows — while other runs' rows in the same
-    partitions survive."""
-    import pytest
+@pytest.mark.parametrize("commit", ["direct", "manifest"])
+def test_quarantined_run_leaves_no_partial_silver_rows(spark, tmp_path, commit):
+    """ADVICE r1: a sink that fails after the silver append leaves that
+    run's rows readable (committer v2 publishes at TASK commit; a manifest
+    append has already flipped its pointer) while the source file goes to
+    rejected/system and is never retried. The quarantine path must remove
+    the run's rows so a rejected file contributes ZERO silver rows — while
+    other runs' rows in the same partitions survive."""
+    from retail_aws_etl_pipeline_spark.operators.compact import read_silver
 
-    lake = LakeLayout(str(tmp_path / "lake"))
+    lake = LakeLayout(str(tmp_path / "lake"), commit=commit)
 
     # healthy run A shares dates with the doomed run
     ok_csv = tmp_path / "ok.csv"
@@ -170,12 +171,7 @@ def test_quarantined_run_leaves_no_partial_silver_rows(spark, tmp_path):
     )
     assert ok.counts["good_rows"] == 10
 
-    # sabotage the reject sink: a FILE where the json dir must go makes the
-    # reject write fail AFTER the silver append already committed
-    reject_parent = tmp_path / "lake" / "rejected"
-    reject_parent.mkdir(parents=True, exist_ok=True)
-    (reject_parent / "data_quality").write_text("not a directory")
-
+    _sabotage_reject_sink(tmp_path / "lake")
     doomed = tmp_path / "doomed.csv"
     _write_csv_with_rejects(doomed, range(100, 110))
     with pytest.raises(Exception):
@@ -190,7 +186,7 @@ def test_quarantined_run_leaves_no_partial_silver_rows(spark, tmp_path):
     system_dir = lake.rejected("system")
     assert any(n.startswith("doomed.csv") for n in os.listdir(system_dir))
     # ...and silver holds exactly run A's rows — no partial debris
-    silver = spark.read.parquet(lake.processed)
+    silver = read_silver(spark, lake)
     assert silver.filter(F.col("ingest_run_id") == "run_doomed").count() == 0
     assert silver.count() == 10
     assert {r["ingest_run_id"] for r in silver.select("ingest_run_id").distinct().collect()} == {
@@ -198,10 +194,52 @@ def test_quarantined_run_leaves_no_partial_silver_rows(spark, tmp_path):
     }
 
 
-def test_purge_deletes_now_empty_partitions(spark, tmp_path):
-    """Dates populated ONLY by the failed run must disappear from silver
-    entirely (dynamic overwrite can't rewrite a partition to empty)."""
+def _sabotage_reject_sink(lake_root):
+    """A FILE where the data-quality reject dir must go: the reject write
+    fails AFTER the silver append already committed."""
+    reject_parent = lake_root / "rejected"
+    reject_parent.mkdir(parents=True, exist_ok=True)
+    (reject_parent / "data_quality").write_text("not a directory")
+
+
+def test_failed_batch_quarantines_every_file_past_the_gate(spark, tmp_path):
+    """A batched chunk that fails in a sink fails as a whole, like a batch
+    of one: both files move to rejected/system with reason files, no silver
+    row of either run survives, and nothing of the chunk is ledgered."""
     lake = LakeLayout(str(tmp_path / "lake"))
+    ok_csv = tmp_path / "ok.csv"
+    _write_csv(ok_csv, range(10))
+    kw = dict(archive=False, write_reject_csv=False)
+    ingest_file(spark, str(ok_csv), lake, ingest_run_id="run_ok", **kw)
+
+    _sabotage_reject_sink(tmp_path / "lake")
+    incoming = tmp_path / "incoming"
+    incoming.mkdir()
+    _write_csv(incoming / "day1.csv", range(100, 110))  # clean, shares dates with run_ok
+    _write_csv_with_rejects(incoming / "day2.csv", range(200, 210))
+    with pytest.raises(Exception):
+        ingest_pending(spark, str(incoming), lake, batch_size=2, write_reject_csv=False)
+
+    assert os.listdir(incoming) == []
+    names = os.listdir(lake.rejected("system"))
+    for source in ("day1.csv", "day2.csv"):
+        moved = [n for n in names if n.startswith(source) and not n.endswith("_reason.json")]
+        assert len(moved) == 1 and f"{moved[0]}_reason.json" in names
+    silver = spark.read.parquet(lake.processed)
+    assert {r["ingest_run_id"] for r in silver.select("ingest_run_id").distinct().collect()} == {
+        "run_ok"
+    }
+    assert silver.count() == 10
+    assert not os.path.exists(os.path.join(lake.root, "ingest_ledger.jsonl"))
+
+
+@pytest.mark.parametrize("commit", ["direct", "manifest"])
+def test_purge_deletes_now_empty_partitions(spark, tmp_path, commit):
+    """Dates populated ONLY by the failed run must disappear from silver
+    entirely (an overwrite can't rewrite a partition to empty)."""
+    from retail_aws_etl_pipeline_spark.operators.compact import read_silver
+
+    lake = LakeLayout(str(tmp_path / "lake"), commit=commit)
     csv = tmp_path / "solo.csv"
     _write_csv(csv, range(6))
     ingest_file(
@@ -210,11 +248,11 @@ def test_purge_deletes_now_empty_partitions(spark, tmp_path):
         ingest_ts=F.lit("2025-07-20 00:00:00").cast("timestamp"),
         archive=False, write_reject_csv=False,
     )
-    assert spark.read.parquet(lake.processed).count() == 6
-    purged = lake.silver_table.undo_append(spark, "run_solo")
+    assert read_silver(spark, lake).count() == 6
+    purged = lake.silver_table.undo_append(spark, ["run_solo"])
     assert purged == 6
-    date_dirs = [d for d in os.listdir(lake.processed) if d.startswith("date=")]
-    assert date_dirs == []
+    assert lake.silver_table.partitions() == []
+    assert [d for d in os.listdir(lake.processed) if d.startswith("date=")] == []
 
 
 def test_purge_raises_on_corrupt_silver(spark, tmp_path):
@@ -246,7 +284,7 @@ def test_purge_raises_on_corrupt_silver(spark, tmp_path):
         if os.path.exists(crc):
             os.remove(crc)
     with pytest.raises(Exception):
-        lake.silver_table.undo_append(spark, "run_failed")
+        lake.silver_table.undo_append(spark, ["run_failed"])
 
 
 # ---------------------------------------------------------------------------
@@ -665,6 +703,11 @@ def test_mixed_layouts_on_one_lake_root_raise(spark, tmp_path):
     assert ingest_file(spark, files[0], manifest, **kw).status == "ok"
     with pytest.raises(ValueError, match="manifested table"):
         ingest_file(spark, files[1], direct, **kw)
+    # a misconfigured lake is not a bad file: the input stays in place
+    with pytest.raises(ValueError, match="manifested table"):
+        ingest_file(spark, files[1], direct, archive=True, write_reject_csv=False)
+    assert os.path.exists(files[1])
+    assert not os.path.exists(direct.rejected("system"))
     with pytest.raises(ValueError, match="manifested table"):
         ingest_batch(spark, [files[2]], direct, **kw)
     compact_pending(spark, manifest, write_audit=False)

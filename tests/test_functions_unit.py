@@ -100,14 +100,24 @@ HEAD_CASES = {
     "no_trailing_newline": b"h,x\na,b",
     "invalid_utf8": b"h,x\na\xff\xfeb,c\xe2\x82\nd,e\n",
     "empty": b"",
+    "required_header_with_form_feed": (
+        b"transaction_id,store_id,timestamp\f,item_id,quantity,unit_price,revenue\n"
+        + b"T1,S1,2025-07-10 10:00:00,I1,2,5.00,10.00\n"
+    ),
 }
 
 
 @pytest.mark.parametrize("name", sorted(HEAD_CASES))
 def test_head_lines_match_the_spark_text_reader(spark, tmp_path, name):
     """``_head_lines`` yields what the reader's Spark-side scrub and blank
-    filter yield for the same file, limited to 20 lines."""
-    from retail_aws_etl_pipeline_spark.sources.reader import INVISIBLE_CHARS_PATTERN, _head_lines
+    filter yield for the same file, limited to 20 lines; the file gate
+    passes the file exactly when the reader maps every required column."""
+    from retail_aws_etl_pipeline_spark.ingest import validate_file_head
+    from retail_aws_etl_pipeline_spark.sources.reader import (
+        INVISIBLE_CHARS_PATTERN,
+        _head_lines,
+        read_flexible_csv,
+    )
 
     path = tmp_path / f"{name}.csv"
     path.write_bytes(HEAD_CASES[name])
@@ -120,6 +130,28 @@ def test_head_lines_match_the_spark_text_reader(spark, tmp_path, name):
         .collect()
     ]
     assert _head_lines(str(path), 20) == want
+    meta = read_flexible_csv(spark, str(path))[1]
+    assert (validate_file_head(str(path)) == []) == (meta.missing_required == [])
+
+
+def test_header_is_sniffed_only_by_the_reader():
+    """``sniff_delimiter`` and ``build_index_map`` are called only in
+    ``sources/reader.py``: the file gate and the row parser share its one
+    header decision (``sniff_header``)."""
+    import ast
+    from pathlib import Path
+
+    import retail_aws_etl_pipeline_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    sites = set()
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Call):
+                called = getattr(node.func, "id", None) or getattr(node.func, "attr", None)
+                if called in ("sniff_delimiter", "build_index_map"):
+                    sites.add(path.relative_to(root).as_posix())
+    assert sites == {"sources/reader.py"}
 
 
 # --- timestamp cascade (P8) -----------------------------------------------

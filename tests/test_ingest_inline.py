@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from retail_aws_etl_pipeline_spark.ingest import ingest_batch, ingest_file
 from retail_aws_etl_pipeline_spark.lake import LakeLayout
-from retail_aws_etl_pipeline_spark.schema import REJECT_COLUMNS
+from retail_aws_etl_pipeline_spark.schema import REJECT_COLUMNS, REQUIRED_COLUMNS
 
 HEADER = "transaction_id;store_id;timestamp;item_id;item_category;quantity;unit_price;revenue;payment_method;customer_id"
 GOOD_T1 = "T1;S01;2024-10-16 14:30:25;I1;Food;2;$10.50;$21.00;Card;C1"
@@ -259,3 +259,34 @@ def test_type_drifted_tables_are_read_with_inferred_schemas(spark, tmp_path):
     assert sorted((r["transaction_id"], r["ingest_ts"]) for r in gold.collect()) == [
         ("T1", "2025-01-01 11:00:00"), ("T2", "2025-01-02 10:00:00")
     ]
+
+
+def _write_30_rows(path, header: str) -> str:
+    rows = [f"T{i:02d},S{i % 3},2025-07-1{i % 3} 10:00:00,I{i},2,5.00,10.00" for i in range(30)]
+    path.write_text(header + "\n" + "\n".join(rows) + "\n")
+    return str(path)
+
+
+def test_tab_only_first_line_is_the_header_the_gate_rejects(spark, tmp_path):
+    """A first line of two tabs is not blank to Spark's ``trim``, so the
+    reader would take it as the header: the gate judges that header and
+    rejects the file as structural instead of routing 30 valid rows to
+    structural rejects."""
+    lake = LakeLayout(str(tmp_path / "lake"))
+    path = _write_30_rows(tmp_path / "tabs.csv", "\t\t\n" + ",".join(REQUIRED_COLUMNS))
+    r = ingest_file(spark, path, lake)
+    assert r.status == "file_rejected"
+    assert r.file_errors == [f"missing_columns:{REQUIRED_COLUMNS}"]
+    names = os.listdir(lake.rejected("structural"))
+    assert len(names) == 2 and any(n.endswith("_reason.json") for n in names)
+    assert not os.path.exists(path) and not os.path.exists(lake.processed)
+
+
+def test_form_feed_in_header_cell_ingests(spark, tmp_path):
+    """A form feed after ``timestamp`` ends no line for Spark's text source
+    and normalizes away in the header cell: the reader maps all required
+    columns, so the gate passes the file and its 30 rows are good."""
+    lake = LakeLayout(str(tmp_path / "lake"))
+    header = ",".join(REQUIRED_COLUMNS).replace("timestamp", "timestamp\f")
+    r = ingest_file(spark, _write_30_rows(tmp_path / "ff.csv", header), lake, archive=False)
+    assert (r.status, r.counts["good_rows"], r.counts["reject_rows"]) == ("ok", 30, 0)
